@@ -304,13 +304,13 @@ object Bench {
     graft.Graft.dropCheckpoint(done)
   }
   // MULTI-column chain — the reference's real workload iterates ALL
-  // nullable columns (imputation_base.cpp:19,89), so the branch-based
-  // generation's fragmentation cost must be measured where it can
-  // hurt: two OVERLAPPING missing strata (k%7==0 and k%11==3 intersect
-  // every 77th key) × `iterations` rounds = 2·iterations steps over the
-  // 600M-row fact, branch count bounded by the k+1 pruning claim
-  // (k = 2 columns ⇒ ≤ 3 live branches) with the >12 coalesce valve as
-  // backstop. Phase decomposition prints like the single-column row's.
+  // nullable columns (imputation_base.cpp:19,89), so the per-step cost
+  // of training inside the incomplete stratum is measured here: two
+  // OVERLAPPING missing strata (k%7==0 and k%11==3 intersect every
+  // 77th key) × `iterations` rounds = 2·iterations steps over the
+  // 600M-row fact, each step one masked aggregate over the stratum on
+  // top of the once-computed static star triple. Phase decomposition
+  // prints like the single-column row's.
   private def miceStarMulti(pair: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
                             iterations: Int = 3): Unit = {
     val (liB, ordB) = pair

@@ -22,6 +22,10 @@ import org.apache.spark.sql.functions._
  *    `static + triple(incomplete) − delta(rows where col missing)` via
  *    ring subtraction (imputation_low.cpp:85-110) — no filtered rescan
  *    of the big stratum, ever.
+ *  - [[MiceJoin.imputeChainedOverStar]] is the MICE-high variant over a
+ *    star join: the complete stratum's star triple is computed once,
+ *    and each column step trains on it plus one masked aggregate over
+ *    the dim-joined incomplete stratum.
  *
  * The reference's O(1) physical column swap (duckdb_imputation.patch)
  * is unnecessary on immutable DataFrames: `withColumn` + one

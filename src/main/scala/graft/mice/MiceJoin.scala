@@ -2,6 +2,7 @@ package graft.mice
 
 import graft.Graft
 import graft.ml.{Factorized, LinReg}
+import graft.ring.Triple
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -142,17 +143,19 @@ object MiceJoin {
     * but NULL CATEGORICAL features do not (LinReg one-hots them to a
     * zero block; Lda.predict tie-breaks all-NULL scores to the first
     * class) — without this test a no-match row would silently get a
-    * prediction from a feature configuration training never saw. */
+    * prediction from a feature configuration training never saw. The
+    * chained driver also tests its dims' match markers, which catch a
+    * no-match row of a dim that contributes no feature. */
   private def anyDimFeatureNull(dimCols: Seq[String]) =
     dimCols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
 
   /**
    * Chained multi-column MICE over the join — [[Mice.baseline]]'s
    * columns × iterations loop with every training aggregate computed
-   * FACTORIZED over fact ⋈ dim and every row-level update restricted to
-   * the column's missing stratum (the paper's full Flight workload:
-   * multiple fact-side columns, continuous AND categorical, imputed from
-   * fact + dimension features the join never materializes for training).
+   * over fact ⋈ dim without materializing the join for the rows that
+   * never change (the paper's full Flight workload: multiple fact-side
+   * columns, continuous AND categorical, imputed from fact + dimension
+   * features).
    *
    * @param factNum  continuous fact columns (cast to double; superset of
    *                 `imputeCont`)
@@ -176,15 +179,19 @@ object MiceJoin {
    * moment space, a no-op for plain well-conditioned least squares but
    * a different optimum under `lambda`/`shrinkage` — keep it `true` for
    * wild-scale features unless baseline-exact output is the goal).
-   * `MiceJoinSpec` pins the parity on a complete join and the fixed
-   * point of the non-stochastic chain.
+   * `MiceJoinSpec` pins the parity on a complete join, on orphan and
+   * NULL-feature rows inside the incomplete stratum, and the fixed point
+   * of the non-stochastic chain.
    *
    * `minRowsPerKey` is [[Factorized.cofactorOverStar]]'s routing
-   * threshold for every per-column training aggregate: the adaptive
+   * threshold for the STATIC triple — the one star aggregate over the
+   * fully-observed stratum (see [[imputeChainedOverStar]]): the adaptive
    * default materializes the star for near-unique dims (where chaining
    * per-~1-row triples would cost more than it saves); pin 0.0 for the
    * always-factorized chain or `Double.MaxValue` for the always-fused
-   * fallback, exactly as on [[imputeContOverStar]].
+   * fallback, exactly as on [[imputeContOverStar]]. The per-step
+   * training aggregates over the incomplete stratum read its
+   * already-joined rows and are not routed.
    *
    * Returns `fact`'s columns with the imputed values in place.
    */
@@ -209,17 +216,35 @@ object MiceJoin {
    * [[imputeChainedOverJoin]] over a MULTI-DIMENSION star — the paper's
    * full Flight/Retailer workload (multiple imputed fact columns,
    * continuous AND categorical, with features spread across SEVERAL
-   * dimension tables joined on distinct keys). Each per-column training
-   * aggregate is [[Factorized.cofactorOverStar]] — the chained ring
-   * product when the adaptive probe (or a `cfg.minRowsPerKey` pin)
-   * routes dims factorized, its size-guarded fused fallback for
-   * near-unique dims; each row-level
-   * update left-joins every dim, restricted to the column's missing
-   * stratum. Dim features come from the [[Factorized.StarDim]]s —
-   * `cfg.dimNum`/`cfg.dimCat` must be empty in this overload. Semantics
-   * ≡ [[Mice.baseline]] on the materialized star join with
-   * contCols = factNum ++ dims.flatMap(num) and
-   * catCols = factCat ++ dims.flatMap(cat) (`MiceJoinSpec` pins it).
+   * dimension tables joined on distinct keys). Dim features come from
+   * the [[Factorized.StarDim]]s — `cfg.dimNum`/`cfg.dimCat` must be
+   * empty in this overload. Semantics ≡ [[Mice.baseline]] on the
+   * materialized star join with contCols = factNum ++ dims.flatMap(num)
+   * and catCols = factCat ++ dims.flatMap(cat) (`MiceJoinSpec` pins it).
+   *
+   * The loop is MICE-high (imputation_high.cpp:20-35) applied to the
+   * star, the same split [[Mice.partitioned]] makes on a flat table:
+   *  - the COMPLETE stratum (no imputed column missing) never changes,
+   *    so its star triple is computed ONCE by
+   *    [[Factorized.cofactorOverStar]] (adaptive/factorized routing by
+   *    `cfg.minRowsPerKey`, over the fact rows that are the bulk);
+   *  - the INCOMPLETE stratum is left-joined with every dim once (each
+   *    dim carries a match marker; unique dims cannot fan out) and
+   *    checkpointed. Column `c`'s training triple is
+   *    `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
+   *    masked aggregate per step, no ring subtraction (no float drift),
+   *    and the match mask keeps the inner-join training semantics;
+   *  - the update is a `withColumn` on the joined stratum, guarded so a
+   *    row with no dim match or a NULL dim feature keeps its value;
+   *  - each non-final iteration checkpoints the stratum once and drops
+   *    the previous one; the final iteration is returned lazily.
+   * Every column step therefore runs the same bounded number of jobs,
+   * independent of the iteration (`MiceJoinSpec` pins it).
+   *
+   * With ONE imputed column every incomplete row is missing it, so the
+   * static triple IS the training triple: the incomplete scan and its
+   * checkpoints are skipped, and the update is one lazy left join of
+   * the missing rows — the work of a single [[imputeContOverStar]] round.
    */
   def imputeChainedOverStar(fact: DataFrame, dims: Seq[Factorized.StarDim],
                             cfg: ChainConfig,
@@ -247,16 +272,16 @@ object MiceJoin {
     // A NARROW fact plan (scan/checkpoint leaf + projections/filters
     // only — no joins, aggregates, windows) stays UN-materialized: each
     // re-read is one cheap columnar scan, and — decisively at scale —
-    // the scan's bucketed layout survives into the per-column work, so
-    // the training aggregate's groupBy(key) and the missing-stratum ⋈
-    // dim update join run ZERO-EXCHANGE on co-located tables. A
-    // checkpoint here would trade three cheap scans for a 600M-row
-    // materialization AND re-shuffle both sides of every downstream
-    // join (LogicalRDD has no bucket metadata) — measured 277 s → 87 s
-    // on the sf100 star round. Wide fact plans keep the checkpoint:
-    // re-executing an upstream join per re-read is the worse deal.
-    // Mice.prepare is recompute-safe — its mean/mode aggregate runs
-    // once eagerly and lands in the plan as literals.
+    // the scan's bucketed layout survives into the static star
+    // aggregate's groupBy(key) and the incomplete ⋈ dim join, so both
+    // run ZERO-EXCHANGE on co-located tables. A checkpoint here would
+    // trade two cheap scans for a 600M-row materialization AND
+    // re-shuffle both sides of every downstream join (LogicalRDD has
+    // no bucket metadata) — measured 277 s → 87 s on the sf100 star
+    // round. Wide fact plans keep the checkpoint: re-executing an
+    // upstream join per re-read is the worse deal. Mice.prepare is
+    // recompute-safe — its mean/mode aggregate runs once eagerly and
+    // lands in the plan as literals.
     val prepared = tm.time("prepare")(Mice.prepare(fact, miceCfg))
     val base =
       if (Graft.isNarrowPlan(fact)) prepared
@@ -265,72 +290,33 @@ object MiceJoin {
     val numAll = cfg.factNum ++ dimNumAll
     val catAll = cfg.factCat ++ dimCatAll
     val order = cfg.imputeCat ++ cfg.imputeCont // categorical first, the baseline order
+    val anyFlag = order.map(c => col(Mice.flag(c))).reduceOption(_ || _).getOrElse(lit(false))
 
-    // The generation lives as DISJOINT BRANCHES whose union is the
-    // current completed dataset, instead of one frame re-materialized
-    // whole per column step. The round-15 sf100 measurement that forced
-    // this: at 3 iterations the old whole-generation checkpoint cost
-    // 212 s of 600M-row materializations per run (the observed ~86%
-    // never changed that step) and the checkpointed UNION carried no
-    // partitioning, so every post-round-1 training aggregate re-paid a
-    // full exchange the bucketed layout had made free (cofactor 5.3 →
-    // 65 s). Branches fix both at once:
-    //  - only each step's UPDATED stratum (the missing fraction) is
-    //    checkpointed, layout-preserved per SOURCE branch — the
-    //    missing ⋈ dim join output is co-partitioned on the key, and
-    //    Graft.checkpoint keeps that, so next iteration's update join
-    //    is again zero-exchange;
-    //  - the observed remainder of every branch stays a LAZY filter
-    //    over its own cheap leaf (the bucketed scan or an existing
-    //    checkpoint), so the training cofactor runs per branch on
-    //    well-partitioned inputs and the triples RING-ADD (disjoint
-    //    row sets — Triple.add is exactly the union of row sets).
-    // Flag-derived pruning keeps the branch count at ~k+1 for k imputed
-    // columns: `allFlag` marks columns every row of the branch has
-    // flagged (an updated stratum for c is all-flag_c by construction —
-    // its observed part for c is EMPTY, skip without a scan), `noFlag`
-    // the columns no row has flagged (an observed remainder — its
-    // missing part for c is empty likewise). Flags are immutable
-    // (originally-missing markers), so the sets are exact, not
-    // heuristic. A pathological multi-column chain could still fragment
-    // the generation; past 12 branches the step coalesces back to one
-    // whole-generation checkpoint — the old behavior as safety valve.
-    final case class Gen(df: DataFrame, allFlag: Set[String], noFlag: Set[String],
-                         isCkpt: Boolean)
-    var branches: Seq[Gen] = Seq(Gen(base, Set.empty, Set.empty, isCkpt = !Graft.isNarrowPlan(fact)))
-    // Run-scoped training-triple memo, keyed by the observed part's
-    // CANONICALIZED plan: branch data is immutable within the run (the
-    // base scan, materialized checkpoints), so a plan-identical observed
-    // part across iterations carries the identical triple — for a
-    // single imputed column the whole observed stratum is loop-invariant
-    // and iterations 2..n retrain for free; for k columns every base-
-    // branch stratum repeats per iteration likewise. Scoped to this
-    // call: no global cache, no staleness surface beyond the in-run
-    // file-rewrite case every memoized probe already documents.
-    val tripleMemo = scala.collection.mutable.HashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, graft.ring.Triple]()
+    // the static triple's block layout is numAll/catAll = [factNum ++
+    // dim1.num ++ …, factCat ++ dim1.cat ++ …] — exactly Mice.baseline's
+    // column order on the materialized star join
+    val complete = base.filter(!anyFlag)
+    val static = tm.time("cofactor_static")(Factorized.cofactorOverStar(
+      complete, cfg.factNum, cfg.factCat, dims, cfg.minRowsPerKey))
+    val marks = dims.indices.map(i => s"__graft_dim${i}_match")
+    val matched = marks.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
+    val joined = dims.zip(marks).foldLeft(base.filter(anyFlag)) { case (acc, (d, m)) =>
+      acc.join(d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m): _*),
+        Seq(d.key), "left")
+    }
+    val trainsOnIncomplete = order.length > 1
+    var incomplete =
+      if (trainsOnIncomplete) tm.time("partition")(joined.transform(Graft.checkpoint))
+      else joined
+    var lastCp = incomplete
 
     for (iter <- 1 to cfg.iterations) {
       for (c <- order) {
-        val fl = Mice.flag(c)
-        // the training cofactor sees the WHOLE star through chained
-        // per-key triples (block layout [factNum ++ dim1.num ++ …,
-        // factCat ++ dim1.cat ++ …] — exactly Mice.baseline's column
-        // order on the materialized star join); summed over branches
-        val observedParts: Seq[DataFrame] = branches.flatMap { b =>
-          if (b.allFlag.contains(c)) None
-          else if (b.noFlag.contains(c)) Some(b.df)
-          else Some(b.df.filter(!col(fl)))
-        }
-        val triple = tm.time("cofactor") {
-          observedParts
-            .map(p => tripleMemo.getOrElseUpdate(
-              p.queryExecution.analyzed.canonicalized,
-              Factorized.cofactorOverStar(p, cfg.factNum, cfg.factCat,
-                dims, cfg.minRowsPerKey)))
-            .reduceOption(graft.ring.Triple.add)
-            .getOrElse(graft.ring.Triple.zero(numAll.size, catAll.size))
-        }
+        val fl = col(Mice.flag(c))
+        val triple =
+          if (!trainsOnIncomplete) static
+          else tm.time("cofactor")(Triple.add(static, Graft.cofactorMasked(
+            incomplete, numAll, catAll, Seq(Some(matched && !fl))).head))
         val isCont = cfg.imputeCont.contains(c)
         val pred = tm.time("train") {
           if (isCont) {
@@ -347,74 +333,29 @@ object MiceJoin {
               numAll.map(col), catAll.filterNot(_ == c).map(col))
           }
         }
-        // row-level work touches ONLY the missing stratum; a row with no
-        // match in some dim (or a NULL dim feature) keeps its value —
-        // explicitly tested (anyDimFeatureNull), because only numeric
-        // NULLs propagate into a NULL pred; categorical NULLs would
-        // otherwise yield a silently-biased prediction (LinReg's zero
-        // one-hot block / Lda's first-class tiebreak over NULL scores)
-        def updatePart(part: DataFrame): DataFrame =
-          dims.foldLeft(part)((acc, d) => acc.join(d.df, Seq(d.key), "left"))
-            .withColumn(c,
-              when(anyDimFeatureNull(dimCols), col(c))
-                .otherwise(coalesce(pred, col(c))))
-            .select(outCols.map(col): _*)
-        // The FINAL step has no next step to shield: its updated parts
-        // are returned un-materialized (the caller's single consumption
-        // pays the one pass a checkpoint would have pre-paid), and
-        // surviving checkpoint blocks stay live inside the returned
-        // plan — Graft.dropCheckpoint(result) releases them by
-        // traversal. Non-final steps checkpoint each updated part
-        // (EAGER inside Graft.checkpoint) so the next step's filters
-        // and training cofactor never re-execute this step's join, and
-        // a branch fully consumed by this step frees its blocks
-        // deterministically once its replacement is materialized.
-        val isFinal = iter == cfg.iterations && c == order.last
-        val next = tm.time("impute_update") {
-          val remainders = branches.flatMap { b =>
-            if (b.allFlag.contains(c)) None // fully consumed below
-            else if (b.noFlag.contains(c)) Some(b) // untouched: no flagged rows
-            else Some(Gen(b.df.filter(!col(fl)), b.allFlag, b.noFlag + c, b.isCkpt))
-          }
-          val updatedParts = branches.flatMap { b =>
-            if (b.noFlag.contains(c)) None
-            else {
-              val part = if (b.allFlag.contains(c)) b.df else b.df.filter(col(fl))
-              val upd = updatePart(part)
-              Some(Gen(if (isFinal) upd else upd.transform(Graft.checkpoint),
-                b.allFlag + c, b.noFlag, isCkpt = !isFinal))
-            }
-          }
-          // free branches this step consumed whole (their replacement
-          // checkpoints are already materialized — Graft.checkpoint is
-          // eager); split branches keep their blocks referenced by the
-          // observed remainder and drain over subsequent steps. At the
-          // FINAL step the replacement is intentionally NOT
-          // checkpointed, so the consumed branch's blocks are still the
-          // only materialized form of its update-join chain — they must
-          // stay live inside the returned lazy plan (the caller's
-          // traversal-based Graft.dropCheckpoint releases them), else
-          // the caller's single consumption recomputes the chain
-          // through every previously dropped generation
-          branches.foreach { b =>
-            if (!isFinal && b.isCkpt && b.allFlag.contains(c)) Mice.dropCheckpoint(b.df)
-          }
-          remainders ++ updatedParts
-        }
-        branches =
-          if (next.size <= 12 || isFinal) next
-          else {
-            // safety valve: re-coalesce a fragmented generation to one
-            // whole checkpoint (the pre-branch behavior)
-            val whole = tm.time("impute_update")(
-              next.map(_.df).reduce(_.unionByName(_)).transform(Graft.checkpoint))
-            next.foreach(b => if (b.isCkpt) Mice.dropCheckpoint(b.df))
-            Seq(Gen(whole, Set.empty, Set.empty, isCkpt = true))
-          }
+        // a row with no match in some dim (or a NULL dim feature) keeps
+        // its value — explicitly tested, because only numeric NULLs
+        // propagate into a NULL pred; categorical NULLs would otherwise
+        // yield a silently-biased prediction (LinReg's zero one-hot
+        // block / Lda's first-class tiebreak over NULL scores)
+        incomplete = incomplete.withColumn(c,
+          when(fl && matched && !anyDimFeatureNull(dimCols), coalesce(pred, col(c)))
+            .otherwise(col(c)))
+      }
+      // bound lineage and keep the next iteration's training scans off
+      // this one's projections — except after the LAST iteration, whose
+      // stratum is returned un-materialized (the caller's single
+      // consumption pays the pass; the previous checkpoint stays live
+      // inside the returned plan until the caller's traversal-based
+      // Graft.dropCheckpoint releases it)
+      if (trainsOnIncomplete && iter < cfg.iterations) {
+        incomplete = tm.time("impute_update")(incomplete.transform(Graft.checkpoint))
+        Mice.dropCheckpoint(lastCp) // superseded: materialized eagerly above
+        lastCp = incomplete
       }
     }
-    branches.map(_.df).reduce(_.unionByName(_))
-      .drop((cfg.imputeCont ++ cfg.imputeCat).map(Mice.flag): _*)
+    complete.unionByName(incomplete.select(outCols.map(col): _*))
+      .drop(order.map(Mice.flag): _*)
   }
 
   /** Fail loudly on a duplicated dim key (see the contract above): one
@@ -430,7 +371,11 @@ object MiceJoin {
     * probe was a near-unique-key hash aggregate over the WHOLE dim per
     * call — 1.85 s of the 4.1 s sf10_mice_star_round pass, re-verifying
     * an immutable bucketed table every round. Failures are never
-    * cached (they throw). */
+    * cached (they throw). Only plans whose every leaf is a file
+    * relation (the fingerprint tracks its file count and bytes) or a
+    * `LocalRelation` (its canonical plan carries the rows) are memoized:
+    * any other source (JDBC, Hive, DSv2) can gain a duplicate key under
+    * an identical plan and fingerprint, so it is re-probed every call. */
   private val uniqueKeyCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
       java.lang.Boolean](16, 0.75f, true) {
@@ -441,9 +386,18 @@ object MiceJoin {
   private[graft] def clearUniqueKeyCache(): Unit = uniqueKeyCache.clear()
   private[graft] def requireUniqueKey(dim: DataFrame, key: String,
                                       caller: String = "MiceJoin"): Unit = {
-    val ck = (dim.queryExecution.analyzed.canonicalized, "unique:" + key,
-      Factorized.snapshotFingerprint(dim))
-    if (uniqueKeyCache.get(ck) != null) return
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val analyzed = dim.queryExecution.analyzed
+    val memoizable = analyzed.collectLeaves().forall {
+      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+      case _: LocalRelation => true
+      case _ => false
+    }
+    val ck = if (memoizable)
+      Some((analyzed.canonicalized, "unique:" + key, Factorized.snapshotFingerprint(dim)))
+    else None
+    if (ck.exists(k => uniqueKeyCache.get(k) != null)) return
     // NULL keys are excluded: an equi-join can never match them, so
     // multiple NULL-keyed rows cannot fan anything out — aborting on
     // them would reject valid input. The count is aliased so a key
@@ -454,6 +408,6 @@ object MiceJoin {
     require(dup.isEmpty,
       s"$caller requires the joined side unique per '$key'; found duplicated key ${dup.head.get(0)} " +
         "(pre-aggregate or dropDuplicates that side explicitly before calling)")
-    uniqueKeyCache.put(ck, java.lang.Boolean.TRUE)
+    ck.foreach(uniqueKeyCache.put(_, java.lang.Boolean.TRUE))
   }
 }

@@ -249,12 +249,9 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(d < 1e-8, s"chain had not converged by iteration 6: extra-iteration delta $d")
   }
 
-  test("chained 4-column MICE (overlapping strata) == baseline — exercises branch fragmentation + the coalesce valve") {
-    // four imputed columns with OVERLAPPING missing patterns fragment
-    // the branch representation toward its 2^k worst case (rows missing
-    // in several columns form joint strata), driving the generation
-    // past the 12-branch safety valve so the whole-checkpoint coalesce
-    // path is exercised under the parity gate, not just the fast path
+  /** Four imputed columns with OVERLAPPING missing patterns (rows
+    * missing in several columns at once) plus one dim feature. */
+  def fourColumnData = {
     val dim2 = Seq.tabulate(30)(k => (k.toLong, k * 0.7 - 9.0)).toDF("k", "d1")
     val rng = new scala.util.Random(17)
     val base = Seq.tabulate(900) { i =>
@@ -273,10 +270,18 @@ class MiceJoinSpec extends AnyFunSuite {
       .withColumn("w", when($"mW", lit(null)).otherwise($"wT"))
       .withColumn("v", when($"mV", lit(null)).otherwise($"vT"))
       .select($"id", $"k", $"x", $"y", $"z", $"w", $"v")
-    val chained = MiceJoin.imputeChainedOverJoin(base, dim2, "k",
-      MiceJoin.ChainConfig(factNum = Seq("y", "z", "w", "v", "x"), factCat = Seq(),
-        dimNum = Seq("d1"), imputeCont = Seq("y", "z", "w", "v"),
-        iterations = 3, normalize = false))
+    (base, dim2)
+  }
+  def fourColumnConfig(iterations: Int) =
+    MiceJoin.ChainConfig(factNum = Seq("y", "z", "w", "v", "x"), factCat = Seq(),
+      dimNum = Seq("d1"), imputeCont = Seq("y", "z", "w", "v"),
+      iterations = iterations, normalize = false)
+
+  test("chained 4-column MICE (overlapping strata) == baseline on the materialized join") {
+    // rows missing in several columns train and update inside the one
+    // incomplete stratum, column by column, under the parity gate
+    val (base, dim2) = fourColumnData
+    val chained = MiceJoin.imputeChainedOverJoin(base, dim2, "k", fourColumnConfig(3))
     val bCfg = Mice.Config(
       contCols = Seq("y", "z", "w", "v", "x", "d1"), catCols = Seq(),
       imputeCont = Seq("y", "z", "w", "v"), imputeCat = Seq(), iterations = 3)
@@ -288,6 +293,105 @@ class MiceJoinSpec extends AnyFunSuite {
       abs($"yJ" - $"yB") + abs($"zJ" - $"zB") + abs($"wJ" - $"wB") + abs($"vJ" - $"vB")
     )).head.getDouble(0)
     assert(maxD < 1e-6, s"4-column chain diverged from baseline: max Σ|Δ| = $maxD")
+  }
+
+  test("bounded work: each extra iteration runs the same jobs and tasks, few jobs per column step") {
+    // Counted on the 4-column data: J(n) = setup + (n-1)·I + final, so
+    // J(2)-J(1) is what iteration 1 costs once it stops being final and
+    // J(3)-J(2) is what iteration 2 costs — equal when no iteration
+    // grows the working set. The caller's write is counted too.
+    val (base, dim2) = fourColumnData
+    def run(iterations: Int): (Long, Long) = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      val out = MiceJoin.imputeChainedOverJoin(base, dim2, "k", fourColumnConfig(iterations))
+      out.write.format("noop").mode("overwrite").save()
+      Graft.dropCheckpoint(out)
+    }
+    run(1) // warm the memoized dim probes
+    val Seq(j1, j2, j3) = (1 to 3).map(run)
+    info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
+    val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
+    assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
+    // measured on local[4]: 17, 26, 35 jobs (51, 75, 99 tasks) — 9 jobs
+    // per iteration, 35 for the 12 column steps (4 columns × 3
+    // iterations) including set-up and the write
+    val (steps, maxJobsPerStep) = (4 * 3, 3)
+    assert(j3._1 <= maxJobsPerStep * steps,
+      s"${j3._1} jobs for $steps column steps, over $maxJobsPerStep per step")
+  }
+
+  test("incomplete-stratum training keeps inner-join semantics: orphans and NULL dim features") {
+    import graft.ml.Factorized.StarDim
+    // dim A carries d1 and a categorical c2 that is NULL for key 4; dim
+    // B carries no feature, so only its match marker can tell its
+    // orphans apart. Orphans (no match in A or in B) have y observed and
+    // z missing: they sit in the incomplete stratum, and must neither
+    // train y's model nor take a prediction for z.
+    val rng = new scala.util.Random(23)
+    def eff(c: Option[Int]): Double = c.fold(0.0)(v => Seq(-1.0, 0.5, 2.0)(v))
+    val dimA = Seq.tabulate(30)(k => (k.toLong, k * 0.7 - 9.0, Option(k % 3).filter(_ => k != 4)))
+      .toDF("ka", "d1", "c2")
+    val dimB = Seq.tabulate(20)(_.toLong).toDF("kb")
+    val rows = Seq.tabulate(600) { i =>
+      val ka = if (i % 50 == 1) 999 else i % 30
+      val kb = if (i % 50 == 2) 999 else i % 20
+      val x = rng.nextGaussian() * 2
+      val d1 = ka * 0.7 - 9.0
+      val c2 = if (ka == 4 || ka == 999) None else Some(ka % 3)
+      val y = 1.5 + 2.0 * x + 0.8 * d1 + eff(c2) + rng.nextGaussian() * 0.1
+      val z = -1.0 + 0.6 * y + 0.5 * x + rng.nextGaussian() * 0.1
+      val orphan = ka == 999 || kb == 999
+      (i.toLong, ka.toLong, kb.toLong, x, y, z, !orphan && i % 7 == 0, orphan || i % 9 == 2)
+    }
+    val base = rows.toDF("id", "ka", "kb", "x", "yT", "zT", "missY", "missZ")
+      .withColumn("y", when($"missY", lit(null)).otherwise($"yT"))
+      .withColumn("z", when($"missZ", lit(null)).otherwise($"zT"))
+      .repartition(4)
+    val cfg = MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(),
+      dimNum = Seq(), imputeCont = Seq("y", "z"), iterations = 2, normalize = false)
+    val chained = MiceJoin.imputeChainedOverStar(base,
+      Seq(StarDim(dimA, "ka", Seq("d1"), Seq("c2")), StarDim(dimB, "kb")), cfg)
+      .select($"id", $"y".as("yJ"), $"z".as("zJ"))
+      .join(base.select($"id", $"ka", $"kb", $"y", $"z"), "id")
+    assert(chained.count() == 600)
+
+    val baseline = Mice.baseline(base.join(dimA, "ka").join(dimB, "kb"),
+      Mice.Config(contCols = Seq("y", "z", "x", "d1"), catCols = Seq("c2"),
+        imputeCont = Seq("y", "z"), imputeCat = Seq(), iterations = 2))
+    val matched = chained.join(dimA.filter($"c2".isNotNull).select("ka"), "ka")
+      .join(dimB, "kb")
+      .join(baseline.select($"id", $"y".as("yB"), $"z".as("zB")), "id")
+    assert(matched.count() == 600 - 24 - 20, "every matched row with its features must be compared")
+    val maxD = matched.select(max(abs($"yJ" - $"yB") + abs($"zJ" - $"zB"))).head.getDouble(0)
+    assert(maxD < 1e-6, s"incomplete-stratum training diverged from the inner-joined baseline: $maxD")
+
+    // rows with no match, or with the NULL c2, keep their values: the
+    // observed ones unchanged, the missing ones at the mean init
+    val (meanY, meanZ) = base.select(avg($"y"), avg($"z")).as[(Double, Double)].head
+    val kept = chained.filter($"ka" === 999 || $"kb" === 999 || $"ka" === 4)
+      .select(max(abs($"yJ" - coalesce($"y", lit(meanY))) + abs($"zJ" - coalesce($"z", lit(meanZ)))))
+      .head.getDouble(0)
+    assert(kept < 1e-9, s"orphan or NULL-feature rows changed: $kept")
+  }
+
+  test("unique-key verdicts are memoized for file and local dims only") {
+    // a non-file source can gain a duplicate key under the same plan:
+    // its verdict must be re-probed, so the second check throws
+    BufferSource.rows.clear()
+    BufferSource.rows.add((1L, 1.0))
+    BufferSource.rows.add((2L, 2.0))
+    val live = spark.read.format(classOf[BufferSource].getName).load()
+    MiceJoin.requireUniqueKey(live, "k")
+    BufferSource.rows.add((2L, 3.0))
+    val ex = intercept[IllegalArgumentException](MiceJoin.requireUniqueKey(live, "k"))
+    assert(ex.getMessage.contains("unique"))
+    // a parquet dim keeps its memoized verdict: the repeat check runs no job
+    val dir = java.nio.file.Files.createTempDirectory("graft-unique").resolve("dim").toString
+    Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(dir)
+    val pq = spark.read.parquet(dir)
+    MiceJoin.requireUniqueKey(pq, "k")
+    val (jobs, _) = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+      MiceJoin.requireUniqueKey(pq, "k"))
+    assert(jobs == 0, s"the parquet dim was re-probed ($jobs jobs)")
   }
 
   test("missing row without a dim match falls back to the observed mean") {
@@ -373,12 +477,12 @@ class MiceJoinSpec extends AnyFunSuite {
   }
 
   test("final-step consumed checkpoints stay live until the caller releases the returned plan") {
-    // The FINAL step's updated parts are intentionally NOT checkpointed:
-    // the branches they read (iter-1 checkpoints whose allFlag already
-    // contains the last column) must therefore stay persisted inside the
-    // returned lazy plan — unpersisting them at the final step would make
-    // the caller's single consumption recompute each consumed branch's
-    // update-join chain through every previously dropped generation.
+    // The FINAL iteration's incomplete stratum is intentionally NOT
+    // checkpointed: the checkpoint it reads (the previous iteration's)
+    // must therefore stay persisted inside the returned lazy plan —
+    // unpersisting it at the final step would make the caller's single
+    // consumption recompute the stratum's update chain through every
+    // previously dropped generation.
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel
     val rng = new scala.util.Random(7)
