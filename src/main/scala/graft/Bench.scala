@@ -408,7 +408,7 @@ object Bench {
 
     Tier("main", Seq(
       "q01_pricing" -> (() => noopRouted(
-        SparkEntry.queries("q01_agg_pricing")(spark, sfDir), "GroupedMomentsKernel")),
+        SparkEntry.queries("q01_agg_pricing")(spark, sfDir), "GroupedKernelPartial")),
       "q01_pricing_row" -> (() => withoutKernelStrategies(
         noop(SparkEntry.queries("q01_agg_pricing")(spark, sfDir)))),
       "q01_columnar" -> (() => columnarPricing(spark, sfDir)),
@@ -430,7 +430,7 @@ object Bench {
         noopRouted(li.groupBy(col("l_returnflag"), col("l_linestatus"))
           .agg(Graft.sumTriple(
             col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"),
-            col("l_linenumber")).as("t")), "GroupedCofactorKernel")
+            col("l_linenumber")).as("t")), "GroupedKernelPartial")
       },
       "cofactor_grouped_row" -> (() => withoutKernelStrategies {
         noop(li.groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -441,17 +441,16 @@ object Bench {
       "cofactor_grouped_columnar" -> (() => columnarCofactorGrouped(spark, sfDir)),
       "cofactor_grouped_multikey" -> (() => columnarCofactorGroupedMulti(spark, sfDir)),
       "cofactor_grouped_dict" -> (() => columnarCofactorGroupedDict(spark, sfDir)),
-      // the explicit factorized identity — grouped cofactors FEEDING a
-      // join. The kernel strategies must REFUSE this shape (round-19's
-      // +140% regression: driver-materializing exec + single-partition
-      // join input); the negative assertion fails loud if a gate change
-      // ever re-admits it, and the `_row` twin keeps the routing delta
-      // measured per round (r19 verdict: the missing pair is exactly
-      // how the regression shipped).
+      // the explicit factorized identity — numeric-only grouped
+      // cofactors FEEDING a join. CofactorDeclarativeRewrite turns them
+      // into plain SUMs before planning, so no kernel partial may
+      // appear; the negative assertion fails loud if that rewrite stops
+      // taking the shape, and the `_row` twin keeps the routing delta
+      // measured per round.
       "factorized_join" -> { () =>
         val q = SparkEntry.queries("q09_factorized_join")(spark, sfDir)
-        require(!q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
-          "a grouped cofactor feeding a join must NOT plan through the kernel exec")
+        require(!q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+          "the declarative rewrite must take a numeric-only join-fed cofactor")
         noop(q)
       },
       "factorized_join_row" -> (() => withoutKernelStrategies(
@@ -619,7 +618,7 @@ object Bench {
 
     Tier("sf1", Seq(
       "sf1_q01_pricing" -> (() => noopRouted(
-        SparkEntry.queries("q01_agg_pricing")(spark, sf1Dir), "GroupedMomentsKernel")),
+        SparkEntry.queries("q01_agg_pricing")(spark, sf1Dir), "GroupedKernelPartial")),
       "sf1_cofactor_full" -> { () =>
         noopRouted(li1.withColumn("shipyear", year(col("l_shipdate")))
           .agg(Graft.sumTriple(
@@ -935,7 +934,7 @@ object Bench {
 
     Tier("sf100", Seq(
       "sf100_q01_pricing" -> (() => noopRouted(
-        SparkEntry.queries("q01_agg_pricing")(spark, sf100Dir), "GroupedMomentsKernel")),
+        SparkEntry.queries("q01_agg_pricing")(spark, sf100Dir), "GroupedKernelPartial")),
       "sf100_q01_columnar" -> (() => columnarPricing(spark, sf100Dir)),
       "sf100_cofactor_columnar" -> (() => columnarCofactorFull(spark, sf100Dir)),
       "sf100_cofactor_grouped_columnar" -> (() => columnarCofactorGrouped(spark, sf100Dir)),

@@ -468,10 +468,14 @@ object Graft {
    * explicitly — a NULL group whose key unboxes to 0 is never what a
    * grouped moment wants). The kernel route is gated on ONE memoized
    * probe scan ([[graft.ml.Factorized.probeGroupedShape]]): it builds
-   * one FULL buffer per group per partition and materializes every
-   * group driver-side — the right plan for dimension-like keys, an
-   * executor OOM for a fact-like key that is still under the 1M
-   * cardinality guard. The default cap (`maxGroups` ≤ 0) is
+   * one FULL buffer per group per partition — the right plan for
+   * dimension-like keys, an executor OOM for a fact-like key that is
+   * still under the 1M cardinality guard. The per-partition buffers
+   * leave the scan as partial triples
+   * ([[graft.agg.ColumnarCofactor.groupedPartials]]) that an ordinary
+   * `groupBy(key).agg(sum_triple)` merges under Spark's own exchange, so
+   * the result is a lazy DataFrame whose groups never pass through the
+   * driver. The default cap (`maxGroups` ≤ 0) is
    * BYTE-BASED: per-group buffer bytes are estimated from the probe's
    * MEASURED cat-column cardinalities (each per-group map holds at
    * most min(column cardinality, rows/group) entries — a 10k-category
@@ -496,45 +500,25 @@ object Graft {
   def cofactorGrouped(df: DataFrame, key: String, num: Seq[String], cat: Seq[String],
                       nb: Boolean = false, maxGroups: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
     register(df.sparkSession)
     val resolver = df.sparkSession.sessionState.analyzer.resolver
-    val keyField = df.schema.find(f => resolver(f.name, key))
     // int AND long keys ride the kernel's LONG label channel
     // (full-range longs, no 2^32 aliasing possible); strings of ≤8
     // UTF-8 bytes pack through CatShortString (flag, lang, country,
     // locale, SKU codes); the key is emitted back in the column's
     // ORIGINAL form so the output schema never depends on which route
     // ran
-    val keyType = keyField.map(_.dataType)
-    val isStrKey = keyType.contains(StringType)
-    val numSpecs = num.map(graft.agg.ColumnarCofactor.NumCol)
-    val catSpecs = cat.map(graft.agg.ColumnarCofactor.CatCol)
-    val viaKernel = groupedKernelGate(df, key, num, cat, nb, maxGroups,
-        probeNulls = false)
-      .flatMap { case (ls, _) => graft.agg.ColumnarCofactor.cofactorPerClassLong(
-        df, numSpecs, catSpecs, ls, nbMode = nb).map(gs => (ls, gs)) }
+    val viaKernel = groupedKernelGate(df, key, num, cat, nb, maxGroups, probeNulls = false)
+      .flatMap { case (ls, _) =>
+        groupedViaKernel(df, df.schema.find(f => resolver(f.name, key)).toSeq, ls, num, cat, nb)
+          .map(g => (ls, g)) }
     viaKernel match {
-      case Some((ls, groups)) =>
-        val dictStrings = ls match {
-          case ds: graft.agg.ColumnarCofactor.CatDictString =>
-            ds.dict.value.map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-          case _ => null
-        }
-        lastGroupedRouteTL.set(if (dictStrings != null) "columnar-dict" else "columnar")
-        val schema = StructType(Seq(
-          StructField(keyField.get.name, keyType.get),
-          StructField("t", graft.agg.TripleCodec.dataType(nb))))
-        val rows: java.util.List[Row] = java.util.Arrays.asList(
-          groups.map { case (k, t) =>
-            val kv: Any =
-              if (dictStrings != null) dictStrings(k.toInt)
-              else if (isStrKey) graft.agg.ColumnarCofactor.unpackShortString(k)
-              else if (keyType.get == LongType) k
-              else k.toInt
-            Row(kv, tripleToRow(t, nb))
-          }: _*)
-        df.sparkSession.createDataFrame(rows, schema)
+      case Some((ls, grouped)) =>
+        lastGroupedRouteTL.set(ls match {
+          case _: graft.agg.ColumnarCofactor.CatDictString => "columnar-dict"
+          case _ => "columnar"
+        })
+        grouped
       case None =>
         lastGroupedRouteTL.set("row")
         val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
@@ -569,40 +553,17 @@ object Graft {
   def cofactorGroupedMulti(df: DataFrame, keys: Seq[String], num: Seq[String], cat: Seq[String],
                            nb: Boolean = false, maxGroups: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
     require(keys.nonEmpty, "cofactorGroupedMulti needs at least one key")
     if (keys.size == 1) return cofactorGrouped(df, keys.head, num, cat, nb, maxGroups)
     register(df.sparkSession)
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     val keyFields = keys.map(k => df.schema.find(f => resolver(f.name, k))
       .getOrElse(throw new IllegalArgumentException(s"key column $k not found")))
-    val numSpecs = num.map(graft.agg.ColumnarCofactor.NumCol)
-    val catSpecs = cat.map(graft.agg.ColumnarCofactor.CatCol)
-    val viaKernel = groupedKernelGateMulti(df, keys, num, cat, nb, maxGroups)
-      .flatMap { case (ls, _) => graft.agg.ColumnarCofactor.cofactorPerClassLong(
-        df, numSpecs, catSpecs, ls, nbMode = nb).map(gs => (ls, gs)) }
-    viaKernel match {
-      case Some((ls, groups)) =>
+    groupedKernelGateMulti(df, keys, num, cat, nb, maxGroups)
+      .flatMap { case (ls, _) => groupedViaKernel(df, keyFields, ls, num, cat, nb) } match {
+      case Some(grouped) =>
         lastGroupedRouteTL.set("columnar")
-        val schema = StructType(
-          keyFields.map(f => StructField(f.name, f.dataType)) :+
-            StructField("t", graft.agg.TripleCodec.dataType(nb)))
-        val rows: java.util.List[Row] = java.util.Arrays.asList(
-          groups.map { case (k, t) =>
-            val fields = graft.agg.ColumnarCofactor.unpackPackedKeys(k, ls.widths)
-            val kvs = keyFields.zip(fields).map { case (f, v) =>
-              f.dataType match {
-                case StringType => graft.agg.ColumnarCofactor.unpackShortString(v)
-                case LongType => v
-                case IntegerType => v.toInt
-                case ShortType => v.toShort
-                case ByteType => v.toByte
-                case other => throw new IllegalStateException(s"unreachable key type $other")
-              }
-            }
-            Row.fromSeq(kvs :+ tripleToRow(t, nb))
-          }: _*)
-        df.sparkSession.createDataFrame(rows, schema)
+        grouped
       case None =>
         lastGroupedRouteTL.set("row")
         val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
@@ -615,6 +576,29 @@ object Graft {
     }
   }
 
+  /** The kernel route of [[cofactorGrouped]]/[[cofactorGroupedMulti]]:
+    * the grouped kernel's partial triples
+    * ([[graft.agg.ColumnarCofactor.groupedPartials]]) as a DataFrame of
+    * `(keys…, __t)`, merged per key tuple by `sum_triple` under Spark's
+    * own exchange. Lazy: nothing runs until the caller acts. None when
+    * the harvest refuses the plan. */
+  private def groupedViaKernel(df: DataFrame, keyFields: Seq[org.apache.spark.sql.types.StructField],
+      ls: graft.agg.ColumnarCofactor.CatSpec, num: Seq[String], cat: Seq[String],
+      nb: Boolean): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StructField, StructType}
+    graft.agg.ColumnarCofactor.groupedPartials(df, num.map(graft.agg.ColumnarCofactor.NumCol),
+        cat.map(graft.agg.ColumnarCofactor.CatCol), ls, keyFields.map(_.dataType), nb)
+      .map { rdd =>
+        val schema = StructType(keyFields.map(f => StructField(f.name, f.dataType)) :+
+          StructField("__t", graft.agg.TripleCodec.dataType(nb), nullable = false))
+        def quoted(name: String) = col("`" + name.replace("`", "``") + "`")
+        org.apache.spark.sql.graft.ColumnBridge.ofInternalRows(df.sparkSession, rdd, schema)
+          .groupBy(keyFields.map(f => quoted(f.name)): _*)
+          .agg(sumTripleOf(col("__t")).as("t"))
+      }
+  }
+
   /** [[groupedKernelGate]] for `GROUP BY k1, k2[, …]`: every key must
     * be int-typed or string, the probe's exact per-key shapes must
     * pack into ≤ 8 bytes total ([[graft.agg.ColumnarCofactor.CatPackedKeys]]
@@ -624,8 +608,7 @@ object Graft {
     * packed label spec plus the probed NULL-row bound. */
   private[graft] def groupedKernelGateMulti(df: DataFrame, keys: Seq[String],
       num: Seq[String], cat: Seq[String], nb: Boolean, maxGroups: Int,
-      probeNulls: Boolean = false,
-      driverGroupCap: Long = Long.MaxValue): Option[(graft.agg.ColumnarCofactor.CatPackedKeys, Long)] = {
+      probeNulls: Boolean = false): Option[(graft.agg.ColumnarCofactor.CatPackedKeys, Long)] = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     if (keys.size < 2 || keys.size > 4) return None
@@ -677,10 +660,10 @@ object Graft {
        else (for { i <- ePerCat.indices; j <- i until ePerCat.size }
          yield math.min(ePerCat(i) * ePerCat(j), rpk) * 56.0).sum)
     val bufBytes = 8.0 * (1 + d + (if (nb) d else d * (d + 1) / 2)) + catBytes
-    val groupCap: Long = math.min(driverGroupCap,
+    val groupCap: Long =
       if (maxGroups > 0)
         math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
-      else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong))
+      else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong)
     if (keyCard > groupCap) None
     else if (probeNulls && nullUB > rows / 10) None
     else Some((graft.agg.ColumnarCofactor.CatPackedKeys(keys, widths), nullUB))
@@ -693,19 +676,6 @@ object Graft {
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     df.schema.find(f => resolver(f.name, c)).forall(_.nullable)
   }
-
-  /** Driver-output group cap for the SQL planner-strategy kernel routes
-    * (`spark.graft.sqlKernel.maxDriverGroups`, default 65 536). The
-    * byte-based gate above bounds EXECUTOR buffer memory; this bounds
-    * what the strategy execs materialize on the DRIVER (one key tuple +
-    * triple + UnsafeRow per group on a single thread — round-19 verdict
-    * item 2). Past it the default distributed aggregate plans, which
-    * handles any cardinality; the DataFrame API (`cofactorGrouped`)
-    * keeps its own byte-based cap and is unaffected. */
-  private[graft] def sqlKernelDriverGroupCap(): Long =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.sqlKernel.maxDriverGroups", "65536").toLong
-    catch { case _: Throwable => 65536L }
 
   /** Install [[graft.plans.GroupedCofactorStrategy]] on the session's
     * experimental strategies (idempotent): SQL/DataFrame single-key
@@ -737,10 +707,9 @@ object Graft {
       spark.experimental.extraStrategies =
         cur :+ graft.plans.GroupedMomentsStrategy(spark)
     // the declarative rewrite for numeric-only cofactors that FEED A
-    // JOIN — the shape the grouped kernel strategy refuses by design
-    // (driver materialization is wrong there); plain SUMs keep the
-    // whole pipeline in codegen'd hash aggregates instead of
-    // ObjectHashAggregate buffer objects
+    // JOIN: plain SUMs keep the whole pipeline, the join's final
+    // sum_triple(multiply_triple) included, in codegen'd hash
+    // aggregates instead of ObjectHashAggregate buffer objects
     val opts = spark.experimental.extraOptimizations
     if (!opts.contains(graft.plans.CofactorDeclarativeRewrite))
       spark.experimental.extraOptimizations =
@@ -760,15 +729,14 @@ object Graft {
     * semantics exactly (a NULL group survives; a group whose rows all
     * carry a NULL input still appears with an empty triple), both
     * shapes the kernel's skip-any-NULL-row contract cannot reproduce
-    * alone — the caller routes those rows through a row-aggregate SIDE
-    * CHANNEL and ring-merges. The gate refuses only when the probed
-    * NULL-row bound exceeds ~10% of the table: past that the side
-    * channel is no longer a remainder and the default plan is the
+    * alone — the caller routes those rows through a row-lifted
+    * NULL-REMAINDER branch under the same merge. The gate refuses only
+    * when the probed NULL-row bound exceeds ~10% of the table: past
+    * that the remainder is no longer small and the default plan is the
     * honest choice. */
   private[graft] def groupedKernelGate(df: DataFrame, key: String,
       num: Seq[String], cat: Seq[String], nb: Boolean, maxGroups: Int,
-      probeNulls: Boolean,
-      driverGroupCap: Long = Long.MaxValue): Option[(graft.agg.ColumnarCofactor.CatSpec, Long)] = {
+      probeNulls: Boolean): Option[(graft.agg.ColumnarCofactor.CatSpec, Long)] = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val resolver = df.sparkSession.sessionState.analyzer.resolver
     val keyType = df.schema.find(f => resolver(f.name, key)).map(_.dataType)
@@ -823,14 +791,12 @@ object Graft {
           // groups × multi-MB buffers — the per-partition OOM this gate
           // exists to stop. A refused tiny-group case merely takes the
           // (always-correct) row aggregate.
-          math.min(driverGroupCap,
-            if (maxGroups > 0)
-              math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
-            else math.min(1L << 20,
-              ((64L << 20) / math.max(1.0, bufBytes)).toLong))
+          if (maxGroups > 0)
+            math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
+          else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong)
         if (keyCard > groupCap) None
-        // past ~10% NULL-bearing rows the side channel stops being a
-        // remainder — the default plan is the honest choice
+        // past ~10% NULL-bearing rows the NULL remainder stops being
+        // small — the default plan is the honest choice
         else if (probeNulls && nullUB > rows / 10) None
         else if (isStrKey && keyWidth > 8)
           // too wide / NUL-embedded for base-256 packing, but the group
@@ -856,18 +822,16 @@ object Graft {
     * the row aggregate, which handles any cardinality). Memoized with
     * the probes' (plan, tag, file-snapshot) discipline so the SQL
     * strategy's plan-time gate and execute-time re-gate share ONE
-    * distinct scan and ONE broadcast; evicted entries unpersist their
-    * broadcast. */
+    * distinct scan and ONE broadcast. Eviction only drops the cache's
+    * reference: a lazy grouped result planned earlier may still read
+    * the broadcast, and Spark's ContextCleaner releases it once no plan
+    * holds it. */
   private val dictCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
         org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]): Boolean = {
-        val evict = size() > 64
-        if (evict) e.getValue.unpersist(false)
-        evict
-      }
+            org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]): Boolean = size() > 64
     })
   private def groupDict(df: DataFrame, key: String, cap: Long):
       Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]] = {

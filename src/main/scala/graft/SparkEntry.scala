@@ -1786,8 +1786,9 @@ object SparkEntry {
         .orderBy(col("source"))
     },
     // the SQL surface on the grouped kernel: spark.sql GROUP BY +
-    // sum_to_triple plans as GroupedCofactorKernelExec through the
-    // opt-in planner strategy (GroupedCofactorStrategy — installed via
+    // sum_to_triple plans as the grouped kernel partial aggregate
+    // (GroupedKernelPartialExec under Spark's own sum_triple merge)
+    // through the opt-in planner strategy (GroupedCofactorStrategy — installed via
     // experimental.extraStrategies, the q67 convention), giving SQL the
     // same columnar route the Scala API (q78/q79) rides. The plan is
     // ASSERTED to carry the kernel exec node, and rows are COLLECTED
@@ -1804,7 +1805,7 @@ object SparkEntry {
           """SELECT l_suppkey,
             |       sum_to_triple(l_quantity, l_extendedprice, l_linenumber) AS t
             |FROM lineitem_q81 GROUP BY l_suppkey""".stripMargin)
-        require(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+        require(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
           "q81: the SQL grouped aggregate must plan through the kernel strategy")
         val out = q.select(
           col("l_suppkey"),
@@ -1839,10 +1840,10 @@ object SparkEntry {
     // NULL-bearing data on the SQL grouped-kernel route: ~2.7% NULL
     // keys + ~2.4% NULL inputs (injected deterministically, written
     // to a scratch parquet so the scan is harvestable). The strategy
-    // keeps the kernel for the clean rows and ring-merges a
-    // row-aggregate SIDE CHANNEL over exactly the NULL-bearing
-    // remainder — the NULL-key group and null-skipped rows must match
-    // plain SQL semantics byte-for-byte. Route REQUIRED in-query.
+    // keeps the kernel for the clean rows and unions a row-lifted
+    // branch over exactly the NULL-bearing remainder under the same
+    // sum_triple merge — the NULL-key group and null-skipped rows must
+    // match plain SQL semantics byte-for-byte. Route REQUIRED in-query.
     "q83_grouped_sql_nulls" -> { (s, dir) =>
       Graft.register(s)
       // FIXED per-user scratch path + overwrite, not a fresh temp dir
@@ -1863,13 +1864,14 @@ object SparkEntry {
       s.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(s)
       try {
         val q = s.sql("SELECT k, sum_to_triple(x) AS t FROM lineitem_q83 GROUP BY k")
-        require(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+        require(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
           "q83: NULL-bearing data within the bound must keep the kernel route")
         // the NULL-key group is presented as the -1 sentinel: a NULL
         // in a key column round-trips as NaN through the driver's
         // pandas-tuple compare, where NaN != NaN would flag identical
         // results as a mismatch; the group itself still flows through
-        // the side channel (k >= 0 everywhere else, so -1 is unique)
+        // the NULL-remainder branch (k >= 0 everywhere else, so -1 is
+        // unique)
         val out = q.select(
           coalesce(col("k"), lit(-1L)).as("k"),
           col("t.n").as("n_rows"),
@@ -1882,7 +1884,7 @@ object SparkEntry {
     },
     // GROUP BY k1, k2 on the SQL surface: both 1-byte flag columns pack
     // into the kernel's Long label channel with probed byte budgets
-    // (CatPackedKeys) — the same zero-shuffle scan+treeReduce physical
+    // (CatPackedKeys) — the same partial-aggregate kernel physical
     // route as the single-key strategy. Route REQUIRED in-query.
     "q84_grouped_sql_twokeys" -> { (s, dir) =>
       Graft.register(s)
@@ -1894,7 +1896,7 @@ object SparkEntry {
           """SELECT l_returnflag, l_linestatus,
             |       sum_to_triple(l_quantity, l_extendedprice, l_linenumber) AS t
             |FROM lineitem_q84 GROUP BY l_returnflag, l_linestatus""".stripMargin)
-        require(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+        require(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
           "q84: GROUP BY k1, k2 must plan through the packed-label kernel strategy")
         val out = q.select(
           col("l_returnflag"), col("l_linestatus"),
@@ -1909,8 +1911,8 @@ object SparkEntry {
     },
     // the curation cut itself — GROUP BY source, lang over documents on
     // the DataFrame surface (cofactorGroupedMulti): probed widths 5 + 2
-    // pack into one Long label, one columnar scan, no shuffle. Route
-    // REQUIRED after the call (lastGroupedRoute).
+    // pack into one Long label, one columnar scan, merged by sum_triple.
+    // Route REQUIRED after the call (lastGroupedRoute).
     "q85_grouped_multi_docs" -> { (s, dir) =>
       Graft.register(s)
       val docs = Tables.load(s, dir, "documents")
@@ -1964,7 +1966,7 @@ object SparkEntry {
           """SELECT l_returnflag, l_linestatus, l_linenumber,
             |       sum_to_triple(l_quantity, l_extendedprice) AS t
             |FROM lineitem_q88 GROUP BY l_returnflag, l_linestatus, l_linenumber""".stripMargin)
-        require(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+        require(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
           "q88: GROUP BY k1, k2, k3 must plan through the packed-label kernel strategy")
         val out = q.select(
           col("l_returnflag"), col("l_linestatus"), col("l_linenumber"),

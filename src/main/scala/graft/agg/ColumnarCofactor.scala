@@ -679,8 +679,8 @@ object ColumnarCofactor {
   /** [[cofactorPerClass]] with a LONG class key: the label channel
     * decodes into a Long, so full-range long keys (no 2^32 guard) and
     * [[CatShortString]] labels up to 8 packed UTF-8 bytes ride the
-    * kernel — `Graft.cofactorGrouped`'s route for `en-US`-shaped and
-    * long-id group keys. */
+    * kernel. The triples come back to the driver, as training needs;
+    * grouped results that stay distributed use [[groupedPartials]]. */
   def cofactorPerClassLong(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                        label: CatSpec, nbMode: Boolean = false,
                        maxCategories: Int = CofactorAggregate.confMaxCategories()): Option[Seq[(Long, Triple)]] =
@@ -695,6 +695,31 @@ object ColumnarCofactor {
       // tree fold is order-insensitive.
       if (partials.getNumPartitions == 0) Seq.empty[(Long, Triple)]
       else partials.treeReduce(Triple.addPerClass[Long], depth = 2)
+    }
+
+  /** The grouped kernel as a PARTIAL aggregate: one row per (group, scan
+    * partition) holding the group's original key values — decoded on the
+    * executor by [[graft.plans.KernelKeys.unpack]], typed `keyTypes` —
+    * and that partition's triple as a Catalyst struct. Nothing is merged
+    * here: callers feed the rows to a `sum_triple` aggregate, so Spark's
+    * own exchange and final aggregate combine the groups. `None` when the
+    * plan is not harvestable. */
+  def groupedPartials(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
+                      label: CatSpec, keyTypes: Seq[DataType], nbMode: Boolean = false,
+                      maxCategories: Int = CofactorAggregate.confMaxCategories()):
+      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] =
+    compile(src, nums, cats :+ label, nbMode, maxCategories).map { case (scan, compiled) =>
+      import org.apache.spark.sql.catalyst.InternalRow
+      val rowTypes = (keyTypes :+ TripleCodec.dataType(nbMode)).toArray
+      scan.executeColumnar().mapPartitions { batches =>
+        val acc = new BatchAcc(compiled, labelMode = true)
+        batches.foreach(acc.addBatch)
+        val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(rowTypes)
+        acc.perClassResult.iterator.map { case (kv, t) =>
+          proj(InternalRow.fromSeq(
+            graft.plans.KernelKeys.unpack(label, keyTypes, kv) :+ TripleCodec.toCatalyst(t, nbMode)))
+        }
+      }
     }
 
   /** Stage-truncated run for `tools.ColProfile` (1 = iterate only,

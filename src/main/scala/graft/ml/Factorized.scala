@@ -803,7 +803,7 @@ object Factorized {
         // count(col) < count(*) iff the column holds a NULL: callers
         // with keep-every-row semantics (the SQL grouped-kernel
         // strategy, where a NULL group and null-skipped rows must match
-        // the default aggregate exactly) size the side-channel from this
+        // the default aggregate exactly) size the NULL remainder from this
         nullCols.map(c => count(col(c)))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       val rows = r.getLong(0)
@@ -820,7 +820,7 @@ object Factorized {
       val nullBase = catBase + cats.size
       // upper bound on rows carrying any NULL (a row with several NULL
       // columns is counted once per column — still a sound bound for
-      // the side-channel fraction gate)
+      // the NULL-remainder fraction gate)
       val nullUB = nullCols.indices.map(i => rows - r.getLong(nullBase + i)).sum
       val v = (rows, r.getLong(1), shapes,
         cats.indices.map(i => r.getLong(catBase + i)).toVector, nullUB)

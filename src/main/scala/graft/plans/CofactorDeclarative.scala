@@ -14,12 +14,9 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType
  * plain declarative SUMs (optimization guide §4: eliminate non-codegen
  * expressions in the hot path).
  *
- * The round-19 fix made `GroupedCofactorStrategy` refuse any grouped
- * cofactor whose result is an input to further distributed work — the
- * driver-materializing kernel exec is the wrong plan there (the
- * `factorized_join` +140% regression). That refusal left those
- * aggregates on the DEFAULT route: an `ObjectHashAggregate` over
- * `TypedImperativeAggregate` buffers, which (a) closes the whole-stage
+ * Without this rule those aggregates take an `ObjectHashAggregate` over
+ * `TypedImperativeAggregate` buffers (the default plan, or the grouped
+ * kernel's `sum_triple` merge), which (a) closes the whole-stage
  * codegen pipeline feeding it, (b) kryo-serializes a buffer object per
  * group across the shuffle, and (c) hands the join object-built rows.
  * For the explicit factorized identity (the reference's signature
@@ -57,24 +54,29 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType
  * Scope guards: full (non-NB) mode only, no DISTINCT, no user FILTER,
  * every input numeric (DoubleType/FloatType/Decimal — the aggregate's
  * own num/cat split; one integer input means categorical maps, which
- * stay on the imperative route). Aggregates that are the plan ROOT are
- * left alone: the kernel strategies own that shape (columnar harvest)
- * and measure faster than any row-route plan.
+ * stay on the imperative route). Aggregates that do not feed a join —
+ * the plan ROOT among them — are left alone: the kernel strategies own
+ * that shape (columnar harvest) and measure faster than any row-route
+ * plan.
  */
 object CofactorDeclarativeRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // mark every Aggregate under a Join — same scoping rule as
-    // KernelRouteContext.feedsJoin, computed locally because this rule
-    // sees the whole optimized plan in one call. Marks are the
-    // aggregate's OUTPUT exprIds (globally unique, stable across the
-    // node copies transformUp makes when a descendant changes) — an
-    // identity set of node references lost the mark for a join-feeding
-    // Aggregate stacked above another rewritten one (r20 advice).
+    // mark every Aggregate under a Join by the exprIds of its ALIASES:
+    // an alias is minted by its own Aggregate, so it identifies that
+    // node and survives the copies transformUp makes when a descendant
+    // changes (an identity set of node references lost the mark for a
+    // join-feeding Aggregate stacked above another rewritten one). A
+    // pass-through grouping attribute keeps the exprId it has below the
+    // Aggregate, so marking it would also mark any aggregate above the
+    // join that groups by the same key — the plan root included.
     val marked = scala.collection.mutable.HashSet[ExprId]()
     plan.foreach {
       case j: Join => j.foreach {
-        case a: Aggregate => a.aggregateExpressions.foreach(marked += _.exprId)
+        case a: Aggregate => a.aggregateExpressions.foreach {
+          case al: Alias => marked += al.exprId
+          case _ => ()
+        }
         case _ => ()
       }
       case _ => ()

@@ -1,31 +1,29 @@
 package graft.plans
 
-import graft.agg.{CofactorAggregate, TripleCodec}
-import graft.ring.Triple
+import graft.agg.{CofactorAggregate, CofactorBuffer, SumTriple, ToCofactor, TripleCodec}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy, UnionExec}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
 /**
  * Planner strategy routing a SQL/DataFrame `GROUP BY` +
  * `sum_to_triple`/`sum_to_nb_agg` through the grouped columnar kernel —
- * the same physical path `Graft.cofactorGrouped` takes (one columnar
- * scan, per-class buffers, executor-side tree merge; measured 0.82× of
- * DuckDB at sf100 vs the exchange + ObjectHashAggregate default). The
- * SQL surface previously always paid the default plan; with this
+ * the same partial aggregate `Graft.cofactorGrouped` runs (one columnar
+ * scan, per-class buffers per partition, no ColumnarToRow). With this
  * strategy installed, `spark.sql("SELECT k, sum_to_triple(x, y, c) FROM
- * t GROUP BY k")` plans as [[GroupedCofactorKernelExec]] when every
- * gate passes. Two to four keys (`GROUP BY source, lang` — the standard
- * curation cut) ride the same Long label channel with probed per-key
- * byte budgets ([[graft.agg.ColumnarCofactor.CatPackedKeys]]).
+ * t GROUP BY k")` plans as Spark's own `sum_triple` final aggregate over
+ * an exchange over one [[GroupedKernelPartialExec]] leaf when every gate
+ * passes — distributed like any aggregate, so it serves grouped
+ * cofactors that feed a join as well as those that are the answer. Two
+ * to four keys (`GROUP BY source, lang` — the standard curation cut)
+ * ride the same Long label channel with probed per-key byte budgets
+ * ([[graft.agg.ColumnarCofactor.CatPackedKeys]]).
  *
  * Opt-in via `spark.experimental.extraStrategies`, the same per-session
  * convention as [[FactorizeCofactorRule]] — NOT registered globally by
@@ -44,18 +42,18 @@ import org.apache.spark.unsafe.types.UTF8String
  *    harvestable bare/filtered scan, key width/cardinality/buffer-byte
  *    caps, and a probed NULL-row bound ≤ ~10% of the table.
  *
- * NULL-bearing data keeps the fast route via a row-aggregate SIDE
- * CHANNEL: SQL keeps a NULL-key group, and a group whose rows all carry
- * a NULL input still appears with an empty triple — both shapes the
- * kernel's skip-any-NULL-row contract drops. But those are EXACTLY the
- * rows the kernel skips, so the remainder `any key IS NULL OR any input
- * IS NULL` is aggregated by the (always-correct) row aggregate — a
- * filter-pushed scan over the small NULL-bearing fraction — and
- * ring-merged with the kernel groups driver-side (`Triple.add`; a
- * NULL-input row contributes nothing to any triple on either path, so
- * the two partitions of the data are disjoint and the merge is exact).
- * Past the gate's ~10% bound the side channel is no longer a remainder
- * and the default plan wins.
+ * NULL-bearing data keeps the fast route via a NULL-REMAINDER branch:
+ * SQL keeps a NULL-key group, and a group whose rows all carry a NULL
+ * input still appears with an empty triple — both shapes the kernel's
+ * skip-any-NULL-row contract drops. But those are EXACTLY the rows the
+ * kernel skips, so the remainder `any key IS NULL OR any input IS NULL`
+ * (a filter-pushed scan over the small NULL-bearing fraction) is lifted
+ * row by row with `to_cofactor` and unioned under the same final
+ * `sum_triple`. A NULL-input row lifts to NULL, which `sum_triple`
+ * skips, so it contributes nothing on either path and the merge is
+ * exact; a group whose merged triple is NULL gets the empty triple of
+ * its arity, as the default plan gives it. Past the gate's ~10% bound
+ * the remainder is no longer small and the default plan wins.
  *
  * The probe job runs at PLANNING time (first action or explain); it is
  * fixed-memory, one scan, and memoized per (plan, columns, file
@@ -72,18 +70,10 @@ case class GroupedCofactorStrategy(session: SparkSession) extends SparkStrategy 
     catch { case scala.util.control.NonFatal(_) => Nil }
 
   private def applyUnsafe(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // every top-level planning pass arrives wrapped in ReturnAnswer —
-    // record the root so the grouped case below can refuse aggregates
-    // that FEED a join (the round-19 factorized_join regression: the
-    // driver-materializing exec is the wrong plan when the aggregate
-    // is an input to more distributed work, not the answer)
-    case r: org.apache.spark.sql.catalyst.plans.logical.ReturnAnswer =>
-      KernelRouteContext.observe(r.child)
-      Nil
     // UNGROUPED flat cofactor — `df.agg(sum_to_triple(...))`, the q02
     // shape (round-18 verdict item 3: the row-aggregate route measured
     // 2.4× the kernel on the identical sf100 scan; routing, not
-    // research). No NULL side channel is needed here: the row aggregate
+    // research). No NULL-remainder branch is needed here: the row aggregate
     // and the kernel share the skip-any-NULL-row contract exactly, and
     // a flat aggregate always returns its one row (empty input = the
     // empty triple on both routes). A `withColumn("y", year(ts))`
@@ -165,12 +155,6 @@ case class GroupedCofactorStrategy(session: SparkSession) extends SparkStrategy 
         case Alias(a @ AggregateExpression(_: CofactorAggregate, _, false, None, _), _) => a
       }.get
       val cof = ae.aggregateFunction.asInstanceOf[CofactorAggregate]
-      // the aggregate FEEDS a join: the kernel exec's driver-side
-      // materialization + re-parallelize is the wrong plan when the
-      // groups are an input to more distributed work (the factorized
-      // identity's exact shape) — the default distributed aggregate
-      // keeps the join's parallelism
-      if (KernelRouteContext.feedsJoin(agg)) return Nil
       // an explicit non-default cat-cardinality cap means the user
       // pinned ROW-aggregate guard semantics (per-group cat maps,
       // group keys exempt); the kernel's single cap also guards the
@@ -197,26 +181,34 @@ case class GroupedCofactorStrategy(session: SparkSession) extends SparkStrategy 
         })
       val (num, cat) = (numAttrs.map(_.name), catAttrs.map(_.name))
       val df = ColumnBridge.ofRows(session, child)
-      // the DRIVER-output cap (separate from the gate's executor-byte
-      // cap): the exec materializes one key tuple + triple + UnsafeRow
-      // per group on the driver — round-19 verdict item 2
-      val driverCap = graft.Graft.sqlKernelDriverGroupCap()
-      val gated =
-        if (keys.size == 1)
-          graft.Graft.groupedKernelGate(df, keys.head.name, num, cat, cof.nbMode,
-            maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).isDefined
-        else
-          graft.Graft.groupedKernelGateMulti(df, keys.map(_.name), num, cat, cof.nbMode,
-            maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).isDefined
-      if (!gated) return Nil
-      // output slot → key index (or -1 for the triple column)
-      val slotKey = projList.map { ne =>
-        if (isPlainCofactor(ne)) -1
-        else keys.indexWhere(k => isGroupRef(ne, k))
+      val nullUB = GroupedKernelPartial.gate(df, keys.map(_.name), num, cat, cof.nbMode) match {
+        case Some((_, ub)) => ub
+        case None => return Nil
       }
-      GroupedCofactorKernelExec(agg.output, slotKey,
-        keys.map(_.name), num, cat, cof.nbMode, keys.map(_.dataType),
-        cof.maxCategories, driverCap)(child, session) :: Nil
+      val t = AttributeReference("__t", cof.dataType, nullable = false)()
+      val partial = GroupedKernelPartialExec(keys :+ t, keys.map(_.name), num, cat, Nil,
+        cof.nbMode, cof.maxCategories, withNulls = nullUB > 0)(child, session)
+      val input =
+        if (nullUB == 0L) partial
+        else {
+          // the NULL remainder: exactly the rows the kernel skips
+          val nullCond = (keys ++ cof.children).map(e => IsNull(e): Expression).reduce(Or(_, _))
+          UnionExec(Seq(partial, planLater(Project(
+            keys :+ Alias(ToCofactor(cof.children, cof.nbMode), t.name)(),
+            Filter(nullCond, child)))))
+        }
+      // a group whose rows all carry a NULL input merges to NULL; the
+      // default plan gives it the empty triple of this arity
+      val empty = Literal(TripleCodec.toCatalyst(
+        new CofactorBuffer(num.size, cat.size, cof.nbMode).toTriple, cof.nbMode), cof.dataType)
+      val result = projList.map {
+        case a @ Alias(_: AggregateExpression, name) =>
+          Alias(Coalesce(Seq(SumTriple(t).toAggregateExpression(), empty)), name)(
+            exprId = a.exprId, qualifier = a.qualifier, explicitMetadata = a.explicitMetadata,
+            nonInheritableMetadataKeys = a.nonInheritableMetadataKeys)
+        case keyRef => keyRef
+      }
+      GroupedKernelPartial.plan(agg, result, input)
     case _ => Nil
   }
 
@@ -258,92 +250,5 @@ case class FlatCofactorKernelExec(
     val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
     val row = proj(InternalRow.fromSeq(Seq(TripleCodec.toCatalyst(t, nb)))).copy()
     sparkContext.parallelize(Seq(row), 1)
-  }
-}
-
-/**
- * Physical node for the strategy above: at execute time, run the
- * grouped columnar kernel over the child plan (its own columnar scan +
- * executor-side tree merge — the heavy work is fully distributed; only
- * the ≤`maxCategories` kilobyte-sized group triples land on the driver,
- * the same materialization contract as `Graft.cofactorGrouped`), merge
- * in the NULL-remainder side channel when the probe saw NULLs, and
- * return the groups as a single-partition RDD. `slotKey(i)` maps each
- * output column to its key index (-1 = the triple), so any projection
- * order or key subset SQL produces is honored.
- */
-case class GroupedCofactorKernelExec(
-    output: Seq[Attribute], slotKey: Seq[Int],
-    keys: Seq[String], num: Seq[String], cat: Seq[String], nb: Boolean,
-    keyTypes: Seq[DataType], maxCat: Int, driverCap: Long)(
-    // both transient and OUTSIDE the product: the physical tree is
-    // serialized into task closures by parent stages, and a LogicalPlan
-    // drags a non-serializable file index along — the kernel only needs
-    // them driver-side in doExecute
-    @transient private val childLogical: LogicalPlan,
-    @transient private val spark: SparkSession) extends LeafExecNode {
-
-  override def otherCopyArgs: Seq[AnyRef] = Seq(childLogical, spark)
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    import graft.agg.ColumnarCofactor
-    val df = ColumnBridge.ofRows(spark, childLogical)
-    // the gate re-runs (memoized probe — no extra scan) so a data
-    // rewrite between planning and execution fails loudly instead of
-    // silently diverging from SQL semantics
-    def regressed = throw new IllegalStateException(
-      "grouped-cofactor kernel route regressed between planning and execution " +
-      "(input rewritten in place?) — re-run the query to re-plan")
-    val (ls, nullUB): (ColumnarCofactor.CatSpec, Long) =
-      if (keys.size == 1)
-        graft.Graft.groupedKernelGate(df, keys.head, num, cat, nb,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).getOrElse(regressed)
-      else
-        graft.Graft.groupedKernelGateMulti(df, keys, num, cat, nb,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).getOrElse(regressed)
-    val groups = ColumnarCofactor.cofactorPerClassLong(df,
-        num.map(ColumnarCofactor.NumCol), cat.map(ColumnarCofactor.CatCol), ls, nbMode = nb,
-        maxCategories = maxCat)
-      .getOrElse(throw new IllegalStateException(
-        "grouped-cofactor kernel harvest refused a plan the gate accepted"))
-    // merge in the ORIGINAL key-value space: kernel keys unpack first
-    // (shared decoder — KernelKeys), then the side channel's groups
-    // ring-add (disjoint row sets — a key in both means a group with
-    // clean AND null-bearing rows, whose null-bearing side contributes
-    // the empty triple add is identity on)
-    val merged = scala.collection.mutable.LinkedHashMap[Seq[Any], Triple]()
-    groups.foreach { case (kv, t) => merged(KernelKeys.unpack(ls, keyTypes, kv)) = t }
-    if (nullUB > 0) {
-      // the NULL remainder: exactly the rows the kernel skipped. The
-      // filter pushes to the scan, so this reads the small NULL-bearing
-      // fraction; group count is bounded by the same gate cap.
-      val nullCond = ((keys ++ num) ++ cat).map(c => col(c).isNull).reduce(_ || _)
-      val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
-      val aggCol = if (nb) graft.Graft.sumNbAgg(cols: _*) else graft.Graft.sumTriple(cols: _*)
-      df.filter(nullCond).groupBy(keys.map(col): _*).agg(aggCol.as("__t"))
-        .collect().foreach { r =>
-          val kvs: Seq[Any] = keys.indices.map(i => if (r.isNullAt(i)) null else r.get(i))
-          // an all-skipped group comes back with a NULL triple struct —
-          // the empty triple of this arity (the kernel would have
-          // dropped the group; SQL keeps it)
-          val t = if (r.isNullAt(keys.size))
-                    new graft.agg.CofactorBuffer(num.size, cat.size, nb).toTriple
-                  else graft.Graft.tripleFromRow(r.getStruct(keys.size))
-          merged(kvs) = merged.get(kvs).map(Triple.add(_, t)).getOrElse(t)
-        }
-    }
-    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-    val rows = merged.iterator.map { case (kvs, t) =>
-      val triple = TripleCodec.toCatalyst(t, nb)
-      val vals = slotKey.map { s =>
-        if (s == -1) triple
-        else kvs(s) match {
-          case str: String => UTF8String.fromString(str)
-          case other => other // Int / Long / Short / Byte / null pass through
-        }
-      }
-      proj(InternalRow.fromSeq(vals)).copy()
-    }.toSeq
-    sparkContext.parallelize(rows, KernelKeys.resultSlices(rows.size, sparkContext))
   }
 }

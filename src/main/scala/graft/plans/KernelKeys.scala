@@ -2,41 +2,36 @@ package graft.plans
 
 import graft.agg.ColumnarCofactor
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared label→original-key decoding for the kernel-routing physical
-  * nodes ([[GroupedCofactorKernelExec]], [[GroupedMomentsKernelExec]]):
-  * the kernel's Long label channel packs string/int key tuples
+/** The one label→original-key decoder of the grouped kernel: the Long
+  * label channel packs string/int key tuples
   * ([[ColumnarCofactor.CatPackedKeys]]), dictionary indices
-  * ([[ColumnarCofactor.CatDictString]]), or a single packed key —
-  * one decoder, so a future label-spec change cannot silently diverge
-  * between the two SQL routes. */
-private[plans] object KernelKeys {
+  * ([[ColumnarCofactor.CatDictString]]), or a single packed key. It runs
+  * on executors inside [[ColumnarCofactor.groupedPartials]], so every
+  * grouped route — SQL and DataFrame API — emits keys through it. */
+private[graft] object KernelKeys {
 
-  def toOriginal(v: Long, dt: DataType): Any = dt match {
-    case StringType => ColumnarCofactor.unpackShortString(v)
+  /** One raw label field as a Catalyst value of the key column's type. */
+  private def toCatalyst(v: Long, dt: DataType): Any = dt match {
+    case StringType => UTF8String.fromString(ColumnarCofactor.unpackShortString(v))
     case LongType => v
     case ShortType => v.toShort
     case ByteType => v.toByte
     case _ => v.toInt
   }
 
-  /** The ORIGINAL key-column values of one kernel group label. */
+  /** The ORIGINAL key-column values of one kernel group label, as
+    * Catalyst values (strings as `UTF8String`). */
   def unpack(ls: ColumnarCofactor.CatSpec, keyTypes: Seq[DataType], kv: Long): Seq[Any] =
     ls match {
       case pk: ColumnarCofactor.CatPackedKeys =>
         ColumnarCofactor.unpackPackedKeys(kv, pk.widths)
-          .zip(keyTypes).map { case (f, dt) => toOriginal(f, dt) }
+          .zip(keyTypes).map { case (f, dt) => toCatalyst(f, dt) }
       case ds: ColumnarCofactor.CatDictString =>
-        // broadcast value is driver-cached after the first read
-        Seq(new String(ds.dict.value(kv.toInt), java.nio.charset.StandardCharsets.UTF_8))
+        // the broadcast value is executor-cached after the first read
+        Seq(UTF8String.fromBytes(ds.dict.value(kv.toInt)))
       case _ =>
-        Seq(toOriginal(kv, keyTypes.head))
+        Seq(toCatalyst(kv, keyTypes.head))
     }
-
-  /** Partition count for the re-parallelized kernel result: one slice
-    * for the common few-group answer, scaling by ~8k rows/slice up to
-    * the default parallelism for results near the driver group cap, so
-    * a downstream stage over the groups is never single-threaded. */
-  def resultSlices(rows: Int, sc: org.apache.spark.SparkContext): Int =
-    math.max(1, math.min(sc.defaultParallelism, rows / 8192 + 1))
 }

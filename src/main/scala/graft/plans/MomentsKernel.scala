@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.ring.Triple
+import graft.agg.{CofactorAggregate, SumTriple, TripleCodec}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -74,10 +74,12 @@ private[plans] final case class IrBin(op: Char, l: NumIR, r: NumIR) extends NumI
  * on executors (measured 2.5× on the q01 pricing summary at sf100 —
  * the round-18 verdict's "routing, not research" gap). Every aggregated
  * expression becomes a [[graft.agg.ColumnarCofactor.NumDerived]] kernel
- * column via the [[NumIR]] vectorized bridge; per group the kernel's
- * triple carries n (COUNT) and Σ of each derived column (SUM; AVG =
- * Σ/n), and the surrounding scalar expressions (`round(sum(x), 2)`)
- * re-evaluate driver-side on the ≤group-cap results.
+ * column via the [[NumIR]] vectorized bridge; the grouped kernel runs
+ * as a partial aggregate ([[GroupedKernelPartialExec]]) under Spark's
+ * own exchange and `sum_triple` final aggregate, whose output list
+ * reads each aggregate off the merged triple — COUNT as `t.n`, SUM as
+ * `t.lin[i]`, AVG as `t.lin[i] / t.n` — inside the surrounding scalar
+ * expressions (`round(sum(x), 2)`).
  *
  * Gates (any failure → Nil, the default plan runs):
  *  - 1–4 plain int/long/string grouping attributes; every other
@@ -92,7 +94,7 @@ private[plans] final case class IrBin(op: Char, l: NumIR, r: NumIR) extends NumI
  *    probe counts ZERO null rows across the keys and every referenced
  *    attribute. SQL's per-aggregate null skipping differs from the
  *    kernel's whole-row skip the moment any referenced value is NULL,
- *    so unlike the cofactor strategy there is no remainder side channel
+ *    so unlike the cofactor strategy there is no NULL-remainder branch
  *    here — null-bearing data takes the default plan, exactly.
  *
  * FP caveat (same as every kernel route): partial sums fold in
@@ -148,12 +150,6 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
   }
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // every top-level planning pass arrives wrapped in ReturnAnswer —
-    // record the root so planMoments can refuse grouped aggregates
-    // that feed a join (see KernelRouteContext)
-    case r: org.apache.spark.sql.catalyst.plans.logical.ReturnAnswer =>
-      KernelRouteContext.observe(r.child)
-      Nil
     // 0 keys = the FLAT scan summary (`SELECT count(*), sum(x) FROM t`
     // — the single most common analytics statement at corpus scale)
     case agg @ Aggregate(groupExprs, projList, child, _)
@@ -261,81 +257,32 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
       return Some(Seq(FlatMomentsKernelExec(agg.output, projList,
         inputNames, derived.map(_._2), descs)(child, session)))
     }
-    // grouped moments that FEED a join keep the default distributed
-    // plan — the kernel exec's driver round-trip + re-parallelize is
-    // only the right contract when the groups ARE the answer
-    if (KernelRouteContext.feedsJoin(agg)) return None
-    // gate: harvestable scan, key widths/cardinality caps (executor
-    // bytes AND the driver-output cap), and ZERO probed nulls across
-    // keys + every referenced attribute
+    // gate: harvestable scan, key widths/cardinality caps, and ZERO
+    // probed nulls across keys + every referenced attribute
     // nb = false: the NB (diagonal-only) buffer was A/B-probed at sf100
     // and bought nothing — the scan is IO/decode-bound, not moment-bound
-    val driverCap = graft.Graft.sqlKernelDriverGroupCap()
-    val gated: Option[Long] =
-      if (keys.size == 1)
-        graft.Graft.groupedKernelGate(df, keys.head.name, inputNames, Nil, nb = false,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).map(_._2)
-      else
-        graft.Graft.groupedKernelGateMulti(df, keys.map(_.name), inputNames, Nil, nb = false,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).map(_._2)
-    gated match {
-      case Some(0L) =>
-        Some(Seq(GroupedMomentsKernelExec(agg.output, projList, keys,
-          inputNames, inputs.keys.toSeq, derived.map(_._2), descs,
-          keys.map(_.dataType), driverCap)(child, session)))
-      case _ => None // null-bearing or over-cap: the default plan is the honest one
-    }
-  }
-}
-
-/**
- * Physical node for [[GroupedMomentsStrategy]]: run the grouped
- * columnar kernel over the child with one [[graft.agg.ColumnarCofactor.NumDerived]]
- * per distinct aggregated expression, then re-evaluate each projection
- * driver-side with its aggregates replaced by the group's kernel
- * moments (n, Σ derived) — only the ≤group-cap result rows ever reach
- * the driver, the same materialization contract as the cofactor
- * strategy's exec.
- */
-case class GroupedMomentsKernelExec(
-    output: Seq[Attribute],
-    projList: Seq[NamedExpression],
-    keys: Seq[AttributeReference],
-    inputNames: Seq[String],
-    inputIds: Seq[ExprId],
-    derived: Seq[NumIR],
-    descs: Seq[(Expression, Int, Int)],
-    keyTypes: Seq[DataType], driverCap: Long)(
-    @transient private val childLogical: LogicalPlan,
-    @transient private val spark: SparkSession) extends LeafExecNode {
-
-  override def otherCopyArgs: Seq[AnyRef] = Seq(childLogical, spark)
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    import graft.agg.ColumnarCofactor
-    val df = ColumnBridge.ofRows(spark, childLogical)
-    def regressed = throw new IllegalStateException(
-      "grouped-moments kernel route regressed between planning and execution " +
-      "(input rewritten in place?) — re-run the query to re-plan")
-    val (ls, nullUB): (ColumnarCofactor.CatSpec, Long) =
-      if (keys.size == 1)
-        graft.Graft.groupedKernelGate(df, keys.head.name, inputNames, Nil, nb = false,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).getOrElse(regressed)
-      else
-        graft.Graft.groupedKernelGateMulti(df, keys.map(_.name), inputNames, Nil, nb = false,
-          maxGroups = -1, probeNulls = true, driverGroupCap = driverCap).getOrElse(regressed)
-    if (nullUB != 0L) regressed
-    val groups = ColumnarCofactor.cofactorPerClassLong(df,
-        MomentsEval.numSpecs(inputNames, derived), Nil, ls, nbMode = false)
-      .getOrElse(throw new IllegalStateException(
-        "grouped-moments kernel harvest refused a plan the gate accepted"))
-    val keyIdToSlot = keys.map(_.exprId).zipWithIndex.toMap
-    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-    val rows = groups.map { case (label, t: Triple) =>
-      MomentsEval.row(projList, descs, t.n, t.lin,
-        keyIdToSlot, KernelKeys.unpack(ls, keyTypes, label), proj)
-    }
-    sparkContext.parallelize(rows, KernelKeys.resultSlices(rows.size, sparkContext))
+    if (!GroupedKernelPartial.gate(df, keys.map(_.name), inputNames, Nil, nb = false)
+        .exists(_._2 == 0L))
+      return None // null-bearing or over-cap: the default plan is the honest one
+    val t = AttributeReference("__t", TripleCodec.dataType(false), nullable = false)()
+    val partial = GroupedKernelPartialExec(keys :+ t, keys.map(_.name), inputNames, Nil,
+      derived.map(_._2), nb = false, CofactorAggregate.confMaxCategories(),
+      withNulls = false)(child, session)
+    // every group holds ≥ 1 row, so n > 0 and AVG's division is safe
+    val merged = SumTriple(t).toAggregateExpression()
+    val n = GetStructField(merged, 0, Some("n"))
+    def lin(i: Int) = GetArrayItem(GetStructField(merged, 1, Some("lin")), Literal(i))
+    // bottom-up, so the merged aggregate a replacement introduces is
+    // never visited again
+    val result = projList.map(_.transformUp {
+      case ae: AggregateExpression =>
+        descs(descs.indexWhere(_._1 semanticEquals ae.canonicalized)) match {
+          case (_, 0, idx) => lin(idx)
+          case (_, 1, idx) => Divide(lin(idx), Cast(n, DoubleType))
+          case _ => n
+        }
+    }.asInstanceOf[NamedExpression])
+    Some(GroupedKernelPartial.plan(agg, result, partial))
   }
 }
 
@@ -367,13 +314,12 @@ case class FlatMomentsKernelExec(
         MomentsEval.numSpecs(inputNames, derived), Nil)
       .getOrElse(regressed)
     val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-    val row = MomentsEval.row(projList, descs, t.n, t.lin,
-      Map.empty, Seq.empty, proj)
+    val row = MomentsEval.row(projList, descs, t.n, t.lin, proj)
     sparkContext.parallelize(Seq(row), 1)
   }
 }
 
-/** Shared execution-side folding for the moments execs. */
+/** Shared execution-side helpers of the moments routes. */
 private[plans] object MomentsEval {
 
   /** Null-row upper bound for the flat moments route, CHEAPEST PROOF
@@ -404,19 +350,11 @@ private[plans] object MomentsEval {
         })
     }
 
-  /** Fold one result row: every AggregateExpression replaced by its
-    * moment value (n / sum / sum over n — SQL's NULL on an empty
-    * Sum/Average), every group-key attribute by its group value.
-    *
-    * transformDown, deliberately: an AggregateExpression must fold to
-    * its literal BEFORE any group-key attribute inside its child is
-    * rewritten (bottom-up, `sum(x * k)` no longer matched its planned
-    * canonical form and the exec threw). Top-down, the aggregate
-    * matches first and descent stops at the substituted literal. */
+  /** Fold the one summary row of the flat route: every
+    * AggregateExpression replaced by its moment value (n / sum / sum
+    * over n — SQL's NULL on an empty Sum/Average). */
   def row(projList: Seq[NamedExpression], descs: Seq[(Expression, Int, Int)],
-          n: Long, lin: Array[Double],
-          keySlot: Map[ExprId, Int], kvs: Seq[Any],
-          proj: UnsafeProjection): InternalRow = {
+          n: Long, lin: Array[Double], proj: UnsafeProjection): InternalRow = {
     def aggValue(ae: AggregateExpression): Any = {
       val i = descs.indexWhere(_._1 semanticEquals ae.canonicalized)
       require(i >= 0, s"unplanned aggregate $ae reached the moments exec")
@@ -430,8 +368,6 @@ private[plans] object MomentsEval {
       val e = ne match { case Alias(c, _) => c; case other => other }
       val folded = e.transformDown {
         case ae: AggregateExpression => Literal.create(aggValue(ae), ae.dataType)
-        case a: AttributeReference if keySlot.contains(a.exprId) =>
-          Literal.create(kvs(keySlot(a.exprId)), a.dataType)
       }
       folded.eval(InternalRow.empty)
     }

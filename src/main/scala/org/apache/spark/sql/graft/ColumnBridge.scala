@@ -26,6 +26,15 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** DataFrame over an internal-row RDD with the given schema (the
+    * `private[sql]` `internalCreateDataFrame`) — the grouped kernel's
+    * partial rows, which `graft.Graft.cofactorGrouped` merges with an
+    * ordinary aggregate. */
+  def ofInternalRows(spark: org.apache.spark.sql.SparkSession,
+                     rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
   /** Rebuild `origin` as a DataFrame over an already-materialized
     * internal-row RDD, CARRYING the executed plan's
     * `outputPartitioning`/ordering (via the `private[sql]`

@@ -281,7 +281,7 @@ class PlansSpec extends AnyFunSuite {
     spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
     try {
       val q = spark.sql(sql)
-      assert(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         s"strategy must plan the kernel exec:\n${q.queryExecution.executedPlan}")
       val got = q.collect().map(r => r.getInt(0) -> Graft.tripleFromRow(r.getStruct(1))).toMap
       assert(got.keySet == expected.keySet && got.nonEmpty)
@@ -289,7 +289,7 @@ class PlansSpec extends AnyFunSuite {
 
       // aliased key + reversed projection order still routes and aligns columns
       val q2 = spark.sql("SELECT sum_to_triple(x, y) AS t, k AS grp FROM gsql_t GROUP BY k")
-      assert(q2.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"))
+      assert(q2.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       val got2 = q2.collect().map(r => r.getInt(1) -> Graft.tripleFromRow(r.getStruct(0))).toMap
       assert(got2.keySet == expected.keySet)
       got2.keys.foreach(k => assert(got2(k).n == expected(k).n, s"q2 group $k row count differs"))
@@ -303,7 +303,7 @@ class PlansSpec extends AnyFunSuite {
         .map(r => (r.getInt(0), r.getInt(1)) -> Graft.tripleFromRow(r.getStruct(2))).toMap
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val twoKeys = spark.sql(sql2)
-      assert(twoKeys.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+      assert(twoKeys.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "GROUP BY k1, k2 must ride the packed-label kernel route")
       val got2k = twoKeys.collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> Graft.tripleFromRow(r.getStruct(2))).toMap
@@ -311,11 +311,11 @@ class PlansSpec extends AnyFunSuite {
       got2k.keys.foreach(k => assert(got2k(k).approxEquals(exp2(k), 1e-9), s"group $k differs"))
       // reversed projection + key subset: (triple, c) only
       val subset = spark.sql("SELECT sum_to_triple(x) AS t, c FROM gsql_t GROUP BY k, c")
-      assert(subset.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"))
+      assert(subset.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(subset.count() == 21, "a projected-out key still groups")
 
       // NULL-bearing data ≤ the ~10% bound KEEPS the kernel route via
-      // the row-aggregate side channel: the NULL-key group, groups
+      // the row-lifted NULL-remainder branch: the NULL-key group, groups
       // whose rows all carry a NULL input (empty triple), and partially
       // NULL groups must all match the default plan exactly
       val tmpN = java.nio.file.Files.createTempDirectory("gsqlN").toFile.getAbsolutePath
@@ -335,8 +335,8 @@ class PlansSpec extends AnyFunSuite {
       }.toMap
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val qn = spark.sql(sqlN)
-      assert(qn.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
-        "NULL-bearing data within the bound must keep the kernel route (side channel)")
+      assert(qn.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        "NULL-bearing data within the bound must keep the kernel route (NULL remainder)")
       val gotN = qn.collect().map { r =>
         (if (r.isNullAt(0)) None else Some(r.getInt(0))) -> Graft.tripleFromRow(r.getStruct(1))
       }.toMap
@@ -345,7 +345,7 @@ class PlansSpec extends AnyFunSuite {
       assert(gotN(Some(9)).n == 0L, "an all-NULL-input group appears with the empty triple")
       gotN.keys.foreach(k => assert(gotN(k).approxEquals(expN(k), 1e-9), s"group $k differs"))
 
-      // past the bound (30% NULL keys) the side channel is no longer a
+      // past the bound (30% NULL keys) the NULL remainder is no longer a
       // remainder — the default plan must run
       val tmpN2 = java.nio.file.Files.createTempDirectory("gsqlN2").toFile.getAbsolutePath
       spark.range(100).select(
@@ -354,21 +354,21 @@ class PlansSpec extends AnyFunSuite {
         col("id").cast("double").as("x")).write.mode("overwrite").parquet(tmpN2)
       spark.read.parquet(tmpN2).createOrReplaceTempView("gsql_n2")
       val qn2 = spark.sql("SELECT k, sum_to_triple(x) AS t FROM gsql_n2 GROUP BY k")
-      assert(!qn2.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+      assert(!qn2.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "NULL fraction past the bound must refuse the kernel route")
       assert(qn2.count() == 6, "5 non-null groups + the NULL group")
 
       // non-harvestable child (exchange) declines
       val qx = spark.sql(
         "SELECT k, sum_to_triple(x) AS t FROM (SELECT DISTINCT k, x FROM gsql_t) GROUP BY k")
-      assert(!qx.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"))
+      assert(!qx.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
 
       // HAVING and ORDER BY compose ABOVE the kernel exec: the strategy
       // plans the Aggregate, Spark stacks Filter/Sort on its output
       val qh = spark.sql(
         """SELECT k, sum_to_triple(x, y) AS t FROM gsql_t
           |GROUP BY k HAVING t.n > 857 ORDER BY k DESC""".stripMargin)
-      assert(qh.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+      assert(qh.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "HAVING/ORDER BY must not knock the aggregate off the kernel route")
       val hRows = qh.collect()
       val hExp = expected.filter(_._2.n > 857).keys.toSeq.sorted.reverse
@@ -393,7 +393,7 @@ class PlansSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> Graft.tripleFromRow(r.getStruct(1))).toMap
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val q = spark.sql(sql)
-      assert(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a wide string key under the cap must plan through the dictionary kernel route")
       val got = q.collect().map(r => r.getString(0) -> Graft.tripleFromRow(r.getStruct(1))).toMap
       assert(got.keySet == exp.keySet && got.size == 6 &&
@@ -417,7 +417,7 @@ class PlansSpec extends AnyFunSuite {
         (col("id") % 97).cast("double").as("x")).write.mode("overwrite").parquet(tmp)
       spark.read.parquet(tmp).createOrReplaceTempView("gsql_e")
       val q = spark.sql("SELECT k, sum_to_triple(x) AS t FROM gsql_e GROUP BY k")
-      assert(q.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"))
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(q.count() == 5)
     } finally spark.experimental.extraStrategies = saved
   }
@@ -494,13 +494,13 @@ class PlansSpec extends AnyFunSuite {
       val exp = spark.sql(sql).collect().map(_.toSeq).toSeq
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedMomentsStrategy(spark)
       val q = spark.sql(sql)
-      assert(q.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         s"Q1 shape must plan the moments kernel exec:\n${q.queryExecution.executedPlan}")
       assert(q.collect().map(_.toSeq).toSeq == exp, "moments kernel result differs from the default plan")
 
       // count(attr) with a probed null-free attribute still routes
       val qc = spark.sql("SELECT g, count(x) AS c, round(sum(x), 1) AS s FROM gsql_m GROUP BY g")
-      assert(qc.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"))
+      assert(qc.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(qc.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
         Map("g0" -> 3000L, "g1" -> 3000L, "g2" -> 3000L))
 
@@ -513,11 +513,11 @@ class PlansSpec extends AnyFunSuite {
       // which is exactly the default-plan behavior the route must not
       // paper over).
       val qdiv = spark.sql("SELECT g, round(sum(x / d), 2) AS sd FROM gsql_m GROUP BY g ORDER BY g")
-      assert(!qdiv.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(!qdiv.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a division must keep the default plan (ANSI throw / NULL-on-zero-divisor semantics)")
       // a NULL literal inside an aggregate child keeps the default plan
       val qnl = spark.sql("SELECT g, sum(x + CAST(NULL AS DOUBLE)) AS s FROM gsql_m GROUP BY g")
-      assert(!qnl.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(!qnl.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a NULL literal must keep the default plan")
       assert(qnl.collect().forall(_.isNullAt(1)))
 
@@ -534,18 +534,18 @@ class PlansSpec extends AnyFunSuite {
       val expK = spark.sql(sqlK).collect().map(_.toSeq).toSeq
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedMomentsStrategy(spark)
       val qk = spark.sql(sqlK)
-      assert(qk.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(qk.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a key referenced inside an aggregate child must still route")
       assert(qk.collect().map(_.toSeq).toSeq == expK, "sum(x * k) differs from the default plan")
 
       // an integer-typed SUM keeps the default plan (long accumulator
       // exactness past 2^53 — double moments cannot promise it)
       val qi = spark.sql("SELECT g, sum(i) AS si FROM gsql_m GROUP BY g")
-      assert(!qi.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(!qi.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "integer SUM must keep the default plan")
       // a non-SUM/AVG/COUNT aggregate keeps the default plan
       val qm = spark.sql("SELECT g, max(x) AS mx, sum(x) AS sx FROM gsql_m GROUP BY g")
-      assert(!qm.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"))
+      assert(!qm.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       // NULL-bearing inputs refuse the route (per-aggregate null
       // skipping differs from the kernel's whole-row skip) and the
       // default plan stays correct
@@ -556,7 +556,7 @@ class PlansSpec extends AnyFunSuite {
           .otherwise(col("id").cast("double")).as("x")).write.mode("overwrite").parquet(tmpN)
       spark.read.parquet(tmpN).createOrReplaceTempView("gsql_mn")
       val qn = spark.sql("SELECT g, sum(x) AS sx, count(*) AS c FROM gsql_mn GROUP BY g")
-      assert(!qn.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      assert(!qn.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "NULL-bearing inputs must keep the default plan exactly")
       assert(qn.count() == 3)
     } finally spark.experimental.extraStrategies = saved
@@ -671,7 +671,7 @@ class PlansSpec extends AnyFunSuite {
         // every generated shape must ROUTE (inputs are null-free and
         // double-typed after the explicit cast) — a silent decline
         // would turn the fuzz into a no-op
-        assert(q.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+        assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
           s"trial $trial did not route: $sql")
         // doubles compare within 2e-6: partial sums fold in tree-merge
         // order, so a last-ulp difference can land on the opposite side
@@ -690,118 +690,172 @@ class PlansSpec extends AnyFunSuite {
     } finally spark.experimental.extraStrategies = saved
   }
 
-  test("SQL kernel strategies refuse grouped aggregates that FEED a join (factorized identity)") {
+  /** With AQE off, the physical plan of `q` has Spark's final aggregate
+    * directly over a shuffle exchange whose subtree holds the grouped
+    * kernel partial. */
+  private def partialUnderExchange(q: org.apache.spark.sql.DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    q.queryExecution.executedPlan.exists {
+      case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Final) =>
+        a.child match {
+          case e: ShuffleExchangeExec =>
+            e.exists(_.isInstanceOf[graft.plans.GroupedKernelPartialExec])
+          case _ => false
+        }
+      case _ => false
+    }
+  }
+
+  test("grouped kernel routes: partial below Spark's exchange and final aggregate") {
+    Graft.register(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("gpart").toFile.getAbsolutePath
+    spark.range(900).select((col("id") % 9).cast("int").as("k"),
+      (col("id") % 31).cast("double").as("x"),
+      (col("id") % 4).cast("int").as("c")).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).createOrReplaceTempView("gpart_t")
+    val cofSql = "SELECT k, sum_to_triple(x, c) AS t FROM gpart_t GROUP BY k"
+    val momSql = "SELECT k, sum(x) AS s, avg(x) AS a, count(*) AS n FROM gpart_t GROUP BY k ORDER BY k"
+    val saved = spark.experimental.extraStrategies
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    def triples(q: org.apache.spark.sql.DataFrame) =
+      q.collect().map(r => r.getInt(0) -> Graft.tripleFromRow(r.getStruct(1))).toMap
+    def jobs(q: org.apache.spark.sql.DataFrame): Long = {
+      q.queryExecution.executedPlan // planning-time probes run here, not below
+      org.apache.spark.graft.JobCounter(spark.sparkContext)(q.collect())._1
+    }
+    try {
+      // adaptive execution runs the routed plan in no more jobs than the
+      // default plan: the kernel stage is neither re-planned nor rerun
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val defaultJobs = jobs(spark.sql(cofSql))
+      spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
+      val routedJobs = jobs(spark.sql(cofSql))
+      assert(routedJobs <= defaultJobs, s"routed $routedJobs jobs vs default $defaultJobs")
+
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.experimental.extraStrategies = saved
+      val expC = triples(spark.sql(cofSql))
+      val expM = spark.sql(momSql).collect().map(_.toSeq).toSeq
+      spark.experimental.extraStrategies = saved :+
+        graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
+      val qc = spark.sql(cofSql)
+      assert(partialUnderExchange(qc),
+        s"cofactor: kernel partial must sit under the exchange:\n${qc.queryExecution.executedPlan}")
+      val gotC = triples(qc)
+      assert(gotC.size == 9 && gotC.keySet == expC.keySet)
+      gotC.keys.foreach(k => assert(gotC(k).approxEquals(expC(k), 1e-9), s"group $k differs"))
+      val qm = spark.sql(momSql)
+      assert(partialUnderExchange(qm),
+        s"moments: kernel partial must sit under the exchange:\n${qm.queryExecution.executedPlan}")
+      val gotM = qm.collect().map(_.toSeq).toSeq
+      assert(gotM.size == 9)
+      gotM.zip(expM).foreach { case (g, e) =>
+        assert(g.head == e.head && g(3) == e(3), s"key/count differ: $g vs $e")
+        Seq(1, 2).foreach { i =>
+          val (a, b) = (g(i).asInstanceOf[Double], e(i).asInstanceOf[Double])
+          assert(math.abs(a - b) <= 1e-9 * (1 + math.abs(b)), s"moment $i differs: $g vs $e")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.experimental.extraStrategies = saved
+    }
+  }
+
+  test("join-fed grouped cofactor and moments route through the kernel partial") {
     Graft.register(spark)
     val t1 = java.nio.file.Files.createTempDirectory("fj_l").toFile.getAbsolutePath
     val t2 = java.nio.file.Files.createTempDirectory("fj_r").toFile.getAbsolutePath
     spark.range(400).select((col("id") % 50).cast("int").as("k"),
-      (col("id") % 11).cast("double").as("x")).write.mode("overwrite").parquet(t1)
+      (col("id") % 11).cast("double").as("x"),
+      (col("id") % 3).cast("int").as("cc")).write.mode("overwrite").parquet(t1)
     spark.range(50).select(col("id").cast("int").as("k"),
       (col("id") * 2).cast("double").as("y")).write.mode("overwrite").parquet(t2)
     val saved = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = saved :+
-      graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
-    try {
-      def groupedA = spark.read.parquet(t1).groupBy(col("k"))
-        .agg(Graft.sumTriple(col("x")).as("A"))
-      def groupedB = spark.read.parquet(t2).groupBy(col("k"))
-        .agg(Graft.sumTriple(col("y")).as("B"))
-      // the factorized identity: two per-key grouped cofactors joined
-      // and ring-multiplied — the q09 shape whose kernel routing was
-      // the round-19 +140% regression. The grouped aggregates must
-      // keep the default DISTRIBUTED plan (no driver round-trip, no
-      // single-partition join input).
-      val q = groupedA.join(groupedB, "k")
-        .select(Graft.sumTripleOf(Graft.multiplyTriple(col("A"), col("B"))).as("t"))
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("GroupedCofactorKernel"),
-        s"a grouped cofactor feeding a join must NOT take the kernel route:\n$plan")
-      // and the result is still the factorized join's triple
-      val got = Graft.tripleFromRow(q.head.getStruct(0))
-      spark.experimental.extraStrategies = saved
-      val exp = Graft.tripleFromRow(groupedA.join(groupedB, "k")
-        .select(Graft.sumTripleOf(Graft.multiplyTriple(col("A"), col("B"))).as("t"))
-        .head.getStruct(0))
+    val savedO = spark.experimental.extraOptimizations
+    def routed(): Unit = {
       spark.experimental.extraStrategies = saved :+
         graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
-      assert(got.approxEquals(exp, 1e-9) && got.n == 400)
+      spark.experimental.extraOptimizations = savedO :+ graft.plans.CofactorDeclarativeRewrite
+    }
+    def default(): Unit = {
+      spark.experimental.extraStrategies = saved
+      spark.experimental.extraOptimizations = savedO
+    }
+    try {
+      // the factorized identity with a CATEGORICAL input on one side:
+      // the declarative rewrite cannot take it, so the kernel partial
+      // does, and the join keeps its parallelism
+      def groupedA(cats: Boolean) = spark.read.parquet(t1).groupBy(col("k"))
+        .agg((if (cats) Graft.sumTriple(col("x"), col("cc")) else Graft.sumTriple(col("x"))).as("A"))
+      def groupedB = spark.read.parquet(t2).groupBy(col("k"))
+        .agg(Graft.sumTriple(col("y")).as("B"))
+      def fj(cats: Boolean) = groupedA(cats).join(groupedB, "k")
+        .select(Graft.sumTripleOf(Graft.multiplyTriple(col("A"), col("B"))).as("t"))
+      for (cats <- Seq(true, false)) {
+        default()
+        val exp = Graft.tripleFromRow(fj(cats).head.getStruct(0))
+        routed()
+        // without the rewrite a numeric-only side routes too
+        if (!cats) spark.experimental.extraOptimizations = savedO
+        val q = fj(cats)
+        val plan = q.queryExecution.executedPlan.toString
+        assert(plan.contains("GroupedKernelPartial"),
+          s"a join-fed grouped cofactor must route through the kernel partial (cats=$cats):\n$plan")
+        val got = Graft.tripleFromRow(q.head.getStruct(0))
+        assert(got.approxEquals(exp, 1e-9) && got.n == 400, s"cats=$cats: $got vs $exp")
+      }
+      // the SAME aggregate as the plan ROOT routes as well
+      routed()
+      assert(groupedA(cats = true).queryExecution.executedPlan.toString
+        .contains("GroupedKernelPartial"), "a root grouped cofactor must keep the kernel route")
 
-      // the SAME aggregate as the plan ROOT still routes
-      assert(groupedA.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
-        "a root grouped cofactor must keep the kernel route")
-
-      // grouped MOMENTS feeding a join decline too; at the root they route
+      // grouped MOMENTS feeding a join route too, at the root as well
       def moments = spark.read.parquet(t1).groupBy(col("k")).agg(sum(col("x")).as("s"))
-      val mj = moments.join(spark.read.parquet(t2), "k")
-      assert(!mj.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
-        "grouped moments feeding a join must NOT take the kernel route")
-      assert(mj.count() == 50)
-      assert(moments.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
+      def mj = moments.join(spark.read.parquet(t2), "k").orderBy(col("k"))
+      default()
+      val expMj = mj.collect().map(_.toSeq).toSeq
+      routed()
+      assert(mj.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        "join-fed grouped moments must route through the kernel partial")
+      val gotMj = mj.collect().map(_.toSeq).toSeq
+      assert(gotMj.size == 50 && gotMj == expMj, "join-fed moments differ from the default plan")
+      assert(moments.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "root grouped moments must keep the kernel route")
-    } finally spark.experimental.extraStrategies = saved
+    } finally default()
   }
 
-  test("join-feed marks survive the gates' own nested planning passes") {
-    // a FLAT aggregate joined to a GROUPED one: the flat side's gate
-    // (canHarvest → executedPlan of its pruned child) starts a NESTED
-    // planning pass mid-outer-planning. The grouped side, offered
-    // AFTER that nested pass, must still be seen as feeding the join —
-    // the mark-set design (vs remembering one current root) is exactly
-    // this case. The flat side may route (one row to the driver is the
-    // harmless shape); the grouped side must not.
+  test("flat x grouped cross-join: both sides take their kernel routes") {
+    // the flat side's gate (canHarvest -> executedPlan of its pruned
+    // child) starts a NESTED planning pass mid-outer-planning; the
+    // grouped side, offered after it, must still route and the joined
+    // rows must match the default plan
     Graft.register(spark)
     val t = java.nio.file.Files.createTempDirectory("nest").toFile.getAbsolutePath
     spark.range(300).select((col("id") % 6).cast("int").as("k"),
       (col("id") % 7).cast("double").as("x"),
       (col("id") % 5).cast("double").as("y")).write.mode("overwrite").parquet(t)
     val saved = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
+    def q = spark.read.parquet(t).agg(Graft.sumTriple(col("x")).as("A"))
+      .crossJoin(spark.read.parquet(t).groupBy(col("k")).agg(Graft.sumTriple(col("y")).as("B")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      r.getInt(1) -> (Graft.tripleFromRow(r.getStruct(0)), Graft.tripleFromRow(r.getStruct(2)))
+    }.toMap
     try {
-      val flat = spark.read.parquet(t).agg(Graft.sumTriple(col("x")).as("A"))
-      val grouped = spark.read.parquet(t).groupBy(col("k"))
-        .agg(Graft.sumTriple(col("y")).as("B"))
-      val q = flat.crossJoin(grouped)
+      val exp = rows(q)
+      spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("GroupedCofactorKernel"),
-        s"the grouped side of the join must keep the default plan:\n$plan")
+      assert(plan.contains("FlatCofactorKernel") && plan.contains("GroupedKernelPartial"), plan)
       assert(q.count() == 6)
+      val got = rows(q)
+      assert(got.keySet == exp.keySet && got.size == 6)
+      got.foreach { case (k, (a, b)) =>
+        assert(a.approxEquals(exp(k)._1, 1e-9) && b.approxEquals(exp(k)._2, 1e-9), s"group $k differs")
+      }
     } finally spark.experimental.extraStrategies = saved
-  }
-
-  test("SQL kernel routes respect the driver-output group cap") {
-    Graft.register(spark)
-    val tmp = java.nio.file.Files.createTempDirectory("dcap").toFile.getAbsolutePath
-    spark.range(900).select((col("id") % 9).cast("int").as("k"),
-      (col("id") % 31).cast("double").as("x")).write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).createOrReplaceTempView("dcap_t")
-    val saved = spark.experimental.extraStrategies
-    spark.experimental.extraStrategies = saved :+
-      graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
-    try {
-      val cofSql = "SELECT k, sum_to_triple(x) AS t FROM dcap_t GROUP BY k"
-      val momSql = "SELECT k, sum(x) AS s FROM dcap_t GROUP BY k"
-      // 9 groups > a pinned cap of 4: both strategies must decline to
-      // the default distributed plan (the cap bounds what the exec
-      // materializes on the DRIVER), with identical results
-      spark.conf.set("spark.graft.sqlKernel.maxDriverGroups", "4")
-      val qc = spark.sql(cofSql)
-      assert(!qc.queryExecution.executedPlan.toString.contains("GroupedCofactorKernel"),
-        "over the driver group cap the cofactor route must decline")
-      assert(qc.count() == 9)
-      val qm = spark.sql(momSql)
-      assert(!qm.queryExecution.executedPlan.toString.contains("GroupedMomentsKernel"),
-        "over the driver group cap the moments route must decline")
-      assert(qm.count() == 9)
-      // at or under the cap the route re-engages
-      spark.conf.set("spark.graft.sqlKernel.maxDriverGroups", "9")
-      assert(spark.sql(cofSql).queryExecution.executedPlan.toString
-        .contains("GroupedCofactorKernel"), "at the cap the route engages")
-      assert(spark.sql(momSql).queryExecution.executedPlan.toString
-        .contains("GroupedMomentsKernel"))
-    } finally {
-      spark.conf.unset("spark.graft.sqlKernel.maxDriverGroups")
-      spark.experimental.extraStrategies = saved
-    }
   }
 
   test("planning-time probe failures decline the route instead of failing planning") {
@@ -997,5 +1051,30 @@ class PlansSpec extends AnyFunSuite {
       assert(root.queryExecution.executedPlan.toString.contains("ObjectHashAggregate"),
         "root aggregates are not this rewrite's business")
     } finally spark.experimental.extraOptimizations = savedO
+  }
+
+  test("declarative rewrite leaves a root aggregate over a join-feeding key alone") {
+    Graft.register(spark)
+    import graft.agg.CofactorAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val t1 = java.nio.file.Files.createTempDirectory("dk_l").toFile.getAbsolutePath
+    val t2 = java.nio.file.Files.createTempDirectory("dk_r").toFile.getAbsolutePath
+    spark.range(200).select((col("id") % 20).cast("int").as("k"),
+      (col("id") % 7).cast("double").as("x")).write.mode("overwrite").parquet(t1)
+    spark.range(20).select(col("id").cast("int").as("k"),
+      (col("id") * 3).cast("double").as("y")).write.mode("overwrite").parquet(t2)
+    // the root groups by `k`, which the join-feeding aggregate passes
+    // through unchanged (same exprId as the scan's k)
+    val a = spark.read.parquet(t1).groupBy(col("k")).agg(Graft.sumTriple(col("x")).as("A"))
+    val q = a.join(spark.read.parquet(t2), "k").groupBy(col("k"))
+      .agg(Graft.sumTriple(col("y")).as("R"))
+    val rewritten = graft.plans.CofactorDeclarativeRewrite(q.queryExecution.optimizedPlan)
+    def hasCofactor(agg: Aggregate) =
+      agg.aggregateExpressions.exists(_.exists(_.isInstanceOf[CofactorAggregate]))
+    val root = rewritten.collectFirst { case agg: Aggregate => agg }.get
+    assert(hasCofactor(root), s"the root aggregate must keep sum_to_triple:\n$rewritten")
+    val fed = rewritten.collect { case j: Join => j.collect { case agg: Aggregate => agg } }.flatten
+    assert(fed.nonEmpty && !fed.exists(hasCofactor),
+      s"the join-feeding aggregate must still be rewritten:\n$rewritten")
   }
 }
