@@ -417,7 +417,7 @@ object Bench {
         noopRouted(li.withColumn("shipyear", year(col("l_shipdate")))
           .agg(Graft.sumTriple(
             col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"),
-            col("l_linenumber"), col("shipyear")).as("t")), "FlatCofactorKernel")
+            col("l_linenumber"), col("shipyear")).as("t")), "GroupedKernelPartial")
       },
       "cofactor_full_row" -> (() => withoutKernelStrategies {
         noop(li.withColumn("shipyear", year(col("l_shipdate")))
@@ -623,7 +623,7 @@ object Bench {
         noopRouted(li1.withColumn("shipyear", year(col("l_shipdate")))
           .agg(Graft.sumTriple(
             col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"),
-            col("l_linenumber"), col("shipyear")).as("t")), "FlatCofactorKernel")
+            col("l_linenumber"), col("shipyear")).as("t")), "GroupedKernelPartial")
       },
       "sf1_cofactor_columnar" -> (() => columnarCofactorFull(spark, sf1Dir)),
       "sf1_factorized_adaptive" -> (() => factorizedAdaptiveRaw(spark, sf1Dir)),
@@ -945,7 +945,7 @@ object Bench {
         noopRouted(li100.withColumn("shipyear", year(col("l_shipdate")))
           .agg(Graft.sumTriple(
             col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"),
-            col("l_linenumber"), col("shipyear")).as("t")), "FlatCofactorKernel")
+            col("l_linenumber"), col("shipyear")).as("t")), "GroupedKernelPartial")
       }) ++
       // the bare-join adaptive floor re-shuffles BOTH 600M/150M-row
       // sides on every pass by construction (the operator's own runtime

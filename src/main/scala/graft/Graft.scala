@@ -498,21 +498,37 @@ object Graft {
    * first, without any scan).
    */
   def cofactorGrouped(df: DataFrame, key: String, num: Seq[String], cat: Seq[String],
-                      nb: Boolean = false, maxGroups: Int = -1): DataFrame = {
+                      nb: Boolean = false, maxGroups: Int = -1): DataFrame =
+    cofactorGroupedMulti(df, Seq(key), num, cat, nb, maxGroups)
+
+  /**
+   * Multi-key grouped cofactor — `GROUP BY k1[, k2, k3, k4]` with one
+   * full triple per key TUPLE (the `source × language` curation-cut
+   * shape); one key is [[cofactorGrouped]]. With 2–4 keys the kernel
+   * route packs every key into the ONE Long label channel with a fixed
+   * per-key byte budget measured by the shape probe
+   * ([[graft.agg.ColumnarCofactor.CatPackedKeys]]): a string key owns
+   * its exact max UTF-8 width, an int-typed key the bytes its probed
+   * [0, max] range needs — ≤ 8 bytes TOTAL rides the kernel
+   * (e.g. 4-byte source × 2-byte lang × a small int tier), anything
+   * wider, any negative int key, NUL-embedded or >8-byte strings, or
+   * an unharvestable plan falls back to the grouped row aggregate.
+   * Rows with a NULL in ANY key OR any num/cat input are dropped on
+   * both routes — a group whose rows all carry a NULL input therefore
+   * does not appear at all, on either route. Output columns carry the
+   * ORIGINAL key types, so the schema never depends on the route.
+   */
+  def cofactorGroupedMulti(df: DataFrame, keys: Seq[String], num: Seq[String], cat: Seq[String],
+                           nb: Boolean = false, maxGroups: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.col
+    require(keys.nonEmpty, "cofactorGroupedMulti needs at least one key")
     register(df.sparkSession)
     val resolver = df.sparkSession.sessionState.analyzer.resolver
-    // int AND long keys ride the kernel's LONG label channel
-    // (full-range longs, no 2^32 aliasing possible); strings of ≤8
-    // UTF-8 bytes pack through CatShortString (flag, lang, country,
-    // locale, SKU codes); the key is emitted back in the column's
-    // ORIGINAL form so the output schema never depends on which route
-    // ran
-    val viaKernel = groupedKernelGate(df, key, num, cat, nb, maxGroups, probeNulls = false)
-      .flatMap { case (ls, _) =>
-        groupedViaKernel(df, df.schema.find(f => resolver(f.name, key)).toSeq, ls, num, cat, nb)
-          .map(g => (ls, g)) }
-    viaKernel match {
+    val keyFields = keys.map(k => df.schema.find(f => resolver(f.name, k))
+      .getOrElse(throw new IllegalArgumentException(s"key column $k not found")))
+    groupedKernelGate(df, keys, num, cat, nb, maxGroups, probeNulls = false).flatMap {
+      case (ls, _) => groupedViaKernel(df, keyFields, ls, num, cat, nb).map(g => (ls, g))
+    } match {
       case Some((ls, grouped)) =>
         lastGroupedRouteTL.set(ls match {
           case _: graft.agg.ColumnarCofactor.CatDictString => "columnar-dict"
@@ -527,56 +543,13 @@ object Graft {
         // aggregate and the kernel, but a group whose rows ALL carry a
         // NULL input would survive here as an empty (n=0) triple while
         // the kernel drops it — pre-filter so the two routes return
-        // the same group set
-        val nonNull = (key +: (num ++ cat)).map(c => col(c).isNotNull).reduce(_ && _)
-        df.filter(nonNull).groupBy(col(key)).agg(agg.as("t"))
-    }
-  }
-
-  /**
-   * Multi-key grouped cofactor — `GROUP BY k1, k2[, k3, k4]` with one
-   * full triple per key TUPLE (the `source × language` curation-cut
-   * shape). The kernel route packs every key into the ONE Long label
-   * channel with a fixed per-key byte budget measured by the shape
-   * probe ([[graft.agg.ColumnarCofactor.CatPackedKeys]]): a string key
-   * owns its exact max UTF-8 width, an int-typed key the bytes its
-   * probed [0, max] range needs — ≤ 8 bytes TOTAL rides the kernel
-   * (e.g. 4-byte source × 2-byte lang × a small int tier), anything
-   * wider, any negative int key, NUL-embedded or >8-byte strings, or
-   * an unharvestable plan falls back to the grouped row aggregate.
-   * Rows with a NULL in ANY key OR any num/cat input are dropped on
-   * both routes (same contract as the single-key surface) — a group
-   * whose rows all carry a NULL input therefore does not appear at
-   * all, on either route. Output columns carry the ORIGINAL key
-   * types, so the schema never depends on the route.
-   */
-  def cofactorGroupedMulti(df: DataFrame, keys: Seq[String], num: Seq[String], cat: Seq[String],
-                           nb: Boolean = false, maxGroups: Int = -1): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(keys.nonEmpty, "cofactorGroupedMulti needs at least one key")
-    if (keys.size == 1) return cofactorGrouped(df, keys.head, num, cat, nb, maxGroups)
-    register(df.sparkSession)
-    val resolver = df.sparkSession.sessionState.analyzer.resolver
-    val keyFields = keys.map(k => df.schema.find(f => resolver(f.name, k))
-      .getOrElse(throw new IllegalArgumentException(s"key column $k not found")))
-    groupedKernelGateMulti(df, keys, num, cat, nb, maxGroups)
-      .flatMap { case (ls, _) => groupedViaKernel(df, keyFields, ls, num, cat, nb) } match {
-      case Some(grouped) =>
-        lastGroupedRouteTL.set("columnar")
-        grouped
-      case None =>
-        lastGroupedRouteTL.set("row")
-        val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
-        val agg = if (nb) sumNbAgg(cols: _*) else sumTriple(cols: _*)
-        // same all-NULL-input-group pre-filter as the single-key
-        // fallback: keep the kernel and row routes returning the same
-        // group SET, not just the same triples on shared groups
+        // the same group SET, not just the same triples on shared groups
         val nonNull = (keys ++ num ++ cat).map(c => col(c).isNotNull).reduce(_ && _)
         df.filter(nonNull).groupBy(keys.map(col): _*).agg(agg.as("t"))
     }
   }
 
-  /** The kernel route of [[cofactorGrouped]]/[[cofactorGroupedMulti]]:
+  /** The kernel route of [[cofactorGroupedMulti]]:
     * the grouped kernel's partial triples
     * ([[graft.agg.ColumnarCofactor.groupedPartials]]) as a DataFrame of
     * `(keys…, __t)`, merged per key tuple by `sum_triple` under Spark's
@@ -588,7 +561,7 @@ object Graft {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{StructField, StructType}
     graft.agg.ColumnarCofactor.groupedPartials(df, num.map(graft.agg.ColumnarCofactor.NumCol),
-        cat.map(graft.agg.ColumnarCofactor.CatCol), ls, keyFields.map(_.dataType), nb)
+        cat.map(graft.agg.ColumnarCofactor.CatCol), Some(ls), keyFields.map(_.dataType), nb)
       .map { rdd =>
         val schema = StructType(keyFields.map(f => StructField(f.name, f.dataType)) :+
           StructField("__t", graft.agg.TripleCodec.dataType(nb), nullable = false))
@@ -599,76 +572,6 @@ object Graft {
       }
   }
 
-  /** [[groupedKernelGate]] for `GROUP BY k1, k2[, …]`: every key must
-    * be int-typed or string, the probe's exact per-key shapes must
-    * pack into ≤ 8 bytes total ([[graft.agg.ColumnarCofactor.CatPackedKeys]]
-    * byte budgets — a string key owns its max UTF-8 width, an int key
-    * the bytes of its non-negative range), and the COMBINED key-tuple
-    * cardinality passes the same byte-based group cap. Returns the
-    * packed label spec plus the probed NULL-row bound. */
-  private[graft] def groupedKernelGateMulti(df: DataFrame, keys: Seq[String],
-      num: Seq[String], cat: Seq[String], nb: Boolean, maxGroups: Int,
-      probeNulls: Boolean = false): Option[(graft.agg.ColumnarCofactor.CatPackedKeys, Long)] = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    val resolver = df.sparkSession.sessionState.analyzer.resolver
-    if (keys.size < 2 || keys.size > 4) return None
-    val keyTypes = keys.map(k => df.schema.find(f => resolver(f.name, k)).map(_.dataType))
-    if (keyTypes.exists(_.isEmpty)) return None
-    val isStr = keyTypes.map(_.contains(StringType))
-    val intOk = keyTypes.forall(_.exists {
-      case StringType | IntegerType | LongType | ShortType | ByteType => true
-      case _ => false
-    })
-    if (!intOk) return None
-    val numSpecs = num.map(graft.agg.ColumnarCofactor.NumCol)
-    val catSpecs = cat.map(graft.agg.ColumnarCofactor.CatCol)
-    // plan-shape refusal first (driver-only, no scan); widths don't
-    // affect harvestability, so probe-independent placeholders suffice
-    val probeSpec = graft.agg.ColumnarCofactor.CatPackedKeys(keys, Seq.fill(keys.size)(1))
-    if (!graft.agg.ColumnarCofactor.canHarvest(df, numSpecs, catSpecs :+ probeSpec)) return None
-    // a column the schema marks non-nullable can never hold a NULL —
-    // drop it from the probe's count list (fewer aggregate columns on
-    // the shared shape scan; the skip is exact, not a heuristic)
-    val (rows, keyCard, keyShapes, catCards, nullUB) =
-      graft.ml.Factorized.probeGroupedShape(df, keys, cat, isStr,
-        nullCols = if (probeNulls) ((keys ++ num) ++ cat).filter(c => schemaNullable(df, c))
-                   else Seq())
-    // exact per-key byte budgets from the probe
-    val widths = keys.indices.map { i =>
-      val sh = keyShapes(i)
-      if (isStr(i)) {
-        if (sh.width > 8) return None // too wide / NUL / all-NULL
-        math.max(1, sh.width) // an all-empty string key still owns a byte
-      } else {
-        if (sh.lo < 0) return None // negative int keys don't zero-pack
-        if (sh.hi < sh.lo) 1 // all-NULL key: every row is dropped anyway
-        else {
-          var w = 1
-          while (w < 8 && sh.hi >= (1L << (8 * w))) w += 1
-          w
-        }
-      }
-    }
-    if (widths.sum > 8) return None
-    // same byte-based group cap as the single-key gate, with the
-    // COMBINED tuple cardinality
-    val rpk = rows.toDouble / math.max(1L, keyCard)
-    val d = num.size
-    val ePerCat = catCards.map(c => math.min(c.toDouble, rpk))
-    val catBytes = ePerCat.map(_ * (64.0 + 8.0 * (d + 1))).sum +
-      (if (nb) 0.0
-       else (for { i <- ePerCat.indices; j <- i until ePerCat.size }
-         yield math.min(ePerCat(i) * ePerCat(j), rpk) * 56.0).sum)
-    val bufBytes = 8.0 * (1 + d + (if (nb) d else d * (d + 1) / 2)) + catBytes
-    val groupCap: Long =
-      if (maxGroups > 0)
-        math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
-      else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong)
-    if (keyCard > groupCap) None
-    else if (probeNulls && nullUB > rows / 10) None
-    else Some((graft.agg.ColumnarCofactor.CatPackedKeys(keys, widths), nullUB))
-  }
-
   /** True when the resolved schema field is nullable (or unresolved —
     * assume the worst). Used to skip null-count probe columns the
     * schema already proves clean. */
@@ -677,35 +580,21 @@ object Graft {
     df.schema.find(f => resolver(f.name, c)).forall(_.nullable)
   }
 
-  /** Install [[graft.plans.GroupedCofactorStrategy]] on the session's
-    * experimental strategies (idempotent): SQL/DataFrame single-key
-    * `GROUP BY` + `sum_to_triple`/`sum_to_nb_agg` over harvestable
-    * scans then plans through the grouped columnar kernel. Opt-in by
-    * design — the library's own row-aggregate parity tests and bench
-    * rows construct exactly that shape on purpose; sessions created
-    * with `spark.sql.extensions=graft.plans.GraftExtensions` get it
-    * automatically. */
-  def enableSqlGroupedKernel(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[graft.plans.GroupedCofactorStrategy]))
-      spark.experimental.extraStrategies =
-        cur :+ graft.plans.GroupedCofactorStrategy(spark)
-  }
-
-  /** Install the FULL kernel-routing strategy set (idempotent): the
-    * grouped + flat cofactor strategy above plus the SUM/AVG/COUNT
+  /** Install the kernel-routing strategy set on the session
+    * (idempotent): the grouped + flat cofactor strategy
+    * ([[graft.plans.GroupedCofactorStrategy]]), the SUM/AVG/COUNT
     * moments strategy ([[graft.plans.GroupedMomentsStrategy]] — the
-    * TPC-H-Q1/curation-cut shape). This is what `Bench`, `Verify`, and
-    * `GraftExtensions` sessions run with, so the oracle gate certifies
-    * the kernel-routed plans; bare test sessions stay row-routed so the
-    * kernel-vs-row parity specs keep comparing two genuinely different
-    * physical plans. */
+    * TPC-H-Q1/curation-cut shape) and
+    * [[graft.plans.CofactorDeclarativeRewrite]]. Opt-in by design: this
+    * is what `Bench`, `Verify`, and `GraftExtensions` sessions run with,
+    * so the oracle gate certifies the kernel-routed plans; bare test
+    * sessions stay row-routed so the kernel-vs-row parity specs keep
+    * comparing two genuinely different physical plans. */
   def enableSqlKernels(spark: SparkSession): Unit = {
-    enableSqlGroupedKernel(spark)
     val cur = spark.experimental.extraStrategies
-    if (!cur.exists(_.isInstanceOf[graft.plans.GroupedMomentsStrategy]))
-      spark.experimental.extraStrategies =
-        cur :+ graft.plans.GroupedMomentsStrategy(spark)
+    spark.experimental.extraStrategies = cur ++ Seq(
+      graft.plans.GroupedCofactorStrategy(spark), graft.plans.GroupedMomentsStrategy(spark))
+      .filterNot(s => cur.exists(_.getClass == s.getClass))
     // the declarative rewrite for numeric-only cofactors that FEED A
     // JOIN: plain SUMs keep the whole pipeline, the join's final
     // sum_triple(multiply_triple) included, in codegen'd hash
@@ -716,16 +605,27 @@ object Graft {
         opts :+ graft.plans.CofactorDeclarativeRewrite
   }
 
-  /** Kernel-route eligibility for a single-key grouped cofactor — the
-    * shared gate behind [[cofactorGrouped]] and the SQL planner strategy
-    * ([[graft.plans.GroupedCofactorStrategy]]). Ordered cheapest-first:
+  /** Kernel-route eligibility for a grouped cofactor over 1–4 keys —
+    * the one gate behind [[cofactorGroupedMulti]] and both SQL planner
+    * strategies ([[graft.plans.GroupedCofactorStrategy]],
+    * [[graft.plans.GroupedMomentsStrategy]]). Ordered cheapest-first:
     * key-type check and plan-shape refusal are driver-only; the shape
     * probe (ONE memoized fixed-memory scan) runs only on structurally
     * harvestable plans. Returns the label spec plus the probed NULL-row
-    * upper bound when every gate passes.
+    * upper bound when every gate passes. The key count picks the label:
+    *  - one int/long key rides [[graft.agg.ColumnarCofactor.CatCol]];
+    *  - one string key of ≤ 8 NUL-free UTF-8 bytes packs base-256
+    *    ([[graft.agg.ColumnarCofactor.CatShortString]]); a wider or
+    *    NUL-embedded one under the group cap takes a DICTIONARY label
+    *    ([[graft.agg.ColumnarCofactor.CatDictString]]);
+    *  - 2–4 int-typed or string keys pack into one Long with the
+    *    probe's exact per-key byte budgets
+    *    ([[graft.agg.ColumnarCofactor.CatPackedKeys]] — a string key
+    *    owns its max UTF-8 width, an int key the bytes of its
+    *    non-negative range), ≤ 8 bytes in total.
     *
     * `probeNulls` (the SQL surface) additionally counts NULLs in the
-    * key AND every aggregated column: SQL keeps default-aggregate
+    * keys AND every aggregated column: SQL keeps default-aggregate
     * semantics exactly (a NULL group survives; a group whose rows all
     * carry a NULL input still appears with an empty triple), both
     * shapes the kernel's skip-any-NULL-row contract cannot reproduce
@@ -734,84 +634,102 @@ object Graft {
     * when the probed NULL-row bound exceeds ~10% of the table: past
     * that the remainder is no longer small and the default plan is the
     * honest choice. */
-  private[graft] def groupedKernelGate(df: DataFrame, key: String,
+  private[graft] def groupedKernelGate(df: DataFrame, keys: Seq[String],
       num: Seq[String], cat: Seq[String], nb: Boolean, maxGroups: Int,
       probeNulls: Boolean): Option[(graft.agg.ColumnarCofactor.CatSpec, Long)] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import graft.agg.ColumnarCofactor.{CatCol, CatDictString, CatPackedKeys, CatShortString, NumCol}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+    if (keys.isEmpty || keys.size > 4) return None
     val resolver = df.sparkSession.sessionState.analyzer.resolver
-    val keyType = df.schema.find(f => resolver(f.name, key)).map(_.dataType)
-    val isStrKey = keyType.contains(StringType)
-    val numSpecs = num.map(graft.agg.ColumnarCofactor.NumCol)
-    val catSpecs = cat.map(graft.agg.ColumnarCofactor.CatCol)
-    val labelSpec: Option[graft.agg.ColumnarCofactor.CatSpec] =
-      if (keyType.exists(t => t == IntegerType || t == LongType))
-        Some(graft.agg.ColumnarCofactor.CatCol(key))
-      else if (isStrKey) Some(graft.agg.ColumnarCofactor.CatShortString(key))
-      else None
-    labelSpec match {
-      case None => None
-      // plan-shape refusal first: it is driver-only, while the shape
-      // probe scans — never pay a scan for a plan the kernel was never
-      // going to take
-      case Some(ls) if !graft.agg.ColumnarCofactor.canHarvest(df, numSpecs, catSpecs :+ ls) =>
-        None
-      case Some(ls) =>
-        // one cheap fixed-memory probe scan, MEMOIZED per (plan, key,
-        // cats, file snapshot); ±5% HLL error only softens the cap's
-        // edge (a few % more buffers), never its magnitude. Key width
-        // is exact (max over the scan), so the string gate is hard.
-        val (rows, keyCard, keyShapes, catCards, nullUB) =
-          graft.ml.Factorized.probeGroupedShape(df, Seq(key), cat, Seq(isStrKey),
-            nullCols = if (probeNulls) ((key +: num) ++ cat).filter(c => schemaNullable(df, c))
-                       else Seq())
-        val keyWidth = keyShapes.head.width
-        val rpk = rows.toDouble / math.max(1L, keyCard)
-        // measured per-group buffer estimate: packed quad + lin fixed
-        // part, plus per-cat maps bounded by min(cardinality, rows per
-        // group) entries — a map slot is a (d+1)-double array plus
-        // entry overhead (~64 B), and non-NB cat pairs add one counter
-        // per co-occurring value pair, bounded by both the cardinality
-        // product and the group's row count. Order-of-magnitude gate
-        // with measured inputs, not an exact bound.
-        val d = num.size
-        val ePerCat = catCards.map(c => math.min(c.toDouble, rpk))
-        val catBytes = ePerCat.map(_ * (64.0 + 8.0 * (d + 1))).sum +
-          (if (nb) 0.0
-           else (for { i <- ePerCat.indices; j <- i until ePerCat.size }
-             yield math.min(ePerCat(i) * ePerCat(j), rpk) * 56.0).sum)
-        val bufBytes = 8.0 * (1 + d + (if (nb) d else d * (d + 1) / 2)) + catBytes
-        val groupCap: Long =
-          // a pinned cap is clamped to the kernel's own label-cardinality
-          // guard: a pin above it would pass this gate and then throw
-          // IllegalStateException MID-JOB inside the kernel instead of
-          // routing to the row aggregate (which handles any cardinality)
-          // no floor: the old flat-allowance gate kept max(256, …) so a
-          // mis-estimate could not starve narrow aggregates, but with
-          // MEASURED cat cardinalities a floor would re-admit up to 256
-          // groups × multi-MB buffers — the per-partition OOM this gate
-          // exists to stop. A refused tiny-group case merely takes the
-          // (always-correct) row aggregate.
-          if (maxGroups > 0)
-            math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
-          else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong)
-        if (keyCard > groupCap) None
-        // past ~10% NULL-bearing rows the NULL remainder stops being
-        // small — the default plan is the honest choice
-        else if (probeNulls && nullUB > rows / 10) None
-        else if (isStrKey && keyWidth > 8)
-          // too wide / NUL-embedded for base-256 packing, but the group
-          // cardinality fits every kernel cap: DICTIONARY-encode the key
-          // (one memoized distinct scan, broadcast ≤ cap strings) and
-          // ride the kernel with the dictionary index as the label —
-          // the route that removes the row-aggregate perf cliff for
-          // real-world cut keys (URLs, dataset names, 'en_US.UTF-8'
-          // locales). Falls through to the row aggregate only when the
-          // EXACT distinct count lands over the cap the ±5% probe
-          // admitted.
-          groupDict(df, key, groupCap)
-            .map(bc => (graft.agg.ColumnarCofactor.CatDictString(key, bc), nullUB))
-        else Some((ls, nullUB))
+    val keyTypes = keys.map(k => df.schema.find(f => resolver(f.name, k)).map(_.dataType))
+    val typesOk = keyTypes.forall(_.exists {
+      case StringType | IntegerType | LongType => true
+      case ShortType | ByteType => keys.size > 1 // packed fields only
+      case _ => false
+    })
+    if (!typesOk) return None
+    val isStr = keyTypes.map(_.contains(StringType))
+    // plan-shape refusal first: it is driver-only, while the shape
+    // probe scans — never pay a scan for a plan the kernel was never
+    // going to take. Widths don't affect harvestability, so
+    // probe-independent placeholders suffice.
+    val shapeSpec =
+      if (keys.size > 1) CatPackedKeys(keys, Seq.fill(keys.size)(1))
+      else if (isStr.head) CatShortString(keys.head)
+      else CatCol(keys.head)
+    if (!graft.agg.ColumnarCofactor.canHarvest(df, num.map(NumCol), cat.map(CatCol) :+ shapeSpec))
+      return None
+    // one cheap fixed-memory probe scan, MEMOIZED per (plan, keys,
+    // cats, file snapshot); ±5% HLL error only softens the cap's edge
+    // (a few % more buffers), never its magnitude. Key widths and
+    // ranges are exact (max over the scan), so the packing gate is
+    // hard. A column the schema marks non-nullable can never hold a
+    // NULL — drop it from the probe's count list (the skip is exact).
+    val (rows, keyCard, keyShapes, catCards, nullUB) =
+      graft.ml.Factorized.probeGroupedShape(df, keys, cat, isStr,
+        nullCols = if (probeNulls) (keys ++ num ++ cat).filter(c => schemaNullable(df, c))
+                   else Seq())
+    // measured per-group buffer estimate: packed quad + lin fixed
+    // part, plus per-cat maps bounded by min(cardinality, rows per
+    // group) entries — a map slot is a (d+1)-double array plus entry
+    // overhead (~64 B), and non-NB cat pairs add one counter per
+    // co-occurring value pair, bounded by both the cardinality product
+    // and the group's row count. Order-of-magnitude gate with measured
+    // inputs, not an exact bound.
+    val rpk = rows.toDouble / math.max(1L, keyCard)
+    val d = num.size
+    val ePerCat = catCards.map(c => math.min(c.toDouble, rpk))
+    val catBytes = ePerCat.map(_ * (64.0 + 8.0 * (d + 1))).sum +
+      (if (nb) 0.0
+       else (for { i <- ePerCat.indices; j <- i until ePerCat.size }
+         yield math.min(ePerCat(i) * ePerCat(j), rpk) * 56.0).sum)
+    val bufBytes = 8.0 * (1 + d + (if (nb) d else d * (d + 1) / 2)) + catBytes
+    val groupCap: Long =
+      // a pinned cap is clamped to the kernel's own label-cardinality
+      // guard: a pin above it would pass this gate and then throw
+      // IllegalStateException MID-JOB inside the kernel instead of
+      // routing to the row aggregate (which handles any cardinality).
+      // No floor: with MEASURED cat cardinalities a floor would
+      // re-admit tiny-group cases with multi-MB buffers — the
+      // per-partition OOM this gate exists to stop. A refused case
+      // merely takes the (always-correct) row aggregate.
+      if (maxGroups > 0)
+        math.min(maxGroups.toLong, CofactorAggregate.confMaxCategories().toLong)
+      else math.min(1L << 20, ((64L << 20) / math.max(1.0, bufBytes)).toLong)
+    if (keyCard > groupCap) None
+    // past ~10% NULL-bearing rows the NULL remainder stops being
+    // small — the default plan is the honest choice
+    else if (probeNulls && nullUB > rows / 10) None
+    else if (keys.size > 1) {
+      // exact per-key byte budgets from the probe
+      val widths = keys.indices.map { i =>
+        val sh = keyShapes(i)
+        if (isStr(i)) {
+          if (sh.width > 8) return None // too wide / NUL / all-NULL
+          math.max(1, sh.width) // an all-empty string key still owns a byte
+        } else {
+          if (sh.lo < 0) return None // negative int keys don't zero-pack
+          if (sh.hi < sh.lo) 1 // all-NULL key: every row is dropped anyway
+          else {
+            var w = 1
+            while (w < 8 && sh.hi >= (1L << (8 * w))) w += 1
+            w
+          }
+        }
+      }
+      if (widths.sum > 8) None else Some((CatPackedKeys(keys, widths), nullUB))
     }
+    else if (isStr.head && keyShapes.head.width > 8)
+      // too wide / NUL-embedded for base-256 packing, but the group
+      // cardinality fits every kernel cap: DICTIONARY-encode the key
+      // (one memoized distinct scan, broadcast ≤ cap strings) and ride
+      // the kernel with the dictionary index as the label — the route
+      // that removes the row-aggregate perf cliff for real-world cut
+      // keys (URLs, dataset names, 'en_US.UTF-8' locales). Falls
+      // through to the row aggregate only when the EXACT distinct
+      // count lands over the cap the ±5% probe admitted.
+      groupDict(df, keys.head, groupCap).map(bc => (CatDictString(keys.head, bc), nullUB))
+    else Some((shapeSpec, nullUB))
   }
 
   /** The sorted distinct values of string key column `key` as a

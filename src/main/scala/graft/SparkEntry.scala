@@ -2484,11 +2484,13 @@ object SparkEntry {
     },
 
     // UNGROUPED scan summary — the flat SUM/AVG/COUNT moments shape.
-    // Under the Verify session's installed strategies this plans as
-    // FlatMomentsKernelExec (one flat kernel scan, the single summary
-    // row folded driver-side), so the oracle certifies the ROUTED
-    // plan; without strategies it is the stock codegen aggregate —
-    // identical answer either way is exactly the claim.
+    // Under the Verify session's installed strategies this plans as the
+    // zero-key GroupedKernelPartialExec (one partial triple per scan
+    // partition) under Spark's single-partition exchange and final
+    // sum_triple aggregate, whose output reads the summary off the
+    // merged triple, so the oracle certifies the ROUTED plan; without
+    // strategies it is the stock codegen aggregate — identical answer
+    // either way is exactly the claim.
     "q125_flat_moments" -> { (s, dir) =>
       li(s, dir).agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),

@@ -700,24 +700,30 @@ object ColumnarCofactor {
   /** The grouped kernel as a PARTIAL aggregate: one row per (group, scan
     * partition) holding the group's original key values — decoded on the
     * executor by [[graft.plans.KernelKeys.unpack]], typed `keyTypes` —
-    * and that partition's triple as a Catalyst struct. Nothing is merged
-    * here: callers feed the rows to a `sum_triple` aggregate, so Spark's
-    * own exchange and final aggregate combine the groups. `None` when the
-    * plan is not harvestable. */
+    * and that partition's triple as a Catalyst struct. With no `label`
+    * the flat kernel (dense categorical tier included) emits one `(__t)`
+    * row per scan partition, an empty partition's row carrying `n = 0`.
+    * Nothing is merged here: callers feed the rows to a `sum_triple`
+    * aggregate, so Spark's own exchange and final aggregate combine the
+    * groups. `None` when the plan is not harvestable. */
   def groupedPartials(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
-                      label: CatSpec, keyTypes: Seq[DataType], nbMode: Boolean = false,
+                      label: Option[CatSpec], keyTypes: Seq[DataType], nbMode: Boolean = false,
                       maxCategories: Int = CofactorAggregate.confMaxCategories()):
       Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] =
-    compile(src, nums, cats :+ label, nbMode, maxCategories).map { case (scan, compiled) =>
+    compile(src, nums, cats ++ label, nbMode, maxCategories).map { case (scan, compiled) =>
       import org.apache.spark.sql.catalyst.InternalRow
       val rowTypes = (keyTypes :+ TripleCodec.dataType(nbMode)).toArray
       scan.executeColumnar().mapPartitions { batches =>
-        val acc = new BatchAcc(compiled, labelMode = true)
+        val acc = new BatchAcc(compiled, labelMode = label.isDefined)
         batches.foreach(acc.addBatch)
         val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(rowTypes)
-        acc.perClassResult.iterator.map { case (kv, t) =>
-          proj(InternalRow.fromSeq(
-            graft.plans.KernelKeys.unpack(label, keyTypes, kv) :+ TripleCodec.toCatalyst(t, nbMode)))
+        val groups = label match {
+          case Some(ls) => acc.perClassResult.iterator.map { case (kv, t) =>
+            (graft.plans.KernelKeys.unpack(ls, keyTypes, kv), t) }
+          case None => Iterator.single((Nil, acc.buf.toTriple))
+        }
+        groups.map { case (keys, t) =>
+          proj(InternalRow.fromSeq(keys :+ TripleCodec.toCatalyst(t, nbMode)))
         }
       }
     }

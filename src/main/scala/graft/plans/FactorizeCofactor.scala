@@ -245,8 +245,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => FactorizeCofactorRule)
     // the SQL-surface kernel routes ride along for sessions that opted
     // into the extensions (per-session installs go through
-    // Graft.enableSqlKernels instead): grouped + flat cofactors, and
-    // the SUM/AVG/COUNT moments shape
+    // Graft.enableSqlKernels instead): cofactors and the SUM/AVG/COUNT
+    // moments shape over 0–4 keys, each one kernel partial aggregate
     e.injectPlannerStrategy(session => GroupedCofactorStrategy(session))
     e.injectPlannerStrategy(session => GroupedMomentsStrategy(session))
     // numeric-only cofactors feeding a join: declarative SUM rewrite

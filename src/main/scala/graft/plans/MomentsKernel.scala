@@ -1,13 +1,11 @@
 package graft.plans
 
-import graft.agg.{CofactorAggregate, SumTriple, TripleCodec}
-import org.apache.spark.rdd.RDD
+import graft.agg.{CofactorAggregate, CofactorBuffer, SumTriple, TripleCodec}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, AggregateExpression, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -66,9 +64,10 @@ private[plans] final case class IrBin(op: Char, l: NumIR, r: NumIR) extends NumI
 }
 
 /**
- * Planner strategy routing a plain `GROUP BY` + SUM/AVG/COUNT moments
- * query — TPC-H Q1's shape, the curation cut's shape — through the
- * grouped columnar kernel. The default plan is already a codegen'd
+ * Planner strategy routing a SUM/AVG/COUNT moments query over 0–4 group
+ * keys — TPC-H Q1's shape, the curation cut's shape, and with zero keys
+ * the flat scan summary (`SELECT count(*), sum(x) FROM t`) — through
+ * the columnar kernel. The default plan is already a codegen'd
  * HashAggregate, but it pays ColumnarToRow + a key exchange; the kernel
  * consumes parquet batches directly and tree-merges per-class buffers
  * on executors (measured 2.5× on the q01 pricing summary at sf100 —
@@ -77,12 +76,16 @@ private[plans] final case class IrBin(op: Char, l: NumIR, r: NumIR) extends NumI
  * column via the [[NumIR]] vectorized bridge; the grouped kernel runs
  * as a partial aggregate ([[GroupedKernelPartialExec]]) under Spark's
  * own exchange and `sum_triple` final aggregate, whose output list
- * reads each aggregate off the merged triple — COUNT as `t.n`, SUM as
- * `t.lin[i]`, AVG as `t.lin[i] / t.n` — inside the surrounding scalar
- * expressions (`round(sum(x), 2)`).
+ * reads each aggregate off the merged triple `t` (coalesced with the
+ * empty triple) — COUNT as `t.n`, SUM as `if(t.n = 0, NULL, t.lin[i])`,
+ * AVG as `if(t.n = 0, NULL, t.lin[i] / t.n)` — inside the surrounding
+ * scalar expressions (`round(sum(x), 2)`). A group holds ≥ 1 row, so
+ * the NULL arms only fire on a zero-key aggregate over an empty input:
+ * SQL's (NULL, NULL, 0) row, whether the scan's partitions emit `n = 0`
+ * partial rows or the scan has no partitions at all.
  *
  * Gates (any failure → Nil, the default plan runs):
- *  - 1–4 plain int/long/string grouping attributes; every other
+ *  - 0–4 plain int/long/string grouping attributes; every other
  *    projection is a group ref or an expression over SUM/AVG/COUNT
  *    (no DISTINCT, no FILTER, no other aggregate functions);
  *  - every SUM/AVG child compiles to [[NumIR]] (+,−,×,÷, numeric
@@ -90,12 +93,14 @@ private[plans] final case class IrBin(op: Char, l: NumIR, r: NumIR) extends NumI
  *    keep the default plan (their long accumulator is exact past 2^53,
  *    a double is not); COUNT children are non-null literals or probed
  *    numeric attributes;
- *  - [[graft.Graft.groupedKernelGate]] accepts the scan AND its null
- *    probe counts ZERO null rows across the keys and every referenced
- *    attribute. SQL's per-aggregate null skipping differs from the
- *    kernel's whole-row skip the moment any referenced value is NULL,
- *    so unlike the cofactor strategy there is no NULL-remainder branch
- *    here — null-bearing data takes the default plan, exactly.
+ *  - [[GroupedKernelPartial.gate]] accepts the scan AND proves ZERO
+ *    null rows across the keys and every referenced attribute (with
+ *    keys: [[graft.Graft.groupedKernelGate]]'s probe; without:
+ *    [[MomentsEval.probedNullUB]]). SQL's per-aggregate null skipping
+ *    differs from the kernel's whole-row skip the moment any referenced
+ *    value is NULL, so unlike the cofactor strategy there is no
+ *    NULL-remainder branch here — null-bearing data takes the default
+ *    plan, exactly.
  *
  * FP caveat (same as every kernel route): partial sums fold in
  * tree-merge order, not the default plan's sequential-merge order, so
@@ -155,26 +160,16 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
     case agg @ Aggregate(groupExprs, projList, child, _)
         if groupExprs.size <= 4 &&
           groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
-      // planning-time jobs (probes, harvest compilation) must never
-      // fail PLANNING: any non-fatal throw declines the route and the
-      // always-correct default plan runs (round-19 advice item 1)
-      val planned =
-        try planMoments(agg, groupExprs.map(_.asInstanceOf[AttributeReference]),
-          projList, child)
-        catch { case scala.util.control.NonFatal(_) => None }
-      planned.toSeq.flatten
+      GroupedKernelPartial.declineOnFailure("GroupedMomentsStrategy") {
+        planMoments(agg, groupExprs.map(_.asInstanceOf[AttributeReference]),
+          projList, child).toSeq.flatten
+      }
     case _ => Nil
   }
 
   private def planMoments(agg: Aggregate, keys: Seq[AttributeReference],
                           projList: Seq[NamedExpression], child: LogicalPlan):
       Option[Seq[SparkPlan]] = {
-    val keysOk = keys.isEmpty || keys.forall(_.dataType match {
-      case IntegerType | LongType | StringType => true
-      case ShortType | ByteType => keys.size > 1
-      case _ => false
-    })
-    if (!keysOk) return None
     // every aggregate in the projection must be a plain SUM/AVG/COUNT
     val aggExprs = projList.flatMap(_.collect { case ae: AggregateExpression => ae })
     if (aggExprs.isEmpty) return None
@@ -246,39 +241,34 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
 
     val inputNames = inputs.values.map(_._1).toSeq
     val df = ColumnBridge.ofRows(session, child)
-    if (keys.isEmpty) {
-      // FLAT gate: harvestable scan + ZERO probed nulls across every
-      // referenced attribute (one memoized fixed-memory scan). The
-      // exec returns SQL's one-row summary incl. the empty-input shape
-      // (count 0, NULL sums/avgs).
-      if (!graft.agg.ColumnarCofactor.canHarvest(df,
-          inputNames.map(graft.agg.ColumnarCofactor.NumCol), Nil)) return None
-      if (MomentsEval.probedNullUB(df, inputNames) != 0L) return None
-      return Some(Seq(FlatMomentsKernelExec(agg.output, projList,
-        inputNames, derived.map(_._2), descs)(child, session)))
-    }
     // gate: harvestable scan, key widths/cardinality caps, and ZERO
-    // probed nulls across keys + every referenced attribute
+    // nulls across keys + every referenced attribute
     // nb = false: the NB (diagonal-only) buffer was A/B-probed at sf100
     // and bought nothing — the scan is IO/decode-bound, not moment-bound
-    if (!GroupedKernelPartial.gate(df, keys.map(_.name), inputNames, Nil, nb = false)
-        .exists(_._2 == 0L))
+    if (!GroupedKernelPartial.gate(df, keys.map(_.name), inputNames, Nil, nb = false,
+        moments = true).exists(_._2 == 0L))
       return None // null-bearing or over-cap: the default plan is the honest one
     val t = AttributeReference("__t", TripleCodec.dataType(false), nullable = false)()
     val partial = GroupedKernelPartialExec(keys :+ t, keys.map(_.name), inputNames, Nil,
       derived.map(_._2), nb = false, CofactorAggregate.confMaxCategories(),
       withNulls = false)(child, session)
-    // every group holds ≥ 1 row, so n > 0 and AVG's division is safe
-    val merged = SumTriple(t).toAggregateExpression()
+    // a zero-key aggregate over no rows merges to NULL: read it as the
+    // empty triple, n = 0
+    val empty = Literal(TripleCodec.toCatalyst(
+      new CofactorBuffer(derived.size, 0, false).toTriple, false), TripleCodec.dataType(false))
+    val merged = Coalesce(Seq(SumTriple(t).toAggregateExpression(), empty))
     val n = GetStructField(merged, 0, Some("n"))
     def lin(i: Int) = GetArrayItem(GetStructField(merged, 1, Some("lin")), Literal(i))
+    // SQL's SUM/AVG over no rows is NULL; the guard also keeps AVG's
+    // division off n = 0
+    def orNull(e: Expression) = If(EqualTo(n, Literal(0L)), Literal(null, DoubleType), e)
     // bottom-up, so the merged aggregate a replacement introduces is
     // never visited again
     val result = projList.map(_.transformUp {
       case ae: AggregateExpression =>
         descs(descs.indexWhere(_._1 semanticEquals ae.canonicalized)) match {
-          case (_, 0, idx) => lin(idx)
-          case (_, 1, idx) => Divide(lin(idx), Cast(n, DoubleType))
+          case (_, 0, idx) => orNull(lin(idx))
+          case (_, 1, idx) => orNull(Divide(lin(idx), Cast(n, DoubleType)))
           case _ => n
         }
     }.asInstanceOf[NamedExpression])
@@ -286,43 +276,10 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
   }
 }
 
-/**
- * Physical node for the UNGROUPED moments shape: run the flat columnar
- * kernel once and fold the single SQL summary row (SQL semantics on an
- * EMPTY input — count 0, NULL sums/avgs — are reproduced explicitly,
- * the one flat shape the kernel's zero triple does not state itself).
- */
-case class FlatMomentsKernelExec(
-    output: Seq[Attribute],
-    projList: Seq[NamedExpression],
-    inputNames: Seq[String],
-    derived: Seq[NumIR],
-    descs: Seq[(Expression, Int, Int)])(
-    @transient private val childLogical: LogicalPlan,
-    @transient private val spark: SparkSession) extends LeafExecNode {
-
-  override def otherCopyArgs: Seq[AnyRef] = Seq(childLogical, spark)
-
-  protected override def doExecute(): RDD[InternalRow] = {
-    import graft.agg.ColumnarCofactor
-    val df = ColumnBridge.ofRows(spark, childLogical)
-    def regressed = throw new IllegalStateException(
-      "flat-moments kernel route regressed between planning and execution " +
-      "(input rewritten in place?) — re-run the query to re-plan")
-    if (MomentsEval.probedNullUB(df, inputNames) != 0L) regressed
-    val t = ColumnarCofactor.cofactor(df,
-        MomentsEval.numSpecs(inputNames, derived), Nil)
-      .getOrElse(regressed)
-    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-    val row = MomentsEval.row(projList, descs, t.n, t.lin, proj)
-    sparkContext.parallelize(Seq(row), 1)
-  }
-}
-
 /** Shared execution-side helpers of the moments routes. */
 private[plans] object MomentsEval {
 
-  /** Null-row upper bound for the flat moments route, CHEAPEST PROOF
+  /** Null-row upper bound for the zero-key moments route, CHEAPEST PROOF
     * FIRST: (1) the schema marks every referenced column non-nullable
     * — free; (2) parquet footer null_count statistics prove zero (or
     * some) nulls — metadata IO, no scan (the r19 verdict's cold
@@ -349,28 +306,4 @@ private[plans] object MomentsEval {
           System.arraycopy(res, 0, out, 0, n)
         })
     }
-
-  /** Fold the one summary row of the flat route: every
-    * AggregateExpression replaced by its moment value (n / sum / sum
-    * over n — SQL's NULL on an empty Sum/Average). */
-  def row(projList: Seq[NamedExpression], descs: Seq[(Expression, Int, Int)],
-          n: Long, lin: Array[Double], proj: UnsafeProjection): InternalRow = {
-    def aggValue(ae: AggregateExpression): Any = {
-      val i = descs.indexWhere(_._1 semanticEquals ae.canonicalized)
-      require(i >= 0, s"unplanned aggregate $ae reached the moments exec")
-      descs(i) match {
-        case (_, 0, idx) => if (n == 0L) null else lin(idx)
-        case (_, 1, idx) => if (n == 0L) null else lin(idx) / n
-        case (_, 2, _) => n
-      }
-    }
-    val vals = projList.map { ne =>
-      val e = ne match { case Alias(c, _) => c; case other => other }
-      val folded = e.transformDown {
-        case ae: AggregateExpression => Literal.create(aggValue(ae), ae.dataType)
-      }
-      folded.eval(InternalRow.empty)
-    }
-    proj(InternalRow.fromSeq(vals)).copy()
-  }
 }

@@ -402,15 +402,20 @@ class PlansSpec extends AnyFunSuite {
     } finally spark.experimental.extraStrategies = saved
   }
 
-  test("Graft.enableSqlGroupedKernel installs the strategy idempotently") {
+  test("Graft.enableSqlKernels installs each rule exactly once") {
     Graft.register(spark)
     val saved = spark.experimental.extraStrategies
+    val savedO = spark.experimental.extraOptimizations
     try {
-      Graft.enableSqlGroupedKernel(spark)
-      Graft.enableSqlGroupedKernel(spark)
-      assert(spark.experimental.extraStrategies
-        .count(_.isInstanceOf[graft.plans.GroupedCofactorStrategy]) == 1,
-        "double-enable must not stack a second strategy")
+      Graft.enableSqlKernels(spark)
+      Graft.enableSqlKernels(spark)
+      val strategies = spark.experimental.extraStrategies
+      assert(strategies.count(_.isInstanceOf[graft.plans.GroupedCofactorStrategy]) == 1 &&
+        strategies.count(_.isInstanceOf[graft.plans.GroupedMomentsStrategy]) == 1,
+        s"double-enable must not stack a second strategy: $strategies")
+      assert(spark.experimental.extraOptimizations
+        .count(_ == graft.plans.CofactorDeclarativeRewrite) == 1,
+        "double-enable must not stack a second declarative rewrite")
       val tmp = java.nio.file.Files.createTempDirectory("gsqlE").toFile.getAbsolutePath
       spark.range(2000).select(
         (col("id") % 5).cast("int").as("k"),
@@ -419,7 +424,10 @@ class PlansSpec extends AnyFunSuite {
       val q = spark.sql("SELECT k, sum_to_triple(x) AS t FROM gsql_e GROUP BY k")
       assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(q.count() == 5)
-    } finally spark.experimental.extraStrategies = saved
+    } finally {
+      spark.experimental.extraStrategies = saved
+      spark.experimental.extraOptimizations = savedO
+    }
   }
 
   test("SQL flat-cofactor strategy: ungrouped agg routes through the kernel, year() Project looked through") {
@@ -445,11 +453,11 @@ class PlansSpec extends AnyFunSuite {
       val expYear = run(yearQ)
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val qf = flatQ
-      assert(qf.queryExecution.executedPlan.toString.contains("FlatCofactorKernel"),
-        s"ungrouped sum_to_triple must plan the flat kernel exec:\n${qf.queryExecution.executedPlan}")
+      assert(qf.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        s"ungrouped sum_to_triple must plan the kernel partial:\n${qf.queryExecution.executedPlan}")
       assert(run(qf).approxEquals(expFlat, 1e-9), "flat kernel route result differs")
       val qy = yearQ
-      assert(qy.queryExecution.executedPlan.toString.contains("FlatCofactorKernel"),
+      assert(qy.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a withColumn(year(ts)) Project must be looked through to a CatYear spec")
       assert(run(qy).approxEquals(expYear, 1e-9), "year look-through result differs")
       // NULL inputs: both routes skip any-NULL rows — parity holds
@@ -463,11 +471,11 @@ class PlansSpec extends AnyFunSuite {
       val expN = run(bn.agg(Graft.sumTriple(col("x"), col("c")).as("t")))
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
       val qn = bn.agg(Graft.sumTriple(col("x"), col("c")).as("t"))
-      assert(qn.queryExecution.executedPlan.toString.contains("FlatCofactorKernel"))
+      assert(qn.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(run(qn).approxEquals(expN, 1e-9), "NULL-skip parity broken on the flat route")
       // a computed NON-year column under the aggregate declines
       val qd = base.withColumn("x2", col("x") * 2).agg(Graft.sumTriple(col("x2"), col("c")).as("t"))
-      assert(!qd.queryExecution.executedPlan.toString.contains("FlatCofactorKernel"),
+      assert(!qd.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a computed non-year input must keep the default plan")
       assert(run(qd).n == 5000)
     } finally spark.experimental.extraStrategies = saved
@@ -579,21 +587,20 @@ class PlansSpec extends AnyFunSuite {
       val exp = spark.sql(sql).collect().head
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedMomentsStrategy(spark)
       val q = spark.sql(sql)
-      assert(q.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"),
-        s"flat moments must plan the flat kernel exec:\n${q.queryExecution.executedPlan}")
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        s"flat moments must plan the kernel partial:\n${q.queryExecution.executedPlan}")
       val got = q.collect().head
       assert(math.abs(got.getDouble(0) - exp.getDouble(0)) <= 2e-6 &&
         math.abs(got.getDouble(1) - exp.getDouble(1)) <= 2e-6 &&
         got.getLong(2) == exp.getLong(2), s"flat moments differ: $got vs $exp")
 
       // EMPTY input: SQL's one summary row with count 0 and NULL
-      // sums/avgs — the one flat shape the kernel's zero triple does
-      // not state itself, reproduced explicitly by the exec
+      // sums/avgs — read off the merged triple's n = 0
       val tmpE = java.nio.file.Files.createTempDirectory("gsqlFlatE").toFile.getAbsolutePath
       spark.read.parquet(tmp).limit(0).write.mode("overwrite").parquet(tmpE)
       spark.read.parquet(tmpE).createOrReplaceTempView("gsql_flate")
       val qe = spark.sql("SELECT sum(x) AS s, avg(x) AS a, count(*) AS c FROM gsql_flate")
-      assert(qe.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"))
+      assert(qe.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       val re = qe.collect().head
       assert(re.isNullAt(0) && re.isNullAt(1) && re.getLong(2) == 0L,
         s"empty input must give (NULL, NULL, 0), got $re")
@@ -606,7 +613,7 @@ class PlansSpec extends AnyFunSuite {
           .otherwise(col("id").cast("double")).as("x")).write.mode("overwrite").parquet(tmpN)
       spark.read.parquet(tmpN).createOrReplaceTempView("gsql_flatn")
       val qn = spark.sql("SELECT sum(x) AS s, count(*) AS c FROM gsql_flatn")
-      assert(!qn.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"),
+      assert(!qn.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "null-bearing flat input must keep the default plan")
       assert(qn.collect().head.getLong(1) == 100L)
     } finally spark.experimental.extraStrategies = saved
@@ -691,10 +698,13 @@ class PlansSpec extends AnyFunSuite {
   }
 
   /** With AQE off, the physical plan of `q` has Spark's final aggregate
-    * directly over a shuffle exchange whose subtree holds the grouped
-    * kernel partial. */
-  private def partialUnderExchange(q: org.apache.spark.sql.DataFrame): Boolean = {
+    * directly over a shuffle exchange whose subtree holds the kernel
+    * partial; with `singlePartition` that exchange gathers everything
+    * into one partition (the zero-key case). */
+  private def partialUnderExchange(q: org.apache.spark.sql.DataFrame,
+                                   singlePartition: Boolean = false): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     q.queryExecution.executedPlan.exists {
@@ -702,11 +712,82 @@ class PlansSpec extends AnyFunSuite {
           a.aggregateExpressions.forall(_.mode == Final) =>
         a.child match {
           case e: ShuffleExchangeExec =>
-            e.exists(_.isInstanceOf[graft.plans.GroupedKernelPartialExec])
+            (!singlePartition || e.outputPartitioning == SinglePartition) &&
+              e.exists(_.isInstanceOf[graft.plans.GroupedKernelPartialExec])
           case _ => false
         }
       case _ => false
     }
+  }
+
+  test("flat kernel routes: zero-key partial below a single-partition exchange and final aggregate") {
+    Graft.register(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("fpart").toFile.getAbsolutePath
+    spark.range(900).select((col("id") % 31).cast("double").as("x"),
+      ((col("id") % 9).cast("double") / 10.0).as("d"),
+      (col("id") % 4).cast("int").as("c")).repartition(3).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).createOrReplaceTempView("fpart_t")
+    val cofSql = "SELECT sum_to_triple(x, d, c) AS t FROM fpart_t"
+    val momSql = "SELECT sum(x) AS s, avg(x * (1 - d)) AS a, count(*) AS n FROM fpart_t"
+    val saved = spark.experimental.extraStrategies
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.experimental.extraStrategies = saved
+      val expC = Graft.tripleFromRow(spark.sql(cofSql).head.getStruct(0))
+      val expM = spark.sql(momSql).head
+      spark.experimental.extraStrategies = saved :+
+        graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
+      val qc = spark.sql(cofSql)
+      assert(partialUnderExchange(qc, singlePartition = true),
+        s"cofactor: partial must sit under a single-partition exchange:\n${qc.queryExecution.executedPlan}")
+      val gotC = Graft.tripleFromRow(qc.head.getStruct(0))
+      assert(gotC.n == 900 && gotC.approxEquals(expC, 1e-9), s"cofactor differs: $gotC vs $expC")
+      val qm = spark.sql(momSql)
+      assert(partialUnderExchange(qm, singlePartition = true),
+        s"moments: partial must sit under a single-partition exchange:\n${qm.queryExecution.executedPlan}")
+      val gotM = qm.head
+      assert(gotM.getLong(2) == 900L && gotM.getLong(2) == expM.getLong(2))
+      Seq(0, 1).foreach { i =>
+        val (a, b) = (gotM.getDouble(i), expM.getDouble(i))
+        assert(math.abs(a - b) <= 1e-9 * (1 + math.abs(b)), s"moment $i differs: $gotM vs $expM")
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.experimental.extraStrategies = saved
+    }
+  }
+
+  test("flat kernel routes over a scan with zero partitions: empty triple and (NULL, NULL, 0)") {
+    Graft.register(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("fzero").toFile.getAbsolutePath
+    spark.range(200).select((col("id") % 2).cast("int").as("p"),
+      (col("id") % 13).cast("double").as("x"),
+      (col("id") % 3).cast("int").as("c")).write.partitionBy("p").mode("overwrite").parquet(tmp)
+    // a partition filter that prunes every file: the scan has no partitions
+    def src = spark.read.parquet(tmp).filter(col("p") === 7)
+    def cof = src.agg(Graft.sumTriple(col("x"), col("c")).as("t"))
+    def mom = src.agg(sum(col("x")).as("s"), avg(col("x")).as("a"), count(lit(1)).as("n"))
+    val saved = spark.experimental.extraStrategies
+    try {
+      assert(src.select(col("x")).rdd.getNumPartitions == 0, "the pruned scan must have no partitions")
+      spark.experimental.extraStrategies = saved
+      val expC = Graft.tripleFromRow(cof.head.getStruct(0))
+      spark.experimental.extraStrategies = saved :+
+        graft.plans.GroupedCofactorStrategy(spark) :+ graft.plans.GroupedMomentsStrategy(spark)
+      val qc = cof
+      assert(qc.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        s"the empty flat cofactor must still route:\n${qc.queryExecution.executedPlan}")
+      val gotC = Graft.tripleFromRow(qc.head.getStruct(0))
+      assert(gotC.n == 0 && gotC.lin.length == 1 && gotC.approxEquals(expC, 1e-9),
+        s"zero-partition cofactor must be the empty triple: $gotC vs $expC")
+      val qm = mom
+      assert(qm.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
+        s"the empty flat moments must still route:\n${qm.queryExecution.executedPlan}")
+      val rm = qm.collect()
+      assert(rm.length == 1 && rm.head.isNullAt(0) && rm.head.isNullAt(1) && rm.head.getLong(2) == 0L,
+        s"zero-partition moments must give (NULL, NULL, 0), got ${rm.toSeq}")
+    } finally spark.experimental.extraStrategies = saved
   }
 
   test("grouped kernel routes: partial below Spark's exchange and final aggregate") {
@@ -847,8 +928,11 @@ class PlansSpec extends AnyFunSuite {
     try {
       val exp = rows(q)
       spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("FlatCofactorKernel") && plan.contains("GroupedKernelPartial"), plan)
+      val plan = q.queryExecution.executedPlan
+      val partials = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(plan) { case p: graft.plans.GroupedKernelPartialExec => p }
+      assert(partials.size == 2,
+        s"the flat and the grouped side each plan one kernel partial:\n$plan")
       assert(q.count() == 6)
       val got = rows(q)
       assert(got.keySet == exp.keySet && got.size == 6)
@@ -914,17 +998,17 @@ class PlansSpec extends AnyFunSuite {
     spark.experimental.extraStrategies = saved :+ graft.plans.GroupedMomentsStrategy(spark)
     try {
       val qc = cleanDf.agg(sum(col("x")).as("s"), avg(col("y")).as("a"))
-      assert(qc.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"))
+      assert(qc.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
       assert(math.abs(qc.head.getDouble(0) - (0 until 500).map(_.toDouble).sum) < 1e-6)
       val qd = dirtyDf.agg(sum(col("x")).as("s"))
-      assert(!qd.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"),
+      assert(!qd.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "null-bearing data must keep the default plan on the flat route")
       // SQL semantics: null x rows are skipped by sum
       val expect = (0 until 500).filter(_ % 50 != 0).map(_.toDouble).sum
       assert(math.abs(qd.head.getDouble(0) - expect) < 1e-6)
       // post-filter clean data still routes via the (scan) probe
       val qf = dirtyDf.filter(col("x").isNotNull).agg(sum(col("x")).as("s"))
-      assert(qf.queryExecution.executedPlan.toString.contains("FlatMomentsKernel"),
+      assert(qf.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "a filter removing every null must re-admit the route via the scan probe")
       assert(math.abs(qf.head.getDouble(0) - expect) < 1e-6)
     } finally spark.experimental.extraStrategies = saved
@@ -984,7 +1068,7 @@ class PlansSpec extends AnyFunSuite {
     spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
     try {
       val q = src.agg(cappedAgg)
-      assert(q.queryExecution.executedPlan.toString.contains("FlatCofactorKernel"),
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"),
         "the explicit-cap flat aggregate should still take the kernel route")
       intercept[Exception] { q.collect() }
     } finally spark.experimental.extraStrategies = saved
