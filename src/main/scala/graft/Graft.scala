@@ -737,36 +737,29 @@ object Graft {
     * dictionary for the [[graft.agg.ColumnarCofactor.CatDictString]]
     * label route. Returns None when the exact distinct count exceeds
     * `cap` (the HLL probe under-estimated — the caller falls back to
-    * the row aggregate, which handles any cardinality). Memoized with
-    * the probes' (plan, tag, file-snapshot) discipline so the SQL
+    * the row aggregate, which handles any cardinality). Memoized in
+    * [[graft.sources.ProbeMemo]], over-cap None included, so the SQL
     * strategy's plan-time gate and execute-time re-gate share ONE
-    * distinct scan and ONE broadcast. Eviction only drops the cache's
+    * distinct scan and ONE broadcast. Each entry holds a broadcast, so
+    * the memo keeps at most 64. Eviction only drops the memo's
     * reference: a lazy grouped result planned earlier may still read
     * the broadcast, and Spark's ContextCleaner releases it once no plan
     * holds it. */
-  private val dictCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-        org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]): Boolean = size() > 64
-    })
+  private val groupDicts =
+    new graft.sources.ProbeMemo[Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]](64)
   private def groupDict(df: DataFrame, key: String, cap: Long):
-      Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]] = {
-    import org.apache.spark.sql.functions.col
-    val ck = (df.queryExecution.analyzed.canonicalized, "gdict:" + key,
-      graft.ml.Factorized.snapshotFingerprint(df))
-    val cached = dictCache.get(ck)
-    if (cached != null) return Some(cached)
-    val capInt = math.min(cap, Int.MaxValue - 2L).toInt
-    val vals = df.select(col(key)).na.drop().distinct().take(capInt + 1)
-    if (vals.length > capInt) return None
-    val bytes = vals.map(_.getString(0)).sorted
-      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val bc = df.sparkSession.sparkContext.broadcast(bytes)
-    dictCache.put(ck, bc)
-    Some(bc)
-  }
+      Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]] =
+    groupDicts(df, key + ":" + cap) {
+      import org.apache.spark.sql.functions.col
+      val capInt = math.min(cap, Int.MaxValue - 2L).toInt
+      val vals = df.select(col(key)).na.drop().distinct().take(capInt + 1)
+      if (vals.length > capInt) None
+      else {
+        val bytes = vals.map(_.getString(0)).sorted
+          .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        Some(df.sparkSession.sparkContext.broadcast(bytes))
+      }
+    }
 
   /** Per-class cofactors: `GROUP BY label` aggregation collected as
     * (label value, triple) pairs (the QDA/NB training input). Rows with

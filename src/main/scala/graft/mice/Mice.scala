@@ -132,11 +132,6 @@ object Mice {
     cur.withColumn(c, when(col(flag(c)), pred).otherwise(col(c)))
   }
 
-  /** See [[graft.Graft.dropCheckpoint]] — shared infrastructure, kept
-    * here as a forwarding alias for the MICE loops' call sites. */
-  private[graft] def dropCheckpoint(df: DataFrame): Unit =
-    Graft.dropCheckpoint(df)
-
   /** Baseline MICE (imputation_base.cpp): full filtered rescan per column. */
   def baseline(df: DataFrame, cfg: Config, tm: Timings = noTimings): DataFrame = {
     var cur = tm.time("prepare")(prepare(df, cfg).transform(Graft.checkpoint))
@@ -161,7 +156,7 @@ object Mice {
       // released by the caller's traversal-based dropCheckpoint)
       if (iter < cfg.iterations) {
         cur = tm.time("impute_update")(cur.transform(Graft.checkpoint))
-        dropCheckpoint(lastCp) // superseded: cur materialized eagerly above
+        Graft.dropCheckpoint(lastCp) // superseded: cur materialized eagerly above
         lastCp = cur
       }
     }
@@ -247,7 +242,7 @@ object Mice {
         }
       }
       val next = tm.time("impute_update")(incomplete.transform(Graft.checkpoint))
-      dropCheckpoint(lastCp) // the previous iteration's incomplete blocks
+      Graft.dropCheckpoint(lastCp) // the previous iteration's incomplete blocks
       lastCp = next
       incomplete = next
     }

@@ -350,7 +350,7 @@ object MiceJoin {
       // Graft.dropCheckpoint releases it)
       if (trainsOnIncomplete && iter < cfg.iterations) {
         incomplete = tm.time("impute_update")(incomplete.transform(Graft.checkpoint))
-        Mice.dropCheckpoint(lastCp) // superseded: materialized eagerly above
+        Graft.dropCheckpoint(lastCp) // superseded: materialized eagerly above
         lastCp = incomplete
       }
     }
@@ -363,51 +363,29 @@ object MiceJoin {
     * every operator that left-joins a must-be-unique side (e.g.
     * [[graft.operators.Multimodal.withTranscodeFallback]]).
     *
-    * A PASSING verdict is memoized on (canonicalized plan, key,
-    * file-snapshot fingerprint) — the same discipline (and the same
-    * documented byte-identical-in-place-rewrite aliasing caveat) as
-    * [[graft.ml.Factorized.probeRowsPerKey]]'s cache, cleared by the
-    * same [[graft.ml.Factorized.clearProbeCache]]. Measured r21: the
+    * A PASSING verdict is memoized in [[graft.sources.ProbeMemo]]
+    * (plan, key, data snapshot; cleared by
+    * [[graft.ml.Factorized.clearProbeCache]]). Measured r21: the
     * probe was a near-unique-key hash aggregate over the WHOLE dim per
     * call — 1.85 s of the 4.1 s sf10_mice_star_round pass, re-verifying
     * an immutable bucketed table every round. Failures are never
-    * cached (they throw). Only plans whose every leaf is a file
-    * relation (the fingerprint tracks its file count and bytes) or a
-    * `LocalRelation` (its canonical plan carries the rows) are memoized:
-    * any other source (JDBC, Hive, DSv2) can gain a duplicate key under
-    * an identical plan and fingerprint, so it is re-probed every call. */
-  private val uniqueKeyCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-      java.lang.Boolean](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            java.lang.Boolean]): Boolean = size() > 256
-    })
-  private[graft] def clearUniqueKeyCache(): Unit = uniqueKeyCache.clear()
+    * memoized (they throw), and a dim over any source other than files,
+    * a local relation or a range is re-probed on every call: it can
+    * gain a duplicate key under an identical plan. */
+  private val uniqueKeys = new graft.sources.ProbeMemo[Boolean](256)
   private[graft] def requireUniqueKey(dim: DataFrame, key: String,
-                                      caller: String = "MiceJoin"): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val analyzed = dim.queryExecution.analyzed
-    val memoizable = analyzed.collectLeaves().forall {
-      case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
-      case _: LocalRelation => true
-      case _ => false
+                                      caller: String = "MiceJoin"): Unit =
+    uniqueKeys(dim, key) {
+      // NULL keys are excluded: an equi-join can never match them, so
+      // multiple NULL-keyed rows cannot fan anything out — aborting on
+      // them would reject valid input. The count is aliased so a key
+      // column literally named "count" stays unambiguous.
+      val dup = dim.where(col(key).isNotNull)
+        .groupBy(col(key)).agg(count(lit(1)).as("__graft_cnt"))
+        .where(col("__graft_cnt") > 1).limit(1).collect()
+      require(dup.isEmpty,
+        s"$caller requires the joined side unique per '$key'; found duplicated key ${dup.head.get(0)} " +
+          "(pre-aggregate or dropDuplicates that side explicitly before calling)")
+      true
     }
-    val ck = if (memoizable)
-      Some((analyzed.canonicalized, "unique:" + key, Factorized.snapshotFingerprint(dim)))
-    else None
-    if (ck.exists(k => uniqueKeyCache.get(k) != null)) return
-    // NULL keys are excluded: an equi-join can never match them, so
-    // multiple NULL-keyed rows cannot fan anything out — aborting on
-    // them would reject valid input. The count is aliased so a key
-    // column literally named "count" stays unambiguous.
-    val dup = dim.where(col(key).isNotNull)
-      .groupBy(col(key)).agg(count(lit(1)).as("__graft_cnt"))
-      .where(col("__graft_cnt") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"$caller requires the joined side unique per '$key'; found duplicated key ${dup.head.get(0)} " +
-        "(pre-aggregate or dropDuplicates that side explicitly before calling)")
-    ck.foreach(uniqueKeyCache.put(_, java.lang.Boolean.TRUE))
-  }
 }

@@ -59,13 +59,13 @@ object Factorized {
    * `minRowsPerKey`. The probe is O(scan) with a constant-size sketch —
    * cheap next to either plan, but NOT free when re-run per call over a
    * static 600M-row table (~30% of the sf100 adaptive wall-clock), so
-   * the measured ratio is MEMOIZED per (canonicalized plan, key): a
-   * repeat call over the same logical input (bench reps, MICE column ×
-   * iteration loops, retraining sessions) skips both probe scans. The
-   * key profile of a given logical plan only changes if the underlying
-   * files are rewritten in place — call [[clearProbeCache]] after such a
-   * rewrite, or pass `minRowsPerKey = 0` to pin the factorized path
-   * probe-free (`Double.MaxValue` pins the fallback likewise).
+   * the measured ratio is MEMOIZED per (canonicalized plan, key, data
+   * snapshot) in [[graft.sources.ProbeMemo]]: a repeat call over the
+   * same unchanged files (bench reps, MICE column × iteration loops,
+   * retraining sessions) skips both probe scans, while an input that is
+   * not a file, local or range relation is re-probed on every call.
+   * Pass `minRowsPerKey = 0` to pin the factorized path probe-free
+   * (`Double.MaxValue` pins the fallback likewise).
    *
    * With no categorical columns the factorized regime runs as
    * [[cofactorOverJoinNumeric]] (same triple, plain codegen'd SUMs, no
@@ -202,6 +202,37 @@ object Factorized {
     }
   }
 
+  /** Projected PEAK in-memory hash-relation size for `df` as an SHJ
+    * build side: UnsafeRow payload (8 B header + 8 B per field) + ~24 B
+    * map page/index overhead per row, DOUBLED for the map's
+    * capacity-growth transient (the old and new index arrays coexist
+    * during a grow — measured: a 150M-row build over 32 partitions
+    * aborts asking for a 268 MB grant even inside a 19 GB pool).
+    * Without an exact row count, the optimizer's `stats.sizeInBytes` ×
+    * a measured 15× expansion (compressed pruned file bytes ≈ 3 B/row
+    * vs ~45 B/row steady in-memory; see [[hashJoinIfSafe]]). */
+  private def buildBytes(df: DataFrame, rows: Option[Long]): BigInt = rows match {
+    case Some(n) => BigInt(n) * (8L + 8L * df.schema.size + 24L) * 2L
+    case None => df.queryExecution.optimizedPlan.stats.sizeInBytes * 15L * 2L
+  }
+
+  /** Bucket count of `df`'s underlying file scan, when the plan reads
+    * exactly ONE bucketed relation (projections/filters on top are
+    * fine; a multi-scan plan returns None — a first-scan guess could
+    * pre-qualify the wrong thing). Only PRE-qualifies the bucketed
+    * co-located tier in [[hashJoinIfSafe]]; the planner's no-exchange
+    * outcome is the authoritative gate. */
+  private def bucketSpecOf(df: DataFrame): Option[Int] = {
+    val rels = df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }
+    rels match {
+      case Seq(h: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =>
+        h.bucketSpec.map(_.numBuckets)
+      case _ => None
+    }
+  }
+
   /**
    * Equi-join with a SHUFFLE_HASH hint on the smaller side — but ONLY
    * when that side's projected IN-MEMORY hash build per shuffle
@@ -251,37 +282,6 @@ object Factorized {
    * estimate, >64 hot keys, salt factor >256, multi-column keys) fall
    * back to the plain spill-capable sort-merge join.
    */
-  /** Projected PEAK in-memory hash-relation size for `df` as an SHJ
-    * build side: UnsafeRow payload (8 B header + 8 B per field) + ~24 B
-    * map page/index overhead per row, DOUBLED for the map's
-    * capacity-growth transient (the old and new index arrays coexist
-    * during a grow — measured: a 150M-row build over 32 partitions
-    * aborts asking for a 268 MB grant even inside a 19 GB pool).
-    * Without an exact row count, the optimizer's `stats.sizeInBytes` ×
-    * a measured 15× expansion (compressed pruned file bytes ≈ 3 B/row
-    * vs ~45 B/row steady in-memory; see [[hashJoinIfSafe]]). */
-  private def buildBytes(df: DataFrame, rows: Option[Long]): BigInt = rows match {
-    case Some(n) => BigInt(n) * (8L + 8L * df.schema.size + 24L) * 2L
-    case None => df.queryExecution.optimizedPlan.stats.sizeInBytes * 15L * 2L
-  }
-
-  /** Bucket count of `df`'s underlying file scan, when the plan reads
-    * exactly ONE bucketed relation (projections/filters on top are
-    * fine; a multi-scan plan returns None — a first-scan guess could
-    * pre-qualify the wrong thing). Only PRE-qualifies the bucketed
-    * co-located tier in [[hashJoinIfSafe]]; the planner's no-exchange
-    * outcome is the authoritative gate. */
-  private def bucketSpecOf(df: DataFrame): Option[Int] = {
-    val rels = df.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
-    }
-    rels match {
-      case Seq(h: org.apache.spark.sql.execution.datasources.HadoopFsRelation) =>
-        h.bucketSpec.map(_.numBuckets)
-      case _ => None
-    }
-  }
-
   private[graft] def hashJoinIfSafe(left: DataFrame, right: DataFrame,
                                     usingColumns: Seq[String],
                                     leftRows: Option[Long] = None,
@@ -496,18 +496,13 @@ object Factorized {
 
   /** The 65 largest build-side key groups as (key cols…, count) rows,
     * count descending: one map-side-combined grouped count + TakeOrdered,
-    * memoized with the same snapshot-fingerprint discipline as the
-    * cardinality probes. Feeds BOTH the SHJ hot-key veto (head = max
+    * memoized in [[topKeys]]. Feeds BOTH the SHJ hot-key veto (head = max
     * multiplicity) and [[saltedHashJoin]]'s hot-key set, so skew
     * detection and salting pay for one scan between them. 65 because the
     * salted tier surrenders past 64 hot keys — a 65th qualifying entry
     * already proves degeneracy. */
-  private def topKeyCounts(df: DataFrame, keyCols: Seq[String]): Array[Row] = {
-    val ck = (df.queryExecution.analyzed.canonicalized,
-      "topk:" + keyCols.mkString("\u0001"), snapshotFingerprint(df))
-    val cached = topKeyCache.get(ck)
-    if (cached != null) cached
-    else {
+  private def topKeyCounts(df: DataFrame, keyCols: Seq[String]): Array[Row] =
+    topKeys(df, "topk:" + keyCols.mkString("\u0001")) {
       // aliased count: a user key column literally named "count" would
       // make the bare groupBy(...).count() output ambiguous to order by.
       // NULL keys are excluded to match hotKeyCounts (both feed inner
@@ -515,14 +510,11 @@ object Factorized {
       // probe row) — without the filter a NULL-dominated build side
       // would veto the SHJ only when the detector refused, making the
       // routing depend on which probe happened to answer.
-      val rows = df.filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
+      df.filter(keyCols.map(c => col(c).isNotNull).reduce(_ && _))
         .groupBy(keyCols.map(col): _*)
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("__graft_cnt"))
         .orderBy(col("__graft_cnt").desc).limit(65).collect()
-      topKeyCache.put(ck, rows)
-      rows
     }
-  }
 
   /** Max rows under a single join-key value (the build-side hot-key
     * probe); derived from [[topKeyCounts]]'s memoized scan. */
@@ -553,8 +545,8 @@ object Factorized {
     * Returns None — caller takes the grouped-scan route — for
     * multi-column or non-integral keys, or when the detector output
     * degenerates (tiny capRows → everything is a candidate). Memoized
-    * with the same (plan, key, fingerprint) discipline as the probes;
-    * capRows is folded into the key since the cap is configurable. */
+    * in [[topKeys]]; capRows is folded into the tag since the cap is
+    * configurable. */
   private[graft] def hotKeyCounts(df: DataFrame, keyCols: Seq[String],
                                   capRows: Long): Option[Array[Row]] = {
     if (keyCols.length != 1 || capRows <= 0) return None
@@ -566,52 +558,46 @@ object Factorized {
       case _ => false
     })
     if (!integral) return None
-    val ck = (df.queryExecution.analyzed.canonicalized,
-      s"hot:$key:$capRows", snapshotFingerprint(df))
-    val cached = topKeyCache.get(ck)
-    if (cached != null)
-      return if (cached eq DetectorRefused) None else Some(cached)
-    val proj = df.select(col(key).cast("long").as("__graft_k"))
-    val rdd = proj.queryExecution.toRdd
-    val p = math.max(1, rdd.getNumPartitions)
-    val thrLocal = math.max(1L, capRows / p)
-    val perPart = rdd.mapPartitions { it =>
-      // fixed-capacity Misra-Gries heavy-hitter summary, not a full
-      // per-partition count map: over a near-unique key column the full
-      // map holds ~|partition| entries and its hashing/boxing costs as
-      // much as the grouped-count scan this detector replaces (measured
-      // sf100: 8.4 s vs 11.9 s — no win). MG keeps ≤8192 counters in
-      // two cache-resident long arrays: a key with true local count c
-      // survives with counter ≥ c − D (D = global decrement sweeps ≤
-      // rows/8192), so counter + D ≥ thrLocal can miss NO locally-hot
-      // key; false candidates are exact-counted away in pass 2. A
-      // partition where D reaches thrLocal (or a sea of qualifying
-      // keys) cannot certify anything and reports None — the caller
-      // then takes the grouped-scan route.
-      val m = new MgSummary(8192)
-      it.foreach { r =>
-        if (!r.isNullAt(0)) m.add(r.getLong(0)) // null keys never reach an equi-join build
-      }
-      Iterator.single(m.candidateArray(thrLocal, maxOut = 1024))
-    }.collect()
     // post-scan refusals are MEMOIZED (sentinel entry): the salted tier
     // re-asks right after the cap veto, and re-paying the full pass-1
     // scan just to refuse again would double-scan exactly the large
     // skewed inputs this path exists for
-    def refuse(): Option[Array[Row]] = { topKeyCache.put(ck, DetectorRefused); None }
-    if (perPart.exists(_ == null)) return refuse()
-    val candidates = perPart.flatMap(a => a: Array[Long]).distinct
-    // degenerate detector (capRows ≲ P, or a sea of locally-hot keys):
-    // the exact pass would cost like the grouped scan — surrender to it
-    if (candidates.length > 1024) return refuse()
-    val exact: Array[Row] =
-      if (candidates.isEmpty) Array.empty
+    val counts = topKeys(df, s"hot:$key:$capRows") {
+      val proj = df.select(col(key).cast("long").as("__graft_k"))
+      val rdd = proj.queryExecution.toRdd
+      val p = math.max(1, rdd.getNumPartitions)
+      val thrLocal = math.max(1L, capRows / p)
+      val perPart = rdd.mapPartitions { it =>
+        // fixed-capacity Misra-Gries heavy-hitter summary, not a full
+        // per-partition count map: over a near-unique key column the full
+        // map holds ~|partition| entries and its hashing/boxing costs as
+        // much as the grouped-count scan this detector replaces (measured
+        // sf100: 8.4 s vs 11.9 s — no win). MG keeps ≤8192 counters in
+        // two cache-resident long arrays: a key with true local count c
+        // survives with counter ≥ c − D (D = global decrement sweeps ≤
+        // rows/8192), so counter + D ≥ thrLocal can miss NO locally-hot
+        // key; false candidates are exact-counted away in pass 2. A
+        // partition where D reaches thrLocal (or a sea of qualifying
+        // keys) cannot certify anything and reports None — the caller
+        // then takes the grouped-scan route.
+        val m = new MgSummary(8192)
+        it.foreach { r =>
+          if (!r.isNullAt(0)) m.add(r.getLong(0)) // null keys never reach an equi-join build
+        }
+        Iterator.single(m.candidateArray(thrLocal, maxOut = 1024))
+      }.collect()
+      lazy val candidates = perPart.flatMap(a => a: Array[Long]).distinct
+      if (perPart.exists(_ == null)) DetectorRefused
+      // degenerate detector (capRows ≲ P, or a sea of locally-hot keys):
+      // the exact pass would cost like the grouped scan — surrender to it
+      else if (candidates.length > 1024) DetectorRefused
+      else if (candidates.isEmpty) Array.empty[Row]
       else df.filter(col(key).isin(candidates.map(Long.box).toSeq: _*))
         .groupBy(col(key)).agg(count(lit(1)).as("__graft_cnt"))
         .filter(col("__graft_cnt") >= capRows)
         .orderBy(col("__graft_cnt").desc).limit(65).collect()
-    topKeyCache.put(ck, exact)
-    Some(exact)
+    }
+    if (counts eq DetectorRefused) None else Some(counts)
   }
 
   /** Skew-salted shuffled-hash join for a single-column equi-join whose
@@ -675,32 +661,13 @@ object Factorized {
     Some(joined.drop("__salt"))
   }
 
-  /** Memoized probe results — (exact row count, rows-per-key) — for
-    * [[cofactorOverJoinAdaptive]] and the SHJ size guard,
-    * keyed by (canonicalized analyzed plan, key column). Canonicalized
-    * plans normalize expression ids, so two reads of the same files with
-    * the same projection hit the same entry regardless of session or
-    * DataFrame identity. Access-order LRU — the cap is a leak bound (a
-    * retraining service probing thousands of distinct inputs), not a
-    * working-set size. */
-  private val probeCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-      (Long, Double)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            (Long, Double)]): Boolean = size() > 256
-    })
+  /** [[probeRowsPerKey]]'s memo: (exact row count, rows-per-key). */
+  private val rowsPerKey = new graft.sources.ProbeMemo[(Long, Double)](256)
 
-  /** Same discipline for [[topKeyCounts]]'s top-65 (key, count) rows —
-    * a separate map only because the value shape differs; each entry is
-    * ≤65 rows, so the 256-entry bound also bounds memory. */
-  private val topKeyCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-      Array[Row]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            Array[Row]]): Boolean = size() > 256
-    })
+  /** [[topKeyCounts]]' and [[hotKeyCounts]]' memo (tags `topk:` and
+    * `hot:`); each entry is ≤65 rows, so the 256-entry bound also
+    * bounds memory. */
+  private val topKeys = new graft.sources.ProbeMemo[Array[Row]](256)
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -750,16 +717,9 @@ object Factorized {
   final case class KeyShape(width: Int, lo: Long, hi: Long)
 
   /** [[probeGroupedShape]]'s memo — (rows, combined key cardinality,
-    * per-key shape, per-cat-column cardinality, null-row upper bound).
-    * Values are a few dozen bytes; the 256-entry bound is the same leak
-    * bound as the other caches. */
-  private val shapeCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-      (Long, Long, Seq[KeyShape], Seq[Long], Long)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            (Long, Long, Seq[KeyShape], Seq[Long], Long)]): Boolean = size() > 256
-    })
+    * per-key shape, per-cat-column cardinality, null-row upper bound). */
+  private val groupedShapes =
+    new graft.sources.ProbeMemo[(Long, Long, Seq[KeyShape], Seq[Long], Long)](256)
 
   /** Grouped-route shape probe (`Graft.cofactorGrouped`'s gate), ONE
     * fixed-memory scan computing everything the byte-based group cap
@@ -769,19 +729,13 @@ object Factorized {
     * risking its mid-job fail-loud throw; Int.MaxValue when the key is
     * all-NULL or any value embeds a NUL byte, the one shape base-256
     * packing cannot keep injective), and approx distinct count per
-    * categorical column (bounds each per-group cat map). Memoized with
-    * the same (plan, tag, file fingerprint) discipline as the other
-    * probes. */
+    * categorical column (bounds each per-group cat map). Memoized in
+    * [[graft.sources.ProbeMemo]]. */
   private[graft] def probeGroupedShape(df: DataFrame, keys: Seq[String], cats: Seq[String],
                                        keyIsString: Seq[Boolean],
                                        nullCols: Seq[String] = Seq()): (Long, Long, Seq[KeyShape], Seq[Long], Long) = {
-    val ck = (df.queryExecution.analyzed.canonicalized,
-      "gshape:" + (keys ++ cats).mkString("\u0001") + ":" + keyIsString.mkString(",") +
-        ":" + nullCols.mkString("\u0001"),
-      snapshotFingerprint(df))
-    val cached = shapeCache.get(ck)
-    if (cached != null) cached
-    else {
+    groupedShapes(df, (keys ++ cats).mkString("\u0001") + ":" + keyIsString.mkString(",") +
+        ":" + nullCols.mkString("\u0001")) {
       // combined cardinality over ALL keys (one group per distinct
       // tuple); per-key shape: exact max packable byte width + embedded
       // NUL probe for strings, exact value range for numerics (decides
@@ -822,69 +776,33 @@ object Factorized {
       // columns is counted once per column — still a sound bound for
       // the NULL-remainder fraction gate)
       val nullUB = nullCols.indices.map(i => rows - r.getLong(nullBase + i)).sum
-      val v = (rows, r.getLong(1), shapes,
+      (rows, r.getLong(1), shapes,
         cats.indices.map(i => r.getLong(catBase + i)).toVector, nullUB)
-      shapeCache.put(ck, v)
-      v
     }
   }
 
-  /** Cheap file-snapshot fingerprint folded into the probe-memo key:
-    * canonicalized plans compare by rootPaths, so a table rewritten or
-    * appended IN PLACE would otherwise silently replay a stale row
-    * count — which [[hashJoinIfSafe]] then trusts for the non-spillable
-    * SHJ build guard, re-admitting exactly the abort the guard exists
-    * to prevent. Folding (file count, total bytes) per file-source leaf
-    * invalidates the memo on any rewrite that changes bytes on disk
-    * without scanning anything (driver-side listing metadata only). A
-    * same-size same-count in-place rewrite can still alias — that needs
-    * the documented [[clearProbeCache]]. */
-  private[graft] def snapshotFingerprint(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    df.queryExecution.analyzed.collectLeaves().foldLeft(17L) {
-      case (h, LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) =>
-        ((h * 31 + fs.location.inputFiles.length) * 31) + fs.sizeInBytes
-      case (h, other) => h * 31 + other.getClass.getName.hashCode
-    }
-  }
+  /** [[probeNullCount]]'s memo: (rows, null-bearing-row upper bound). */
+  private val nullCounts = new graft.sources.ProbeMemo[(Long, Long)](256)
 
-  /** Drop memoized key-profile probes. Appends/rewrites that change
-    * file count or total bytes invalidate automatically (see
-    * [[snapshotFingerprint]]); call this after a byte-identical-size
-    * in-place rewrite, the one case the fingerprint can alias. */
   /** Keyless null probe for the FLAT moments SQL route: (total rows,
     * null-bearing-row upper bound = sum of per-column null counts) over
-    * `cols`. ONE fixed-memory scan, memoized with the same
-    * (plan, cols, file-snapshot) discipline as [[probeGroupedShape]]. */
-  private val nullProbeCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-      (Long, Long)](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String, Long),
-            (Long, Long)]): Boolean = size() > 256
-    })
-  private[graft] def probeNullCount(df: DataFrame, cols: Seq[String]): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val ck = (df.queryExecution.analyzed.canonicalized,
-      "nullprobe:" + cols.mkString("\u0001"), snapshotFingerprint(df))
-    val cached = nullProbeCache.get(ck)
-    if (cached != null) cached
-    else {
+    * `cols`. ONE fixed-memory scan, memoized like [[probeGroupedShape]]. */
+  private[graft] def probeNullCount(df: DataFrame, cols: Seq[String]): (Long, Long) =
+    nullCounts(df, cols.mkString("\u0001")) {
       val aggs = count(lit(1)) +: cols.map(c => count(col(c)))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       val rows = r.getLong(0)
-      val nullUB = cols.indices.map(i => rows - r.getLong(1 + i)).sum
-      val v = (rows, nullUB)
-      nullProbeCache.put(ck, v)
-      v
+      (rows, cols.indices.map(i => rows - r.getLong(1 + i)).sum)
     }
-  }
 
-  def clearProbeCache(): Unit =
-    { probeCache.clear(); topKeyCache.clear(); shapeCache.clear(); nullProbeCache.clear()
-      graft.mice.MiceJoin.clearUniqueKeyCache() }
+  /** Drop every memoized probe result ([[graft.sources.ProbeMemo]]).
+    * Appends and rewrites that change a file relation's file count,
+    * paths or total bytes invalidate on their own; call this after a
+    * same-size in-place rewrite, the one change the fingerprint can
+    * alias. */
+  def clearProbeCache(): Unit = graft.sources.ProbeMemo.clearAll()
 
-  private[graft] def probeCacheSize: Int = probeCache.size()
+  private[graft] def probeCacheSize: Int = rowsPerKey.size
 
   /** Routing the last multi-dim [[cofactorOverStar]] call on this
     * thread chose — (aggregated dim keys, row-folded dim keys). The
@@ -1041,22 +959,15 @@ object Factorized {
   }
 
   /** Memoized (rows, rows-per-key) probe shared by the adaptive
-    * single-join and star paths; composite keys probe
-    * `approx_count_distinct(struct(keys))`. */
-  private[graft] def probeRowsPerKey(df: DataFrame, keyCols: Seq[String]): (Long, Double) = {
-    val ck = (df.queryExecution.analyzed.canonicalized,
-      "rpk:" + keyCols.mkString("\u0001"), snapshotFingerprint(df))
-    val cached = probeCache.get(ck)
-    if (cached != null) cached
-    else {
+    * single-join and star paths and the SHJ size guard; composite keys
+    * probe `approx_count_distinct(struct(keys))`. */
+  private[graft] def probeRowsPerKey(df: DataFrame, keyCols: Seq[String]): (Long, Double) =
+    rowsPerKey(df, keyCols.mkString("\u0001")) {
       val kc = if (keyCols.length == 1) col(keyCols.head)
                else struct(keyCols.map(col): _*)
       val r = df.agg(count(lit(1)).as("n"), approx_count_distinct(kc).as("k")).head()
-      val v = (r.getLong(0), r.getLong(0).toDouble / math.max(1L, r.getLong(1)).toDouble)
-      probeCache.put(ck, v)
-      v
+      (r.getLong(0), r.getLong(0).toDouble / math.max(1L, r.getLong(1)).toDouble)
     }
-  }
 
   /** Train linear regression over the (never materialized) star join.
     * `label` indexes `factNum ++ dims.flatMap(_.num)`. */

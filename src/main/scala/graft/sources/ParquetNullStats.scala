@@ -39,18 +39,8 @@ object ParquetNullStats {
   private def maxFiles: Int =
     Integer.getInteger("graft.parquet.nullStats.maxFiles", 4096).intValue()
 
-  // memoized per (sorted file list hash + total bytes, cols): footers
-  // are immutable per path+size, so the key folds the relations' total
-  // size alongside the paths — the same snapshot discipline as
-  // `Factorized.snapshotFingerprint` (a path-only key would replay a
-  // stale ZeroNulls after an in-place rewrite that adds NULLs; with
-  // bytes folded in, only the documented byte-identical-size rewrite
-  // can alias, matching the probe cache's stated contract)
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(Long, String), Verdict](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, String), Verdict]): Boolean = size() > 256
-    })
+  /** Footer verdicts per (plan, cols, filter flag, data snapshot). */
+  private val verdicts = new ProbeMemo[Verdict](256)
 
   /** Can any of `cols` hold a NULL in the data behind `df`? Footer
     * metadata only — never scans. */
@@ -73,14 +63,21 @@ object ParquetNullStats {
     }
     val files = relations.flatMap(_.location.inputFiles)
     if (files.isEmpty || files.length > maxFiles) return Unknown
-    val totalBytes = relations.map(_.sizeInBytes).sum
-    val key = (files.sorted.foldLeft(17L)((h, f) => h * 31 + f.hashCode) * 31 + totalBytes,
-      cols.map(_.toLowerCase(java.util.Locale.ROOT)).sorted.mkString("") +
-        (if (filtered) ":f" else ""))
-    val cached = cache.get(key)
-    if (cached != null) return cached
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val want = cols.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    verdicts(df, want.toSeq.sorted.mkString("\u0001") + (if (filtered) ":f" else "")) {
+      footerNulls(df.sparkSession.sparkContext.hadoopConfiguration, files, want) match {
+        case None => Unknown
+        case Some(0L) => ZeroNulls
+        case Some(_) if filtered => Unknown // post-filter nulls may still be zero
+        case Some(_) => HasNulls
+      }
+    }
+  }
+
+  /** Total footer `null_count` of `want` over `files`; None when some
+    * footer lacks the statistic or the column. */
+  private def footerNulls(conf: org.apache.hadoop.conf.Configuration, files: Seq[String],
+                          want: Set[String]): Option[Long] = {
     var total = 0L
     files.foreach { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -94,23 +91,16 @@ object ParquetNullStats {
             if (want.contains(name)) {
               seen += name
               val st = cc.getStatistics
-              if (st == null || !st.isNumNullsSet) { cache.put(key, Unknown); return Unknown }
+              if (st == null || !st.isNumNullsSet) return None
               total += st.getNumNulls
             }
           }
         }
         // a referenced column absent from the footer (schema-evolved
         // file: the reader fills it with NULLs) cannot be proven clean
-        if (seen != want) { cache.put(key, Unknown); return Unknown }
+        if (seen != want) return None
       } finally reader.close()
     }
-    val v =
-      if (total == 0L) ZeroNulls
-      else if (filtered) Unknown // post-filter nulls may still be zero
-      else HasNulls
-    cache.put(key, v)
-    v
+    Some(total)
   }
-
-  private[graft] def clearCache(): Unit = cache.clear()
 }

@@ -608,6 +608,24 @@ class ColumnarCofactorSpec extends AnyFunSuite {
     assert(nul.collect().map(_.getString(0)).toSet == Set("A", 0.toChar + "A"))
   }
 
+  test("clearProbeCache drops the dictionary memo: the next gate re-runs the distinct scan") {
+    val tmp = java.nio.file.Files.createTempDirectory("gdictclr").toFile.getAbsolutePath
+    spark.range(2000).select(
+      concat(lit("dictionary"), (col("id") % 5).cast("string")).as("k"), // 11 bytes
+      (col("id") % 97).cast("double").as("x")).write.mode("overwrite").parquet(tmp)
+    val df = spark.read.parquet(tmp)
+    def gateJobs(): Long = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      Graft.cofactorGrouped(df, "k", Seq("x"), Seq())
+      assert(Graft.lastGroupedRoute() == "columnar-dict")
+    }._1
+    graft.ml.Factorized.clearProbeCache()
+    val cold = gateJobs() // shape probe + distinct scan
+    assert(cold >= 2, s"the cold gate must run the shape probe and the distinct scan ($cold jobs)")
+    assert(gateJobs() == 0, "a repeat call over the same files must hit every memo")
+    graft.ml.Factorized.clearProbeCache()
+    assert(gateJobs() == cold, "after clearProbeCache the gate must scan for its dictionary again")
+  }
+
   test("CatDictString: a key value missing from the dictionary fails loudly mid-job") {
     // the dict route's in-place-rewrite contract: direct kernel call
     // with a dictionary that does NOT contain one of the data's key

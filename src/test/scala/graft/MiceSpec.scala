@@ -143,7 +143,7 @@ class MiceSpec extends AnyFunSuite {
     }.head
     assert(spark.sparkContext.getPersistentRDDs.contains(id),
       "localCheckpoint must register a persistent RDD")
-    Mice.dropCheckpoint(df)
+    Graft.dropCheckpoint(df)
     assert(!spark.sparkContext.getPersistentRDDs.contains(id),
       "dropCheckpoint must unregister the checkpoint's RDD")
   }

@@ -1044,6 +1044,68 @@ class PlansSpec extends AnyFunSuite {
       "a rewrite that changes bytes must invalidate the footer-stats memo")
   }
 
+  test("moments routes over a DSv2 file source re-probe NULLs after an append") {
+    // a DSv2 read's plan and leaf stay the same when a file lands in
+    // its directory, so no probe over it may be memoized: a replayed
+    // "0 NULLs" would let the kernel's skip-any-NULL-row rule drop rows
+    // that SQL's SUM/AVG/COUNT count
+    Graft.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("dsv2m").toFile.getAbsolutePath
+    def write(from: Long, to: Long, yNulls: Boolean): Unit =
+      spark.range(from, to).select((col("id") % 4).cast("int").as("k"),
+        (col("id") % 31).cast("double").as("x"),
+        (if (yNulls) when(col("id") % 2 === 0, lit(null).cast("double")).otherwise(lit(1.0))
+         else lit(1.0)).multiply((col("id") % 7).cast("double")).as("y"))
+        .write.mode("append").parquet(dir)
+    val sqls = Seq("SELECT sum(x) AS s, avg(y) AS a, count(y) AS c FROM dsv2_m",
+      "SELECT k, sum(x) AS s, avg(y) AS a, count(y) AS c FROM dsv2_m GROUP BY k ORDER BY k")
+    def run(sql: String): Seq[org.apache.spark.sql.Row] = {
+      spark.read.parquet(dir).createOrReplaceTempView("dsv2_m")
+      spark.sql(sql).collect().toSeq
+    }
+    val savedS = spark.experimental.extraStrategies
+    val savedO = spark.experimental.extraOptimizations
+    val v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
+    try {
+      spark.conf.set("spark.sql.sources.useV1SourceList",
+        v1.split(",").filterNot(_.trim.equalsIgnoreCase("parquet")).mkString(","))
+      write(0, 600, yNulls = false)
+      assert(spark.read.parquet(dir).queryExecution.executedPlan.toString.contains("BatchScan"),
+        "parquet must be read through DSv2 here")
+      Graft.enableSqlKernels(spark)
+      sqls.foreach { sql =>
+        spark.read.parquet(dir).createOrReplaceTempView("dsv2_m")
+        val plan = spark.sql(sql).queryExecution.executedPlan.toString
+        assert(plan.contains("GroupedKernelPartial"),
+          s"the null-free DSv2 snapshot must take the kernel route:\n$plan")
+        run(sql)
+      }
+      write(600, 700, yNulls = true)
+      val got = sqls.map(run)
+      spark.experimental.extraStrategies = savedS
+      spark.experimental.extraOptimizations = savedO
+      val exp = sqls.map(run)
+      got.zip(exp).foreach { case (g, e) =>
+        assert(g.length == e.length && g.nonEmpty)
+        g.zip(e).foreach { case (gr, er) =>
+          assert(gr.length == er.length)
+          (0 until er.length).foreach { i =>
+            val (a, b) = (gr.get(i), er.get(i))
+            val same = (a, b) match {
+              case (x: Double, y: Double) => math.abs(x - y) <= 1e-9 * (1 + math.abs(y))
+              case _ => a == b
+            }
+            assert(same, s"after the NULL append the routed query differs: $gr vs $er")
+          }
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.sources.useV1SourceList", v1)
+      spark.experimental.extraStrategies = savedS
+      spark.experimental.extraOptimizations = savedO
+    }
+  }
+
   test("flat kernel route honors the aggregate's captured maxCategories cap") {
     Graft.register(spark)
     import org.apache.spark.sql.graft.ColumnBridge
