@@ -1353,10 +1353,15 @@ object SparkEntry {
           col("o_totalprice").cast("double").as("y"))
       // 1024 B: small enough that the 96 KB projected build exceeds
       // cap×partitions at ANY plausible local parallelism (the tier
-      // choice must be partition-count-independent for a golden row)
+      // choice must be partition-count-independent for a golden row).
+      // Broadcast is off: the small dim fits the broadcast threshold,
+      // which would take the plain join before any hash-join tier
       val key = "spark.graft.shj.maxBuildPartitionBytes"
       val saved = s.conf.getOption(key)
+      val noBroadcast = "spark.sql.autoBroadcastJoinThreshold"
+      val savedBc = s.conf.getOption(noBroadcast)
       s.conf.set(key, "1024")
+      s.conf.set(noBroadcast, "-1")
       try {
         val joined = graft.ml.Factorized.hashJoinIfSafe(fact, dim, Seq("k"),
           rightRows = Some(1000L))
@@ -1370,6 +1375,10 @@ object SparkEntry {
         saved match {
           case Some(v) => s.conf.set(key, v)
           case None => s.conf.unset(key)
+        }
+        savedBc match {
+          case Some(v) => s.conf.set(noBroadcast, v)
+          case None => s.conf.unset(noBroadcast)
         }
       }
     },

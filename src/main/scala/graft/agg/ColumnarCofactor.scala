@@ -762,6 +762,12 @@ object ColumnarCofactor {
     if (nums.isEmpty) return None
     val inputNames = (nums.flatMap(_.inputs) ++ cats.flatMap(_.inputs)).distinct
     val pruned = src.select(inputNames.map(col): _*)
+    // a join or union never plans to the one-scan chain the kernel reads.
+    // Refusing on the optimized plan (which physical planning computes
+    // anyway) also keeps that planning off AQE re-planning inputs, whose
+    // materialized broadcast stages fail AQE's plan validation when
+    // planned on their own
+    if (pruned.queryExecution.optimizedPlan.exists(_.children.size > 1)) return None
     leafScanAndFilters(pruned.queryExecution.executedPlan).flatMap { case (scan, filters) =>
       // resolve caller names against the scan schema per
       // spark.sql.caseSensitive — the select() above already resolved

@@ -232,14 +232,16 @@ object MiceJoin {
    *    dim carries a match marker; unique dims cannot fan out) and
    *    checkpointed. Column `c`'s training triple is
    *    `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
-   *    masked aggregate per step, no ring subtraction (no float drift),
+   *    masked triple (one Spark job) per step, no ring subtraction (no
+   *    float drift),
    *    and the match mask keeps the inner-join training semantics;
    *  - the update is a `withColumn` on the joined stratum, guarded so a
    *    row with no dim match or a NULL dim feature keeps its value;
    *  - each non-final iteration checkpoints the stratum once and drops
    *    the previous one; the final iteration is returned lazily.
-   * Every column step therefore runs the same bounded number of jobs,
-   * independent of the iteration (`MiceJoinSpec` pins it).
+   * A non-final iteration therefore runs one job per imputed column
+   * plus its checkpoint, independent of the iteration (`MiceJoinSpec`
+   * pins it).
    *
    * With ONE imputed column every incomplete row is missing it, so the
    * static triple IS the training triple: the incomplete scan and its

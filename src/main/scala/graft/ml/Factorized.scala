@@ -38,14 +38,12 @@ object Factorized {
     // triple buffers can exceed task memory just like a raw-row build.
     // buildKeysUnique: both sides are groupBy outputs, so the hot-key
     // probe scan is skipped — max multiplicity is 1 by construction.
-    val row = hashJoinIfSafe(a, b, Seq("__k"), buildKeysUnique = true)
-      .select(Graft.sumTripleOf(Graft.multiplyTriple(col("__A"), col("__B"))).as("t"))
-      .head()
-    // empty join → sum_triple yields NULL; the cofactor of zero rows is
-    // the zero triple of the combined arity
-    if (row.isNullAt(0))
-      Triple.zero(leftNum.length + rightNum.length, leftCat.length + rightCat.length)
-    else Graft.tripleFromRow(row.getStruct(0))
+    // the final sum folds each join partition in one job (no exchange);
+    // an empty join has no triple, and the cofactor of zero rows is the
+    // zero triple of the combined arity
+    Graft.sumTriples(hashJoinIfSafe(a, b, Seq("__k"), buildKeysUnique = true),
+        Graft.multiplyTriple(col("__A"), col("__B")))
+      .getOrElse(Triple.zero(leftNum.length + rightNum.length, leftCat.length + rightCat.length))
   }
 
   /**
@@ -115,9 +113,10 @@ object Factorized {
       // aggregate, so the sort-merge join's two O(n log n) sorts buy
       // nothing — a hash build on whichever side the planner estimates
       // smaller skips them (sf10: 3.4 → measured below-3 s on the
-      // 60M ⋈ 15M bench shape). Broadcast still wins automatically when
-      // a side fits the threshold (hints don't suppress it). The hint is
-      // size-guarded by hashJoinIfSafe because SHJ's build cannot spill;
+      // 60M ⋈ 15M bench shape). A side under the broadcast threshold
+      // gets the plain join instead, which the planner broadcasts (the
+      // hint would suppress that). The hint is size-guarded by
+      // hashJoinIfSafe because SHJ's build cannot spill;
       // the right side's probed EXACT row count (always available here —
       // the right probe runs first) replaces the optimizer's compressed
       // file-size estimate for it, and the left count rides along when
@@ -260,11 +259,16 @@ object Factorized {
    * 64 MB — conservative versus the ~1/(2·cores) share of the unified
    * pool a task is guaranteed, on a 1000-executor cluster as on
    * local[32]). Under the cap the hint names the smaller side as the
-   * build side explicitly; broadcast still wins when a side is under
-   * the broadcast threshold. Over the cap the join is NOT surrendered
-   * to sort-merge immediately. First a bucketed shortcut: when both
-   * sides scan tables bucketed with the same bucket count and each
-   * bucket's projected build fits the cap, the hinted join is planned
+   * build side explicitly. Before any of this, a side whose optimizer
+   * `stats.sizeInBytes` is at most a positive
+   * `spark.sql.autoBroadcastJoinThreshold` (JoinSelection's own size
+   * test) gets the plain, unhinted join, which the planner broadcasts:
+   * a shuffle_hash hint would turn broadcast off and pay an exchange per
+   * side for a build that fits every executor. Over the cap the join is
+   * NOT surrendered to sort-merge immediately. First a bucketed
+   * shortcut: when both sides scan tables bucketed with the same
+   * bucket count and each bucket's projected build fits the cap, the
+   * hinted join is planned
    * WITHOUT any repartition and kept iff the planner inserts no
    * exchange — tables bucketized once on their join key
    * ([[graft.sources.Tables.writeBucketed]]) then join shuffle-free on
@@ -288,6 +292,13 @@ object Factorized {
                                     rightRows: Option[Long] = None,
                                     buildKeysUnique: Boolean = false): DataFrame = {
     val spark = left.sparkSession
+    // JoinSelection's own broadcast test: a side whose estimated size
+    // fits a positive threshold is broadcast by the plain join, and the
+    // shuffle_hash hint below would switch that off
+    val broadcastMax = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val smallest = left.queryExecution.optimizedPlan.stats.sizeInBytes
+      .min(right.queryExecution.optimizedPlan.stats.sizeInBytes)
+    if (broadcastMax > 0 && smallest <= broadcastMax) return left.join(right, usingColumns)
     val cap = spark.conf
       .get("spark.graft.shj.maxBuildPartitionBytes", (64L << 20).toString).toLong
     val confParts = math.max(1, spark.sessionState.conf.numShufflePartitions).toLong
@@ -933,10 +944,8 @@ object Factorized {
           .withColumn("__T", Graft.multiplyTriple(col("__T"), col("__D")))
           .drop("__D")
       }
-      val row = cur.select(Graft.sumTripleOf(col("__T")).as("t")).head()
-      val t = if (row.isNullAt(0))
-        Triple.zero(numAll.length, catAll.length)
-      else Graft.tripleFromRow(row.getStruct(0))
+      val t = Graft.sumTriples(cur, col("__T"))
+        .getOrElse(Triple.zero(numAll.length, catAll.length))
       // the fold changed the block order to [factNum ++ rowDimNums ++
       // aggDimNums, …] — permute back to the declared [factNum ++
       // dims-in-order] layout when the routing split reordered dims

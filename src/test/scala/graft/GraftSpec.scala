@@ -1,0 +1,150 @@
+package graft
+
+import graft.ml.Factorized
+import graft.ring.Triple
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The eager row route of the triple API: `Graft.cofactor`,
+  * `cofactorMasked` and `cofactorPerClass` over a plan the columnar
+  * kernel cannot harvest (a checkpointed frame) each run ONE Spark job
+  * and match the `sum_to_triple` aggregate; plus `hashJoinIfSafe`'s
+  * broadcast rule. */
+class GraftSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private val num = Seq("a", "b")
+  private val cat = Seq("c")
+  private val schema = StructType(Seq(
+    StructField("id", IntegerType), StructField("a", DoubleType), StructField("b", DoubleType),
+    StructField("c", IntegerType), StructField("lbl", IntegerType)))
+
+  private def frame(rows: Seq[Row], partitions: Int): DataFrame = {
+    val rdd = if (partitions == 0) spark.sparkContext.emptyRDD[Row]
+              else spark.sparkContext.parallelize(rows, partitions)
+    spark.createDataFrame(rdd, schema).localCheckpoint()
+  }
+
+  private val rng = new scala.util.Random(7)
+  private def row(i: Int): Row = Row(i, rng.nextGaussian() * 3, rng.nextGaussian() + i % 5,
+    i % 4, i % 3)
+
+  /** Named inputs: zero partitions, one-row partitions, NaN/±Inf values
+    * with NULL inputs and NULL labels, and rows that all carry a NULL. */
+  private lazy val inputs: Seq[(String, DataFrame)] = Seq(
+    "zero partitions" -> frame(Seq(), 0),
+    "one-row partitions" -> frame(Seq.tabulate(6)(row), 6),
+    "NaN/±Inf and NULLs" -> frame(Seq.tabulate(40)(row) ++ Seq(
+      Row(40, Double.NaN, 1.0, 1, 0), Row(41, Double.PositiveInfinity, 2.0, 2, 1),
+      Row(42, 1.0, Double.NegativeInfinity, 0, null), Row(43, null, 1.0, 1, 2),
+      Row(44, 2.0, 3.0, null, 1), Row(45, 0.5, 0.25, 3, null)), 3),
+    "every row has a NULL input" -> frame(Seq.tabulate(12)(i => Row(i, null, 1.0 * i, i % 2, i % 2)), 2))
+
+  private def casts(nb: Boolean, mask: Option[Column]): Column = {
+    val cs = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
+    val in = mask.fold(cs)(p => cs.map(c => when(p, c)))
+    if (nb) Graft.sumNbAgg(in: _*) else Graft.sumTriple(in: _*)
+  }
+
+  private def same(a: Double, b: Double): Boolean =
+    (a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= 1e-9 * (1.0 + math.abs(b))
+
+  private def assertClose(got: Triple, want: Triple, what: String): Unit = {
+    assert(got.n == want.n, s"$what: n ${got.n} != ${want.n}")
+    def arr(name: String, g: Array[Double], w: Array[Double]): Unit =
+      assert(g.length == w.length && g.indices.forall(i => same(g(i), w(i))),
+        s"$what: $name ${g.toSeq} != ${w.toSeq}")
+    def maps[K](name: String, g: Array[Map[K, Double]], w: Array[Map[K, Double]]): Unit =
+      assert(g.length == w.length && g.indices.forall { i =>
+        g(i).keySet == w(i).keySet && g(i).forall { case (k, v) => same(v, w(i)(k)) }
+      }, s"$what: $name ${g.toSeq} != ${w.toSeq}")
+    arr("lin", got.lin, want.lin)
+    arr("quad", got.quad, want.quad)
+    maps("linCat", got.linCat, want.linCat)
+    maps("quadNumCat", got.quadNumCat, want.quadNumCat)
+    maps("quadCat", got.quadCat, want.quadCat)
+  }
+
+  private def oneJob[T](what: String)(body: => T): T = {
+    var out: Option[T] = None
+    val (jobs, _) = JobCounter(spark.sparkContext) { out = Some(body) }
+    assert(jobs == 1, s"$what ran $jobs Spark jobs, expected 1")
+    out.get
+  }
+
+  test("cofactor, cofactorMasked and cofactorPerClass: one job each, equal to the aggregate") {
+    val slots = Seq(None, Some($"id" % 3 === 0), Some($"lbl".isNull || $"id" > 2), Some(lit(false)))
+    for ((name, df) <- inputs; nb <- Seq(false, true)) {
+      val what = s"[$name nb=$nb]"
+      val flat = oneJob(s"$what cofactor")(Graft.cofactor(df, num, cat, nb))
+      assertClose(flat, Graft.tripleFromRow(df.agg(casts(nb, None)).head().getStruct(0)),
+        s"$what cofactor")
+
+      val masked = oneJob(s"$what cofactorMasked")(Graft.cofactorMasked(df, num, cat, slots, nb))
+      val maskedRef = df.agg(casts(nb, slots.head), slots.tail.map(casts(nb, _)): _*).head()
+      assert(masked.length == slots.length)
+      masked.zipWithIndex.foreach { case (t, i) =>
+        assertClose(t, Graft.tripleFromRow(maskedRef.getStruct(i)), s"$what slot $i")
+      }
+      assert(masked.last.n == 0, s"$what: the all-false slot folded rows")
+
+      val perClass = oneJob(s"$what cofactorPerClass")(
+        Graft.cofactorPerClass(df, num, cat, label = "lbl", nb = nb))
+      val perClassRef = df.filter($"lbl".isNotNull)
+        .groupBy($"lbl".cast("int")).agg(casts(nb, None))
+        .collect().map(r => r.getInt(0) -> Graft.tripleFromRow(r.getStruct(1))).sortBy(_._1).toSeq
+      assert(perClass.map(_._1) == perClassRef.map(_._1), s"$what labels")
+      perClass.zip(perClassRef).foreach { case ((l, t), (_, w)) => assertClose(t, w, s"$what label $l") }
+    }
+  }
+
+  test("repeated calls return bit-identical triples") {
+    val df = frame(Seq.tabulate(2000)(row), 4)
+    def bits(t: Triple): Seq[Any] = Seq(t.n,
+      t.lin.toSeq.map(java.lang.Double.doubleToRawLongBits),
+      t.quad.toSeq.map(java.lang.Double.doubleToRawLongBits),
+      t.linCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap),
+      t.quadNumCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap),
+      t.quadCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap))
+    for (nb <- Seq(false, true)) {
+      assert(bits(Graft.cofactor(df, num, cat, nb)) == bits(Graft.cofactor(df, num, cat, nb)))
+      val slots = Seq(None, Some($"id" % 2 === 0))
+      assert(Graft.cofactorMasked(df, num, cat, slots, nb).map(bits) ==
+        Graft.cofactorMasked(df, num, cat, slots, nb).map(bits))
+      assert(Graft.cofactorPerClass(df, num, cat, "lbl", nb).map { case (l, t) => l -> bits(t) } ==
+        Graft.cofactorPerClass(df, num, cat, "lbl", nb).map { case (l, t) => l -> bits(t) })
+    }
+  }
+
+  test("the categorical-cardinality guard still throws IllegalStateException") {
+    val df = frame(Seq.tabulate(1000)(i => Row(i, i * 0.5, 1.0, i, i % 3)), 2)
+    spark.conf.set("spark.graft.cofactor.maxCategories", "16")
+    try {
+      def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+      def rejects(what: String)(body: => Any): Unit = {
+        val e = intercept[Exception](body)
+        assert(causes(e).exists(_.isInstanceOf[IllegalStateException]), s"$what: unexpected error $e")
+      }
+      rejects("cofactor")(Graft.cofactor(df, num, cat))
+      rejects("cofactorMasked")(Graft.cofactorMasked(df, num, cat, Seq(None, Some($"id" > 5))))
+      rejects("cofactorPerClass")(Graft.cofactorPerClass(df, num, cat, "lbl"))
+    } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
+  }
+
+  test("hashJoinIfSafe: a side under the broadcast threshold broadcasts, with no shuffle") {
+    val dim = Seq.tabulate(50)(k => (k, k * 0.5)).toDF("k", "dprice")
+    val fact = Seq.tabulate(3000)(i => (i % 60, i * 1.0)).toDF("k", "y")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
+    try {
+      val joined = Factorized.hashJoinIfSafe(fact, dim, Seq("k"))
+      val plan = joined.queryExecution.executedPlan
+      assert(plan.toString.contains("BroadcastHashJoin"), s"expected a broadcast join:\n$plan")
+      assert(!Factorized.hasShuffleExchange(plan), s"a broadcast join must not shuffle:\n$plan")
+      assert(joined.count() == fact.join(dim, "k").count())
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+}

@@ -311,12 +311,13 @@ class MiceJoinSpec extends AnyFunSuite {
     info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
     val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
-    // measured on local[4]: 17, 26, 35 jobs (51, 75, 99 tasks) — 9 jobs
-    // per iteration, 35 for the 12 column steps (4 columns × 3
-    // iterations) including set-up and the write
-    val (steps, maxJobsPerStep) = (4 * 3, 3)
-    assert(j3._1 <= maxJobsPerStep * steps,
-      s"${j3._1} jobs for $steps column steps, over $maxJobsPerStep per step")
+    // an extra iteration costs one masked triple per imputed column
+    // (one job each) plus the iteration's checkpoint. Measured on
+    // local[4]: 12, 17, 22 jobs (46, 66, 86 tasks) — 5 jobs and 20
+    // tasks per iteration
+    val imputed = 4
+    assert(iter2._1 == imputed + 1,
+      s"iteration 2 ran ${iter2._1} jobs, expected $imputed column steps + 1 checkpoint")
   }
 
   test("incomplete-stratum training keeps inner-join semantics: orphans and NULL dim features") {

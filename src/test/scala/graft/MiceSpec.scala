@@ -133,6 +133,29 @@ class MiceSpec extends AnyFunSuite {
     assert(none.head.n == 0)
   }
 
+  test("partitioned bounded work: each extra iteration runs one job per column plus its checkpoint") {
+    // J(n) = set-up + n·I + write: partitioned checkpoints every
+    // iteration, so J(2)-J(1) and J(3)-J(2) are each one iteration —
+    // the fused full+delta triple, one refresh+next-delta triple per
+    // further column, and the checkpoint. The caller's write is counted.
+    val in = withNulls.localCheckpoint()
+    def run(iterations: Int): (Long, Long) = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      val out = Mice.partitioned(in, cfg.copy(iterations = iterations))
+      out.write.format("noop").mode("overwrite").save()
+      Graft.dropCheckpoint(out)
+    }
+    run(1) // warm up
+    val Seq(j1, j2, j3) = (1 to 3).map(run)
+    info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
+    val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
+    assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
+    // measured on local[4]: 9, 12, 15 jobs (37, 49, 61 tasks) — 3 jobs
+    // per iteration over the 4-partition incomplete stratum, 4 tasks each
+    val columns = cfg.imputeCont.size + cfg.imputeCat.size
+    assert(iter2 == (columns + 1, 4L * (columns + 1)),
+      s"(jobs, tasks) per extra iteration: $iter2")
+  }
+
   test("dropCheckpoint unpersists exactly the plan's checkpoint RDD") {
     // the MICE loops free each superseded working-set checkpoint
     // deterministically — columns × iterations copies of the fact would

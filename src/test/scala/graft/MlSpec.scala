@@ -331,8 +331,11 @@ class MlSpec extends AnyFunSuite {
     // cap tiny so the partition-to-fit tier engages on toy data; one
     // key holds 2000 of the dim's 2500 rows — its build alone exceeds
     // the cap, so plain partition-to-fit SHJ would concentrate one
-    // non-spillable build no matter the partition count
+    // non-spillable build no matter the partition count. Broadcast is
+    // off: the toy dim fits the broadcast threshold, which would take
+    // the plain join before any SHJ tier
     spark.conf.set("spark.graft.shj.maxBuildPartitionBytes", "8192")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val hotDim = (Seq.tabulate(2000)(i => (0, i * 0.01)) ++
         Seq.tabulate(500)(i => (i + 1, i * 0.1))).toDF("k", "dprice")
@@ -355,7 +358,10 @@ class MlSpec extends AnyFunSuite {
       val viaUni = Graft.cofactorNumeric(juni, Seq("y", "a", "dprice"))
       val plainUni = Graft.cofactorNumeric(fact.join(uniDim, "k"), Seq("y", "a", "dprice"))
       assert(viaUni.approxEquals(plainUni, 1e-9))
-    } finally spark.conf.unset("spark.graft.shj.maxBuildPartitionBytes")
+    } finally {
+      spark.conf.unset("spark.graft.shj.maxBuildPartitionBytes")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("skew tier guards: __salt-bearing inputs refuse salting; 'count' key column survives") {
