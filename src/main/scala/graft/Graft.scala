@@ -333,46 +333,6 @@ object Graft {
   }
 
   /**
-   * Numeric-only cofactor as PLAIN codegen'd aggregates: `count(*)` +
-   * k linear + k(k+1)/2 upper-triangle product SUMs, assembled into the
-   * [[Triple]] driver-side. Semantically ≡ [[cofactor]] with `cat = ∅`
-   * (same any-null-drops-the-row rule, enforced by the filter below, so
-   * partial sums see exactly the rows the fused aggregate would lift) —
-   * but where the fused aggregate runs as an ObjectHashAggregate that
-   * CLOSES the whole-stage-codegen pipeline feeding it, these SUMs fuse
-   * INTO it: over a shuffled-hash join the scan→join→partial-agg chain
-   * is one generated loop, the shuffle carries one 8·(1+k+k(k+1)/2)-byte
-   * row per partition, and the final merge is the same hash agg. Worth
-   * ~2× on a wide-join cofactor (sf10 60M ⋈ 15M: the adaptive fallback's
-   * ObjectHashAggregate boundary was the remaining gap vs a vectorized
-   * single-node engine). Float caveat: partial-sum ORDER differs from
-   * the buffer walk, so last-bit doubles can differ from [[cofactor]] —
-   * callers already treat triples as ±1e-9 (`Triple.approxEquals`).
-   *
-   * It keeps this two-job SUM aggregate rather than [[cofactor]]'s
-   * one-job fold because the generated SUM loop is faster per row: on a
-   * 4M ⋈ 1M shuffled-hash join with three numeric columns at local[4]
-   * (4-core, 15 GB VM; median of 7 warm runs) the aggregate took
-   * 1.56 s against 1.63 s for the fold. With one categorical column
-   * added the comparison flips (fold 1.53 s, ObjectHashAggregate
-   * 1.63 s), which is why [[cofactor]] folds.
-   */
-  def cofactorNumeric(df: DataFrame, num: Seq[String]): Triple = {
-    import org.apache.spark.sql.functions._
-    val k = num.length
-    val cast = num.map(c => col(c).cast("double"))
-    val clean = if (k == 0) df else df.where(cast.map(_.isNotNull).reduce(_ && _))
-    val aggs: Seq[Column] = count(lit(1)) +: (cast.map(sum) ++
-      (for { i <- 0 until k; j <- i until k } yield sum(cast(i) * cast(j))))
-    val row = clean.agg(aggs.head, aggs.tail: _*).head()
-    def d(idx: Int): Double = if (row.isNullAt(idx)) 0.0 else row.getDouble(idx)
-    Triple(row.getLong(0),
-      Array.tabulate(k)(i => d(1 + i)),
-      Array.tabulate(k * (k + 1) / 2)(i => d(1 + k + i)),
-      Array.empty, Array.empty, Array.empty)
-  }
-
-  /**
    * Skew-resilient grouped cofactor: two-stage aggregation through a
    * row salt. Stage 1 aggregates on (keys, salt) — a hot key's rows
    * spread over `saltBuckets` reducers — stage 2 ring-adds the partial
@@ -455,9 +415,8 @@ object Graft {
 
   /** Working-set checkpoint for iterative operators: eager
     * `localCheckpoint` at a SERIALIZED storage level
-    * (`MEMORY_AND_DISK_SER` unless `spark.graft.checkpoint.storageLevel`
-    * overrides). Deserialized blocks store one Java object graph per
-    * row — at a 600M-row working set that is tens of GB a GENERATION,
+    * (`MEMORY_AND_DISK_SER`). Deserialized blocks store one Java object
+    * graph per row — at a 600M-row working set that is tens of GB a GENERATION,
     * and an iterative operator holds two generations at the handoff
     * (previous + replacement, released by [[dropCheckpoint]]), which
     * overflowed a 60 GB scratch disk in the sf100 MICE bench.
@@ -475,14 +434,11 @@ object Graft {
     * level was serialized), while the object-graph blowup it guards
     * against is bounded by the same small size. Unknown stats (a
     * LogicalRDD leaf without origin stats reports the session default,
-    * effectively ∞) err to SERIALIZED — the safe direction at scale.
-    * `spark.graft.checkpoint.storageLevel` pins either explicitly. */
+    * effectively ∞) err to SERIALIZED — the safe direction at scale. */
   private[graft] def checkpoint(df: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val pinned = df.sparkSession.conf.get("spark.graft.checkpoint.storageLevel", "")
     val lvl =
-      if (pinned.nonEmpty) StorageLevel.fromString(pinned)
-      else if (df.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 30))
+      if (df.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 30))
         StorageLevel.MEMORY_AND_DISK
       else StorageLevel.MEMORY_AND_DISK_SER
     // LAYOUT-PRESERVING, unlike the public `localCheckpoint` API: the

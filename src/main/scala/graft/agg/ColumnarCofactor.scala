@@ -728,22 +728,6 @@ object ColumnarCofactor {
       }
     }
 
-  /** Stage-truncated run for `tools.ColProfile` (1 = iterate only,
-    * 2 = +numeric decode, 3 = +numeric moments, 4 = +cat decode);
-    * returns total rows seen so the work cannot be dead-code-eliminated. */
-  private[graft] def profileStage(src: DataFrame, numCols: Seq[String],
-      catInts: Seq[String], catYears: Seq[String], stage: Int): Long = {
-    val nums: Seq[NumSpec] = numCols.map(NumCol)
-    val cats: Seq[CatSpec] = catInts.map(CatCol) ++ catYears.map(CatYear)
-    val (scan, compiled) = compile(src, nums, cats, nbMode = false,
-      CofactorAggregate.confMaxCategories()).getOrElse(sys.error("harvest must engage"))
-    scan.executeColumnar().mapPartitions { batches =>
-      val acc = new BatchAcc(compiled, stage)
-      batches.foreach(acc.addBatch)
-      Iterator.single(acc.buf.n + acc.rowsSeen)
-    }.collect().sum
-  }
-
   /** Driver-only structural pre-check: would the harvest engage on this
     * plan? Plans the pruned query but runs NO jobs — callers can order
     * cheap plan checks ahead of probe scans (Graft.cofactorGrouped's
@@ -895,7 +879,7 @@ object ColumnarCofactor {
 
   private final val MicrosPerDay = 86400000000L
 
-  private final class BatchAcc(p: Compiled, stage: Int = 5, labelMode: Boolean = false) {
+  private final class BatchAcc(p: Compiled, labelMode: Boolean = false) {
     // CatPackedKeys / CatDictString decode only in the Long label
     // channel — the int cat path has no kind-4/5 decode, so a flat-mode
     // use must fail loudly here rather than silently misread the column
@@ -903,7 +887,6 @@ object ColumnarCofactor {
       "CatPackedKeys/CatDictString are label-only: use cofactorPerClassLong")
     val buf = new CofactorBuffer(p.numCols, if (labelMode) 0 else p.catCols, p.nbMode)
     buf.maxCategories = p.maxCategories
-    var rowsSeen = 0L // profile stages < 3 don't touch buf.n
 
     // label mode: the LAST compiled cat column is the class label; one
     // full CofactorBuffer per class, fed row-at-a-time (updateRow —
@@ -926,8 +909,8 @@ object ColumnarCofactor {
       byClass.toSeq.map { case (k, b) => (k, b.toTriple) }.sortBy(_._1)
 
     // ---- dense categorical fast path (flat mode) -------------------
-    // The ladder (tools/ColProfile) shows the per-row LongMap probes of
-    // updateCats cost as much as the whole scan. Real categoricals are
+    // A stage-truncated profile of this loop showed the per-row LongMap
+    // probes of updateCats cost as much as the whole scan. Real categoricals are
     // small-range ints, so each BATCH accumulates into direct-indexed
     // arrays (window = the batch's own [min,max]) and flushes the few
     // touched slots into the certified maps at batch end — ≤span probes
@@ -1474,8 +1457,6 @@ object ColumnarCofactor {
     def addBatch(batch: ColumnarBatch): Unit = {
       val nAll = batch.numRows()
       if (nAll == 0) return
-      rowsSeen += nAll
-      if (stage <= 1) return // profile: batch iteration only
       ensure(nAll)
 
       // compiled FilterExec mask (1/0/2 three-valued; only 1 survives)
@@ -1537,7 +1518,6 @@ object ColumnarCofactor {
         f(inArr, derBufs(di), n)
         di += 1
       }
-      if (stage == 2) return // profile: + numeric decode only
 
       val d = p.numCols
       var k = 0
@@ -1582,7 +1562,6 @@ object ColumnarCofactor {
           }
         }
       }
-      if (stage == 3) return // profile: + numeric moments
 
       // labelMode: the LAST compiled cat spec is the class key and
       // decodes into the LONG channel instead of the int cat buffers
@@ -1614,13 +1593,12 @@ object ColumnarCofactor {
         } else fillCatInt(batch.column(p.catOrds(j)(0)), p.catT(j)(0), catBufs(j), s, n)
         j += 1
       }
-      if (stage == 4) return // profile: + cat decode
 
       if (labelMode) {
         // per-class route: the last cat column is the label; everything
         // else (including the full quad) accumulates into that class's
         // buffer row-at-a-time — kernel arithmetic is free next to the
-        // scan (ColProfile), so the flat path's vectorized moments are
+        // scan (stage-truncated profile), so the flat path's vectorized moments are
         // not worth a per-class gather
         val labels = labelBuf
         val cEff = p.catCols - 1

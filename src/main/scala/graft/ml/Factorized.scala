@@ -16,35 +16,16 @@ import org.apache.spark.sql.functions._
 object Factorized {
 
   /**
-   * Cofactor of the equi-join without materializing it. Resulting column
+   * Cofactor of the equi-join without materializing it: the one-dim
+   * case of [[cofactorOverStar]]'s aggregated chain. Resulting column
    * order: `[leftNum ++ rightNum, leftCat ++ rightCat]` (the ring
-   * product's block layout, mul.cpp:262-289).
+   * product's block layout, mul.cpp:262-289). A feature name may appear
+   * on both sides.
    */
   def cofactorOverJoin(left: DataFrame, right: DataFrame, key: String,
                        leftNum: Seq[String], leftCat: Seq[String],
-                       rightNum: Seq[String], rightCat: Seq[String]): Triple = {
-    val spark = left.sparkSession
-    Graft.register(spark)
-    def side(df: DataFrame, k: String, num: Seq[String], cat: Seq[String], alias: String) = {
-      val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int"))
-      df.groupBy(col(k).as("__k")).agg(Graft.sumTriple(cols: _*).as(alias))
-    }
-    val a = side(left, key, leftNum, leftCat, "__A")
-    val b = side(right, key, rightNum, rightCat, "__B")
-    // both sides are one-triple-per-key aggregates feeding one more fused
-    // aggregate — same SHUFFLE_HASH reasoning as the adaptive fallback:
-    // sorting |keys| serialized triple buffers buys nothing. Size-guarded
-    // (see hashJoinIfSafe): a non-spillable hash build over many keys'
-    // triple buffers can exceed task memory just like a raw-row build.
-    // buildKeysUnique: both sides are groupBy outputs, so the hot-key
-    // probe scan is skipped — max multiplicity is 1 by construction.
-    // the final sum folds each join partition in one job (no exchange);
-    // an empty join has no triple, and the cofactor of zero rows is the
-    // zero triple of the combined arity
-    Graft.sumTriples(hashJoinIfSafe(a, b, Seq("__k"), buildKeysUnique = true),
-        Graft.multiplyTriple(col("__A"), col("__B")))
-      .getOrElse(Triple.zero(leftNum.length + rightNum.length, leftCat.length + rightCat.length))
-  }
+                       rightNum: Seq[String], rightCat: Seq[String]): Triple =
+    aggregatedChain(left, leftNum, leftCat, Seq(StarDim(right, key, rightNum, rightCat)))
 
   /**
    * Cardinality-adaptive variant: factorization wins when each side has
@@ -53,7 +34,7 @@ object Factorized {
    * buffer per ~1 row is more bytes and allocation than the join it
    * avoids. When the optimizer can't know (no column stats), decide at
    * runtime from one cheap `approx_count_distinct` probe per side and
-   * fall back to the plain fused aggregate over the join below
+   * fall back to one [[Graft.cofactor]] over the join below
    * `minRowsPerKey`. The probe is O(scan) with a constant-size sketch —
    * cheap next to either plan, but NOT free when re-run per call over a
    * static 600M-row table (~30% of the sf100 adaptive wall-clock), so
@@ -94,11 +75,9 @@ object Factorized {
              else cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
     // the documented FALLBACK pin (Double.MaxValue / +Inf): no probe
     // scans either — symmetric with the star path's pin handling
-    if (minRowsPerKey == Double.MaxValue || minRowsPerKey.isPosInfinity) {
-      val joined = hashJoinIfSafe(left, right, Seq(key))
-      return if (catsEmpty) Graft.cofactorNumeric(joined, leftNum ++ rightNum)
-             else Graft.cofactor(joined, leftNum ++ rightNum, leftCat ++ rightCat)
-    }
+    if (minRowsPerKey == Double.MaxValue || minRowsPerKey.isPosInfinity)
+      return Graft.cofactor(hashJoinIfSafe(left, right, Seq(key)),
+        leftNum ++ rightNum, leftCat ++ rightCat)
     val (rightRows, rightRpk) = probe(right)
     if (rightRpk >= minRowsPerKey && probe(left)._2 >= minRowsPerKey) {
       // the factorized regime; with no categorical columns the numeric
@@ -107,10 +86,10 @@ object Factorized {
       if (catsEmpty) cofactorOverJoinNumeric(left, right, key, leftNum, rightNum)
       else cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
     } else {
-      // plain fused aggregate over the join, shaped to the factorized
+      // one cofactor fold over the join, shaped to the factorized
       // block layout [leftNum ++ rightNum, leftCat ++ rightCat].
-      // SHUFFLE_HASH when safe: the downstream is a single fused
-      // aggregate, so the sort-merge join's two O(n log n) sorts buy
+      // SHUFFLE_HASH when safe: the downstream is a single per-partition
+      // fold, so the sort-merge join's two O(n log n) sorts buy
       // nothing — a hash build on whichever side the planner estimates
       // smaller skips them (sf10: 3.4 → measured below-3 s on the
       // 60M ⋈ 15M bench shape). A side under the broadcast threshold
@@ -127,11 +106,7 @@ object Factorized {
         // re-read costs nothing
         leftRows = if (rightRpk >= minRowsPerKey) Some(probe(left)._1) else None,
         rightRows = Some(rightRows))
-      // no categorical columns → the triple is just plain SUMs, which
-      // fuse into the join's whole-stage pipeline instead of closing it
-      // at an ObjectHashAggregate boundary (Graft.cofactorNumeric)
-      if (catsEmpty) Graft.cofactorNumeric(joined, leftNum ++ rightNum)
-      else Graft.cofactor(joined, leftNum ++ rightNum, leftCat ++ rightCat)
+      Graft.cofactor(joined, leftNum ++ rightNum, leftCat ++ rightCat)
     }
   }
 
@@ -164,9 +139,10 @@ object Factorized {
    * more than the fact-side sort they avoid), which is why
    * [[cofactorOverJoinAdaptive]] routes only the factorized regime
    * here, never the low-multiplicity fallback.
-   * Null semantics match [[graft.Graft.cofactorNumeric]] over the
-   * materialized join: a joined row is dropped iff any numeric column
-   * on either side is NULL, which decomposes into per-side filters.
+   * Null semantics match [[graft.Graft.cofactor]] (no categorical
+   * columns) over the materialized join: a joined row is dropped iff
+   * any numeric column on either side is NULL, which decomposes into
+   * per-side filters.
    */
   def cofactorOverJoinNumeric(left: DataFrame, right: DataFrame, key: String,
                               leftNum: Seq[String], rightNum: Seq[String]): Triple = {
@@ -874,9 +850,9 @@ object Factorized {
    * ONLY the aggregated dims' keys — inner joins commute, so the
    * triple is identical in every routing (the block order is permuted
    * back to the declared layout when the split reorders dims). With no
-   * multiplicative dim at all the materialized star join with the
-   * fused (codegen'd-numeric when possible) cofactor is strictly
-   * cheaper. `minRowsPerKey = 0` pins every dim aggregated (the fully
+   * multiplicative dim at all the materialized star join with one
+   * [[graft.Graft.cofactor]] fold over it is strictly cheaper.
+   * `minRowsPerKey = 0` pins every dim aggregated (the fully
    * factorized chain, probe-free); `Double.MaxValue` pins the
    * materialized fallback.
    */
@@ -886,9 +862,7 @@ object Factorized {
     Graft.register(spark)
     val numAll = factNum ++ dims.flatMap(_.num)
     val catAll = factCat ++ dims.flatMap(_.cat)
-    if (dims.isEmpty)
-      return if (catAll.isEmpty) Graft.cofactorNumeric(fact, numAll)
-             else Graft.cofactor(fact, numAll, catAll)
+    if (dims.isEmpty) return Graft.cofactor(fact, numAll, catAll)
     // validate BEFORE the 1-dim delegation: a duplicate feature name
     // would otherwise only crash on the probe-chosen fallback route
     // (ambiguous column over the joined frame) — data-dependent failure
@@ -928,24 +902,7 @@ object Factorized {
       val fact2 = rowDims.foldLeft(fact)((acc, d) => hashJoinIfSafe(acc, d.df, Seq(d.key)))
       val fNum = factNum ++ rowDims.flatMap(_.num)
       val fCat = factCat ++ rowDims.flatMap(_.cat)
-      val groupKeys = aggDims.map(_.key)
-      val factCols = fNum.map(c => col(c).cast("double")) ++
-        fCat.map(c => col(c).cast("int"))
-      var cur = fact2.groupBy(groupKeys.map(col): _*)
-        .agg(Graft.sumTriple(factCols: _*).as("__T"))
-      for (d <- aggDims) {
-        val dimCols = d.num.map(c => col(c).cast("double")) ++
-          d.cat.map(c => col(c).cast("int"))
-        val dagg = d.df.groupBy(col(d.key)).agg(Graft.sumTriple(dimCols: _*).as("__D"))
-        // (dagg is unique-keyed, but `cur` — grouped by ALL agg-dim keys —
-        // is not unique on d.key alone and may be chosen as the build
-        // side, so the buildKeysUnique shortcut does not apply here)
-        cur = hashJoinIfSafe(cur, dagg, Seq(d.key))
-          .withColumn("__T", Graft.multiplyTriple(col("__T"), col("__D")))
-          .drop("__D")
-      }
-      val t = Graft.sumTriples(cur, col("__T"))
-        .getOrElse(Triple.zero(numAll.length, catAll.length))
+      val t = aggregatedChain(fact2, fNum, fCat, aggDims)
       // the fold changed the block order to [factNum ++ rowDimNums ++
       // aggDimNums, …] — permute back to the declared [factNum ++
       // dims-in-order] layout when the routing split reordered dims
@@ -960,11 +917,38 @@ object Factorized {
     } else {
       // every side near-unique: materialize the star row-level (each
       // join size-guarded; dims under the broadcast threshold broadcast)
-      // and fuse one cofactor over it — codegen'd SUMs when no cats
-      val joined = dims.foldLeft(fact)((acc, d) => hashJoinIfSafe(acc, d.df, Seq(d.key)))
-      if (catAll.isEmpty) Graft.cofactorNumeric(joined, numAll)
-      else Graft.cofactor(joined, numAll, catAll)
+      // and fold one cofactor over it
+      Graft.cofactor(dims.foldLeft(fact)((acc, d) => hashJoinIfSafe(acc, d.df, Seq(d.key))),
+        numAll, catAll)
     }
+  }
+
+  /** The factorized chain over aggregated dims: the fact collapses to one
+    * triple per combination of the dims' keys, each dim to one triple per
+    * key, and the joins chain over those pre-aggregates, ring-multiplying
+    * as they go; one fold ([[Graft.sumTriples]]) adds the products.
+    * Layout `[factNum ++ dims' num…, factCat ++ dims' cat…]`; the zero
+    * triple of that arity when the join is empty. With ONE dim both join
+    * sides are unique per key, so [[hashJoinIfSafe]] skips its hot-key
+    * probe (`buildKeysUnique`); with more, the fact side is grouped by
+    * every dim key, is not unique on any one of them, and may be chosen
+    * as the build side. Feature names are not checked across sides:
+    * only the key and triple columns reach the joins. */
+  private def aggregatedChain(fact: DataFrame, factNum: Seq[String], factCat: Seq[String],
+                              dims: Seq[StarDim]): Triple = {
+    Graft.register(fact.sparkSession)
+    def lifted(num: Seq[String], cat: Seq[String]) =
+      Graft.sumTriple(num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int")): _*)
+    var cur = fact.groupBy(dims.map(d => col(d.key)): _*)
+      .agg(lifted(factNum, factCat).as("__T"))
+    for (d <- dims) {
+      val dagg = d.df.groupBy(col(d.key)).agg(lifted(d.num, d.cat).as("__D"))
+      cur = hashJoinIfSafe(cur, dagg, Seq(d.key), buildKeysUnique = dims.length == 1)
+        .withColumn("__T", Graft.multiplyTriple(col("__T"), col("__D")))
+        .drop("__D")
+    }
+    Graft.sumTriples(cur, col("__T")).getOrElse(Triple.zero(
+      factNum.length + dims.map(_.num.length).sum, factCat.length + dims.map(_.cat.length).sum))
   }
 
   /** Memoized (rows, rows-per-key) probe shared by the adaptive

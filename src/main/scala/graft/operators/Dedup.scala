@@ -176,49 +176,7 @@ object Dedup {
       .filter(col("__bucket").isNotNull)
       .repartition(col("__band"), col("__bucket"))
       .sortWithinPartitions(col("__band"), col("__bucket"), col("__id"))
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[org.apache.spark.sql.Row] {
-          private var out: java.util.Iterator[org.apache.spark.sql.Row] =
-            java.util.Collections.emptyIterator()
-          private def refill(): Unit = {
-            while (!out.hasNext && buf.hasNext) {
-              val band = buf.head.getInt(1); val bucket = buf.head.getLong(2)
-              // non-NULL ids in sort order, capped; n counts EVERY row
-              val ids = new scala.collection.mutable.ArrayBuffer[Any](4)
-              var n = 0
-              while (buf.hasNext &&
-                  buf.head.getInt(1) == band && buf.head.getLong(2) == bucket) {
-                val r = buf.next(); n += 1
-                if (n <= cap && !r.isNullAt(0)) ids += r.get(0)
-              }
-              if (n > cap) {
-                // one NULL marker row per dropped bucket — the observe()
-                // metric counts these; the consumer filters them out
-                out = java.util.Collections.singletonList(
-                  org.apache.spark.sql.Row(null, null)).iterator()
-              } else if (n >= 2 && ids.length >= 2) {
-                val acc = new java.util.ArrayList[org.apache.spark.sql.Row](
-                  ids.length * (ids.length - 1) / 2)
-                var i = 0
-                while (i < ids.length) {
-                  var j = i + 1
-                  while (j < ids.length) {
-                    // equal ids (duplicate-id inputs) never satisfied the
-                    // old strict idA < idB — skip them here likewise
-                    if (ids(i) != ids(j)) acc.add(org.apache.spark.sql.Row(ids(i), ids(j)))
-                    j += 1
-                  }
-                  i += 1
-                }
-                out = acc.iterator()
-              }
-            }
-          }
-          override def hasNext: Boolean = { refill(); out.hasNext }
-          override def next(): org.apache.spark.sql.Row = { refill(); out.next() }
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
+      .mapPartitions(bucketPairs(_, cap))(org.apache.spark.sql.Encoders.row(outSchema))
     val pairs = emitted
       .observe(DroppedMetricPrefix + metricSeq.incrementAndGet(),
         count(when(col("idA").isNull, true)).as("dropped"),
@@ -226,6 +184,34 @@ object Dedup {
       .filter(col("idA").isNotNull)
       .distinct()
     (pairs, () => ())
+  }
+
+  /** The per-partition walk of [[lshCandidatePairsReleasable]] over
+    * (id, band, bucket) rows sorted by (band, bucket, id): per bucket,
+    * the non-NULL ids among its first `cap` rows, then either one
+    * `(NULL, NULL)` marker row when the bucket holds more than `cap`
+    * rows (NULL ids included), or every (idA, idB) pair in sort order,
+    * equal ids skipped — the old strict `idA < idB` never paired them.
+    * Pairs stream from an (i, j) cursor, so a bucket costs O(cap)
+    * memory however many pairs it emits. */
+  private[graft] def bucketPairs(rows: Iterator[org.apache.spark.sql.Row],
+                                 cap: Int): Iterator[org.apache.spark.sql.Row] = {
+    val buf = rows.buffered
+    Iterator.continually(()).takeWhile(_ => buf.hasNext).flatMap { _ =>
+      val band = buf.head.getInt(1); val bucket = buf.head.getLong(2)
+      val ids = new scala.collection.mutable.ArrayBuffer[Any](4)
+      var n = 0
+      while (buf.hasNext && buf.head.getInt(1) == band && buf.head.getLong(2) == bucket) {
+        val r = buf.next(); n += 1
+        if (n <= cap && !r.isNullAt(0)) ids += r.get(0)
+      }
+      if (n > cap) Iterator.single(org.apache.spark.sql.Row(null, null))
+      else Iterator.range(0, ids.length).flatMap { i =>
+        Iterator.range(i + 1, ids.length).collect {
+          case j if ids(i) != ids(j) => org.apache.spark.sql.Row(ids(i), ids(j))
+        }
+      }
+    }
   }
 
   /**
@@ -529,9 +515,10 @@ object Dedup {
     * < hotLineThreshold rows. Digest collisions only route extra light
     * lines through the hot path, where they are counted exactly — the
     * output is byte-identical either way (DedupLinesSpec pins it). The
-    * guard costs one extra skinny scan+split of the corpus, so it is
-    * OFF by default: a benign corpus (no dominant boilerplate line)
-    * pays ~25% for nothing, while a skewed one should set the threshold
+    * guard scans and splits the corpus four times instead of once — the
+    * digest pre-pass, then the light stratum, the hot rows and the hot
+    * totals each explode it again — so it is OFF by default: a benign
+    * corpus (no dominant boilerplate line) pays ~25% for nothing, while a skewed one should set the threshold
     * to the row count a single window task can sort comfortably (e.g.
     * 10⁶ at 100 TB).
     *

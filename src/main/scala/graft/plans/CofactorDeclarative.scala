@@ -23,9 +23,9 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType
  * query: two per-key grouped cofactors joined and ring-multiplied,
  * README.md:163-173) that machinery is pure overhead — a cofactor
  * triple over k NUMERIC columns is just `count(*)`, k linear SUMs and
- * k(k+1)/2 product SUMs assembled into the triple struct, exactly
- * [[graft.Graft.cofactorNumeric]]'s identity, which whole-stage codegen
- * executes as a `HashAggregate` over flat UnsafeRows end to end.
+ * k(k+1)/2 product SUMs assembled into the triple struct, which
+ * whole-stage codegen executes as a `HashAggregate` over flat
+ * UnsafeRows end to end.
  *
  * This rule rewrites `Alias(sum_to_triple(x₁…x_k), name)` inside an
  * [[Aggregate]] that sits UNDER a [[Join]] into

@@ -100,19 +100,17 @@ object FactorizeCofactorRule extends Rule[LogicalPlan] {
    * than the join it avoids), and at 100× scale a grouped
    * ObjectHashAggregate over a near-unique key is the bottleneck. When
    * column-level stats know the key's distinct count, decline the
-   * rewrite above `spark.graft.factorize.maxKeyFraction` (default 0.25 ≈
-   * require ≥4 rows/key); without stats stay optimistic (the rewrite is
-   * semantics-preserving either way).
+   * rewrite above 0.25 distinct keys per row (require ≥4 rows/key);
+   * without stats stay optimistic (the rewrite is semantics-preserving
+   * either way).
    */
   private def keysTooFine(side: LogicalPlan, keys: Seq[Attribute]): Boolean = {
-    val maxFraction =
-      conf.getConfString("spark.graft.factorize.maxKeyFraction", "0.25").toDouble
     val st = side.stats
     (for {
       rows <- st.rowCount if rows > 0
       distinct <- keys.flatMap(k => st.attributeStats.get(k).flatMap(_.distinctCount))
         .reduceOption(_ max _)
-    } yield distinct.toDouble > rows.toDouble * maxFraction).getOrElse(false)
+    } yield distinct.toDouble > rows.toDouble * 0.25).getOrElse(false)
   }
 
   private def rewrite(agg: Aggregate, alias: Alias, ae: AggregateExpression,

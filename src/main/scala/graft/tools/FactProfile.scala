@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Named decomposition of the factorized_adaptive fallback's wall-clock
   * (the minhash-profile discipline: name the parts, then cut the
   * biggest): the adaptive operator on the fact ⋈ unique-dim shape runs
-  * probe → SHJ row join → fused codegen'd SUMs; this probe isolates
+  * probe → SHJ row join → one cofactor fold; this probe isolates
   *   scan floor (sum over each side alone),
   *   exchange cost (repartition by key, no join),
   *   join cost (SHJ with a count, no moment SUMs),
@@ -76,7 +76,7 @@ object FactProfile {
       ()
     }
     time("full_fallback_smj") {
-      graft.Graft.cofactorNumeric(fact.join(dim, "k"), Seq("l_quantity", "o_totalprice"))
+      graft.Graft.cofactor(fact.join(dim, "k"), Seq("l_quantity", "o_totalprice"), Nil)
       ()
     }
     spark.stop()

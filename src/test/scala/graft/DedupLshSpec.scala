@@ -88,4 +88,14 @@ class DedupLshSpec extends AnyFunSuite {
       atCap, col("doc_id"), col("__bands"), maxBucketSize = 4)
     assert(p4.count() == 0, "size-5 bucket must vanish at cap=4")
   }
+
+  test("a bucket past 46,341 ids streams its first pairs") {
+    // 46,342 ids make 46,342·46,341/2 pairs, more than Int.MaxValue: the
+    // walk must stream them, not size a buffer by the pair count
+    val n = 46342
+    val rows = Iterator.tabulate(n)(i => org.apache.spark.sql.Row(i.toLong, 0, 7L))
+    val first = Dedup.bucketPairs(rows, cap = n).take(3).toList
+    assert(first == List((0L, 1L), (0L, 2L), (0L, 3L)).map { case (a, b) =>
+      org.apache.spark.sql.Row(a, b) })
+  }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `cofactorMasked` and `cofactorPerClass` over a plan the columnar
   * kernel cannot harvest (a checkpointed frame) each run ONE Spark job
   * and match the `sum_to_triple` aggregate; plus `hashJoinIfSafe`'s
-  * broadcast rule. */
+  * broadcast rule and the factorized join and star routes that end in
+  * one of these calls. */
 class GraftSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -146,5 +147,48 @@ class GraftSpec extends AnyFunSuite {
       assert(!Factorized.hasShuffleExchange(plan), s"a broadcast join must not shuffle:\n$plan")
       assert(joined.count() == fact.join(dim, "k").count())
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("numeric-only star over unique dims: as many jobs as one cofactorMasked slot, equal to the aggregate") {
+    // every dim is unique per key, so minRowsPerKey = Double.MaxValue
+    // materializes the star and one fold over the joined frame computes
+    // the triple; fact keys 20–22 have no dim1 row, and some y are NULL
+    val fact = Seq.tabulate(400)(i =>
+      (i % 23, i % 11, if (i % 37 == 0) None else Some(i * 0.25), math.sin(i.toDouble)))
+      .toDF("k1", "k2", "y", "a")
+    val dim1 = Seq.tabulate(20)(k => (k, k * 1.5 - 3)).toDF("k1", "d1")
+    val dim2 = Seq.tabulate(11)(k => (k, math.sqrt(k + 1.0))).toDF("k2", "d2")
+    val feats = Seq("y", "a", "d1", "d2")
+    def star(d1: DataFrame): Triple = Factorized.cofactorOverStar(fact, Seq("y", "a"), Nil,
+      Seq(Factorized.StarDim(d1, "k1", Seq("d1")), Factorized.StarDim(dim2, "k2", Seq("d2"))),
+      minRowsPerKey = Double.MaxValue)
+    val joined = Factorized.hashJoinIfSafe(
+      Factorized.hashJoinIfSafe(fact, dim1, Seq("k1")), dim2, Seq("k2"))
+    var t: Triple = null
+    val (starJobs, _) = JobCounter(spark.sparkContext) { t = star(dim1) }
+    val (maskedJobs, _) = JobCounter(spark.sparkContext) {
+      Graft.cofactorMasked(joined, feats, Nil, Seq(None))
+    }
+    assert(starJobs == maskedJobs,
+      s"the star ran $starJobs jobs, one cofactorMasked slot over its join $maskedJobs")
+    val ref = fact.join(dim1, "k1").join(dim2, "k2")
+      .agg(Graft.sumTriple(feats.map(c => col(c).cast("double")): _*)).head().getStruct(0)
+    assertClose(t, Graft.tripleFromRow(ref), "numeric-only star")
+    assert(t.n > 0 && t.n < 400, s"n=${t.n}: orphans and NULL rows must drop")
+
+    val empty = star(dim1.select(($"k1" + 1000).as("k1"), $"d1"))
+    assert(empty.n == 0 && empty.numCols == 4 && empty.catCols == 0, s"disjoint keys: $empty")
+  }
+
+  test("cofactorOverJoin: a feature name on both sides; disjoint keys give the zero triple") {
+    val left = Seq.tabulate(300)(i => (i % 17, i * 0.5, i % 3)).toDF("k", "x", "c")
+    val right = Seq.tabulate(60)(i => (i % 13, i * 0.1 - 2, i % 2)).toDF("k", "x", "c")
+    val t = Factorized.cofactorOverJoin(left, right, "k", Seq("x"), Seq("c"), Seq("x"), Seq("c"))
+    val want = Graft.cofactor(left.join(right.select($"k", $"x".as("x2"), $"c".as("c2")), "k"),
+      Seq("x", "x2"), Seq("c", "c2"))
+    assertClose(t, want, "cofactorOverJoin")
+    val empty = Factorized.cofactorOverJoin(left, right.filter($"k" > 100), "k",
+      Seq("x"), Seq("c"), Seq("x"), Seq("c"))
+    assert(empty.n == 0 && empty.numCols == 2 && empty.catCols == 2, s"disjoint keys: $empty")
   }
 }

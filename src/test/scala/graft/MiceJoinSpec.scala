@@ -313,7 +313,7 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
     // an extra iteration costs one masked triple per imputed column
     // (one job each) plus the iteration's checkpoint. Measured on
-    // local[4]: 12, 17, 22 jobs (46, 66, 86 tasks) — 5 jobs and 20
+    // local[4]: 11, 16, 21 jobs (45, 65, 85 tasks) — 5 jobs and 20
     // tasks per iteration
     val imputed = 4
     assert(iter2._1 == imputed + 1,

@@ -292,31 +292,19 @@ class MlSpec extends AnyFunSuite {
       Seq(StarDim(dim1.filter($"k1" < 0), "k1", Seq("d1p"), Seq("d1c")),
           StarDim(dim2, "k2", Seq("d2p"))), minRowsPerKey = 0.0)
     assert(tEmpty.n == 0 && tEmpty.numCols == 4 && tEmpty.catCols == 2)
-    // numeric-only star fallback routes through codegen'd cofactorNumeric
+    // numeric-only star fallback folds one Graft.cofactor over the materialized star
     val tNum = graft.ml.Factorized.cofactorOverStar(
       fact, Seq("y", "a"), Seq(),
       Seq(StarDim(dim1.drop("d1c"), "k1", Seq("d1p")), StarDim(dim2, "k2", Seq("d2p"))),
       minRowsPerKey = Double.MaxValue)
-    val tNumMat = Graft.cofactorNumeric(fact.join(dim1, "k1").join(dim2, "k2"),
-      Seq("y", "a", "d1p", "d2p"))
+    val tNumMat = Graft.cofactor(fact.join(dim1, "k1").join(dim2, "k2"),
+      Seq("y", "a", "d1p", "d2p"), Nil)
     assert(tNum.approxEquals(tNumMat, 1e-9))
   }
 
-  test("cofactorNumeric: plain-SUM path == fused aggregate, incl. null-row semantics") {
-    // rows with nulls in EITHER column must be skipped whole (the fused
-    // aggregate's any-null rule), not column-wise
-    val df = Seq[(java.lang.Double, java.lang.Double)](
-      (1.5, 2.0), (null, 3.0), (2.5, null), (4.0, -1.0), (0.0, 0.0)
-    ).toDF("x", "y")
-    val fused = Graft.cofactor(df, Seq("x", "y"), Seq())
-    val plain = Graft.cofactorNumeric(df, Seq("x", "y"))
-    assert(plain.n == 3 && fused.approxEquals(plain, 1e-12),
-      s"numeric declarative path diverged: $plain vs $fused")
-    // empty input → zero triple, not nulls
-    val empty = Graft.cofactorNumeric(df.filter($"x" > 100), Seq("x", "y"))
-    assert(empty == graft.ring.Triple.zero(2, 0))
-    // the numeric-only ADAPTIVE fallback takes this path and must agree
-    // with the factorized branch
+  test("numeric-only adaptive join fallback == factorized branch") {
+    // the numeric-only ADAPTIVE fallback folds Graft.cofactor over the
+    // materialized join and must agree with the factorized branch
     val dim = Seq.tabulate(20)(k => (k, k * 0.5 + 1.0)).toDF("k", "dprice")
     val fact = rows.zipWithIndex.map { case ((y, a, _, _), i) => (i % 20, y, a) }
       .toDF("k", "y", "a")
@@ -344,8 +332,8 @@ class MlSpec extends AnyFunSuite {
       val joined = graft.ml.Factorized.hashJoinIfSafe(fact, hotDim, Seq("k"))
       val plan = joined.queryExecution.optimizedPlan.toString
       assert(plan.contains("__salt"), s"hot key must take the salted tier:\n$plan")
-      val viaSalted = Graft.cofactorNumeric(joined, Seq("y", "a", "dprice"))
-      val plain = Graft.cofactorNumeric(fact.join(hotDim, "k"), Seq("y", "a", "dprice"))
+      val viaSalted = Graft.cofactor(joined, Seq("y", "a", "dprice"), Nil)
+      val plain = Graft.cofactor(fact.join(hotDim, "k"), Seq("y", "a", "dprice"), Nil)
       assert(viaSalted.approxEquals(plain, 1e-9),
         s"salted join changed the cofactor: $viaSalted vs $plain")
       assert(viaSalted.n == plain.n && viaSalted.n > 10000, s"n=${viaSalted.n}")
@@ -355,8 +343,8 @@ class MlSpec extends AnyFunSuite {
       val juni = graft.ml.Factorized.hashJoinIfSafe(fact, uniDim, Seq("k"))
       val puni = juni.queryExecution.optimizedPlan.toString
       assert(!puni.contains("__salt"), s"uniform keys must not salt:\n$puni")
-      val viaUni = Graft.cofactorNumeric(juni, Seq("y", "a", "dprice"))
-      val plainUni = Graft.cofactorNumeric(fact.join(uniDim, "k"), Seq("y", "a", "dprice"))
+      val viaUni = Graft.cofactor(juni, Seq("y", "a", "dprice"), Nil)
+      val plainUni = Graft.cofactor(fact.join(uniDim, "k"), Seq("y", "a", "dprice"), Nil)
       assert(viaUni.approxEquals(plainUni, 1e-9))
     } finally {
       spark.conf.unset("spark.graft.shj.maxBuildPartitionBytes")
@@ -384,8 +372,8 @@ class MlSpec extends AnyFunSuite {
         Seq.tabulate(500)(i => (i + 1, i * 0.1))).toDF("count", "dprice")
       val cFact = Seq.tabulate(3000)(i => (i % 501, i * 1.0)).toDF("count", "y")
       val cJoined = graft.ml.Factorized.hashJoinIfSafe(cFact, cDim, Seq("count"))
-      val t = Graft.cofactorNumeric(cJoined, Seq("y", "dprice"))
-      val ref = Graft.cofactorNumeric(cFact.join(cDim, "count"), Seq("y", "dprice"))
+      val t = Graft.cofactor(cJoined, Seq("y", "dprice"), Nil)
+      val ref = Graft.cofactor(cFact.join(cDim, "count"), Seq("y", "dprice"), Nil)
       assert(t.approxEquals(ref, 1e-9))
     } finally spark.conf.unset("spark.graft.shj.maxBuildPartitionBytes")
   }
@@ -396,7 +384,7 @@ class MlSpec extends AnyFunSuite {
     val fact = Seq.tabulate(1000)(i => (i % 200, i * 1.0)).toDF("k", "y")
     val t = graft.ml.Factorized.cofactorOverJoinAdaptive(
       fact, dim, "k", Seq("y"), Seq(), Seq("d"), Seq(), minRowsPerKey = Double.MaxValue)
-    val ref = Graft.cofactorNumeric(fact.join(dim, "k"), Seq("y", "d"))
+    val ref = Graft.cofactor(fact.join(dim, "k"), Seq("y", "d"), Nil)
     assert(t.approxEquals(ref, 1e-9))
     assert(graft.ml.Factorized.probeCacheSize == 0,
       "the MaxValue pin must not run probe scans")
@@ -434,10 +422,10 @@ class MlSpec extends AnyFunSuite {
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("ShuffledHashJoin"), s"expected SHJ:\n$plan")
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-      val viaBucketed = Graft.cofactorNumeric(j, Seq("l_quantity", "o_totalprice"))
-      val plain = Graft.cofactorNumeric(
+      val viaBucketed = Graft.cofactor(j, Seq("l_quantity", "o_totalprice"), Nil)
+      val plain = Graft.cofactor(
         liRaw.join(ordRaw, $"l_orderkey" === $"o_orderkey"),
-        Seq("l_quantity", "o_totalprice"))
+        Seq("l_quantity", "o_totalprice"), Nil)
       assert(viaBucketed.approxEquals(plain, 1e-9) && viaBucketed.n > 1000,
         s"bucketed tier changed the cofactor: $viaBucketed vs $plain")
 
@@ -450,7 +438,7 @@ class MlSpec extends AnyFunSuite {
       val planHalf = jHalf.queryExecution.executedPlan.toString
       assert(planHalf.contains("Exchange"),
         s"half-bucketed join cannot be co-located:\n$planHalf")
-      assert(Graft.cofactorNumeric(jHalf, Seq("l_quantity", "o_totalprice"))
+      assert(Graft.cofactor(jHalf, Seq("l_quantity", "o_totalprice"), Nil)
         .approxEquals(plain, 1e-9))
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
@@ -481,16 +469,16 @@ class MlSpec extends AnyFunSuite {
         spark.table("mm_li_bkt").select($"l_orderkey".as("k"), $"l_quantity"),
         spark.table("mm_ord_bkt").select($"o_orderkey".as("k"), $"o_totalprice"),
         Seq("k"), leftRows = Some(liRaw.count()), rightRows = Some(ordRaw.count()))
-      val plain = Graft.cofactorNumeric(
+      val plain = Graft.cofactor(
         liRaw.join(ordRaw, $"l_orderkey" === $"o_orderkey"),
-        Seq("l_quantity", "o_totalprice"))
+        Seq("l_quantity", "o_totalprice"), Nil)
 
       spark.conf.set(coalesceKey, "true")
       val jOn = join()
       val planOn = jOn.queryExecution.executedPlan.toString
       assert(!planOn.contains("Exchange"),
         s"coalesced mismatched buckets must not shuffle:\n$planOn")
-      assert(Graft.cofactorNumeric(jOn, Seq("l_quantity", "o_totalprice"))
+      assert(Graft.cofactor(jOn, Seq("l_quantity", "o_totalprice"), Nil)
         .approxEquals(plain, 1e-9))
 
       spark.conf.set(coalesceKey, "false")
@@ -498,7 +486,7 @@ class MlSpec extends AnyFunSuite {
       val planOff = jOff.queryExecution.executedPlan.toString
       assert(planOff.contains("Exchange"),
         s"without coalescing, mismatched buckets cannot co-locate:\n$planOff")
-      assert(Graft.cofactorNumeric(jOff, Seq("l_quantity", "o_totalprice"))
+      assert(Graft.cofactor(jOff, Seq("l_quantity", "o_totalprice"), Nil)
         .approxEquals(plain, 1e-9))
     } finally {
       spark.conf.unset(coalesceKey)
@@ -590,10 +578,10 @@ class MlSpec extends AnyFunSuite {
         leftRows = Some(liRaw.count()), rightRows = Some(ordRaw.count()))
       val plan = j.queryExecution.executedPlan.toString
       assert(plan.contains("Exchange"), s"mis-bucketed join cannot be co-located:\n$plan")
-      val viaTier = Graft.cofactorNumeric(j, Seq("l_quantity", "o_totalprice"))
-      val plain = Graft.cofactorNumeric(
+      val viaTier = Graft.cofactor(j, Seq("l_quantity", "o_totalprice"), Nil)
+      val plain = Graft.cofactor(
         liRaw.join(ordRaw, $"l_orderkey" === $"o_orderkey"),
-        Seq("l_quantity", "o_totalprice"))
+        Seq("l_quantity", "o_totalprice"), Nil)
       assert(viaTier.approxEquals(plain, 1e-9),
         s"mis-bucketed fall-through changed the cofactor: $viaTier vs $plain")
     } finally {
@@ -621,8 +609,8 @@ class MlSpec extends AnyFunSuite {
         spark.table("mls_fact_bkt"), spark.table("mls_hot_bkt"), Seq("k"))
       val plan = j.queryExecution.optimizedPlan.toString
       assert(plan.contains("__salt"), s"hot bucketed key must still salt:\n$plan")
-      val viaSalted = Graft.cofactorNumeric(j, Seq("y", "a", "dprice"))
-      val plain = Graft.cofactorNumeric(fact.join(hotDim, "k"), Seq("y", "a", "dprice"))
+      val viaSalted = Graft.cofactor(j, Seq("y", "a", "dprice"), Nil)
+      val plain = Graft.cofactor(fact.join(hotDim, "k"), Seq("y", "a", "dprice"), Nil)
       assert(viaSalted.approxEquals(plain, 1e-9),
         s"salted-over-bucketed changed the cofactor: $viaSalted vs $plain")
     } finally {
@@ -670,7 +658,7 @@ class MlSpec extends AnyFunSuite {
       fact, dim, "k", Seq("y", "a"), Seq(), Seq("dprice"), Seq())
     assert(viaNumeric.approxEquals(viaObject, 1e-9),
       s"moments decomposition diverged from the ring product: $viaNumeric vs $viaObject")
-    val plain = Graft.cofactorNumeric(fact.join(dim, "k"), Seq("y", "a", "dprice"))
+    val plain = Graft.cofactor(fact.join(dim, "k"), Seq("y", "a", "dprice"), Nil)
     assert(viaNumeric.approxEquals(plain, 1e-9))
     // null semantics: a joined row drops iff any numeric column on either
     // side is null — per-side nulls must match the materialized filter
@@ -678,7 +666,7 @@ class MlSpec extends AnyFunSuite {
     val dimN = dim.withColumn("dprice", when($"k" === 7, lit(null)).otherwise($"dprice"))
     val nNumeric = graft.ml.Factorized.cofactorOverJoinNumeric(
       factN, dimN, "k", Seq("y", "a"), Seq("dprice"))
-    val nPlain = Graft.cofactorNumeric(factN.join(dimN, "k"), Seq("y", "a", "dprice"))
+    val nPlain = Graft.cofactor(factN.join(dimN, "k"), Seq("y", "a", "dprice"), Nil)
     assert(nNumeric.approxEquals(nPlain, 1e-9))
     assert(nNumeric.n < viaNumeric.n, "null injection must have dropped rows")
     // empty join → zero triple of the combined arity
