@@ -251,56 +251,89 @@ object Graft {
     * each partition's rows with `fold`. The partials come back in
     * partition-index order, not task-completion order: a caller that
     * merges them in array order gets a deterministic result. */
-  private def foldPartitions[T: scala.reflect.ClassTag](df: DataFrame)(
-      fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): Array[T] = {
+  private[graft] def foldPartitions[T: scala.reflect.ClassTag](df: DataFrame)(
+      fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): Array[T] =
+    underExecution(df, "cofactor")(rows => df.sparkSession.sparkContext.runJob(rows, fold))
+
+  /** `body` over `df.queryExecution.toRdd`, under a new SQL execution id
+    * named `name`: the jobs `body` runs, and the broadcasts `toRdd`
+    * runs first, reach query listeners as one query, and each broadcast
+    * runs once however many RDDs `body` derives from the rows. */
+  private def underExecution[T](df: DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
     val qe = df.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("cofactor")) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd, fold)
-    }
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
   }
+
+  /** The [[CofactorAggregate]] of the row folds: fields `0 until num`
+    * of each row are doubles, the next `cat` fields ints, under the
+    * session's `maxCategories` guard. */
+  private[graft] def rowAggregate(spark: SparkSession, num: Int, cat: Int,
+                                  nb: Boolean): CofactorAggregate = {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.{DoubleType, IntegerType}
+    CofactorAggregate(
+      (0 until num).map(i => BoundReference(i, DoubleType, nullable = true)) ++
+        (0 until cat).map(j => BoundReference(num + j, IntegerType, nullable = true)),
+      nbMode = nb,
+      maxCategories = org.apache.spark.sql.internal.SQLConf.withExistingConf(
+        spark.sessionState.conf)(CofactorAggregate.confMaxCategories()))
+  }
+
+  /** One partition's slot buffers: slot `s` folds the rows whose field
+    * `agg.children.size + s` is TRUE — a NULL predicate drops the row,
+    * as `filter` would. Returns the serialized buffers in slot order. */
+  private[graft] def foldSlots(agg: CofactorAggregate, slots: Int,
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Array[Array[Byte]] = {
+    val k = agg.children.size
+    val bufs = Array.fill(slots)(agg.createAggregationBuffer())
+    rows.foreach { r =>
+      var s = 0
+      while (s < slots) {
+        if (!r.isNullAt(k + s) && r.getBoolean(k + s)) agg.update(bufs(s), r)
+        s += 1
+      }
+    }
+    bufs.map(agg.serialize)
+  }
+
+  /** The driver side of [[foldSlots]]: each slot's partials merged in
+    * array (partition-index) order. */
+  private[graft] def mergeSlots(agg: CofactorAggregate, slots: Int,
+                                partials: Seq[Array[Array[Byte]]]): Seq[Triple] =
+    (0 until slots).map { s =>
+      val b = agg.createAggregationBuffer()
+      partials.foreach(p => b.merge(agg.deserialize(p(s))))
+      b.toTriple
+    }
 
   /** The eager row route of [[cofactor]], [[cofactorMasked]] and
     * [[cofactorPerClass]]: ONE Spark job ([[foldPartitions]]) over the
     * cast inputs, each partition folding its rows with
     * [[CofactorAggregate]]`.update` — the null-skip, casts and
     * `maxCategories` guard of `sum_to_triple` — into one buffer per
-    * filter slot, or with a `label` into one buffer per non-NULL label
-    * value. The driver merges the serialized partials in partition-index
-    * order, so two calls return bit-identical triples. Returns
-    * (slot index or label, triple) pairs sorted by key; without a
-    * label every slot is present. */
+    * filter slot ([[foldSlots]]), or with a `label` into one buffer per
+    * non-NULL label value. The driver merges the serialized partials in
+    * partition-index order, so two calls return bit-identical triples.
+    * Returns (slot index or label, triple) pairs sorted by key; without
+    * a label every slot is present. */
   private def liftTriples(df: DataFrame, num: Seq[String], cat: Seq[String], nb: Boolean,
       filters: Seq[Option[Column]] = Seq(None),
       label: Option[String] = None): Seq[(Int, Triple)] = {
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.{DoubleType, IntegerType}
     // projected row: [num…, cat…, one predicate per slot, label]
     val k = num.size + cat.size
     val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int")) ++
       filters.map(_.getOrElse(lit(true))) ++ label.map(l => col(l).cast("int"))
     val proj = df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"__g$i") }: _*)
-    val agg = CofactorAggregate(
-      num.indices.map(i => BoundReference(i, DoubleType, nullable = true)) ++
-        cat.indices.map(j => BoundReference(num.size + j, IntegerType, nullable = true)),
-      nbMode = nb,
-      maxCategories = org.apache.spark.sql.internal.SQLConf.withExistingConf(
-        df.sparkSession.sessionState.conf)(CofactorAggregate.confMaxCategories()))
+    val agg = rowAggregate(df.sparkSession, num.size, cat.size, nb)
     val slots = filters.size
-    val labelOrd = if (label.isDefined) k + slots else -1
-    val partials = foldPartitions(proj) { rows =>
-      if (labelOrd < 0) {
-        val bufs = Array.fill(slots)(agg.createAggregationBuffer())
-        rows.foreach { r =>
-          var s = 0
-          while (s < slots) {
-            // a NULL predicate drops the row, as `filter` would
-            if (!r.isNullAt(k + s) && r.getBoolean(k + s)) agg.update(bufs(s), r)
-            s += 1
-          }
-        }
-        bufs.indices.map(s => s -> agg.serialize(bufs(s))).toArray
-      } else {
+    if (label.isEmpty)
+      mergeSlots(agg, slots, foldPartitions(proj)(rows => foldSlots(agg, slots, rows)).toSeq)
+        .zipWithIndex.map(_.swap)
+    else {
+      val labelOrd = k + slots
+      val partials = foldPartitions(proj) { rows =>
         val bufs = scala.collection.mutable.LongMap.empty[graft.agg.CofactorBuffer]
         rows.foreach { r =>
           if (!r.isNullAt(labelOrd))
@@ -308,12 +341,11 @@ object Graft {
         }
         bufs.iterator.map { case (l, b) => l.toInt -> agg.serialize(b) }.toArray
       }
+      val merged = scala.collection.mutable.TreeMap[Int, graft.agg.CofactorBuffer]()
+      for (part <- partials; (key, bytes) <- part)
+        merged.getOrElseUpdate(key, agg.createAggregationBuffer()).merge(agg.deserialize(bytes))
+      merged.iterator.map { case (key, b) => key -> b.toTriple }.toSeq
     }
-    val merged = scala.collection.mutable.TreeMap[Int, graft.agg.CofactorBuffer]()
-    if (label.isEmpty) filters.indices.foreach(s => merged(s) = agg.createAggregationBuffer())
-    for (part <- partials; (key, bytes) <- part)
-      merged.getOrElseUpdate(key, agg.createAggregationBuffer()).merge(agg.deserialize(bytes))
-    merged.iterator.map { case (key, b) => key -> b.toTriple }.toSeq
   }
 
   /** `sum_triple(t)` over every row of `df`, eagerly, in ONE Spark job
@@ -435,7 +467,20 @@ object Graft {
     * against is bounded by the same small size. Unknown stats (a
     * LogicalRDD leaf without origin stats reports the session default,
     * effectively ∞) err to SERIALIZED — the safe direction at scale. */
-  private[graft] def checkpoint(df: DataFrame): DataFrame = {
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    checkpointRows[Unit](df, _ => true)(None)._1
+
+  /** [[checkpoint]] of the rows of `df` that `keep` accepts, plus — when
+    * `fold` is given — `fold` over EVERY row of each partition, all in
+    * ONE job under one SQL execution id: the kept rows persist as the
+    * job's stored RDD and the folds zip beside it, both children of the
+    * one `toRdd` (a broadcast in `df`'s plan runs once; each partition
+    * is computed once per child). The folds come back in
+    * partition-index order; without a `fold` the job is the eager count
+    * (listeners attribute it like any action). */
+  private[graft] def checkpointRows[T: scala.reflect.ClassTag](df: DataFrame,
+      keep: org.apache.spark.sql.catalyst.InternalRow => Boolean)(
+      fold: Option[Iterator[org.apache.spark.sql.catalyst.InternalRow] => T]): (DataFrame, Array[T]) = {
     import org.apache.spark.storage.StorageLevel
     val lvl =
       if (df.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 30))
@@ -450,17 +495,29 @@ object Graft {
     // grouped aggregate on an already-clustered key paid a fresh
     // exchange. An iterative operator whose generation ends
     // hash-clustered (a groupBy, an explicit repartition(key)) now
-    // hands that clustering to the next iteration for free. Blocks are
+    // hands that clustering to the next iteration for free; a kept
+    // subset of a partition's rows keeps its clustering. Blocks are
     // plain-persisted, not lineage-truncated: on eviction a partition
     // recomputes from the frozen physical plan — deterministic, and
     // strictly safer than localCheckpoint's unrecoverable-block
     // failure mode.
-    // toRdd's UnsafeRows are reused per partition iterator — copy
-    // before storing, exactly as the public checkpoint path does
-    val internal = df.queryExecution.toRdd.map(_.copy())
-    internal.persist(lvl)
-    internal.count() // eager: materialize before the caller drops the previous generation
-    org.apache.spark.sql.graft.ColumnBridge.datasetOverRdd(df, internal)
+    val (stored, folds) = underExecution(df, "checkpoint") { rows =>
+      // toRdd's UnsafeRows are reused per partition iterator — copy
+      // before storing, exactly as the public checkpoint path does
+      val stored = rows.mapPartitions(_.filter(keep).map(_.copy())).persist(lvl)
+      // eager: materialize before the caller drops the previous generation
+      val folds = fold match {
+        case None => stored.count(); Array.empty[T]
+        case Some(f) =>
+          val zipped = stored.zipPartitions(rows.mapPartitions(it => Iterator(f(it)))) { (kept, part) =>
+            kept.foreach(_ => ())
+            part
+          }
+          df.sparkSession.sparkContext.runJob(zipped, (it: Iterator[T]) => it.next())
+      }
+      (stored, folds)
+    }
+    (org.apache.spark.sql.graft.ColumnBridge.datasetOverRdd(df, stored), folds)
   }
 
   /** Route the last [[cofactorGrouped]] call on this thread took

@@ -75,21 +75,83 @@ object Mice {
   private val noTimings = new Timings
 
   /** Mean/mode initialization + observation flags
-    * (init_baseline, partition.cpp:671-719). */
+    * (init_baseline, partition.cpp:671-719): [[fill]] over [[flagged]],
+    * with the means and modes from one job ([[initStats]]). */
   private[mice] def prepare(df: DataFrame, cfg: Config): DataFrame = {
-    val imputed = cfg.imputeCont ++ cfg.imputeCat
-    val aggs = cfg.imputeCont.map(c => avg(col(c)).as(s"mean_$c")) ++
-      cfg.imputeCat.map(c => mode(col(c)).as(s"mode_$c"))
-    val init = if (aggs.nonEmpty) df.agg(aggs.head, aggs.tail: _*).head() else null
+    val f = flagged(df, cfg)
+    fill(f, cfg, initStats(f, cfg))
+  }
+
+  /** `df` with the feature casts and one observation flag per imputed
+    * column, the imputed columns not yet filled. */
+  private[mice] def flagged(df: DataFrame, cfg: Config): DataFrame = {
     var out = df
     for (c <- cfg.contCols) out = out.withColumn(c, col(c).cast("double"))
     for (c <- cfg.catCols) out = out.withColumn(c, col(c).cast("int"))
-    for (c <- imputed) out = out.withColumn(flag(c), col(c).isNull)
-    for (c <- cfg.imputeCont)
-      out = out.withColumn(c, coalesce(col(c), lit(init.getAs[Double](s"mean_$c"))))
-    for (c <- cfg.imputeCat)
-      out = out.withColumn(c, coalesce(col(c), lit(init.getAs[Int](s"mode_$c"))))
+    for (c <- cfg.imputeCont ++ cfg.imputeCat) out = out.withColumn(flag(c), col(c).isNull)
     out
+  }
+
+  /** Each imputed column's missing cells filled with its mean (continuous)
+    * or mode (categorical) — a lazy projection. */
+  private[mice] def fill(df: DataFrame, cfg: Config, init: InitStats): DataFrame = {
+    var out = df
+    for ((c, m) <- cfg.imputeCont.zip(init.means)) out = out.withColumn(c, coalesce(col(c), lit(m)))
+    for ((c, m) <- cfg.imputeCat.zip(init.modes)) out = out.withColumn(c, coalesce(col(c), lit(m)))
+    out
+  }
+
+  /** [[InitStats]] over every row of a [[flagged]] frame in ONE job
+    * ([[Graft.foldPartitions]]); none without an imputed column. */
+  private[mice] def initStats(flaggedDf: DataFrame, cfg: Config): InitStats = {
+    val init = new InitStats(cfg.imputeCont.size, cfg.imputeCat.size)
+    if (cfg.imputeCont.nonEmpty || cfg.imputeCat.nonEmpty)
+      Graft.foldPartitions(flaggedDf.select((cfg.imputeCont ++ cfg.imputeCat).map(col): _*)) { rows =>
+        val s = new InitStats(cfg.imputeCont.size, cfg.imputeCat.size)
+        rows.foreach(s.add(_, 0))
+        s
+      }.foreach(init.merge)
+    init
+  }
+
+  /** The mean/mode init's inputs, folded row by row: the observed count
+    * and sum of each continuous column (fields `from until from + cont`,
+    * doubles) and the observed count per category of each categorical
+    * one (the next `cat` fields, ints). NULL cells are skipped, as
+    * `avg` and `mode` skip them. Partials merge in partition order. */
+  private[graft] final class InitStats(cont: Int, cat: Int) extends Serializable {
+    private val n = new Array[Long](cont)
+    private val sum = new Array[Double](cont)
+    private val counts = Array.fill(cat)(scala.collection.mutable.LongMap.empty[Long])
+
+    def add(r: org.apache.spark.sql.catalyst.InternalRow, from: Int): Unit = {
+      var i = 0
+      while (i < cont) {
+        if (!r.isNullAt(from + i)) { n(i) += 1; sum(i) += r.getDouble(from + i) }
+        i += 1
+      }
+      var j = 0
+      while (j < cat) {
+        if (!r.isNullAt(from + cont + j)) {
+          val v = r.getInt(from + cont + j).toLong
+          counts(j)(v) = counts(j).getOrElse(v, 0L) + 1
+        }
+        j += 1
+      }
+    }
+
+    def merge(o: InitStats): Unit = {
+      for (i <- 0 until cont) { n(i) += o.n(i); sum(i) += o.sum(i) }
+      for (j <- 0 until cat; (v, c) <- o.counts(j)) counts(j)(v) = counts(j).getOrElse(v, 0L) + c
+    }
+
+    /** Observed means; 0.0 for a column with no observed cell. */
+    def means: Seq[Double] = (0 until cont).map(i => if (n(i) == 0) 0.0 else sum(i) / n(i))
+
+    /** Most frequent categories, the LOWEST on a tie (partition-count
+      * independent); 0 for a column with no observed cell. */
+    def modes: Seq[Int] = counts.toSeq.map(m =>
+      if (m.isEmpty) 0 else m.toSeq.minBy { case (v, c) => (-c, v) }._1.toInt)
   }
 
   /** True when imputing `c` trains Naive Bayes (which needs per-class

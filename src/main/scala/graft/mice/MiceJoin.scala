@@ -3,7 +3,7 @@ package graft.mice
 import graft.Graft
 import graft.ml.{Factorized, LinReg}
 import graft.ring.Triple
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -183,15 +183,10 @@ object MiceJoin {
    * NULL-feature rows inside the incomplete stratum, and the fixed point
    * of the non-stochastic chain.
    *
-   * `minRowsPerKey` is [[Factorized.cofactorOverStar]]'s routing
-   * threshold for the STATIC triple — the one star aggregate over the
-   * fully-observed stratum (see [[imputeChainedOverStar]]): the adaptive
-   * default materializes the star for near-unique dims (where chaining
-   * per-~1-row triples would cost more than it saves); pin 0.0 for the
-   * always-factorized chain or `Double.MaxValue` for the always-fused
-   * fallback, exactly as on [[imputeContOverStar]]. The per-step
-   * training aggregates over the incomplete stratum read its
-   * already-joined rows and are not routed.
+   * The setup — mean/mode init, the complete stratum's training
+   * triple and the joined incomplete stratum — is one left join of the
+   * fact with every dim and one Spark job over it (see
+   * [[imputeChainedOverStar]]); no config key routes it.
    *
    * Returns `fact`'s columns with the imputed values in place.
    */
@@ -202,8 +197,7 @@ object MiceJoin {
       iterations: Int = 5,
       lambda: Double = 0.0, shrinkage: Double = 0.0,
       normalize: Boolean = true,
-      stochastic: Boolean = false, seed: Long = 42L,
-      minRowsPerKey: Double = 4.0)
+      stochastic: Boolean = false, seed: Long = 42L)
 
   def imputeChainedOverJoin(fact: DataFrame, dim: DataFrame, key: String,
                             cfg: ChainConfig,
@@ -223,30 +217,37 @@ object MiceJoin {
    * and catCols = factCat ++ dims.flatMap(cat) (`MiceJoinSpec` pins it).
    *
    * The loop is MICE-high (imputation_high.cpp:20-35) applied to the
-   * star, the same split [[Mice.partitioned]] makes on a flat table:
-   *  - the COMPLETE stratum (no imputed column missing) never changes,
-   *    so its star triple is computed ONCE by
-   *    [[Factorized.cofactorOverStar]] (adaptive/factorized routing by
-   *    `cfg.minRowsPerKey`, over the fact rows that are the bulk);
-   *  - the INCOMPLETE stratum is left-joined with every dim once (each
-   *    dim carries a match marker; unique dims cannot fan out) and
-   *    checkpointed. Column `c`'s training triple is
-   *    `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
-   *    masked triple (one Spark job) per step, no ring subtraction (no
-   *    float drift),
-   *    and the match mask keeps the inner-join training semantics;
-   *  - the update is a `withColumn` on the joined stratum, guarded so a
-   *    row with no dim match or a NULL dim feature keeps its value;
-   *  - each non-final iteration checkpoints the stratum once and drops
-   *    the previous one; the final iteration is returned lazily.
-   * A non-final iteration therefore runs one job per imputed column
-   * plus its checkpoint, independent of the iteration (`MiceJoinSpec`
-   * pins it).
+   * star, the same split [[Mice.partitioned]] makes on a flat table.
+   * Its setup is ONE query and ONE job:
+   *  - the query `J` left-joins the cast, flagged, not yet filled fact
+   *    with every dim through [[Factorized.hashJoinIfSafe]]'s size guard
+   *    (each dim carries a match marker; unique dims cannot fan out), so
+   *    `J` holds one row per fact row;
+   *  - one job over `J` ([[Graft.checkpointRows]], each dim broadcast
+   *    once) folds the COMPLETE stratum's triple — rows with no imputed
+   *    column missing and every dim matched, which never change — folds
+   *    each imputed column's observed count and sum (or per-category
+   *    counts) over every fact row, the mean/mode init of
+   *    [[Mice.prepare]] (ties to the lowest category), and stores the
+   *    INCOMPLETE rows with their dim features, layout-preserving;
+   *  - the mean/mode fill is a lazy projection over the stored stratum
+   *    (complete rows need none).
+   * Then column `c`'s training triple is
+   * `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
+   * masked triple (one Spark job) per step, no ring subtraction (no
+   * float drift), and the match mask keeps the inner-join training
+   * semantics. The update is a `withColumn` on the joined stratum,
+   * guarded so a row with no dim match or a NULL dim feature keeps its
+   * value. Each non-final iteration checkpoints the stratum once and
+   * drops the previous one; the final iteration is returned lazily.
+   * A warm call therefore runs one job per broadcast dim, the setup
+   * job, C·I column steps, I − 1 checkpoints and the caller's one
+   * consuming job (`MiceJoinSpec` pins it).
    *
    * With ONE imputed column every incomplete row is missing it, so the
-   * static triple IS the training triple: the incomplete scan and its
-   * checkpoints are skipped, and the update is one lazy left join of
-   * the missing rows — the work of a single [[imputeContOverStar]] round.
+   * static triple IS the training triple: the setup job stores nothing,
+   * and the update is a lazy filter of `J` to the missing rows — the
+   * work of a single [[imputeContOverStar]] round.
    */
   def imputeChainedOverStar(fact: DataFrame, dims: Seq[Factorized.StarDim],
                             cfg: ChainConfig,
@@ -272,44 +273,41 @@ object MiceJoin {
       iterations = cfg.iterations, lambda = cfg.lambda, shrinkage = cfg.shrinkage,
       stochastic = cfg.stochastic, seed = cfg.seed)
     // A NARROW fact plan (scan/checkpoint leaf + projections/filters
-    // only — no joins, aggregates, windows) stays UN-materialized: each
-    // re-read is one cheap columnar scan, and — decisively at scale —
-    // the scan's bucketed layout survives into the static star
-    // aggregate's groupBy(key) and the incomplete ⋈ dim join, so both
-    // run ZERO-EXCHANGE on co-located tables. A checkpoint here would
-    // trade two cheap scans for a 600M-row materialization AND
-    // re-shuffle both sides of every downstream join (LogicalRDD has
-    // no bucket metadata) — measured 277 s → 87 s on the sf100 star
-    // round. Wide fact plans keep the checkpoint: re-executing an
-    // upstream join per re-read is the worse deal. Mice.prepare is
-    // recompute-safe — its mean/mode aggregate runs once eagerly and
-    // lands in the plan as literals.
-    val prepared = tm.time("prepare")(Mice.prepare(fact, miceCfg))
+    // only — no joins, aggregates, windows) stays UN-materialized: the
+    // setup job and the caller's read of the complete stratum re-read
+    // it as cheap columnar scans, and — decisively at scale — the scan's
+    // bucketed layout survives into the setup's left join with a dim
+    // bucketed on the same key, which then runs ZERO-EXCHANGE. A
+    // checkpoint here would trade those scans for a 600M-row
+    // materialization AND re-shuffle the join (LogicalRDD has no bucket
+    // metadata) — measured 277 s → 87 s on the sf100 star round. Wide
+    // fact plans keep the checkpoint: re-executing an upstream join per
+    // re-read is the worse deal. The fill is not part of `base`: its
+    // values come out of the setup job.
+    val flagged = Mice.flagged(fact, miceCfg)
     val base =
-      if (Graft.isNarrowPlan(fact)) prepared
-      else tm.time("prepare")(prepared.transform(Graft.checkpoint))
+      if (Graft.isNarrowPlan(fact)) flagged
+      else tm.time("prepare")(flagged.transform(Graft.checkpoint))
     val outCols = base.columns.toSeq
     val numAll = cfg.factNum ++ dimNumAll
     val catAll = cfg.factCat ++ dimCatAll
     val order = cfg.imputeCat ++ cfg.imputeCont // categorical first, the baseline order
     val anyFlag = order.map(c => col(Mice.flag(c))).reduceOption(_ || _).getOrElse(lit(false))
-
+    val marks = dims.indices.map(i => s"__graft_dim${i}_match")
+    val matched = marks.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
+    val joined = dims.zip(marks).foldLeft(base) { case (acc, (d, m)) =>
+      Factorized.hashJoinIfSafe(acc,
+        d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m): _*),
+        Seq(d.key), joinType = "left")
+    }
+    val trainsOnIncomplete = order.length > 1
     // the static triple's block layout is numAll/catAll = [factNum ++
     // dim1.num ++ …, factCat ++ dim1.cat ++ …] — exactly Mice.baseline's
     // column order on the materialized star join
-    val complete = base.filter(!anyFlag)
-    val static = tm.time("cofactor_static")(Factorized.cofactorOverStar(
-      complete, cfg.factNum, cfg.factCat, dims, cfg.minRowsPerKey))
-    val marks = dims.indices.map(i => s"__graft_dim${i}_match")
-    val matched = marks.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
-    val joined = dims.zip(marks).foldLeft(base.filter(anyFlag)) { case (acc, (d, m)) =>
-      acc.join(d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m): _*),
-        Seq(d.key), "left")
-    }
-    val trainsOnIncomplete = order.length > 1
-    var incomplete =
-      if (trainsOnIncomplete) tm.time("partition")(joined.transform(Graft.checkpoint))
-      else joined
+    val (static, init, stored) = tm.time("partition")(
+      setup(joined, numAll, catAll, !anyFlag && matched, miceCfg,
+        keep = if (trainsOnIncomplete) order.map(Mice.flag) else Seq()))
+    var incomplete = Mice.fill(stored.getOrElse(joined.filter(anyFlag)), miceCfg, init)
     var lastCp = incomplete
 
     for (iter <- 1 to cfg.iterations) {
@@ -356,8 +354,51 @@ object MiceJoin {
         lastCp = incomplete
       }
     }
-    complete.unionByName(incomplete.select(outCols.map(col): _*))
+    // complete rows have every imputed column observed: no fill
+    base.filter(!anyFlag).unionByName(incomplete.select(outCols.map(col): _*))
       .drop(order.map(Mice.flag): _*)
+  }
+
+  /** The star chain's setup: ONE job over `joined` (the flagged, not yet
+    * filled fact left-joined with every dim) that folds
+    *  - the cofactor triple over `num`/`cat` of the rows where `static`
+    *    holds (the complete, fully matched stratum), and
+    *  - the [[Mice.InitStats]] of every row — one per fact row, since
+    *    the dims are unique —
+    * and, when `keep` names flag columns, stores the rows with any of
+    * them set ([[Graft.checkpointRows]]: the same tasks, the same
+    * broadcasts). Returns the triple, the init and the stored stratum. */
+  private[graft] def setup(joined: DataFrame, num: Seq[String], cat: Seq[String],
+                           static: Column, cfg: Mice.Config,
+                           keep: Seq[String]): (Triple, Mice.InitStats, Option[DataFrame]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    // fold row: [num…, cat…, static, imputeCont…, imputeCat…], evaluated
+    // in the task over `joined`'s rows (whose layout is its schema)
+    val k = num.size + cat.size
+    val Project(list, child) = joined.select(num.map(c => col(c).cast("double")) ++
+      cat.map(c => col(c).cast("int")) ++ Seq(static) ++
+      (cfg.imputeCont ++ cfg.imputeCat).map(col): _*).queryExecution.analyzed
+    val exprs = BindReferences.bindReferences(list, child.output)
+    val agg = Graft.rowAggregate(joined.sparkSession, num.size, cat.size, nb = false)
+    val (nCont, nCat) = (cfg.imputeCont.size, cfg.imputeCat.size)
+    val fold = (rows: Iterator[InternalRow]) => {
+      val proj = UnsafeProjection.create(exprs)
+      val init = new Mice.InitStats(nCont, nCat)
+      val t = Graft.foldSlots(agg, 1, rows.map { r => val p = proj(r); init.add(p, k + 1); p })
+      (t, init)
+    }
+    val (stored, parts) =
+      if (keep.isEmpty) (None, Graft.foldPartitions(joined)(fold))
+      else {
+        val flags = keep.map(joined.schema.fieldIndex).toArray
+        val (df, p) = Graft.checkpointRows(joined, (r: InternalRow) => flags.exists(r.getBoolean))(Some(fold))
+        (Some(df), p)
+      }
+    val init = new Mice.InitStats(nCont, nCat)
+    parts.foreach(p => init.merge(p._2))
+    (Graft.mergeSlots(agg, 1, parts.map(_._1).toSeq).head, init, stored)
   }
 
   /** Fail loudly on a duplicated dim key (see the contract above): one

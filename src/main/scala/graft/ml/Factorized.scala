@@ -260,13 +260,17 @@ object Factorized {
    * replicated — keeping every hash build cap-bounded under arbitrary
    * skew. Only degenerate cases (>4096 partitions from a broken
    * estimate, >64 hot keys, salt factor >256, multi-column keys) fall
-   * back to the plain spill-capable sort-merge join.
+   * back to the plain spill-capable sort-merge join. `joinType` reaches
+   * every join planned here; the salted tier serves inner joins only (a
+   * replicated probe row would null-extend once per unmatched salt
+   * bucket), so an outer join with a hot build key takes the plain one.
    */
   private[graft] def hashJoinIfSafe(left: DataFrame, right: DataFrame,
                                     usingColumns: Seq[String],
                                     leftRows: Option[Long] = None,
                                     rightRows: Option[Long] = None,
-                                    buildKeysUnique: Boolean = false): DataFrame = {
+                                    buildKeysUnique: Boolean = false,
+                                    joinType: String = "inner"): DataFrame = {
     val spark = left.sparkSession
     // JoinSelection's own broadcast test: a side whose estimated size
     // fits a positive threshold is broadcast by the plain join, and the
@@ -274,7 +278,7 @@ object Factorized {
     val broadcastMax = spark.sessionState.conf.autoBroadcastJoinThreshold
     val smallest = left.queryExecution.optimizedPlan.stats.sizeInBytes
       .min(right.queryExecution.optimizedPlan.stats.sizeInBytes)
-    if (broadcastMax > 0 && smallest <= broadcastMax) return left.join(right, usingColumns)
+    if (broadcastMax > 0 && smallest <= broadcastMax) return left.join(right, usingColumns, joinType)
     val cap = spark.conf
       .get("spark.graft.shj.maxBuildPartitionBytes", (64L << 20).toString).toLong
     val confParts = math.max(1, spark.sessionState.conf.numShufflePartitions).toLong
@@ -296,8 +300,8 @@ object Factorized {
     val r = buildBytes(right, rightRows)
     val build = l.min(r)
     if (cap > 0 && build / effParts <= cap) {
-      if (l <= r) left.hint("shuffle_hash").join(right, usingColumns)
-      else left.join(right.hint("shuffle_hash"), usingColumns)
+      if (l <= r) left.hint("shuffle_hash").join(right, usingColumns, joinType)
+      else left.join(right.hint("shuffle_hash"), usingColumns, joinType)
     } else if (cap > 0 && build / cap + 1 <= 4096) {
       // partition-to-fit: the build does not fit a task at the session's
       // partition count, but the per-partition build SHRINKS with the
@@ -368,8 +372,8 @@ object Factorized {
           // granularity of every hash build.
           case (Some(ln), Some(rn)) if build / math.min(ln, rn) <= cap &&
               BigInt(maxCnt) * perRow <= cap =>
-            val j = if (bFirst) left.hint("shuffle_hash").join(right, usingColumns)
-                    else left.join(right.hint("shuffle_hash"), usingColumns)
+            val j = if (bFirst) left.hint("shuffle_hash").join(right, usingColumns, joinType)
+                    else left.join(right.hint("shuffle_hash"), usingColumns, joinType)
             // reject only SHUFFLE exchanges: a BroadcastExchange means
             // the planner chose a broadcast join, which is already
             // shuffle-free — discarding it for a forced repartition of
@@ -386,13 +390,13 @@ object Factorized {
       else if (BigInt(maxCnt) * perRow <= cap) {
         val lp = left.repartition(parts, cols: _*)
         val rp = right.repartition(parts, cols: _*)
-        if (bFirst) lp.hint("shuffle_hash").join(rp, usingColumns)
-        else lp.join(rp.hint("shuffle_hash"), usingColumns)
-      } else if (usingColumns.length == 1) {
+        if (bFirst) lp.hint("shuffle_hash").join(rp, usingColumns, joinType)
+        else lp.join(rp.hint("shuffle_hash"), usingColumns, joinType)
+      } else if (usingColumns.length == 1 && joinType == "inner") {
         saltedHashJoin(bDf, pDf, usingColumns.head, cap, perRow, parts, bFirst)
-          .getOrElse(left.join(right, usingColumns))
-      } else left.join(right, usingColumns)
-    } else left.join(right, usingColumns)
+          .getOrElse(left.join(right, usingColumns, joinType))
+      } else left.join(right, usingColumns, joinType)
+    } else left.join(right, usingColumns, joinType)
   }
 
   /** Fixed-capacity Misra-Gries heavy-hitter summary over long keys

@@ -191,4 +191,17 @@ class GraftSpec extends AnyFunSuite {
       Seq("x"), Seq("c"), Seq("x"), Seq("c"))
     assert(empty.n == 0 && empty.numCols == 2 && empty.catCols == 2, s"disjoint keys: $empty")
   }
+
+  test("checkpoint: its eager job runs under a SQL execution id") {
+    // query listeners attribute jobs through spark.sql.execution.id; the
+    // checkpoint's materializing jobs must carry it like any action's
+    val df = Seq.tabulate(200)(i => (i % 7, i * 0.5)).toDF("k", "v").repartition(3, $"k")
+    var cp: DataFrame = null
+    val props = JobCounter.jobProperties(spark.sparkContext) { cp = Graft.checkpoint(df) }
+    assert(props.nonEmpty, "the checkpoint must run eagerly")
+    props.foreach(p => assert(p.getProperty("spark.sql.execution.id") != null,
+      s"a checkpoint job ran outside any SQL execution: $p"))
+    assert(cp.count() == 200 && cp.agg(sum($"v")).head.getDouble(0) == df.agg(sum($"v")).head.getDouble(0))
+    Graft.dropCheckpoint(cp)
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.mice.{Mice, MiceJoin}
+import graft.ml.Factorized.StarDim
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -313,11 +314,133 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
     // an extra iteration costs one masked triple per imputed column
     // (one job each) plus the iteration's checkpoint. Measured on
-    // local[4]: 11, 16, 21 jobs (45, 65, 85 tasks) — 5 jobs and 20
+    // local[4]: 7, 12, 17 jobs (32, 52, 72 tasks) — 5 jobs and 20
     // tasks per iteration
     val imputed = 4
     assert(iter2._1 == imputed + 1,
       s"iteration 2 ran ${iter2._1} jobs, expected $imputed column steps + 1 checkpoint")
+  }
+
+  /** A 2-dim star with two overlapping imputed columns (y continuous,
+    * z continuous), orphan keys in both dims, NULL fact keys, and a
+    * NULL dim feature: (fact, dimA, dimB). */
+  def starWithOrphans = {
+    val rng = new scala.util.Random(29)
+    val dimA = Seq.tabulate(30)(k => (k.toLong, k * 0.7 - 9.0, if (k == 6) None else Some(k * 0.1)))
+      .toDF("ka", "d1", "d3")
+    val dimB = Seq.tabulate(20)(k => (k.toLong, k * 1.3 + 4.0)).toDF("kb", "d2")
+    val rows = Seq.tabulate(700) { i =>
+      val ka: Option[Long] = if (i % 61 == 5) None else Some(if (i % 47 == 1) 999L else (i % 30).toLong)
+      val kb: Option[Long] = if (i % 53 == 7) None else Some(if (i % 43 == 2) 999L else (i % 20).toLong)
+      val x = rng.nextGaussian() * 2
+      val y = 1.5 + 2.0 * x + 0.3 * ka.getOrElse(0L) + rng.nextGaussian() * 0.1
+      val z = -1.0 + 0.6 * y + 0.1 * kb.getOrElse(0L) + rng.nextGaussian() * 0.1
+      (i.toLong, ka, kb, x, if (i % 7 == 0) None else Some(y), if (i % 9 == 2) None else Some(z))
+    }
+    (rows.toDF("id", "ka", "kb", "x", "y", "z"), dimA, dimB)
+  }
+
+  test("the setup job's static triple == the cofactor of the complete stratum's star join") {
+    // the one setup job folds the complete, fully matched rows of the
+    // left-joined fact; the reference joins the complete fact rows
+    // INNER with both dims and folds them with Graft.cofactor
+    val (fact, dimA, dimB) = starWithOrphans
+    val flagged = fact.withColumn("y__isnull", $"y".isNull).withColumn("z__isnull", $"z".isNull)
+    val joined = flagged
+      .join(dimA.withColumn("mA", lit(true)), Seq("ka"), "left")
+      .join(dimB.withColumn("mB", lit(true)), Seq("kb"), "left")
+    val anyFlag = $"y__isnull" || $"z__isnull"
+    val num = Seq("y", "z", "x", "d1", "d3", "d2")
+    val cfg = Mice.Config(contCols = Seq("y", "z", "x"), catCols = Seq(),
+      imputeCont = Seq("y", "z"), imputeCat = Seq())
+    for (keep <- Seq(Seq("y__isnull", "z__isnull"), Seq())) { // stored stratum, and fold only
+      val (static, init, stored) = MiceJoin.setup(joined, num, Seq(),
+        !anyFlag && $"mA".isNotNull && $"mB".isNotNull, cfg, keep)
+      val want = Graft.cofactor(
+        fact.filter($"y".isNotNull && $"z".isNotNull).join(dimA, "ka").join(dimB, "kb"), num, Seq())
+      assert(static.n == want.n && static.n > 0, s"n ${static.n} vs ${want.n}")
+      assert(static.approxEquals(want, 1e-9), s"static triple diverged from the star join's")
+      val (meanY, meanZ) = fact.select(avg($"y"), avg($"z")).as[(Double, Double)].head
+      assert(math.abs(init.means(0) - meanY) < 1e-9 && math.abs(init.means(1) - meanZ) < 1e-9,
+        s"init means ${init.means} vs ($meanY, $meanZ)")
+      assert(stored.map(_.count()) ==
+        (if (keep.isEmpty) None else Some(fact.filter($"y".isNull || $"z".isNull).count())))
+      stored.foreach(Graft.dropCheckpoint)
+    }
+  }
+
+  test("orphan and NULL-keyed fact rows with an observed target count in the mean init") {
+    // rows whose key is NULL or misses a dim never train, but the init
+    // is the mean over every FACT row: a missing orphan keeps exactly
+    // avg(y) over the fact, both with one imputed column (no stored
+    // stratum) and with two, over a narrow fact and over a wide one
+    // (checkpointed before the setup join)
+    val (narrow, dimA, dimB) = starWithOrphans
+    val dims = Seq(StarDim(dimA, "ka", Seq("d1", "d3")), StarDim(dimB, "kb", Seq("d2")))
+    val (meanY, meanZ) = narrow.select(avg($"y"), avg($"z")).as[(Double, Double)].head
+    val orphanMissing = ($"ka".isNull || $"ka" === 999L || $"kb".isNull || $"kb" === 999L) && $"y".isNull
+    assert(narrow.filter(orphanMissing).count() > 0 &&
+      narrow.filter(($"ka".isNull || $"kb" === 999L) && $"y".isNotNull).count() > 0)
+    for (impute <- Seq(Seq("y"), Seq("y", "z")); fact <- Seq(narrow, narrow.distinct())) {
+      val out = MiceJoin.imputeChainedOverStar(fact, dims,
+        MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq(),
+          imputeCont = impute, iterations = 2, normalize = false))
+      val got = out.join(fact.filter(orphanMissing).select($"id"), "id").select($"y").collect()
+      assert(got.nonEmpty && got.forall(r => math.abs(r.getDouble(0) - meanY) < 1e-9),
+        s"imputing $impute: orphan rows must keep the fact-row mean $meanY, got ${got.map(_.get(0)).toSeq}")
+      if (impute.contains("z")) {
+        val orphanZ = out.join(fact.filter($"ka".isNull && $"z".isNull).select($"id"), "id")
+          .select($"z").as[Double].collect()
+        assert(orphanZ.forall(v => math.abs(v - meanZ) < 1e-9), s"z orphans: ${orphanZ.toSeq} vs $meanZ")
+      }
+      Graft.dropCheckpoint(out)
+    }
+    // without broadcasts the setup's left joins take hashJoinIfSafe's
+    // shuffled-hash tier: the same imputed values
+    def imputed(): Map[Long, (Double, Double)] = {
+      val out = MiceJoin.imputeChainedOverStar(narrow, dims,
+        MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq(),
+          imputeCont = Seq("y", "z"), iterations = 2, normalize = false))
+      try out.select($"id", $"y", $"z").as[(Long, Double, Double)].collect()
+        .map { case (id, y, z) => id -> (y, z) }.toMap
+      finally Graft.dropCheckpoint(out)
+    }
+    val broadcast = imputed()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffled = try imputed() finally
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
+    assert(shuffled.keySet == broadcast.keySet && broadcast.size == 700)
+    val maxD = broadcast.map { case (id, (y, z)) =>
+      math.abs(y - shuffled(id)._1) + math.abs(z - shuffled(id)._2) }.max
+    assert(maxD < 1e-9, s"shuffled setup join diverged from the broadcast one: $maxD")
+  }
+
+  test("warm star chain runs D + 1 + C·I + (I − 1) + 1 jobs") {
+    // D dim broadcasts and the one setup job (static triple, mean init
+    // and incomplete stratum), C column steps per iteration, one
+    // checkpoint per non-final iteration, and the caller's write: over
+    // parquet fact and dims, as a caller reads them
+    val dir = java.nio.file.Files.createTempDirectory("graft-star-jobs").toString
+    val (fact, dimA, dimB) = starWithOrphans
+    fact.write.parquet(s"$dir/fact")
+    dimA.write.parquet(s"$dir/dimA")
+    dimB.write.parquet(s"$dir/dimB")
+    val dims = Seq(StarDim(spark.read.parquet(s"$dir/dimA"), "ka", Seq("d1", "d3")),
+      StarDim(spark.read.parquet(s"$dir/dimB"), "kb", Seq("d2")))
+    val in = spark.read.parquet(s"$dir/fact")
+    def run(iterations: Int): Long = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      val out = MiceJoin.imputeChainedOverStar(in, dims,
+        MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq(),
+          imputeCont = Seq("y", "z"), iterations = iterations))
+      out.write.format("noop").mode("overwrite").save()
+      Graft.dropCheckpoint(out)
+    }._1
+    run(1) // warm the memoized unique-key probes
+    val (d, c) = (dims.size, 2)
+    for (i <- 1 to 3) {
+      val jobs = run(i)
+      assert(jobs == d + 1 + c * i + (i - 1) + 1, s"$i iterations ran $jobs jobs")
+    }
   }
 
   test("incomplete-stratum training keeps inner-join semantics: orphans and NULL dim features") {

@@ -149,11 +149,43 @@ class MiceSpec extends AnyFunSuite {
     info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
     val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
-    // measured on local[4]: 9, 12, 15 jobs (37, 49, 61 tasks) — 3 jobs
+    // measured on local[4]: 8, 11, 14 jobs (36, 48, 60 tasks) — 3 jobs
     // per iteration over the 4-partition incomplete stratum, 4 tasks each
     val columns = cfg.imputeCont.size + cfg.imputeCat.size
     assert(iter2 == (columns + 1, 4L * (columns + 1)),
       s"(jobs, tasks) per extra iteration: $iter2")
+  }
+
+  test("mode init: a tied categorical column imputes its lowest tied value at any partition count") {
+    // 5 and 2 are each observed 40 times, 9 twenty times; the 5s come
+    // first, so "first seen" and "lowest" disagree. Zero iterations
+    // return the mean/mode-initialized frame as it is
+    val vals = Seq.fill(40)(5) ++ Seq.fill(40)(2) ++ Seq.fill(20)(9)
+    val df = (vals.map(Option(_)) ++ Seq.fill(10)(None)).zipWithIndex
+      .map { case (c, i) => (i, i * 0.5, c) }.toDF("id", "a", "c")
+    for (parts <- Seq(1, 7)) {
+      val out = Mice.baseline(df.repartition(parts), Mice.Config(contCols = Seq("a"),
+        catCols = Seq("c"), imputeCont = Seq(), imputeCat = Seq("c"), iterations = 0))
+      val filled = out.filter($"id" >= 100).select($"c").as[Int].collect().toSet
+      assert(filled == Set(2), s"$parts partitions: missing cells got $filled, want the lowest tied mode 2")
+      Graft.dropCheckpoint(out)
+    }
+  }
+
+  test("baseline warm call: one init job, its checkpoint, C·I steps, I − 1 checkpoints, the write") {
+    // the mean/mode init is one fold job, not agg(…).head()'s two
+    val in = withNulls.localCheckpoint()
+    def run(iterations: Int): Long = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      val out = Mice.baseline(in, cfg.copy(iterations = iterations))
+      out.write.format("noop").mode("overwrite").save()
+      Graft.dropCheckpoint(out)
+    }._1
+    run(1) // warm up
+    val columns = cfg.imputeCont.size + cfg.imputeCat.size
+    for (i <- 1 to 2) {
+      val jobs = run(i)
+      assert(jobs == 2 + columns * i + (i - 1) + 1, s"$i iterations ran $jobs jobs")
+    }
   }
 
   test("dropCheckpoint unpersists exactly the plan's checkpoint RDD") {

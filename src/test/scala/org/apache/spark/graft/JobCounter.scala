@@ -2,6 +2,8 @@ package org.apache.spark.graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
@@ -12,16 +14,29 @@ object JobCounter {
   def apply(sc: SparkContext)(body: => Unit): (Long, Long) = {
     val jobs = new AtomicLong
     val tasks = new AtomicLong
-    val listener = new SparkListener {
+    listening(sc, new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
-    }
+    })(body)
+    (jobs.get, tasks.get)
+  }
+
+  /** The properties of every job the block starts, in start order. */
+  def jobProperties(sc: SparkContext)(body: => Unit): Seq[java.util.Properties] = {
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    listening(sc, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        props.add(Option(e.properties).getOrElse(new java.util.Properties))
+    })(body)
+    props.asScala.toSeq
+  }
+
+  private def listening(sc: SparkContext, listener: SparkListener)(body: => Unit): Unit = {
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
     try {
       body
       sc.listenerBus.waitUntilEmpty()
     } finally sc.removeSparkListener(listener)
-    (jobs.get, tasks.get)
   }
 }
