@@ -421,13 +421,26 @@ object Graft {
     * an async unpersist lets 2–3 working-set generations coexist and
     * churn the storage pool (sf10 mice_star measured 9–30 s spread
     * from exactly that); the synchronous removal costs one RPC
-    * round-trip per step against gigabytes of eviction pressure. */
+    * round-trip per step against gigabytes of eviction pressure.
+    *
+    * Inside a larger plan only the generations [[checkpointRows]] made
+    * are released: an operator that reads a narrow input in place (the
+    * MICE-high loop) returns a plan whose leaves include the caller's
+    * own checkpoint, which the caller still owns. A frame that IS a
+    * checkpoint (plan = one LogicalRDD) is released whoever made it. */
   private[graft] def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = true)
-      case _ => ()
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = true)
+      case plan => plan.foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD if l.rdd.name == GenerationName =>
+          l.rdd.unpersist(blocking = true)
+        case _ => ()
+      }
     }
+
+  /** Name of every RDD [[checkpointRows]] stores; [[dropCheckpoint]]
+    * releases leaves by it (also shown in the Spark UI's storage tab). */
+  private val GenerationName = "graft checkpoint"
 
   /** True when `df`'s analyzed plan is leaf + NARROW operators only
     * (projections, filters, unions — no joins, aggregates, windows,
@@ -504,7 +517,8 @@ object Graft {
     val (stored, folds) = underExecution(df, "checkpoint") { rows =>
       // toRdd's UnsafeRows are reused per partition iterator — copy
       // before storing, exactly as the public checkpoint path does
-      val stored = rows.mapPartitions(_.filter(keep).map(_.copy())).persist(lvl)
+      val stored = rows.mapPartitions(_.filter(keep).map(_.copy()))
+        .setName(GenerationName).persist(lvl)
       // eager: materialize before the caller drops the previous generation
       val folds = fold match {
         case None => stored.count(); Array.empty[T]

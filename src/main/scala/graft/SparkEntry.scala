@@ -282,8 +282,9 @@ object SparkEntry {
     // imputed column with no categorical features — the observed stratum
     // never changes, so the trained model is exactly the closed-form
     // regression the oracle can compute with regr_slope/regr_intercept.
-    // Exercises the full partitioned delta-triple path (static + delta −
-    // subtract) with a hard oracle on the resulting imputation RMSE.
+    // Exercises the partitioned MICE-high path (the complete stratum's
+    // static triple from the one setup job trains every step) with a hard
+    // oracle on the resulting imputation RMSE.
     "q18_mice_impute" -> { (s, dir) =>
       val base = li(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),

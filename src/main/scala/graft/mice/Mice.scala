@@ -1,7 +1,7 @@
 package graft.mice
 
 import graft.Graft
-import graft.ml.{Lda, LinReg}
+import graft.ml.{Lda, LinReg, NaiveBayes}
 import graft.ring.Triple
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -15,17 +15,18 @@ import org.apache.spark.sql.functions._
  *  - `baseline`: per column per iteration, aggregate a cofactor triple
  *    over the rows where that column is observed, train, impute
  *    (imputation_base.cpp:6-146).
- *  - `partitioned` (the low/high delta algebra): split rows into the
- *    fully-observed stratum (which never changes — its triple is
- *    computed ONCE, the "static cofactor" of imputation_high.cpp:20-35)
- *    and the incomplete stratum; per column, the observed-rows triple is
- *    `static + triple(incomplete) − delta(rows where col missing)` via
- *    ring subtraction (imputation_low.cpp:85-110) — no filtered rescan
- *    of the big stratum, ever.
- *  - [[MiceJoin.imputeChainedOverStar]] is the MICE-high variant over a
- *    star join: the complete stratum's star triple is computed once,
- *    and each column step trains on it plus one masked aggregate over
- *    the dim-joined incomplete stratum.
+ *  - `partitioned` (MICE-high, imputation_high.cpp:20-35): the fully
+ *    observed stratum never changes, so its "static cofactor" is folded
+ *    ONCE, in the setup job that also yields the mean/mode init and
+ *    stores the incomplete stratum; each column step trains on
+ *    `static + triple(incomplete rows with the column observed)`, one
+ *    masked aggregate over the small stratum, never a rescan of the big
+ *    one.
+ *  - [[MiceJoin.imputeChainedOverStar]] is the same MICE-high loop over a
+ *    star join: `partitioned` is that loop with no dims.
+ *
+ * Both drivers and the loop share one train-and-predict step
+ * ([[imputeColumn]]): a NULL prediction keeps the cell's current value.
  *
  * The reference's O(1) physical column swap (duckdb_imputation.patch)
  * is unnecessary on immutable DataFrames: `withColumn` + one
@@ -60,7 +61,7 @@ object Mice {
   private[mice] def flag(c: String) = s"${c}__isnull"
 
   /** Per-phase wall-clock accumulator mirroring the reference's timers
-    * (prepare / partition / cofactor / delta / train / impute-update;
+    * (prepare / partition / cofactor / cofactor_static / train / impute_update;
     * imputation_base.cpp:11-12, imputation_low.cpp:35-186) so BENCH
     * numbers are phase-comparable. */
   final class Timings {
@@ -156,42 +157,53 @@ object Mice {
 
   /** True when imputing `c` trains Naive Bayes (which needs per-class
     * aggregates rather than the single full triple). */
-  private def usesNb(cfg: Config, c: String): Boolean =
+  private[mice] def usesNb(cfg: Config, c: String): Boolean =
     !cfg.imputeCont.contains(c) && cfg.catModel == "nb"
 
-  /** One train+impute step for one column. `observed` is the cofactor
-    * triple over the rows where `c` is observed (the LinReg/LDA training
-    * input); `nbPerClass` carries the per-class NB aggregates over those
-    * same rows when `c` trains Naive Bayes (the reference trains on every
-    * row where the column is observed, imputation_base.cpp:21-34).
-    * `cur` is the stratum being imputed. */
-  private def imputeColumn(cur: DataFrame, cfg: Config, c: String, observed: => Triple,
-                           nbPerClass: Option[Seq[(Int, Triple)]],
-                           iter: Int, tm: Timings): DataFrame = {
-    val isCont = cfg.imputeCont.contains(c)
-    val pred: Column = tm.time("train") {
-      if (isCont) {
-        val label = cfg.contCols.indexOf(c)
-        val model = LinReg.train(observed, label, cfg.lambda)
-        LinReg.predict(model,
-          cfg.contCols.filterNot(_ == c).map(col),
-          cfg.catCols.map(col),
-          addNoise = cfg.stochastic, seed = cfg.seed + iter * 131 + label)
-      } else if (cfg.catModel == "nb") {
-        val model = graft.ml.NaiveBayes.train(nbPerClass.getOrElse(
-          sys.error(s"NB impute step for $c was given no per-class aggregates")))
-        graft.ml.NaiveBayes.predict(model,
-          cfg.contCols.map(col),
-          cfg.catCols.filterNot(_ == c).map(col))
-      } else {
-        val label = cfg.catCols.indexOf(c)
-        val model = Lda.train(observed, label, cfg.shrinkage)
-        Lda.predict(model,
-          cfg.contCols.map(col),
-          cfg.catCols.filterNot(_ == c).map(col))
-      }
+  /** Train column `c`'s model and return its prediction. `num`/`cat` are
+    * the training triples' numeric and categorical blocks, in order, and
+    * the prediction reads the same columns minus `c`. `observed` is the
+    * cofactor triple over the rows where `c` is observed (the LinReg/LDA
+    * input); `nbPerClass` is the per-class aggregates over those same
+    * rows, read only when `c` trains Naive Bayes (the reference trains on
+    * every row where the column is observed, imputation_base.cpp:21-34).
+    * Whichever is read is evaluated before the `train` timer starts. */
+  private[mice] def predict(cfg: Config, c: String, num: Seq[String], cat: Seq[String],
+                            normalize: Boolean, iter: Int, tm: Timings)(
+      observed: => Triple, nbPerClass: => Seq[(Int, Triple)]): Column =
+    if (cfg.imputeCont.contains(c)) {
+      val t = observed
+      tm.time("train")(predictLinReg(t, c, num, cat, cfg.lambda, normalize,
+        cfg.stochastic, seed = cfg.seed + iter * 131 + num.indexOf(c)))
+    } else if (usesNb(cfg, c)) {
+      val pc = nbPerClass
+      tm.time("train")(NaiveBayes.predict(NaiveBayes.train(pc),
+        num.map(col), cat.filterNot(_ == c).map(col)))
+    } else {
+      val t = observed
+      tm.time("train")(Lda.predict(Lda.train(t, cat.indexOf(c), cfg.shrinkage, normalize = normalize),
+        num.map(col), cat.filterNot(_ == c).map(col)))
     }
-    cur.withColumn(c, when(col(flag(c)), pred).otherwise(col(c)))
+
+  /** Regress `label` on the rest of `num` and on `cat` from triple `t`
+    * (blocks `num`, `cat` in order) and return the prediction, with
+    * N(0, σ̂²) noise drawn from `seed` when `stochastic`. */
+  private[mice] def predictLinReg(t: Triple, label: String, num: Seq[String], cat: Seq[String],
+                                  lambda: Double, normalize: Boolean,
+                                  stochastic: Boolean, seed: Long): Column =
+    LinReg.predict(LinReg.train(t, num.indexOf(label), lambda, normalize = normalize),
+      num.filterNot(_ == label).map(col), cat.map(col), addNoise = stochastic, seed = seed)
+
+  /** One train-and-predict step, shared by [[baseline]] and the MICE-high
+    * loop: [[predict]] written into `cur`'s column `c` on the rows where
+    * `c` was missing and `guard` holds. A NULL prediction (a NULL numeric
+    * feature) keeps the current value, so no imputed cell turns NULL. */
+  private[mice] def imputeColumn(cur: DataFrame, cfg: Config, c: String,
+                                 num: Seq[String], cat: Seq[String], normalize: Boolean,
+                                 guard: Column, iter: Int, tm: Timings)(
+      observed: => Triple, nbPerClass: => Seq[(Int, Triple)]): DataFrame = {
+    val pred = predict(cfg, c, num, cat, normalize, iter, tm)(observed, nbPerClass)
+    cur.withColumn(c, when(col(flag(c)) && guard, coalesce(pred, col(c))).otherwise(col(c)))
   }
 
   /** Baseline MICE (imputation_base.cpp): full filtered rescan per column. */
@@ -201,15 +213,11 @@ object Mice {
     val order = cfg.imputeCat ++ cfg.imputeCont // categorical first (imputation_base.cpp:19,89)
     for (iter <- 1 to cfg.iterations) {
       for (c <- order) {
-        // NB columns never read the full triple — skip that scan for them
-        lazy val observed = tm.time("cofactor")(
-          Graft.cofactor(cur.filter(!col(flag(c))), cfg.contCols, cfg.catCols))
-        val nbPc =
-          if (usesNb(cfg, c)) Some(tm.time("cofactor")(Graft.cofactorPerClass(
-            cur.filter(!col(flag(c))), cfg.contCols, cfg.catCols.filterNot(_ == c),
+        val obs = cur.filter(!col(flag(c)))
+        cur = imputeColumn(cur, cfg, c, cfg.contCols, cfg.catCols, normalize = false, lit(true), iter, tm)(
+          tm.time("cofactor")(Graft.cofactor(obs, cfg.contCols, cfg.catCols)),
+          tm.time("cofactor")(Graft.cofactorPerClass(obs, cfg.contCols, cfg.catCols.filterNot(_ == c),
             label = c, nb = true)))
-          else None
-        cur = imputeColumn(cur, cfg, c, observed, nbPc, iter, tm)
       }
       // bound lineage + per-column job cost — except after the LAST
       // iteration, whose generation is returned un-materialized (the
@@ -226,88 +234,14 @@ object Mice {
   }
 
   /**
-   * Partitioned MICE with delta-triple ring algebra (low/high variants):
-   * the fully-observed stratum is aggregated once and cached; per-column
-   * work touches only the incomplete stratum.
+   * Partitioned MICE, the MICE-high variant (imputation_high.cpp:20-35):
+   * the star chain's loop ([[MiceJoin.imputeChainedOverStar]]) over a
+   * star with no dims. One setup job yields the complete stratum's static
+   * triple, the mean/mode init and the stored incomplete stratum; each
+   * column step trains on `static + cofactorMasked(incomplete, ¬flag_c)`,
+   * one job; each non-final iteration checkpoints the stratum. Trains as
+   * [[baseline]] does (`normalize = false`).
    */
-  def partitioned(df: DataFrame, cfg: Config, tm: Timings = noTimings): DataFrame = {
-    val prepared = prepare(df, cfg)
-    val imputed = cfg.imputeCont ++ cfg.imputeCat
-    val anyNull = imputed.map(c => col(flag(c))).reduce(_ || _)
-
-    val (complete, incomplete0) = tm.time("partition")(
-      (prepared.filter(!anyNull).transform(Graft.checkpoint),
-       prepared.filter(anyNull).transform(Graft.checkpoint)))
-    var incomplete = incomplete0
-    var lastCp = incomplete0
-
-    val order = cfg.imputeCat ++ cfg.imputeCont
-    // static cofactor over the never-changing stratum (imputation_high.cpp:20-35).
-    // (Fusing this with iteration 1's full+delta into one masked scan of
-    // the pre-split frame was tried and REVERTED: the fused scan re-reads
-    // parquet and re-evaluates the whole prepare expression chain, while
-    // these split scans read already-materialized checkpoint blocks —
-    // measured 1.05 → 1.40 s on the mice_1round shape, sf0.1 local[32].)
-    val staticTriple = tm.time("cofactor_static")(
-      Graft.cofactor(complete, cfg.contCols, cfg.catCols))
-    // NB needs per-class aggregates; the complete stratum's never change
-    // either (every complete row has the label observed), so each NB
-    // column's static per-class aggregates are computed exactly once and
-    // reused every iteration — the same static+delta treatment the full
-    // triple gets, restoring the delta algebra for the NB path
-    val nbStatic = scala.collection.mutable.Map[String, Seq[(Int, Triple)]]()
-
-    for (iter <- 1 to cfg.iterations) {
-      // ONE scan of the (small) incomplete stratum yields this round's
-      // full triple AND the first column's delta — the delta predicates
-      // all read the same frame, so they fuse into a single aggregation
-      // job (Graft.cofactorMasked) instead of per-column rescans.
-      // (Recomputing full each round also stops float drift from the
-      // incremental adds below accumulating across iterations.)
-      val head = tm.time("cofactor_delta")(Graft.cofactorMasked(
-        incomplete, cfg.contCols, cfg.catCols,
-        Seq(None, Some(col(flag(order.head))))))
-      var full = Triple.add(staticTriple, head(0))
-      // delta = rows where c is missing (imputation_low.cpp:85-108)
-      var delta = head(1)
-      for ((c, ci) <- order.zipWithIndex) {
-        // observed = full − delta by ring subtraction (imputation_low.cpp:110)
-        val observed = Triple.subtract(full, delta)
-        // NB trains on ALL observed rows (complete ∪ incomplete-observed):
-        // static per-class aggregates over `complete` (computed once, see
-        // nbStatic) ring-added to a scan of only the incomplete stratum
-        val nbPc =
-          if (usesNb(cfg, c)) {
-            val static = nbStatic.getOrElseUpdate(c, tm.time("cofactor_static")(
-              Graft.cofactorPerClass(complete, cfg.contCols,
-                cfg.catCols.filterNot(_ == c), label = c, nb = true)))
-            val inc = tm.time("cofactor_delta")(Graft.cofactorPerClass(
-              incomplete.filter(!col(flag(c))), cfg.contCols,
-              cfg.catCols.filterNot(_ == c), label = c, nb = true))
-            Some(Triple.addPerClass(static, inc))
-          } else None
-        incomplete = imputeColumn(incomplete, cfg, c, observed, nbPc, iter, tm)
-        // full := observed + recomputed delta over the freshly imputed
-        // rows (imputation_low.cpp:188-194) so later columns in this
-        // round train against up-to-date values. Both that refresh and
-        // the NEXT column's delta read the just-imputed frame — one
-        // fused scan answers both. After the LAST column the refreshed
-        // full is never read again (the next iteration rebuilds it from
-        // a fresh scan, and the loop ends) — that trailing scan was
-        // pure dead work and is skipped.
-        if (ci < order.length - 1) {
-          val pair = tm.time("cofactor_delta")(Graft.cofactorMasked(
-            incomplete, cfg.contCols, cfg.catCols,
-            Seq(Some(col(flag(c))), Some(col(flag(order(ci + 1)))))))
-          full = Triple.add(observed, pair(0))
-          delta = pair(1)
-        }
-      }
-      val next = tm.time("impute_update")(incomplete.transform(Graft.checkpoint))
-      Graft.dropCheckpoint(lastCp) // the previous iteration's incomplete blocks
-      lastCp = next
-      incomplete = next
-    }
-    complete.unionByName(incomplete).drop(imputed.map(flag): _*)
-  }
+  def partitioned(df: DataFrame, cfg: Config, tm: Timings = noTimings): DataFrame =
+    MiceJoin.imputeHigh(df, Nil, cfg, normalize = false, tm)
 }

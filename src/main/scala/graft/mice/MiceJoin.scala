@@ -1,7 +1,7 @@
 package graft.mice
 
 import graft.Graft
-import graft.ml.{Factorized, LinReg}
+import graft.ml.Factorized
 import graft.ring.Triple
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -12,16 +12,17 @@ import org.apache.spark.sql.functions._
  * column using features that live in a DIMENSION table), composed from
  * the library's own pieces:
  *
- *  - training: [[Factorized.cofactorOverJoinAdaptive]] — the cofactor
- *    triple of `fact ⋈ dim` from per-key pre-aggregates and the ring
- *    product when keys repeat (README.md:163-173's factorized-learning
- *    pattern, at MICE's service), falling back to the fused aggregate
- *    over the join when the key is near-unique and factorization would
- *    shuffle more triples than rows;
- *  - partitioning: the [[Mice.partitioned]] delta discipline — the
- *    observed stratum is aggregated once; only the (small) missing
- *    stratum is ever joined wide, because prediction needs per-row
- *    dimension features and the missing stratum is where predictions go.
+ *  - training: the cofactor triple of the join, never the joined rows —
+ *    [[Factorized.cofactorOverStar]]'s per-key ring products for the
+ *    one-round [[imputeContOverStar]], and for the chained drivers ONE
+ *    setup job over the fact left-joined with every dim that folds the
+ *    complete stratum's static triple (README.md:163-173's
+ *    factorized-learning pattern, at MICE's service);
+ *  - partitioning: MICE-high (imputation_high.cpp:20-35) — the complete
+ *    stratum is aggregated once; only the (small) incomplete stratum is
+ *    stored and re-aggregated per column step, because prediction needs
+ *    per-row dimension features and the incomplete stratum is where
+ *    predictions go. [[Mice.partitioned]] is this loop with no dims.
  *
  * At 100 TB this is the shape that matters: the model sees the whole
  * join through KB-sized triples, and the row-level join touches
@@ -118,12 +119,11 @@ object MiceJoin {
     }
     val triple = tm.time("cofactor_static")(Factorized.cofactorOverStar(
       observed, target +: factNum, Seq(), dims, minRowsPerKey))
-    val model = tm.time("train")(LinReg.train(triple, label = 0, lambda,
-      normalize = true))
+    // the triple's blocks are [target +: factNum ++ dimNum, dimCat]
+    val pred = tm.time("train")(Mice.predictLinReg(triple, target, target +: (factNum ++ dimNum),
+      dimCat, lambda, normalize = true, stochastic, seed))
     val mean = if (triple.n == 0) 0.0 else triple.lin(0) / triple.n
     val imputed = tm.time("impute_update") {
-      val pred = LinReg.predict(model, (factNum ++ dimNum).map(col), dimCat.map(col),
-        addNoise = stochastic, seed = seed)
       dims.foldLeft(missing)((acc, d) => acc.join(d.df, Seq(d.key), "left"))
         .withColumn(target,
           when(anyDimFeatureNull(dimCols), lit(mean))
@@ -215,63 +215,74 @@ object MiceJoin {
    * empty in this overload. Semantics ≡ [[Mice.baseline]] on the
    * materialized star join with contCols = factNum ++ dims.flatMap(num)
    * and catCols = factCat ++ dims.flatMap(cat) (`MiceJoinSpec` pins it).
-   *
-   * The loop is MICE-high (imputation_high.cpp:20-35) applied to the
-   * star, the same split [[Mice.partitioned]] makes on a flat table.
-   * Its setup is ONE query and ONE job:
-   *  - the query `J` left-joins the cast, flagged, not yet filled fact
-   *    with every dim through [[Factorized.hashJoinIfSafe]]'s size guard
-   *    (each dim carries a match marker; unique dims cannot fan out), so
-   *    `J` holds one row per fact row;
-   *  - one job over `J` ([[Graft.checkpointRows]], each dim broadcast
-   *    once) folds the COMPLETE stratum's triple — rows with no imputed
-   *    column missing and every dim matched, which never change — folds
-   *    each imputed column's observed count and sum (or per-category
-   *    counts) over every fact row, the mean/mode init of
-   *    [[Mice.prepare]] (ties to the lowest category), and stores the
-   *    INCOMPLETE rows with their dim features, layout-preserving;
-   *  - the mean/mode fill is a lazy projection over the stored stratum
-   *    (complete rows need none).
-   * Then column `c`'s training triple is
-   * `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
-   * masked triple (one Spark job) per step, no ring subtraction (no
-   * float drift), and the match mask keeps the inner-join training
-   * semantics. The update is a `withColumn` on the joined stratum,
-   * guarded so a row with no dim match or a NULL dim feature keeps its
-   * value. Each non-final iteration checkpoints the stratum once and
-   * drops the previous one; the final iteration is returned lazily.
-   * A warm call therefore runs one job per broadcast dim, the setup
-   * job, C·I column steps, I − 1 checkpoints and the caller's one
-   * consuming job (`MiceJoinSpec` pins it).
-   *
-   * With ONE imputed column every incomplete row is missing it, so the
-   * static triple IS the training triple: the setup job stores nothing,
-   * and the update is a lazy filter of `J` to the missing rows — the
-   * work of a single [[imputeContOverStar]] round.
+   * Checks the star, maps `cfg` onto a [[Mice.Config]] and runs the
+   * MICE-high loop [[imputeHigh]], which [[Mice.partitioned]] runs with
+   * no dims.
    */
   def imputeChainedOverStar(fact: DataFrame, dims: Seq[Factorized.StarDim],
                             cfg: ChainConfig,
                             tm: Mice.Timings = new Mice.Timings): DataFrame = {
-    val spark = fact.sparkSession
-    Graft.register(spark)
     require(cfg.dimNum.isEmpty && cfg.dimCat.isEmpty,
       "star chain: dim features are declared on each StarDim, not in ChainConfig")
     dims.foreach(d => requireUniqueKey(d.df, d.key))
     require(cfg.imputeCont.forall(cfg.factNum.contains) &&
       cfg.imputeCat.forall(cfg.factCat.contains),
       "imputed columns must be fact-side features (factNum/factCat)")
-    val dimNumAll = dims.flatMap(_.num)
-    val dimCatAll = dims.flatMap(_.cat)
-    val dimCols = dimNumAll ++ dimCatAll
+    val dimCols = dims.flatMap(d => d.num ++ d.cat)
     require(dimCols.intersect(fact.columns.toSeq).isEmpty,
       s"dim feature names must be disjoint from fact's: ${dimCols.intersect(fact.columns.toSeq)}")
     require(dimCols.distinct.length == dimCols.length,
       "dim feature names must be pairwise disjoint across dims")
-    val miceCfg = Mice.Config(
+    imputeHigh(fact, dims, Mice.Config(
       contCols = cfg.factNum, catCols = cfg.factCat,
       imputeCont = cfg.imputeCont, imputeCat = cfg.imputeCat,
       iterations = cfg.iterations, lambda = cfg.lambda, shrinkage = cfg.shrinkage,
-      stochastic = cfg.stochastic, seed = cfg.seed)
+      stochastic = cfg.stochastic, seed = cfg.seed), cfg.normalize, tm)
+  }
+
+  /**
+   * The MICE-high loop (imputation_high.cpp:20-35) over `fact` ⋈ `dims`
+   * — `dims` empty for a flat table ([[Mice.partitioned]]). Training
+   * features are `cfg.contCols ++ dims.num` and `cfg.catCols ++
+   * dims.cat`, in that order: [[Mice.baseline]]'s column order on the
+   * materialized join. The setup is ONE query and ONE job:
+   *  - the query `J` left-joins the cast, flagged, not yet filled fact
+   *    with every dim through [[Factorized.hashJoinIfSafe]]'s size guard
+   *    (each dim carries a match marker; unique dims cannot fan out), so
+   *    `J` holds one row per fact row;
+   *  - one job over `J` ([[setup]], each dim broadcast once) folds the
+   *    COMPLETE stratum's triple — rows with no imputed column missing
+   *    and every dim matched, which never change — folds each imputed
+   *    column's observed count and sum (or per-category counts) over
+   *    every fact row, the mean/mode init of [[Mice.prepare]] (ties to
+   *    the lowest category), and stores the INCOMPLETE rows with their
+   *    dim features, layout-preserving;
+   *  - the mean/mode fill is a lazy projection over the stored stratum
+   *    (complete rows need none).
+   * Then column `c`'s training triple is
+   * `static + cofactorMasked(incomplete, matched ∧ ¬flag_c)` — one
+   * masked triple (one Spark job) per step, no ring subtraction (no
+   * float drift), and the match mask keeps the inner-join training
+   * semantics. A Naive Bayes column (`cfg.catModel`) instead ring-adds
+   * the per-class aggregates over the same masked rows to its per-class
+   * static aggregates over the complete, matched rows, computed once per
+   * call (phase `cofactor_static`). The update is [[Mice.imputeColumn]],
+   * guarded so a row with no dim match or a NULL dim feature keeps its
+   * value. Each non-final iteration checkpoints the stratum once and
+   * drops the previous one; the final iteration is returned lazily.
+   * A warm call therefore runs one job per broadcast dim, the setup
+   * job, C·I column steps, I − 1 checkpoints and the caller's one
+   * consuming job (`MiceJoinSpec` and `MiceSpec` pin it).
+   *
+   * With ONE imputed column every incomplete row is missing it, so the
+   * static triple IS the training triple: the setup job stores nothing,
+   * and the update is a lazy filter of `J` to the missing rows — the
+   * work of a single [[imputeContOverStar]] round.
+   */
+  private[mice] def imputeHigh(fact: DataFrame, dims: Seq[Factorized.StarDim],
+                               cfg: Mice.Config, normalize: Boolean,
+                               tm: Mice.Timings): DataFrame = {
+    Graft.register(fact.sparkSession)
     // A NARROW fact plan (scan/checkpoint leaf + projections/filters
     // only — no joins, aggregates, windows) stays UN-materialized: the
     // setup job and the caller's read of the complete stratum re-read
@@ -283,64 +294,53 @@ object MiceJoin {
     // metadata) — measured 277 s → 87 s on the sf100 star round. Wide
     // fact plans keep the checkpoint: re-executing an upstream join per
     // re-read is the worse deal. The fill is not part of `base`: its
-    // values come out of the setup job.
-    val flagged = Mice.flagged(fact, miceCfg)
+    // values come out of the setup job. A narrow fact's leaves are the
+    // result's leaves; Graft.dropCheckpoint(result) releases only the
+    // loop's own generations, never a checkpoint the caller passed in.
+    val flagged = Mice.flagged(fact, cfg)
     val base =
       if (Graft.isNarrowPlan(fact)) flagged
       else tm.time("prepare")(flagged.transform(Graft.checkpoint))
     val outCols = base.columns.toSeq
-    val numAll = cfg.factNum ++ dimNumAll
-    val catAll = cfg.factCat ++ dimCatAll
+    val numAll = cfg.contCols ++ dims.flatMap(_.num)
+    val catAll = cfg.catCols ++ dims.flatMap(_.cat)
     val order = cfg.imputeCat ++ cfg.imputeCont // categorical first, the baseline order
     val anyFlag = order.map(c => col(Mice.flag(c))).reduceOption(_ || _).getOrElse(lit(false))
     val marks = dims.indices.map(i => s"__graft_dim${i}_match")
     val matched = marks.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
+    // a row with no match in some dim (or a NULL dim feature) keeps its
+    // value — explicitly tested, because only numeric NULLs propagate
+    // into a NULL pred; categorical NULLs would otherwise yield a
+    // silently-biased prediction (LinReg's zero one-hot block / Lda's
+    // first-class tiebreak over NULL scores)
+    val guard = matched && !anyDimFeatureNull(dims.flatMap(d => d.num ++ d.cat))
     val joined = dims.zip(marks).foldLeft(base) { case (acc, (d, m)) =>
       Factorized.hashJoinIfSafe(acc,
         d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m): _*),
         Seq(d.key), joinType = "left")
     }
     val trainsOnIncomplete = order.length > 1
-    // the static triple's block layout is numAll/catAll = [factNum ++
-    // dim1.num ++ …, factCat ++ dim1.cat ++ …] — exactly Mice.baseline's
-    // column order on the materialized star join
     val (static, init, stored) = tm.time("partition")(
-      setup(joined, numAll, catAll, !anyFlag && matched, miceCfg,
+      setup(joined, numAll, catAll, !anyFlag && matched, cfg,
         keep = if (trainsOnIncomplete) order.map(Mice.flag) else Seq()))
-    var incomplete = Mice.fill(stored.getOrElse(joined.filter(anyFlag)), miceCfg, init)
+    def perClass(df: DataFrame, c: String) =
+      Graft.cofactorPerClass(df, numAll, catAll.filterNot(_ == c), label = c, nb = true)
+    // every complete row has each NB label observed, and never changes
+    val nbStatic = order.filter(Mice.usesNb(cfg, _)).map(c =>
+      c -> tm.time("cofactor_static")(perClass(joined.filter(!anyFlag && matched), c))).toMap
+    var incomplete = Mice.fill(stored.getOrElse(joined.filter(anyFlag)), cfg, init)
     var lastCp = incomplete
 
     for (iter <- 1 to cfg.iterations) {
       for (c <- order) {
-        val fl = col(Mice.flag(c))
-        val triple =
+        val cur = incomplete
+        val trainRows = matched && !col(Mice.flag(c))
+        incomplete = Mice.imputeColumn(cur, cfg, c, numAll, catAll, normalize, guard, iter, tm)(
           if (!trainsOnIncomplete) static
-          else tm.time("cofactor")(Triple.add(static, Graft.cofactorMasked(
-            incomplete, numAll, catAll, Seq(Some(matched && !fl))).head))
-        val isCont = cfg.imputeCont.contains(c)
-        val pred = tm.time("train") {
-          if (isCont) {
-            val label = cfg.factNum.indexOf(c)
-            val model = LinReg.train(triple, label, cfg.lambda, normalize = cfg.normalize)
-            LinReg.predict(model,
-              numAll.filterNot(_ == c).map(col), catAll.map(col),
-              addNoise = cfg.stochastic, seed = cfg.seed + iter * 131 + label)
-          } else {
-            val label = cfg.factCat.indexOf(c)
-            val model = graft.ml.Lda.train(triple, label, cfg.shrinkage,
-              normalize = cfg.normalize)
-            graft.ml.Lda.predict(model,
-              numAll.map(col), catAll.filterNot(_ == c).map(col))
-          }
-        }
-        // a row with no match in some dim (or a NULL dim feature) keeps
-        // its value — explicitly tested, because only numeric NULLs
-        // propagate into a NULL pred; categorical NULLs would otherwise
-        // yield a silently-biased prediction (LinReg's zero one-hot
-        // block / Lda's first-class tiebreak over NULL scores)
-        incomplete = incomplete.withColumn(c,
-          when(fl && matched && !anyDimFeatureNull(dimCols), coalesce(pred, col(c)))
-            .otherwise(col(c)))
+          else tm.time("cofactor")(Triple.add(static,
+            Graft.cofactorMasked(cur, numAll, catAll, Seq(Some(trainRows))).head)),
+          if (!trainsOnIncomplete) nbStatic(c)
+          else Triple.addPerClass(nbStatic(c), tm.time("cofactor")(perClass(cur.filter(trainRows), c))))
       }
       // bound lineage and keep the next iteration's training scans off
       // this one's projections — except after the LAST iteration, whose
@@ -359,7 +359,7 @@ object MiceJoin {
       .drop(order.map(Mice.flag): _*)
   }
 
-  /** The star chain's setup: ONE job over `joined` (the flagged, not yet
+  /** The MICE-high loop's setup: ONE job over `joined` (the flagged, not yet
     * filled fact left-joined with every dim) that folds
     *  - the cofactor triple over `num`/`cat` of the rows where `static`
     *    holds (the complete, fully matched stratum), and

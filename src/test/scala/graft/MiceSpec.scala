@@ -134,10 +134,11 @@ class MiceSpec extends AnyFunSuite {
   }
 
   test("partitioned bounded work: each extra iteration runs one job per column plus its checkpoint") {
-    // J(n) = set-up + n·I + write: partitioned checkpoints every
-    // iteration, so J(2)-J(1) and J(3)-J(2) are each one iteration —
-    // the fused full+delta triple, one refresh+next-delta triple per
-    // further column, and the checkpoint. The caller's write is counted.
+    // J(n) = set-up + n·I + (n − 1) + write: every non-final iteration
+    // is checkpointed, so J(2)-J(1) and J(3)-J(2) are each one
+    // iteration — one masked triple per column and the checkpoint. The
+    // setup is one job (static triple, init, stored incomplete stratum).
+    // The caller's write is counted.
     val in = withNulls.localCheckpoint()
     def run(iterations: Int): (Long, Long) = org.apache.spark.graft.JobCounter(spark.sparkContext) {
       val out = Mice.partitioned(in, cfg.copy(iterations = iterations))
@@ -149,11 +150,60 @@ class MiceSpec extends AnyFunSuite {
     info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
     val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
-    // measured on local[4]: 8, 11, 14 jobs (36, 48, 60 tasks) — 3 jobs
+    // measured on local[4]: 4, 7, 10 jobs (20, 32, 44 tasks) — 3 jobs
     // per iteration over the 4-partition incomplete stratum, 4 tasks each
     val columns = cfg.imputeCont.size + cfg.imputeCat.size
     assert(iter2 == (columns + 1, 4L * (columns + 1)),
       s"(jobs, tasks) per extra iteration: $iter2")
+    assert(j1._1 == 1 + columns + 1 && j2._1 == 1 + 2 * columns + 1 + 1,
+      s"warm calls ran ${j1._1} and ${j2._1} jobs at 1 and 2 iterations")
+  }
+
+  test("dropCheckpoint(result) leaves a checkpoint the caller passed in readable") {
+    // a narrow input is read in place, so its checkpoint is one of the
+    // result's leaves; only the loop's own generations are released
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    val in = withNulls.localCheckpoint()
+    val inRdd = in.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.head
+    val out = Mice.partitioned(in, cfg.copy(iterations = 2))
+    assert(out.queryExecution.analyzed.exists {
+      case l: LogicalRDD => l.rdd.id == inRdd.id
+      case _ => false
+    }, "the result must read the narrow input in place")
+    val own = out.queryExecution.analyzed.collect {
+      case l: LogicalRDD if l.rdd.id != inRdd.id => l.rdd
+    }
+    assert(own.nonEmpty, "two iterations must leave a generation in the result")
+    assert(out.count() == rows.size)
+    Graft.dropCheckpoint(out)
+    own.foreach(r => assert(r.getStorageLevel == StorageLevel.NONE, s"generation ${r.id} not released"))
+    assert(inRdd.getStorageLevel != StorageLevel.NONE, "the caller's checkpoint was released")
+    assert(in.count() == rows.size && in.filter($"b".isNull).count() == rows.count(_.bMiss))
+  }
+
+  test("no imputed column: partitioned returns the cast input, as baseline does") {
+    val none = cfg.copy(imputeCont = Seq(), imputeCat = Seq())
+    def rowsOf(df: org.apache.spark.sql.DataFrame) = df.orderBy($"id").collect().toSeq
+    val base = Mice.baseline(withNulls, none)
+    val part = Mice.partitioned(withNulls, none)
+    assert(part.columns.toSeq == base.columns.toSeq)
+    assert(rowsOf(part) == rowsOf(base))
+    assert(part.filter($"b".isNull).count() == rows.count(_.bMiss))
+    Seq(base, part).foreach(Graft.dropCheckpoint)
+  }
+
+  test("a NULL feature's NULL prediction never reaches an imputed cell") {
+    // row 0 has `a` NULL and `b` missing: b's regression over `a` predicts
+    // NULL there, and the step keeps the mean init instead
+    val in = withNulls
+      .withColumn("a", when($"id" === 0, lit(null)).otherwise($"a"))
+      .withColumn("b", when($"id" === 0, lit(null)).otherwise($"b"))
+    for ((name, out) <- Seq("baseline" -> Mice.baseline(in, cfg), "partitioned" -> Mice.partitioned(in, cfg))) {
+      val nulls = out.filter($"b".isNull).count()
+      assert(nulls == 0, s"$name left $nulls NULL cells in b")
+      Graft.dropCheckpoint(out)
+    }
   }
 
   test("mode init: a tied categorical column imputes its lowest tied value at any partition count") {
