@@ -156,7 +156,8 @@ object Bench {
     noop(g)
   }
   // the multi-key curation cut (GROUP BY flag, status → CatPackedKeys
-  // Long label) on the same scan+treeReduce route — route required, so
+  // Long label) on the same grouped kernel partial as the one-key row
+  // above, merged by Spark's own final aggregate — route required, so
   // a gate/probe regression that silently demotes to the row aggregate
   // fails the bench rather than recording a slower number
   private def columnarCofactorGroupedMulti(spark: SparkSession, dir: String): Unit = {

@@ -3,6 +3,7 @@ package graft
 import graft.agg.{CofactorAggregate, MultiplyTriple, SumTriple, ToCofactor}
 import graft.ring.Triple
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions.call_function
 
 /**
@@ -203,6 +204,9 @@ object Graft {
   /** Collect the cofactor triple of `df` over the given continuous and
     * categorical columns in ONE Spark job: the columnar kernel when it
     * can harvest the plan, else [[liftTriples]]'s per-partition fold.
+    * Both routes keep one contract: the job runs under a SQL execution
+    * id, and the driver merges the partitions' buffers in
+    * partition-index order ([[mergeBuffers]]) under `maxCategories`.
     * The triple — a few KB — is the only thing that reaches the driver. */
   def cofactor(df: DataFrame, num: Seq[String], cat: Seq[String], nb: Boolean = false): Triple = {
     register(df.sparkSession)
@@ -246,24 +250,19 @@ object Graft {
     liftTriples(df, num, cat, nb, filters).map(_._2)
   }
 
-  /** Runs `df` as ONE Spark job — `queryExecution.toRdd` under a new SQL
-    * execution id, so query listeners see it like any action — folding
-    * each partition's rows with `fold`. The partials come back in
-    * partition-index order, not task-completion order: a caller that
-    * merges them in array order gets a deterministic result. */
+  /** [[foldPartitions]] over the rows of `df` (`queryExecution.toRdd`). */
   private[graft] def foldPartitions[T: scala.reflect.ClassTag](df: DataFrame)(
       fold: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): Array[T] =
-    underExecution(df, "cofactor")(rows => df.sparkSession.sparkContext.runJob(rows, fold))
+    foldPartitions(df.queryExecution, df.queryExecution.toRdd)(fold)
 
-  /** `body` over `df.queryExecution.toRdd`, under a new SQL execution id
-    * named `name`: the jobs `body` runs, and the broadcasts `toRdd`
-    * runs first, reach query listeners as one query, and each broadcast
-    * runs once however many RDDs `body` derives from the rows. */
-  private def underExecution[T](df: DataFrame, name: String)(
-      body: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
-    val qe = df.queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(body(qe.toRdd))
-  }
+  /** Runs `rows` as ONE Spark job under a new SQL execution id for `qe`
+    * (built inside it, so the broadcasts `toRdd` runs first join the
+    * same query), folding each partition with `fold`. The partials come
+    * back in partition-index order, not task-completion order: a caller
+    * that merges them in array order gets a deterministic result. */
+  private[graft] def foldPartitions[R, T: scala.reflect.ClassTag](qe: QueryExecution,
+      rows: => org.apache.spark.rdd.RDD[R])(fold: Iterator[R] => T): Array[T] =
+    SQLExecution.withNewExecutionId(qe, Some("cofactor"))(qe.sparkSession.sparkContext.runJob(rows, fold))
 
   /** The [[CofactorAggregate]] of the row folds: fields `0 until num`
     * of each row are doubles, the next `cat` fields ints, under the
@@ -282,9 +281,9 @@ object Graft {
 
   /** One partition's slot buffers: slot `s` folds the rows whose field
     * `agg.children.size + s` is TRUE — a NULL predicate drops the row,
-    * as `filter` would. Returns the serialized buffers in slot order. */
+    * as `filter` would. Returns the serialized buffers keyed by slot. */
   private[graft] def foldSlots(agg: CofactorAggregate, slots: Int,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Array[Array[Byte]] = {
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Array[(Int, Array[Byte])] = {
     val k = agg.children.size
     val bufs = Array.fill(slots)(agg.createAggregationBuffer())
     rows.foreach { r =>
@@ -294,18 +293,22 @@ object Graft {
         s += 1
       }
     }
-    bufs.map(agg.serialize)
+    bufs.indices.map(s => s -> agg.serialize(bufs(s))).toArray
   }
 
-  /** The driver side of [[foldSlots]]: each slot's partials merged in
-    * array (partition-index) order. */
-  private[graft] def mergeSlots(agg: CofactorAggregate, slots: Int,
-                                partials: Seq[Array[Array[Byte]]]): Seq[Triple] =
-    (0 until slots).map { s =>
-      val b = agg.createAggregationBuffer()
-      partials.foreach(p => b.merge(agg.deserialize(p(s))))
-      b.toTriple
-    }
+  /** The one driver merge of every eager triple, row fold and kernel
+    * alike: each partition's serialized buffers, keyed by filter slot or
+    * label, merged per key into an `empty()` buffer in array
+    * (partition-index) order — bit-identical across calls, and under
+    * `empty()`'s `maxCategories` over the merged maps. Every key in
+    * `keys` is present. Returns (key, triple) pairs sorted by key. */
+  private[graft] def mergeBuffers[K: Ordering](empty: () => graft.agg.CofactorBuffer, keys: Seq[K],
+      partials: Array[Array[(K, Array[Byte])]]): Seq[(K, Triple)] = {
+    val merged = scala.collection.mutable.TreeMap.from(keys.map(_ -> empty()))
+    for (part <- partials; (key, bytes) <- part)
+      merged.getOrElseUpdate(key, empty()).merge(graft.agg.CofactorBuffer.fromBytes(bytes))
+    merged.iterator.map { case (key, b) => key -> b.toTriple }.toSeq
+  }
 
   /** The eager row route of [[cofactor]], [[cofactorMasked]] and
     * [[cofactorPerClass]]: ONE Spark job ([[foldPartitions]]) over the
@@ -313,8 +316,7 @@ object Graft {
     * [[CofactorAggregate]]`.update` — the null-skip, casts and
     * `maxCategories` guard of `sum_to_triple` — into one buffer per
     * filter slot ([[foldSlots]]), or with a `label` into one buffer per
-    * non-NULL label value. The driver merges the serialized partials in
-    * partition-index order, so two calls return bit-identical triples.
+    * non-NULL label value; the driver merges them with [[mergeBuffers]].
     * Returns (slot index or label, triple) pairs sorted by key; without
     * a label every slot is present. */
   private def liftTriples(df: DataFrame, num: Seq[String], cat: Seq[String], nb: Boolean,
@@ -328,12 +330,10 @@ object Graft {
     val proj = df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"__g$i") }: _*)
     val agg = rowAggregate(df.sparkSession, num.size, cat.size, nb)
     val slots = filters.size
-    if (label.isEmpty)
-      mergeSlots(agg, slots, foldPartitions(proj)(rows => foldSlots(agg, slots, rows)).toSeq)
-        .zipWithIndex.map(_.swap)
-    else {
-      val labelOrd = k + slots
-      val partials = foldPartitions(proj) { rows =>
+    val labelOrd = k + slots
+    val partials = foldPartitions(proj) { rows =>
+      if (label.isEmpty) foldSlots(agg, slots, rows)
+      else {
         val bufs = scala.collection.mutable.LongMap.empty[graft.agg.CofactorBuffer]
         rows.foreach { r =>
           if (!r.isNullAt(labelOrd))
@@ -341,11 +341,9 @@ object Graft {
         }
         bufs.iterator.map { case (l, b) => l.toInt -> agg.serialize(b) }.toArray
       }
-      val merged = scala.collection.mutable.TreeMap[Int, graft.agg.CofactorBuffer]()
-      for (part <- partials; (key, bytes) <- part)
-        merged.getOrElseUpdate(key, agg.createAggregationBuffer()).merge(agg.deserialize(bytes))
-      merged.iterator.map { case (key, b) => key -> b.toTriple }.toSeq
     }
+    mergeBuffers(() => agg.createAggregationBuffer(), if (label.isEmpty) 0 until slots else Nil,
+      partials)
   }
 
   /** `sum_triple(t)` over every row of `df`, eagerly, in ONE Spark job
@@ -514,7 +512,9 @@ object Graft {
     // recomputes from the frozen physical plan — deterministic, and
     // strictly safer than localCheckpoint's unrecoverable-block
     // failure mode.
-    val (stored, folds) = underExecution(df, "checkpoint") { rows =>
+    val qe = df.queryExecution
+    val (stored, folds) = SQLExecution.withNewExecutionId(qe, Some("checkpoint")) {
+      val rows = qe.toRdd
       // toRdd's UnsafeRows are reused per partition iterator — copy
       // before storing, exactly as the public checkpoint path does
       val stored = rows.mapPartitions(_.filter(keep).map(_.copy()))
@@ -876,7 +876,9 @@ object Graft {
     * form a NULL group whose key then unboxes to 0 — silently merging
     * unlabeled rows into class 0 is never what training wants). Bare
     * scans route through the columnar kernel, like [[cofactor]]; other
-    * plans fold one buffer per label per partition ([[liftTriples]]). */
+    * plans fold one buffer per label per partition ([[liftTriples]]).
+    * Either way one job whose per-label buffers merge on the driver
+    * ([[mergeBuffers]]). */
   def cofactorPerClass(df: DataFrame, num: Seq[String], cat: Seq[String],
                        label: String, nb: Boolean = false): Seq[(Int, Triple)] = {
     register(df.sparkSession)

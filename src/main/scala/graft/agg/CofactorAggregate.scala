@@ -196,37 +196,6 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
     }
   }
 
-  /** Fold an already-lifted triple into the state (sum.cpp:57-261). */
-  def addTriple(t: Triple): Unit = {
-    n += t.n
-    var i = 0
-    while (i < lin.length) { lin(i) += t.lin(i); i += 1 }
-    i = 0
-    while (i < quad.length) { quad(i) += t.quad(i); i += 1 }
-    var j = 0
-    while (j < catCols) {
-      t.linCat(j).foreach { case (k, v) =>
-        catMaps(j).getOrElseUpdate(k.toLong, new Array[Double](catSlots))(0) += v
-      }
-      if (!nbMode) {
-        i = 0
-        while (i < numCols) {
-          t.quadNumCat(i * catCols + j).foreach { case (k, v) =>
-            catMaps(j).getOrElseUpdate(k.toLong, new Array[Double](catSlots))(i + 1) += v
-          }
-          i += 1
-        }
-      }
-      j += 1
-    }
-    j = 0
-    while (j < quadCat.length) {
-      val pm = quadCat(j)
-      t.quadCat(j).foreach { case (k, v) => pm.getOrElseUpdate(k, new Array[Double](1))(0) += v }
-      j += 1
-    }
-  }
-
   def toTriple: Triple = Triple(
     n,
     lin.clone(),
@@ -249,10 +218,20 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
 }
 
 object CofactorBuffer {
-  def fromTriple(t: Triple, nbMode: Boolean): CofactorBuffer = {
-    val b = new CofactorBuffer(t.numCols, t.catCols, nbMode)
-    b.addTriple(t)
-    b
+  /** Buffer-direct binary form (NB flag + [[TripleCodec.writeBuffer]]),
+    * no Triple intermediate: the aggregate's and every eager partial's. */
+  def toBytes(b: CofactorBuffer): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeBoolean(b.nbMode)
+    TripleCodec.writeBuffer(b, out)
+    out.flush()
+    bos.toByteArray
+  }
+
+  def fromBytes(bytes: Array[Byte]): CofactorBuffer = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    TripleCodec.readBuffer(in, in.readBoolean())
   }
 }
 
@@ -409,23 +388,8 @@ case class CofactorAggregate(
 
   override def eval(buffer: CofactorBuffer): Any = TripleCodec.toCatalyst(buffer.toTriple, nbMode)
 
-  // Buffer-direct binary form: no Triple/immutable-Map intermediate —
-  // this runs once per key per partial-agg flush, so grouped cofactors
-  // over high-cardinality keys are dominated by it.
-  override def serialize(buffer: CofactorBuffer): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeBoolean(buffer.nbMode)
-    TripleCodec.writeBuffer(buffer, out)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): CofactorBuffer = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val nb = in.readBoolean()
-    TripleCodec.readBuffer(in, nb)
-  }
+  override def serialize(buffer: CofactorBuffer): Array[Byte] = CofactorBuffer.toBytes(buffer)
+  override def deserialize(bytes: Array[Byte]): CofactorBuffer = CofactorBuffer.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CofactorAggregate =
     copy(mutableAggBufferOffset = newOffset)

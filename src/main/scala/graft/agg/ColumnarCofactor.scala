@@ -2,7 +2,7 @@ package graft.agg
 
 import graft.ring.Triple
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, EndsWith, EqualTo, ExprId, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or, StartsWith}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -23,9 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
  * JIT-vectorizable shape — while the categorical block reuses
  * [[CofactorBuffer.updateCats]] per row, so the map layout, canonical
  * form, and the max-categories OOM guard are the single certified
- * implementation. Per-partition partials are [[Triple]]s merged on the
- * driver with the ring's own `Triple.add` (KBs per partition — the same
- * content the row aggregate shuffles).
+ * implementation. One kernel [[pass]] serves every entry; per-partition
+ * buffers merge on the driver as the row fold's do (KBs per partition —
+ * the same content the row aggregate shuffles).
  *
  * Semantics match [[CofactorAggregate]] exactly: float/double columns
  * are continuous, integer columns categorical, rows with any NULL input
@@ -37,8 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * partial-aggregation plan already carries across partition counts.
  *
  * Scale: the harvested RDD is the scan's own — one task per parquet
- * split, no shuffle at all; the only data movement is one triple per
- * partition to the driver. This is strictly less traffic than the row
+ * split, no shuffle at all; the only data movement is one buffer per
+ * class per partition to the driver. This is strictly less traffic than the row
  * aggregate's partial/final exchange. The harvest accepts a bare
  * columnar scan plus attribute-only projections and FILTERS it can
  * compile itself (attr-vs-literal comparisons, contains/startsWith/
@@ -613,29 +613,12 @@ object ColumnarCofactor {
    * Compute the cofactor triple of `src` over the given continuous and
    * categorical specs via the columnar scan, or `None` when the plan is
    * not a bare harvestable scan (caller falls back to
-   * `agg(sumTriple(...))`).
+   * `agg(sumTriple(...))`). One job: see [[eager]].
    */
   def cofactor(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec] = Nil,
                nbMode: Boolean = false,
                maxCategories: Int = CofactorAggregate.confMaxCategories()): Option[Triple] =
-    compile(src, nums, cats, nbMode, maxCategories).map { case (scan, compiled) =>
-      val partials = scan.executeColumnar().mapPartitions { batches =>
-        val acc = new BatchAcc(compiled)
-        batches.foreach(acc.addBatch)
-        Iterator.single(acc.buf.toTriple)
-      }
-      // executor-side combine: treeReduce folds the P per-partition
-      // triples in O(log P) rounds ON EXECUTORS, so the driver ever
-      // holds O(fan-in) triples — collect()+serial fold made the driver
-      // fetch P × map-size and was the kernel's only serial section
-      // (real at 100 TB split counts with near-maxCategories maps).
-      // Triple.add is associative/commutative (spec-pinned), so the
-      // tree shape cannot change the result.
-      if (partials.getNumPartitions == 0) {
-        val b = new CofactorBuffer(nums.size, cats.size, nbMode)
-        b.toTriple
-      } else partials.treeReduce(Triple.add, depth = 2)
-    }
+    eager(src, nums, cats, None, nbMode, maxCategories).map(_.head._2)
 
   /**
    * Per-class cofactor triples (the QDA/LDA/NB training input —
@@ -679,22 +662,28 @@ object ColumnarCofactor {
   /** [[cofactorPerClass]] with a LONG class key: the label channel
     * decodes into a Long, so full-range long keys (no 2^32 guard) and
     * [[CatShortString]] labels up to 8 packed UTF-8 bytes ride the
-    * kernel. The triples come back to the driver, as training needs;
-    * grouped results that stay distributed use [[groupedPartials]]. */
+    * kernel. The triples come back to the driver ([[eager]]), as training
+    * needs; grouped results that stay distributed use [[groupedPartials]]. */
   def cofactorPerClassLong(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                        label: CatSpec, nbMode: Boolean = false,
                        maxCategories: Int = CofactorAggregate.confMaxCategories()): Option[Seq[(Long, Triple)]] =
-    compile(src, nums, cats :+ label, nbMode, maxCategories).map { case (scan, compiled) =>
-      val partials = scan.executeColumnar().mapPartitions { batches =>
-        val acc = new BatchAcc(compiled, labelMode = true)
-        batches.foreach(acc.addBatch)
-        Iterator.single(acc.perClassResult)
+    eager(src, nums, cats, Some(label), nbMode, maxCategories)
+
+  /** The row fold's eager contract: ONE job under the pruned frame's SQL
+    * execution id (`Graft.foldPartitions`), each partition sending its
+    * serialized buffers (one, or one per label) to the driver's merge
+    * (`Graft.mergeBuffers`): partition-index order, `maxCategories`
+    * over the merged maps. Triples sorted by label. */
+  private def eager(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
+      label: Option[CatSpec], nbMode: Boolean, maxCategories: Int): Option[Seq[(Long, Triple)]] =
+    pass(src, nums, cats, label, nbMode, maxCategories) { acc =>
+      Iterator.single(acc.buffers.map { case (k, b) => k -> CofactorBuffer.toBytes(b) }.toArray)
+    }.map { case (qe, partials) =>
+      val empty = () => {
+        val b = new CofactorBuffer(nums.size, cats.size, nbMode); b.maxCategories = maxCategories; b
       }
-      // executor-side combine, same rationale as [[cofactor]]:
-      // addPerClass is associative/commutative and label-sorted, so the
-      // tree fold is order-insensitive.
-      if (partials.getNumPartitions == 0) Seq.empty[(Long, Triple)]
-      else partials.treeReduce(Triple.addPerClass[Long], depth = 2)
+      graft.Graft.mergeBuffers(empty, if (label.isEmpty) Seq(0L) else Nil,
+        graft.Graft.foldPartitions(qe, partials)(_.next()))
     }
 
   /** The grouped kernel as a PARTIAL aggregate: one row per (group, scan
@@ -709,22 +698,29 @@ object ColumnarCofactor {
   def groupedPartials(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                       label: Option[CatSpec], keyTypes: Seq[DataType], nbMode: Boolean = false,
                       maxCategories: Int = CofactorAggregate.confMaxCategories()):
-      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] =
-    compile(src, nums, cats ++ label, nbMode, maxCategories).map { case (scan, compiled) =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      val rowTypes = (keyTypes :+ TripleCodec.dataType(nbMode)).toArray
-      scan.executeColumnar().mapPartitions { batches =>
+      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val rowTypes = (keyTypes :+ TripleCodec.dataType(nbMode)).toArray
+    pass[InternalRow](src, nums, cats, label, nbMode, maxCategories) { acc =>
+      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(rowTypes)
+      acc.buffers.map { case (kv, b) =>
+        val keys = label.fold(Seq.empty[Any])(graft.plans.KernelKeys.unpack(_, keyTypes, kv))
+        proj(InternalRow.fromSeq(keys :+ TripleCodec.toCatalyst(b.toTriple, nbMode)))
+      }
+    }.map(_._2)
+  }
+
+  /** The one kernel pass behind every entry: each scan partition's
+    * batches fold into one [[BatchAcc]] (`label` its last categorical),
+    * then `emit`. With the pruned frame's query execution. */
+  private def pass[T: scala.reflect.ClassTag](src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
+      label: Option[CatSpec], nbMode: Boolean, maxCategories: Int)(
+      emit: BatchAcc => Iterator[T]): Option[(QueryExecution, org.apache.spark.rdd.RDD[T])] =
+    compile(src, nums, cats ++ label, nbMode, maxCategories).map { case (qe, scan, compiled) =>
+      qe -> scan.executeColumnar().mapPartitions { batches =>
         val acc = new BatchAcc(compiled, labelMode = label.isDefined)
         batches.foreach(acc.addBatch)
-        val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(rowTypes)
-        val groups = label match {
-          case Some(ls) => acc.perClassResult.iterator.map { case (kv, t) =>
-            (graft.plans.KernelKeys.unpack(ls, keyTypes, kv), t) }
-          case None => Iterator.single((Nil, acc.buf.toTriple))
-        }
-        groups.map { case (keys, t) =>
-          proj(InternalRow.fromSeq(keys :+ TripleCodec.toCatalyst(t, nbMode)))
-        }
+        emit(acc)
       }
     }
 
@@ -740,7 +736,7 @@ object ColumnarCofactor {
 
   private def compile(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                nbMode: Boolean,
-               maxCategories: Int): Option[(SparkPlan, Compiled)] = {
+               maxCategories: Int): Option[(QueryExecution, SparkPlan, Compiled)] = {
     // categorical-only cofactors are a shape the ROW aggregate supports —
     // refuse (None) so callers fall back, rather than crashing the call
     if (nums.isEmpty) return None
@@ -857,7 +853,7 @@ object ColumnarCofactor {
         catKind, catOrds, catT,
         src.sparkSession.sessionState.conf.sessionLocalTimeZone, pred,
         labelDict = cats.collectFirst { case CatDictString(_, d) => d }.orNull)
-      Some((scan, compiled))
+      Some((pruned.queryExecution, scan, compiled))
     }
   }
 
@@ -905,8 +901,9 @@ object ColumnarCofactor {
           "this looks like an ID, not a label (raise spark.graft.cofactor.maxCategories to override)")
       b
     }
-    def perClassResult: Seq[(Long, Triple)] =
-      byClass.toSeq.map { case (k, b) => (k, b.toTriple) }.sortBy(_._1)
+    /** The flat buffer keyed 0, or each class's keyed by its label. */
+    def buffers: Iterator[(Long, CofactorBuffer)] =
+      if (labelMode) byClass.iterator else Iterator.single(0L -> buf)
 
     // ---- dense categorical fast path (flat mode) -------------------
     // A stage-truncated profile of this loop showed the per-row LongMap

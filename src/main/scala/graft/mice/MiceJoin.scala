@@ -398,7 +398,7 @@ object MiceJoin {
       }
     val init = new Mice.InitStats(nCont, nCat)
     parts.foreach(p => init.merge(p._2))
-    (Graft.mergeSlots(agg, 1, parts.map(_._1).toSeq).head, init, stored)
+    (Graft.mergeBuffers(() => agg.createAggregationBuffer(), Seq(0), parts.map(_._1)).head._2, init, stored)
   }
 
   /** Fail loudly on a duplicated dim key (see the contract above): one

@@ -212,15 +212,14 @@ object ScaleProbe {
     } // !treeOnly
 
     // --- columnar kernel partial merge: driver cost vs partition count ---
-    // (round 13: collect+serial-driver-fold → treeReduce). A fat
-    // categorical (l_partkey, 20k distinct at sf0.1) makes each
-    // per-partition triple a ~20k-entry map stack. The same rows are
+    // A fat categorical (l_partkey, 20k distinct at sf0.1) makes each
+    // per-partition buffer a ~20k-entry map stack. The same rows are
     // written once as 256 small files; maxPartitionBytes then controls
     // how many scan partitions the ladder reads them as (file packing
-    // at 128m, ~one-per-file at 1m) — more partials from identical
-    // data. Near-flat wall-clock down the ladder = the merge is
-    // executor-side (O(log P) tree rounds), not a driver-serial fold
-    // over P map-sized triples.
+    // at 128m, ~one-per-file at 64k) — more partials from identical
+    // data. The driver merges the P serialized buffers in place
+    // (`Graft.mergeBuffers`), so the growth down the ladder is the
+    // merge's cost per fat partial.
     val treeDir = "/tmp/graft_treeprobe/lineitem256"
     if (!new java.io.File(s"$treeDir/_SUCCESS").exists())
       spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")

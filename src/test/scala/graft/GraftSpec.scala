@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The eager row route of the triple API: `Graft.cofactor`,
-  * `cofactorMasked` and `cofactorPerClass` over a plan the columnar
-  * kernel cannot harvest (a checkpointed frame) each run ONE Spark job
-  * and match the `sum_to_triple` aggregate; plus `hashJoinIfSafe`'s
-  * broadcast rule and the factorized join and star routes that end in
-  * one of these calls. */
+/** The eager contract of the triple API: `Graft.cofactor`,
+  * `cofactorMasked` and `cofactorPerClass` each run ONE Spark job and
+  * match the `sum_to_triple` aggregate, on the row route (a
+  * checkpointed frame the columnar kernel cannot harvest) and on the
+  * kernel route (a multi-file parquet scan) alike: one job under a SQL
+  * execution id, one task per scan partition, bit-identical repeats and
+  * the `maxCategories` guard over the merged result. Plus
+  * `hashJoinIfSafe`'s broadcast rule and the factorized join and star
+  * routes that end in one of these calls. */
 class GraftSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -70,6 +73,30 @@ class GraftSpec extends AnyFunSuite {
     maps("quadCat", got.quadCat, want.quadCat)
   }
 
+  /** `rows` written as one parquet file per `part` value, read back as
+    * a harvestable scan. Under [[oneSplitPerFile]] each file is one
+    * scan partition. */
+  private def parquetScan(rows: Seq[Row], parts: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graftspec").toFile.getAbsolutePath + "/t"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      .withColumn("part", $"id" % parts)
+      .repartition(parts, $"part").write.partitionBy("part").parquet(dir)
+    harvested(spark.read.parquet(dir))
+  }
+
+  private def harvested(df: DataFrame): DataFrame = {
+    assert(graft.agg.ColumnarCofactor.canHarvest(df,
+      num.map(graft.agg.ColumnarCofactor.NumCol), cat.map(graft.agg.ColumnarCofactor.CatCol)),
+      s"the kernel must harvest the scan:\n${df.queryExecution.executedPlan}")
+    df
+  }
+
+  /** `body` with scan splits too small to pack two files together. */
+  private def oneSplitPerFile[T](body: => T): T = {
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64k")
+    try body finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
   private def oneJob[T](what: String)(body: => T): T = {
     var out: Option[T] = None
     val (jobs, _) = JobCounter(spark.sparkContext) { out = Some(body) }
@@ -122,19 +149,74 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("the categorical-cardinality guard still throws IllegalStateException") {
-    val df = frame(Seq.tabulate(1000)(i => Row(i, i * 0.5, 1.0, i, i % 3)), 2)
+    val rowRoute = frame(Seq.tabulate(1000)(i => Row(i, i * 0.5, 1.0, i, i % 3)), 2)
+    // kernel route: two files of 10 disjoint categories each — every
+    // partition (and every class in it) stays under the cap of 16, the
+    // merged result holds 20
+    val kernelRoute = parquetScan(Seq.tabulate(300)(i =>
+      Row(i, i * 0.5, 1.0, (i / 2) % 10 + 10 * (i % 2), (i / 20) % 3)), 2)
+    assert(oneSplitPerFile(kernelRoute.rdd.getNumPartitions) == 2)
     spark.conf.set("spark.graft.cofactor.maxCategories", "16")
-    try {
+    try oneSplitPerFile {
       def causes(t: Throwable): Seq[Throwable] = Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
       def rejects(what: String)(body: => Any): Unit = {
         val e = intercept[Exception](body)
         assert(causes(e).exists(_.isInstanceOf[IllegalStateException]), s"$what: unexpected error $e")
       }
-      rejects("cofactor")(Graft.cofactor(df, num, cat))
-      rejects("cofactorMasked")(Graft.cofactorMasked(df, num, cat, Seq(None, Some($"id" > 5))))
-      rejects("cofactorPerClass")(Graft.cofactorPerClass(df, num, cat, "lbl"))
+      for ((route, df) <- Seq("row" -> rowRoute, "kernel" -> kernelRoute)) {
+        rejects(s"$route cofactor")(Graft.cofactor(df, num, cat))
+        rejects(s"$route cofactorMasked")(Graft.cofactorMasked(df, num, cat, Seq(None, Some($"id" > 5))))
+        rejects(s"$route cofactorPerClass")(Graft.cofactorPerClass(df, num, cat, "lbl"))
+      }
     } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
   }
+
+  test("the kernel route keeps the eager contract") { oneSplitPerFile {
+    val parts = 8
+    val df = parquetScan(Seq.tabulate(4000)(row) ++ Seq(
+      Row(4000, null, 1.0, 1, 2), Row(4001, 2.0, 3.0, null, 1), Row(4002, 0.5, 0.25, 3, null)), parts)
+    assert(df.rdd.getNumPartitions == parts)
+    def bits(t: Triple): Seq[Any] = Seq(t.n,
+      t.lin.toSeq.map(java.lang.Double.doubleToRawLongBits),
+      t.quad.toSeq.map(java.lang.Double.doubleToRawLongBits),
+      t.linCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap),
+      t.quadNumCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap),
+      t.quadCat.toSeq.map(_.view.mapValues(java.lang.Double.doubleToRawLongBits).toMap))
+    /** One job, one task per scan partition, under a SQL execution id,
+      * and a repeat returns the same bits. */
+    def eager[T](what: String)(call: => T)(key: T => Seq[Any]): T = {
+      var out: Option[T] = None
+      val (jobs, tasks) = JobCounter(spark.sparkContext) { out = Some(call) }
+      assert(jobs == 1 && tasks == parts, s"$what ran $jobs jobs and $tasks tasks, expected 1 and $parts")
+      var again: Option[T] = None
+      val props = JobCounter.jobProperties(spark.sparkContext) { again = Some(call) }
+      props.foreach(p => assert(p.getProperty("spark.sql.execution.id") != null,
+        s"$what ran a job outside any SQL execution: $p"))
+      assert(key(out.get) == key(again.get), s"$what: a repeated call changed the result")
+      out.get
+    }
+    val none = harvested(df.filter($"part" === 99))
+    for (nb <- Seq(false, true)) {
+      val what = s"[nb=$nb]"
+      val flat = eager(s"$what cofactor")(Graft.cofactor(df, num, cat, nb))(bits)
+      assertClose(flat, Graft.tripleFromRow(df.agg(casts(nb, None)).head().getStruct(0)),
+        s"$what cofactor")
+
+      val perClass = eager(s"$what cofactorPerClass")(
+        Graft.cofactorPerClass(df, num, cat, label = "lbl", nb = nb))(_.map { case (l, t) => l -> bits(t) })
+      val perClassRef = df.filter($"lbl".isNotNull)
+        .groupBy($"lbl".cast("int")).agg(casts(nb, None))
+        .collect().map(r => r.getInt(0) -> Graft.tripleFromRow(r.getStruct(1))).sortBy(_._1).toSeq
+      assert(perClass.map(_._1) == perClassRef.map(_._1), s"$what labels")
+      perClass.zip(perClassRef).foreach { case ((l, t), (_, w)) => assertClose(t, w, s"$what label $l") }
+
+      assert(none.rdd.getNumPartitions == 0, "the partition filter must prune every file")
+      val zero = Graft.cofactor(none, num, cat, nb)
+      assert(zero.n == 0 && zero.numCols == num.size && zero.catCols == cat.size,
+        s"$what zero partitions: $zero")
+      assert(Graft.cofactorPerClass(none, num, cat, "lbl", nb).isEmpty, s"$what zero partitions: classes")
+    }
+  } }
 
   test("hashJoinIfSafe: a side under the broadcast threshold broadcasts, with no shuffle") {
     val dim = Seq.tabulate(50)(k => (k, k * 0.5)).toDF("k", "dprice")
