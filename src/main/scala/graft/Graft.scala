@@ -264,16 +264,16 @@ object Graft {
       rows: => org.apache.spark.rdd.RDD[R])(fold: Iterator[R] => T): Array[T] =
     SQLExecution.withNewExecutionId(qe, Some("cofactor"))(qe.sparkSession.sparkContext.runJob(rows, fold))
 
-  /** The [[CofactorAggregate]] of the row folds: fields `0 until num`
-    * of each row are doubles, the next `cat` fields ints, under the
-    * session's `maxCategories` guard. */
-  private[graft] def rowAggregate(spark: SparkSession, num: Int, cat: Int,
+  /** The [[CofactorAggregate]] of the row folds: the fields `num` of
+    * each row are doubles, the fields `cat` ints, under the session's
+    * `maxCategories` guard. */
+  private[graft] def rowAggregate(spark: SparkSession, num: Seq[Int], cat: Seq[Int],
                                   nb: Boolean): CofactorAggregate = {
     import org.apache.spark.sql.catalyst.expressions.BoundReference
     import org.apache.spark.sql.types.{DoubleType, IntegerType}
     CofactorAggregate(
-      (0 until num).map(i => BoundReference(i, DoubleType, nullable = true)) ++
-        (0 until cat).map(j => BoundReference(num + j, IntegerType, nullable = true)),
+      num.map(i => BoundReference(i, DoubleType, nullable = true)) ++
+        cat.map(j => BoundReference(j, IntegerType, nullable = true)),
       nbMode = nb,
       maxCategories = org.apache.spark.sql.internal.SQLConf.withExistingConf(
         spark.sessionState.conf)(CofactorAggregate.confMaxCategories()))
@@ -296,17 +296,37 @@ object Graft {
     bufs.indices.map(s => s -> agg.serialize(bufs(s))).toArray
   }
 
+  /** One partition's per-label buffers: `update` folds a row into the
+    * buffer of its label (int field `label`; a NULL label drops the
+    * row), `result` serializes them keyed by label. */
+  private[graft] final class LabelFold(agg: CofactorAggregate, label: Int) {
+    private val bufs = scala.collection.mutable.LongMap.empty[graft.agg.CofactorBuffer]
+    def update(r: org.apache.spark.sql.catalyst.InternalRow): Unit =
+      if (!r.isNullAt(label))
+        agg.update(bufs.getOrElseUpdate(r.getInt(label), agg.createAggregationBuffer()), r)
+    def result: Array[(Int, Array[Byte])] =
+      bufs.iterator.map { case (l, b) => l.toInt -> agg.serialize(b) }.toArray
+  }
+
   /** The one driver merge of every eager triple, row fold and kernel
     * alike: each partition's serialized buffers, keyed by filter slot or
     * label, merged per key into an `empty()` buffer in array
     * (partition-index) order — bit-identical across calls, and under
     * `empty()`'s `maxCategories` over the merged maps. Every key in
-    * `keys` is present. Returns (key, triple) pairs sorted by key. */
+    * `keys` is present; with no `keys` the keys are labels, and the
+    * merged label count is held to the same `maxCategories`, whatever
+    * each partition held. Returns (key, triple) pairs sorted by key. */
   private[graft] def mergeBuffers[K: Ordering](empty: () => graft.agg.CofactorBuffer, keys: Seq[K],
       partials: Array[Array[(K, Array[Byte])]]): Seq[(K, Triple)] = {
     val merged = scala.collection.mutable.TreeMap.from(keys.map(_ -> empty()))
-    for (part <- partials; (key, bytes) <- part)
-      merged.getOrElseUpdate(key, empty()).merge(graft.agg.CofactorBuffer.fromBytes(bytes))
+    for (part <- partials; (key, bytes) <- part) {
+      val b = merged.getOrElseUpdate(key, empty())
+      if (keys.isEmpty && merged.size > b.maxCategories)
+        throw new IllegalStateException(
+          s"per-class cofactor: label exceeded ${b.maxCategories} distinct classes after merge — " +
+            "this looks like an ID, not a label (raise spark.graft.cofactor.maxCategories to override)")
+      b.merge(graft.agg.CofactorBuffer.fromBytes(bytes))
+    }
     merged.iterator.map { case (key, b) => key -> b.toTriple }.toSeq
   }
 
@@ -328,18 +348,14 @@ object Graft {
     val cols = num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int")) ++
       filters.map(_.getOrElse(lit(true))) ++ label.map(l => col(l).cast("int"))
     val proj = df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"__g$i") }: _*)
-    val agg = rowAggregate(df.sparkSession, num.size, cat.size, nb)
+    val agg = rowAggregate(df.sparkSession, 0 until num.size, num.size until k, nb)
     val slots = filters.size
-    val labelOrd = k + slots
     val partials = foldPartitions(proj) { rows =>
       if (label.isEmpty) foldSlots(agg, slots, rows)
       else {
-        val bufs = scala.collection.mutable.LongMap.empty[graft.agg.CofactorBuffer]
-        rows.foreach { r =>
-          if (!r.isNullAt(labelOrd))
-            agg.update(bufs.getOrElseUpdate(r.getInt(labelOrd), agg.createAggregationBuffer()), r)
-        }
-        bufs.iterator.map { case (l, b) => l.toInt -> agg.serialize(b) }.toArray
+        val f = new LabelFold(agg, k + slots)
+        rows.foreach(f.update)
+        f.result
       }
     }
     mergeBuffers(() => agg.createAggregationBuffer(), if (label.isEmpty) 0 until slots else Nil,

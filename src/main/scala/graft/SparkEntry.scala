@@ -1151,10 +1151,10 @@ object SparkEntry {
     // Flight-style multi-table MICE (the reference paper's workload
     // shape, factorized_imputation_flight.h:6-8): impute the fact-side
     // l_discount from l_quantity (fact) AND o_totalprice (dimension) —
-    // the training cofactor is computed FACTORIZED over
-    // lineitem ⋈ orders (per-key triples + ring product, the join never
-    // materialized); only the missing stratum is joined wide for
-    // prediction. q18 discipline: deterministic arithmetic mask,
+    // one MICE-high round: one job folds the training cofactor over
+    // lineitem left-joined with orders (the join never materialized),
+    // and the missing rows take the prediction. q18 discipline:
+    // deterministic arithmetic mask,
     // non-stochastic, so the trained model is exactly the closed-form
     // 2-regressor least squares the oracle solves by Cramer's rule.
     "q62_flight_mice_join" -> { (s, dir) =>
@@ -1260,13 +1260,13 @@ object SparkEntry {
     // MULTI-DIMENSION star MICE (q62 two dims up — the paper's full
     // Flight/Retailer star shape): l_discount imputed from features in
     // TWO dimension tables (orders.o_totalprice on l_orderkey,
-    // part.p_retailprice on l_partkey), trained through the CHAINED
-    // ring products of Factorized.cofactorOverStar with the factorized
-    // chain PINNED (minRowsPerKey=0) so the oracle certifies the
-    // fact-grouped triple × dim triple × dim triple decomposition
-    // itself, not the materialized fallback. q62 discipline throughout:
-    // deterministic arithmetic mask, non-stochastic, closed-form DuckDB
-    // Cramer comparator over the materialized 3-way join, RMSE at 4dp.
+    // part.p_retailprice on l_partkey), trained on the triple one job
+    // folds over lineitem left-joined with both dims (the one-round
+    // MICE-high loop; Factorized.cofactorOverStar's chain keeps its
+    // checks in q69, MlSpec, GraftSpec and VerifyDrive). q62 discipline
+    // throughout: deterministic arithmetic mask, non-stochastic,
+    // closed-form DuckDB Cramer comparator over the materialized 3-way
+    // join, RMSE at 4dp.
     "q66_star_mice_join" -> { (s, dir) =>
       Graft.register(s)
       val fact = li(s, dir)
@@ -1287,7 +1287,7 @@ object SparkEntry {
             col("p_retailprice").cast("double").as("p_retailprice")),
           "l_partkey", num = Seq("p_retailprice")))
       val done = graft.mice.MiceJoin.imputeContOverStar(
-        fact, dims, target = "l_discount", factNum = Seq(), minRowsPerKey = 0.0)
+        fact, dims, target = "l_discount", factNum = Seq())
       done.agg(
         count(lit(1)).as("n_rows"),
         count(when(col("miss"), lit(1))).as("n_imputed"),
@@ -1432,8 +1432,8 @@ object SparkEntry {
     // convenience gap): impute l_discount over the lineitem ⋈ orders ⋈
     // part star where orders contributes a numeric feature and part a
     // 5-level categorical (p_size mod 5) — the one-hot block rides the
-    // chained ring products (minRowsPerKey=0 pins the fully factorized
-    // chain, q66 discipline). Oracle: with one numeric + one categorical
+    // training triple's categorical slices (q66 discipline). Oracle:
+    // with one numeric + one categorical
     // regressor, the least-squares prediction is the ANCOVA closed form
     // (per-category intercept + shared within-group slope) — unique for
     // any seen category even though the one-hot design is rank-deficient
@@ -1459,7 +1459,7 @@ object SparkEntry {
             pmod(col("p_size"), lit(5)).cast("int").as("p_cat")),
           "l_partkey", cat = Seq("p_cat")))
       val done = graft.mice.MiceJoin.imputeContOverStar(
-        fact, dims, target = "l_discount", factNum = Seq(), minRowsPerKey = 0.0)
+        fact, dims, target = "l_discount", factNum = Seq())
       done.agg(
         count(lit(1)).as("n_rows"),
         count(when(col("miss"), lit(1))).as("n_imputed"),

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
  * fact-side column (lineitem.l_discount) using a feature from the fact
  * table (l_quantity) AND a feature that lives only in a dimension table
  * (orders.o_totalprice) — the model trains over the join WITHOUT
- * materializing it ([[graft.mice.MiceJoin]]), and the row-level join
- * touches only the missing stratum.
+ * materializing it: one job folds the training triple and the mean
+ * init over the fact left-joined with the dim ([[graft.mice.MiceJoin]]).
  *
  * Run: `sbt "runMain graft.examples.ExampleFlightMice [sfDir]"`
  * (defaults to the generated sf1 tier when present — 6M lineitem rows —

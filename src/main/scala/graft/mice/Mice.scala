@@ -61,7 +61,7 @@ object Mice {
   private[mice] def flag(c: String) = s"${c}__isnull"
 
   /** Per-phase wall-clock accumulator mirroring the reference's timers
-    * (prepare / partition / cofactor / cofactor_static / train / impute_update;
+    * (prepare / partition / cofactor / train / impute_update;
     * imputation_base.cpp:11-12, imputation_low.cpp:35-186) so BENCH
     * numbers are phase-comparable. */
   final class Timings {
@@ -173,8 +173,9 @@ object Mice {
       observed: => Triple, nbPerClass: => Seq[(Int, Triple)]): Column =
     if (cfg.imputeCont.contains(c)) {
       val t = observed
-      tm.time("train")(predictLinReg(t, c, num, cat, cfg.lambda, normalize,
-        cfg.stochastic, seed = cfg.seed + iter * 131 + num.indexOf(c)))
+      tm.time("train")(LinReg.predict(LinReg.train(t, num.indexOf(c), cfg.lambda, normalize = normalize),
+        num.filterNot(_ == c).map(col), cat.map(col), addNoise = cfg.stochastic,
+        seed = cfg.seed + iter * 131 + num.indexOf(c)))
     } else if (usesNb(cfg, c)) {
       val pc = nbPerClass
       tm.time("train")(NaiveBayes.predict(NaiveBayes.train(pc),
@@ -184,15 +185,6 @@ object Mice {
       tm.time("train")(Lda.predict(Lda.train(t, cat.indexOf(c), cfg.shrinkage, normalize = normalize),
         num.map(col), cat.filterNot(_ == c).map(col)))
     }
-
-  /** Regress `label` on the rest of `num` and on `cat` from triple `t`
-    * (blocks `num`, `cat` in order) and return the prediction, with
-    * N(0, σ̂²) noise drawn from `seed` when `stochastic`. */
-  private[mice] def predictLinReg(t: Triple, label: String, num: Seq[String], cat: Seq[String],
-                                  lambda: Double, normalize: Boolean,
-                                  stochastic: Boolean, seed: Long): Column =
-    LinReg.predict(LinReg.train(t, num.indexOf(label), lambda, normalize = normalize),
-      num.filterNot(_ == label).map(col), cat.map(col), addNoise = stochastic, seed = seed)
 
   /** One train-and-predict step, shared by [[baseline]] and the MICE-high
     * loop: [[predict]] written into `cur`'s column `c` on the rows where

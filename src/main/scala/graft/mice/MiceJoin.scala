@@ -9,51 +9,37 @@ import org.apache.spark.sql.functions._
 /**
  * MICE over a multi-table join — the reference paper's Flight-style
  * workload (factorized_imputation_flight.h:6-8: impute a fact-table
- * column using features that live in a DIMENSION table), composed from
- * the library's own pieces:
+ * column using features that live in DIMENSION tables) — as ONE loop,
+ * MICE-high (imputation_high.cpp:20-35), over the fact left-joined with
+ * every dim ([[imputeHigh]]):
  *
  *  - training: the cofactor triple of the join, never the joined rows —
- *    [[Factorized.cofactorOverStar]]'s per-key ring products for the
- *    one-round [[imputeContOverStar]], and for the chained drivers ONE
- *    setup job over the fact left-joined with every dim that folds the
- *    complete stratum's static triple (README.md:163-173's
- *    factorized-learning pattern, at MICE's service);
- *  - partitioning: MICE-high (imputation_high.cpp:20-35) — the complete
- *    stratum is aggregated once; only the (small) incomplete stratum is
- *    stored and re-aggregated per column step, because prediction needs
- *    per-row dimension features and the incomplete stratum is where
- *    predictions go. [[Mice.partitioned]] is this loop with no dims.
+ *    ONE setup job folds the complete stratum's static triple (and each
+ *    Naive Bayes column's per-class aggregates), and each column step
+ *    folds one masked triple over the incomplete stratum
+ *    (README.md:163-173's factorized-learning pattern, at MICE's
+ *    service);
+ *  - partitioning: the complete stratum is aggregated once; only the
+ *    (small) incomplete stratum is stored and re-aggregated per column
+ *    step, because prediction needs per-row dimension features and the
+ *    incomplete stratum is where predictions go.
  *
- * At 100 TB this is the shape that matters: the model sees the whole
- * join through KB-sized triples, and the row-level join touches
- * |missing| rows, not |fact|.
+ * The one-round drivers ([[imputeContOverJoin]], [[imputeContOverStar]])
+ * are one iteration of the chained ones ([[imputeChainedOverStar]]), and
+ * [[Mice.partitioned]] is the loop with no dims. At 100 TB this is the
+ * shape that matters: the model sees the whole join through KB-sized
+ * triples, and only the incomplete stratum is ever stored.
  */
 object MiceJoin {
 
   /**
-   * One factorized MICE round for a single continuous fact-side column:
-   * train `target ~ factNum ++ dimNum` on the rows where `target` is
-   * observed (cofactor computed factorized over the join), then impute
-   * the missing stratum through a row-level join restricted to it.
-   *
-   * `dim` must carry the join key under the same name `key` as `fact`
-   * (rename before calling), be projected to (key, dimNum…), and be
-   * UNIQUE per key — a duplicated key would both multiply the cofactor's
-   * per-key counts (training sees phantom join rows) and fan out the
-   * missing stratum (more output rows than `fact`, with conflicting
-   * imputed values per fact row). This is asserted up front with one
-   * aggregate probe over `dim` (dimension-table sized, not fact-sized)
-   * rather than silently `dropDuplicates`-ed, which would impute from an
-   * arbitrary surviving row. A missing-stratum row with no dim match (or
-   * a NULL feature) falls back
-   * to the observed-target mean — the imputation never leaves NULLs.
-   * With a single imputed column the observed stratum never changes, so
-   * one round IS the fixed point of non-stochastic MICE; chain calls for
-   * multi-column chained equations.
-   *
-   * Returns `fact`'s columns with `target` imputed (no dim columns).
-   * The 1-dim special case of [[imputeContOverStar]] (delegates; same
-   * adaptive routing, same fallback contract).
+   * [[imputeContOverStar]] with one dim. `dim` must carry the join key
+   * under the same name `key` as `fact` (rename before calling) and be
+   * UNIQUE per key — a duplicated key would both add phantom training
+   * rows and fan out the missing stratum (more output rows than `fact`).
+   * This is asserted up front with one dim-sized aggregate probe rather
+   * than silently `dropDuplicates`-ed, which would impute from an
+   * arbitrary surviving row.
    */
   def imputeContOverJoin(fact: DataFrame, dim: DataFrame, key: String,
                          target: String, factNum: Seq[String], dimNum: Seq[String],
@@ -61,91 +47,50 @@ object MiceJoin {
                          seed: Long = 42L,
                          tm: Mice.Timings = new Mice.Timings): DataFrame =
     imputeContOverStar(fact, Seq(Factorized.StarDim(dim, key, dimNum, Seq())),
-      target, factNum, lambda, stochastic, seed, tm = tm)
+      target, factNum, lambda, stochastic, seed, tm)
 
   /**
-   * One factorized MICE round for a continuous fact-side column over a
-   * MULTI-DIMENSION star join (the paper's Flight/Retailer shape —
-   * factorized_imputation_flight.h:6-8: the fact column's features live
-   * in SEVERAL dimension tables joined on distinct keys).
-   * [[imputeContOverJoin]] generalized: training sees the whole star
-   * through [[Factorized.cofactorOverStar]]'s chained ring products (the
-   * wide join never materialized), and the row-level imputation join
-   * touches only the missing stratum, left-joining each dim in turn.
-   * Every dim must be unique per its key (asserted, dim-sized probes) —
-   * required here even though training alone would tolerate
-   * multiplicity, because the imputation left-joins must not fan out
-   * fact rows. A missing-stratum row with no match in SOME dim, or with
-   * any NULL dim feature, falls back to the observed-target mean — the
-   * fallback is an EXPLICIT null-feature test, not an accident of NULL
-   * propagation: a numeric NULL does null the prediction, but a
-   * categorical NULL would one-hot to a silent all-zero block
-   * (LinReg.predict's unseen-category coalesce), a configuration the
-   * model never trained on.
+   * One MICE round for a continuous fact-side column over a
+   * MULTI-DIMENSION star join (the paper's Flight/Retailer shape,
+   * factorized_imputation_flight.h:6-8): [[imputeChainedOverStar]] with
+   * `target +: factNum` as the continuous features, `target` the one
+   * imputed column, one iteration and `normalize = true`. It trains
+   * `target ~ factNum ++ dims.num ++ dims.cat` on the rows where `target`
+   * is observed and every dim matches; a missing row with no match in
+   * SOME dim, or with a NULL feature, keeps the mean init — the mean over
+   * every observed `target` cell. With a single imputed column the
+   * observed stratum never changes, so one round IS the fixed point of
+   * non-stochastic MICE. Every dim must be unique per its key (asserted)
+   * and its feature names disjoint from fact's and the other dims'.
+   *
+   * Returns `fact`'s columns with `target` imputed (as a double), every
+   * other column with its input type.
    */
   def imputeContOverStar(fact: DataFrame, dims: Seq[Factorized.StarDim],
                          target: String, factNum: Seq[String],
                          lambda: Double = 0.0, stochastic: Boolean = false,
-                         seed: Long = 42L, minRowsPerKey: Double = 4.0,
+                         seed: Long = 42L,
                          tm: Mice.Timings = new Mice.Timings): DataFrame = {
-    val spark = fact.sparkSession
-    Graft.register(spark)
     require(!factNum.contains(target),
       s"'$target' must not also appear in factNum — the model would fit " +
         "target ~ target and every missing row would silently get the mean " +
         "(the chained API's convention is the opposite: imputeCont ⊆ factNum)")
-    dims.foreach(d => requireUniqueKey(d.df, d.key))
-    val dimNum = dims.flatMap(_.num)
-    // categorical dim features ride the same star cofactor (their
-    // one-hot blocks live in the triple's cat slices) and enter the
-    // regression exactly as in the chained driver — the predictor gets
-    // them in declared dim order
-    val dimCat = dims.flatMap(_.cat)
-    val dimCols = dimNum ++ dimCat
-    require(dimCols.intersect(fact.columns.toSeq).isEmpty,
-      s"dim feature names must be disjoint from fact's: ${dimCols.intersect(fact.columns.toSeq)}")
-    val outCols = fact.columns.toSeq
-    // a NARROW fact keeps both strata on the live scan: the filters
-    // re-read one columnar scan apiece, and the scan's bucketed layout
-    // survives into the training groupBy(key) and the missing ⋈ dim
-    // update join (zero-exchange when fact and dims share the bucket
-    // key) — a checkpoint here erases bucket metadata and re-shuffles
-    // both joins (see imputeChainedOverStar)
-    val narrow = Graft.isNarrowPlan(fact)
-    val (observed, missing) = tm.time("partition") {
-      if (narrow) (fact.filter(col(target).isNotNull), fact.filter(col(target).isNull))
-      else (fact.filter(col(target).isNotNull).transform(Graft.checkpoint),
-            fact.filter(col(target).isNull).transform(Graft.checkpoint))
-    }
-    val triple = tm.time("cofactor_static")(Factorized.cofactorOverStar(
-      observed, target +: factNum, Seq(), dims, minRowsPerKey))
-    // the triple's blocks are [target +: factNum ++ dimNum, dimCat]
-    val pred = tm.time("train")(Mice.predictLinReg(triple, target, target +: (factNum ++ dimNum),
-      dimCat, lambda, normalize = true, stochastic, seed))
-    val mean = if (triple.n == 0) 0.0 else triple.lin(0) / triple.n
-    val imputed = tm.time("impute_update") {
-      dims.foldLeft(missing)((acc, d) => acc.join(d.df, Seq(d.key), "left"))
-        .withColumn(target,
-          when(anyDimFeatureNull(dimCols), lit(mean))
-            .otherwise(coalesce(pred, lit(mean))))
-        .select(outCols.map(col): _*)
-    }
-    // the result is consumed once by the caller — no checkpoint; any
-    // stratum blocks (wide-fact path) stay live inside the returned
-    // plan and are released by the caller's traversal-based
-    // dropCheckpoint
-    observed.unionByName(imputed)
+    val out = imputeChainedOverStar(fact, dims, ChainConfig(
+      factNum = target +: factNum, factCat = Seq(), dimNum = Seq(), imputeCont = Seq(target),
+      iterations = 1, lambda = lambda, stochastic = stochastic, seed = seed), tm)
+    // the chain casts its features to double; hand them back as typed
+    out.select(fact.schema.map(f =>
+      if (factNum.contains(f.name)) col(f.name).cast(f.dataType).as(f.name) else col(f.name)): _*)
   }
 
-  /** TRUE when any dim-contributed feature is NULL — the no-dim-match /
-    * NULL-feature detector both drivers' documented fallbacks key on.
-    * Must be explicit: NULL numeric features null the linear predictor,
-    * but NULL CATEGORICAL features do not (LinReg one-hots them to a
-    * zero block; Lda.predict tie-breaks all-NULL scores to the first
-    * class) — without this test a no-match row would silently get a
-    * prediction from a feature configuration training never saw. The
-    * chained driver also tests its dims' match markers, which catch a
-    * no-match row of a dim that contributes no feature. */
+  /** TRUE when any dim-contributed feature is NULL — with the dims'
+    * match markers, the no-dim-match / NULL-feature detector the loop's
+    * documented fallback keys on. Must be explicit: NULL numeric
+    * features null the linear predictor, but NULL CATEGORICAL features
+    * do not (LinReg one-hots them to a zero block; Lda.predict
+    * tie-breaks all-NULL scores to the first class) — without this test
+    * a no-match row would silently get a prediction from a feature
+    * configuration training never saw. */
   private def anyDimFeatureNull(dimCols: Seq[String]) =
     dimCols.map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
 
@@ -264,20 +209,22 @@ object MiceJoin {
    * masked triple (one Spark job) per step, no ring subtraction (no
    * float drift), and the match mask keeps the inner-join training
    * semantics. A Naive Bayes column (`cfg.catModel`) instead ring-adds
-   * the per-class aggregates over the same masked rows to its per-class
-   * static aggregates over the complete, matched rows, computed once per
-   * call (phase `cofactor_static`). The update is [[Mice.imputeColumn]],
-   * guarded so a row with no dim match or a NULL dim feature keeps its
-   * value. Each non-final iteration checkpoints the stratum once and
-   * drops the previous one; the final iteration is returned lazily.
-   * A warm call therefore runs one job per broadcast dim, the setup
-   * job, C·I column steps, I − 1 checkpoints and the caller's one
-   * consuming job (`MiceJoinSpec` and `MiceSpec` pin it).
+   * the per-class aggregates over the same masked rows (one job) to its
+   * static per-class aggregates, which the setup job folds over the
+   * complete stratum beside the static triple. The update is
+   * [[Mice.imputeColumn]], guarded so a row with no dim match or a NULL
+   * dim feature keeps its value. Each non-final iteration checkpoints
+   * the stratum once and drops the previous one; the final iteration is
+   * returned lazily. A warm call therefore runs one job per broadcast
+   * dim, the setup job, C·I column steps, I − 1 checkpoints and the
+   * caller's one consuming job, whatever `cfg.catModel` is
+   * (`MiceJoinSpec` and `MiceSpec` pin it).
    *
    * With ONE imputed column every incomplete row is missing it, so the
-   * static triple IS the training triple: the setup job stores nothing,
-   * and the update is a lazy filter of `J` to the missing rows — the
-   * work of a single [[imputeContOverStar]] round.
+   * static aggregates ARE the training set: the setup job stores
+   * nothing, no column step runs a job, and the update is a lazy filter
+   * of `J` to the missing rows — the one-round drivers
+   * ([[imputeContOverStar]]) are this case.
    */
   private[mice] def imputeHigh(fact: DataFrame, dims: Seq[Factorized.StarDim],
                                cfg: Mice.Config, normalize: Boolean,
@@ -320,14 +267,9 @@ object MiceJoin {
         Seq(d.key), joinType = "left")
     }
     val trainsOnIncomplete = order.length > 1
-    val (static, init, stored) = tm.time("partition")(
+    val (static, nbStatic, init, stored) = tm.time("partition")(
       setup(joined, numAll, catAll, !anyFlag && matched, cfg,
         keep = if (trainsOnIncomplete) order.map(Mice.flag) else Seq()))
-    def perClass(df: DataFrame, c: String) =
-      Graft.cofactorPerClass(df, numAll, catAll.filterNot(_ == c), label = c, nb = true)
-    // every complete row has each NB label observed, and never changes
-    val nbStatic = order.filter(Mice.usesNb(cfg, _)).map(c =>
-      c -> tm.time("cofactor_static")(perClass(joined.filter(!anyFlag && matched), c))).toMap
     var incomplete = Mice.fill(stored.getOrElse(joined.filter(anyFlag)), cfg, init)
     var lastCp = incomplete
 
@@ -340,7 +282,8 @@ object MiceJoin {
           else tm.time("cofactor")(Triple.add(static,
             Graft.cofactorMasked(cur, numAll, catAll, Seq(Some(trainRows))).head)),
           if (!trainsOnIncomplete) nbStatic(c)
-          else Triple.addPerClass(nbStatic(c), tm.time("cofactor")(perClass(cur.filter(trainRows), c))))
+          else Triple.addPerClass(nbStatic(c), tm.time("cofactor")(Graft.cofactorPerClass(
+            cur.filter(trainRows), numAll, catAll.filterNot(_ == c), label = c, nb = true))))
       }
       // bound lineage and keep the next iteration's training scans off
       // this one's projections — except after the LAST iteration, whose
@@ -361,16 +304,20 @@ object MiceJoin {
 
   /** The MICE-high loop's setup: ONE job over `joined` (the flagged, not yet
     * filled fact left-joined with every dim) that folds
-    *  - the cofactor triple over `num`/`cat` of the rows where `static`
-    *    holds (the complete, fully matched stratum), and
-    *  - the [[Mice.InitStats]] of every row — one per fact row, since
+    *  - over the rows where `static` holds (the complete, fully matched
+    *    stratum, where every imputed column is observed) the cofactor
+    *    triple over `num`/`cat`, and for each Naive Bayes column `c`
+    *    (`cfg.catModel`) the per-class aggregates labelled by `c` over
+    *    `num` and the rest of `cat`;
+    *  - over every row the [[Mice.InitStats]] — one per fact row, since
     *    the dims are unique —
     * and, when `keep` names flag columns, stores the rows with any of
     * them set ([[Graft.checkpointRows]]: the same tasks, the same
-    * broadcasts). Returns the triple, the init and the stored stratum. */
+    * broadcasts). Returns the triple, the per-class aggregates by NB
+    * column, the init and the stored stratum. */
   private[graft] def setup(joined: DataFrame, num: Seq[String], cat: Seq[String],
-                           static: Column, cfg: Mice.Config,
-                           keep: Seq[String]): (Triple, Mice.InitStats, Option[DataFrame]) = {
+                           static: Column, cfg: Mice.Config, keep: Seq[String]):
+      (Triple, Map[String, Seq[(Int, Triple)]], Mice.InitStats, Option[DataFrame]) = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BindReferences, UnsafeProjection}
     import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -381,13 +328,25 @@ object MiceJoin {
       cat.map(c => col(c).cast("int")) ++ Seq(static) ++
       (cfg.imputeCont ++ cfg.imputeCat).map(col): _*).queryExecution.analyzed
     val exprs = BindReferences.bindReferences(list, child.output)
-    val agg = Graft.rowAggregate(joined.sparkSession, num.size, cat.size, nb = false)
+    val spark = joined.sparkSession
+    val agg = Graft.rowAggregate(spark, 0 until num.size, num.size until k, nb = false)
+    // each NB column's aggregate reads the same row: its label is its
+    // own cat field, its features the other fields
+    val nbCols = cfg.imputeCat.filter(Mice.usesNb(cfg, _))
+    val nbAggs = nbCols.map(c => (Graft.rowAggregate(spark, 0 until num.size,
+      cat.indices.filterNot(cat(_) == c).map(num.size + _), nb = true), num.size + cat.indexOf(c)))
     val (nCont, nCat) = (cfg.imputeCont.size, cfg.imputeCat.size)
     val fold = (rows: Iterator[InternalRow]) => {
       val proj = UnsafeProjection.create(exprs)
       val init = new Mice.InitStats(nCont, nCat)
-      val t = Graft.foldSlots(agg, 1, rows.map { r => val p = proj(r); init.add(p, k + 1); p })
-      (t, init)
+      val nb = nbAggs.map { case (a, label) => new Graft.LabelFold(a, label) }.toArray
+      val t = Graft.foldSlots(agg, 1, rows.map { r =>
+        val p = proj(r)
+        init.add(p, k + 1)
+        if (nb.nonEmpty && !p.isNullAt(k) && p.getBoolean(k)) nb.foreach(_.update(p))
+        p
+      })
+      (t, init, nb.map(_.result))
     }
     val (stored, parts) =
       if (keep.isEmpty) (None, Graft.foldPartitions(joined)(fold))
@@ -398,7 +357,11 @@ object MiceJoin {
       }
     val init = new Mice.InitStats(nCont, nCat)
     parts.foreach(p => init.merge(p._2))
-    (Graft.mergeBuffers(() => agg.createAggregationBuffer(), Seq(0), parts.map(_._1)).head._2, init, stored)
+    val nbStatic = nbCols.zip(nbAggs).zipWithIndex.map { case ((c, (a, _)), i) =>
+      c -> Graft.mergeBuffers(() => a.createAggregationBuffer(), Nil, parts.map(_._3(i)))
+    }.toMap
+    (Graft.mergeBuffers(() => agg.createAggregationBuffer(), Seq(0), parts.map(_._1)).head._2,
+      nbStatic, init, stored)
   }
 
   /** Fail loudly on a duplicated dim key (see the contract above): one

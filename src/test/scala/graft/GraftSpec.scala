@@ -171,6 +171,26 @@ class GraftSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
   }
 
+  test("the per-class label cap holds over the merged classes on both routes") {
+    // row route: 20 labels in ONE partition; kernel route: two files of
+    // 10 disjoint labels each — each partition stays under the cap of
+    // 16, the merged result holds 20
+    val rowRoute = frame(Seq.tabulate(400)(i => Row(i, i * 0.5, 1.0, i % 4, i % 20)), 1)
+    val kernelRoute = parquetScan(Seq.tabulate(400)(i =>
+      Row(i, i * 0.5, 1.0, i % 4, (i / 2) % 10 + 10 * (i % 2))), 2)
+    assert(oneSplitPerFile(kernelRoute.rdd.getNumPartitions) == 2)
+    assert(graft.agg.ColumnarCofactor.canHarvest(kernelRoute,
+      num.map(graft.agg.ColumnarCofactor.NumCol), (cat :+ "lbl").map(graft.agg.ColumnarCofactor.CatCol)),
+      "the kernel must harvest the labelled scan")
+    spark.conf.set("spark.graft.cofactor.maxCategories", "16")
+    try oneSplitPerFile {
+      for ((route, df) <- Seq("row" -> rowRoute, "kernel" -> kernelRoute)) {
+        val e = intercept[IllegalStateException](Graft.cofactorPerClass(df, num, cat, "lbl"))
+        assert(e.getMessage.contains("label exceeded 16"), s"$route: ${e.getMessage}")
+      }
+    } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
+  }
+
   test("the kernel route keeps the eager contract") { oneSplitPerFile {
     val parts = 8
     val df = parquetScan(Seq.tabulate(4000)(row) ++ Seq(

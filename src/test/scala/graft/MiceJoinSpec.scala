@@ -35,32 +35,29 @@ class MiceJoinSpec extends AnyFunSuite {
     val maxErr = done.filter($"miss")
       .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
     assert(maxErr < 1e-6, s"imputation should be exact on linear data, max err $maxErr")
-    // the factorized static cofactor phase must have run
-    assert(tm.totals.contains("cofactor_static") && tm.totals.contains("train"))
+    // the one setup job (the static triple) and the training ran
+    assert(tm.totals.contains("partition") && tm.totals.contains("train"))
   }
 
+  // y = 2 + 3*x1 + 0.5*d1 - 1.5*d2 EXACTLY, features in TWO dims
+  val dimA = Seq.tabulate(40)(k => (k.toLong, k * 1.5 - 10.0)).toDF("ka", "d1")
+  val dimB = Seq.tabulate(25)(k => (k.toLong, k * 0.8 + 2.0)).toDF("kb", "d2")
+  def starFact = Seq.tabulate(400) { i =>
+    val ka = i % 40; val kb = i % 25
+    val x1 = (i % 17).toDouble - 8
+    val y = 2.0 + 3.0 * x1 + 0.5 * (ka * 1.5 - 10.0) - 1.5 * (kb * 0.8 + 2.0)
+    (i.toLong, ka.toLong, kb.toLong, x1, y, i % 5 == 0)
+  }.toDF("id", "ka", "kb", "x1", "yTrue", "miss")
+    .withColumn("y", when($"miss", lit(null)).otherwise($"yTrue"))
+    .repartition(4)
+
   test("star impute (2 dims) recovers an exactly-linear relation and matches the materialized train") {
-    import graft.ml.Factorized.StarDim
-    // y = 2 + 3*x1 + 0.5*d1 - 1.5*d2 EXACTLY, features in TWO dims
-    val dimA = Seq.tabulate(40)(k => (k.toLong, k * 1.5 - 10.0)).toDF("ka", "d1")
-    val dimB = Seq.tabulate(25)(k => (k.toLong, k * 0.8 + 2.0)).toDF("kb", "d2")
-    val starFact = Seq.tabulate(400) { i =>
-      val ka = i % 40; val kb = i % 25
-      val x1 = (i % 17).toDouble - 8
-      val y = 2.0 + 3.0 * x1 + 0.5 * (ka * 1.5 - 10.0) - 1.5 * (kb * 0.8 + 2.0)
-      (i.toLong, ka.toLong, kb.toLong, x1, y, i % 5 == 0)
-    }.toDF("id", "ka", "kb", "x1", "yTrue", "miss")
-      .withColumn("y", when($"miss", lit(null)).otherwise($"yTrue"))
-      .repartition(4)
     val dims = Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dimB, "kb", Seq("d2")))
-    for (pin <- Seq(0.0, Double.MaxValue)) { // chain AND materialized fallback
-      val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y",
-        factNum = Seq("x1"), minRowsPerKey = pin)
-      assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
-      val maxErr = done.filter($"miss")
-        .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
-      assert(maxErr < 1e-6, s"star imputation (pin=$pin) should be exact, max err $maxErr")
-    }
+    val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y", factNum = Seq("x1"))
+    assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
+    val maxErr = done.filter($"miss")
+      .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
+    assert(maxErr < 1e-6, s"star imputation should be exact, max err $maxErr")
     // a duplicated key in EITHER dim must fail loudly (imputation
     // left-joins must not fan out fact rows)
     val dupB = dimB.union(Seq((3L, 99.0)).toDF("kb", "d2"))
@@ -98,14 +95,11 @@ class MiceJoinSpec extends AnyFunSuite {
       .repartition(4)
     val dims = Seq(StarDim(dimA, "ka", num = Seq("d1")),
       StarDim(dimB, "kb", cat = Seq("c2")))
-    for (pin <- Seq(0.0, Double.MaxValue)) { // chain AND materialized fallback
-      val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y",
-        factNum = Seq("x1"), minRowsPerKey = pin)
-      assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
-      val maxErr = done.filter($"miss")
-        .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
-      assert(maxErr < 1e-6, s"categorical-dim star imputation (pin=$pin) should be exact, max err $maxErr")
-    }
+    val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y", factNum = Seq("x1"))
+    assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
+    val maxErr = done.filter($"miss")
+      .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
+    assert(maxErr < 1e-6, s"categorical-dim star imputation should be exact, max err $maxErr")
   }
 
   test("factorized training == training over the materialized join") {
@@ -354,7 +348,7 @@ class MiceJoinSpec extends AnyFunSuite {
     val cfg = Mice.Config(contCols = Seq("y", "z", "x"), catCols = Seq(),
       imputeCont = Seq("y", "z"), imputeCat = Seq())
     for (keep <- Seq(Seq("y__isnull", "z__isnull"), Seq())) { // stored stratum, and fold only
-      val (static, init, stored) = MiceJoin.setup(joined, num, Seq(),
+      val (static, _, init, stored) = MiceJoin.setup(joined, num, Seq(),
         !anyFlag && $"mA".isNotNull && $"mB".isNotNull, cfg, keep)
       val want = Graft.cofactor(
         fact.filter($"y".isNotNull && $"z".isNotNull).join(dimA, "ka").join(dimB, "kb"), num, Seq())
@@ -529,6 +523,52 @@ class MiceJoinSpec extends AnyFunSuite {
     val mean = fact.filter(!$"miss").select(avg($"y")).head.getDouble(0)
     val got = done.filter($"id" === 999L).select($"y").head.getDouble(0)
     assert(math.abs(got - mean) < 1e-9, s"orphan row should get the observed mean, got $got vs $mean")
+  }
+
+  test("a missing orphan gets the mean over every observed target, orphans included") {
+    // an OBSERVED orphan (y set, key unmatched) never trains, but its y
+    // counts in the mean init the missing orphan keeps
+    val orphans = Seq((998L, 998L, 1.0, 500.0, false, Some(500.0)), (999L, 999L, 1.0, 0.0, true, None))
+      .toDF("id", "k", "x1", "yTrue", "miss", "y")
+    val in = fact.select("id", "k", "x1", "yTrue", "miss", "y").unionByName(orphans)
+    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+      factNum = Seq("x1"), dimNum = Seq("x2"))
+    val mean = in.select(avg($"y")).head.getDouble(0)
+    val got = done.filter($"id" === 999L).select($"y").head.getDouble(0)
+    assert(math.abs(got - mean) < 1e-9, s"missing orphan: $got, want the mean over every observed y $mean")
+    assert(done.filter($"id" === 998L).select($"y").head.getDouble(0) == 500.0)
+    // the observed orphan does not train: matched rows stay exact
+    val maxErr = done.filter($"miss" && $"id" < 998L)
+      .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
+    assert(maxErr < 1e-6, s"matched rows: max err $maxErr")
+  }
+
+  test("one round keeps the input's schema: an int feature stays an int") {
+    val in = fact.withColumn("x1", $"x1".cast("int"))
+    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+      factNum = Seq("x1"), dimNum = Seq("x2"))
+    assert(done.schema == in.schema, s"${done.schema.treeString} vs ${in.schema.treeString}")
+    assert(done.filter($"y".isNull).count() == 0)
+  }
+
+  test("warm one-round star call: the setup query and the caller's, nothing stored") {
+    // the setup job folds the training triple and the mean init over
+    // the fact left-joined with both dims; the update is a lazy
+    // projection of that join, which the caller's write runs
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (fact, dims) = (starFact, Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dimB, "kb", Seq("d2"))))
+    def run() = org.apache.spark.graft.JobCounter.jobProperties(spark.sparkContext) {
+      val out = MiceJoin.imputeContOverStar(fact, dims, target = "y", factNum = Seq("x1"))
+      assert(out.queryExecution.analyzed.collect { case l: LogicalRDD => l }.isEmpty,
+        "one round must store nothing")
+      out.write.format("noop").mode("overwrite").save()
+    }
+    run() // warm the memoized unique-key probes
+    val jobs = run()
+    info(s"${jobs.size} jobs")
+    val queries = jobs.map(p => Option(p.getProperty("spark.sql.execution.id"))).distinct
+    assert(queries.size == 2 && queries.forall(_.isDefined),
+      s"a warm one-round call ran ${jobs.size} jobs under executions $queries")
   }
 
   test("orphan row with a CATEGORICAL dim feature gets the mean, not a silent class-0 block") {

@@ -137,26 +137,45 @@ class MiceSpec extends AnyFunSuite {
     // J(n) = set-up + n·I + (n − 1) + write: every non-final iteration
     // is checkpointed, so J(2)-J(1) and J(3)-J(2) are each one
     // iteration — one masked triple per column and the checkpoint. The
-    // setup is one job (static triple, init, stored incomplete stratum).
-    // The caller's write is counted.
+    // setup is one job (static triple, NB per-class statics, init,
+    // stored incomplete stratum), with LDA or Naive Bayes for `c`. The
+    // caller's write is counted.
     val in = withNulls.localCheckpoint()
-    def run(iterations: Int): (Long, Long) = org.apache.spark.graft.JobCounter(spark.sparkContext) {
-      val out = Mice.partitioned(in, cfg.copy(iterations = iterations))
-      out.write.format("noop").mode("overwrite").save()
-      Graft.dropCheckpoint(out)
+    for (model <- Seq("lda", "nb")) {
+      def run(iterations: Int): (Long, Long) = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+        val out = Mice.partitioned(in, cfg.copy(iterations = iterations, catModel = model))
+        out.write.format("noop").mode("overwrite").save()
+        Graft.dropCheckpoint(out)
+      }
+      run(1) // warm up
+      val Seq(j1, j2, j3) = (1 to 3).map(run)
+      info(s"$model: (jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
+      val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
+      assert(iter3 == iter2, s"$model (jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
+      // measured on local[4]: 4, 7, 10 jobs (20, 32, 44 tasks) — 3 jobs
+      // per iteration over the 4-partition incomplete stratum, 4 tasks each
+      val columns = cfg.imputeCont.size + cfg.imputeCat.size
+      assert(iter2 == (columns + 1, 4L * (columns + 1)),
+        s"$model (jobs, tasks) per extra iteration: $iter2")
+      assert(j1._1 == 1 + columns + 1 && j2._1 == 1 + 2 * columns + 1 + 1,
+        s"$model warm calls ran ${j1._1} and ${j2._1} jobs at 1 and 2 iterations")
     }
-    run(1) // warm up
-    val Seq(j1, j2, j3) = (1 to 3).map(run)
-    info(s"(jobs, tasks) at 1, 2, 3 iterations: $j1, $j2, $j3")
-    val (iter2, iter3) = ((j2._1 - j1._1, j2._2 - j1._2), (j3._1 - j2._1, j3._2 - j2._2))
-    assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
-    // measured on local[4]: 4, 7, 10 jobs (20, 32, 44 tasks) — 3 jobs
-    // per iteration over the 4-partition incomplete stratum, 4 tasks each
-    val columns = cfg.imputeCont.size + cfg.imputeCat.size
-    assert(iter2 == (columns + 1, 4L * (columns + 1)),
-      s"(jobs, tasks) per extra iteration: $iter2")
-    assert(j1._1 == 1 + columns + 1 && j2._1 == 1 + 2 * columns + 1 + 1,
-      s"warm calls ran ${j1._1} and ${j2._1} jobs at 1 and 2 iterations")
+  }
+
+  test("the setup job's NB statics == cofactorPerClass over the complete rows") {
+    val nbCfg = cfg.copy(catModel = "nb")
+    val flagged = withNulls.withColumn("c", $"c".cast("int"))
+      .withColumn("b__isnull", $"b".isNull).withColumn("c__isnull", $"c".isNull)
+    val complete = !$"b__isnull" && !$"c__isnull"
+    val (_, nb, _, _) = graft.mice.MiceJoin.setup(flagged, nbCfg.contCols, nbCfg.catCols,
+      complete, nbCfg, keep = Seq())
+    val want = Graft.cofactorPerClass(flagged.filter(complete), nbCfg.contCols, Seq(), label = "c", nb = true)
+    assert(nb.keySet == Set("c") && nb("c").map(_._1) == want.map(_._1) && want.nonEmpty)
+    nb("c").zip(want).foreach { case ((l, got), (_, w)) =>
+      assert(got.approxEquals(w, 1e-12), s"class $l: $got vs $w")
+    }
+    val lda = graft.mice.MiceJoin.setup(flagged, cfg.contCols, cfg.catCols, complete, cfg, keep = Seq())._2
+    assert(lda.isEmpty, "an LDA column folds no per-class statics")
   }
 
   test("dropCheckpoint(result) leaves a checkpoint the caller passed in readable") {
