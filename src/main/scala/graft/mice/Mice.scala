@@ -35,10 +35,13 @@ import org.apache.spark.sql.functions._
 object Mice {
 
   /**
-   * @param contCols    continuous feature columns (DoubleType after cast)
-   * @param catCols     categorical feature columns (IntegerType)
+   * @param contCols    continuous feature columns (read as doubles)
+   * @param catCols     categorical feature columns (read as ints)
    * @param imputeCont  subset of contCols with missing values to impute
+   *                    (returned as DoubleType)
    * @param imputeCat   subset of catCols with missing values to impute
+   *                    (returned as IntegerType); every other column
+   *                    comes back with its input type and values
    * @param iterations  MICE rounds (reference demo uses 5, main.cpp:74)
    * @param stochastic  add N(0, σ̂²) noise to continuous imputations
    *                    (`linreg_predict(add_noise=true)`, regression.cpp:493-504)
@@ -83,12 +86,15 @@ object Mice {
     fill(f, cfg, initStats(f, cfg))
   }
 
-  /** `df` with the feature casts and one observation flag per imputed
-    * column, the imputed columns not yet filled. */
+  /** `df` with the imputed columns cast and one observation flag per
+    * imputed column, the imputed columns not yet filled. The other
+    * features keep their input types: every triple and every predictor
+    * casts what it reads, and a round trip through a double would
+    * change a long above 2^53 or a wide decimal. */
   private[mice] def flagged(df: DataFrame, cfg: Config): DataFrame = {
     var out = df
-    for (c <- cfg.contCols) out = out.withColumn(c, col(c).cast("double"))
-    for (c <- cfg.catCols) out = out.withColumn(c, col(c).cast("int"))
+    for (c <- cfg.imputeCont) out = out.withColumn(c, col(c).cast("double"))
+    for (c <- cfg.imputeCat) out = out.withColumn(c, col(c).cast("int"))
     for (c <- cfg.imputeCont ++ cfg.imputeCat) out = out.withColumn(flag(c), col(c).isNull)
     out
   }

@@ -75,12 +75,9 @@ object MiceJoin {
       s"'$target' must not also appear in factNum — the model would fit " +
         "target ~ target and every missing row would silently get the mean " +
         "(the chained API's convention is the opposite: imputeCont ⊆ factNum)")
-    val out = imputeChainedOverStar(fact, dims, ChainConfig(
+    imputeChainedOverStar(fact, dims, ChainConfig(
       factNum = target +: factNum, factCat = Seq(), dimNum = Seq(), imputeCont = Seq(target),
       iterations = 1, lambda = lambda, stochastic = stochastic, seed = seed), tm)
-    // the chain casts its features to double; hand them back as typed
-    out.select(fact.schema.map(f =>
-      if (factNum.contains(f.name)) col(f.name).cast(f.dataType).as(f.name) else col(f.name)): _*)
   }
 
   /** TRUE when any dim-contributed feature is NULL — with the dims'
@@ -102,9 +99,9 @@ object MiceJoin {
    * columns, continuous AND categorical, imputed from fact + dimension
    * features).
    *
-   * @param factNum  continuous fact columns (cast to double; superset of
+   * @param factNum  continuous fact columns (read as doubles; superset of
    *                 `imputeCont`)
-   * @param factCat  categorical fact columns (cast to int; superset of
+   * @param factCat  categorical fact columns (read as ints; superset of
    *                 `imputeCat`)
    * @param dimNum / dimCat  dimension-side features — names must be
    *                 disjoint from fact's (project/rename `dim` first);
@@ -133,7 +130,8 @@ object MiceJoin {
    * fact with every dim and one Spark job over it (see
    * [[imputeChainedOverStar]]); no config key routes it.
    *
-   * Returns `fact`'s columns with the imputed values in place.
+   * Returns `fact`'s columns with the imputed values in place (the
+   * imputed ones as doubles/ints) and every other column as it came in.
    */
   final case class ChainConfig(
       factNum: Seq[String], factCat: Seq[String],
@@ -321,13 +319,19 @@ object MiceJoin {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BindReferences, UnsafeProjection}
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    // fold row: [num…, cat…, static, imputeCont…, imputeCat…], evaluated
-    // in the task over `joined`'s rows (whose layout is its schema)
+    // fold row: [num…, cat…, static, imputeCont…, imputeCat…]. With
+    // nothing to store the job reads that projection itself, so the
+    // optimizer prunes every other column below the dim joins (with a
+    // dim too large to broadcast, each join shuffles every fact row);
+    // storing reads `joined`'s full rows and projects in the task
     val k = num.size + cat.size
-    val Project(list, child) = joined.select(num.map(c => col(c).cast("double")) ++
+    val sel = joined.select(num.map(c => col(c).cast("double")) ++
       cat.map(c => col(c).cast("int")) ++ Seq(static) ++
-      (cfg.imputeCont ++ cfg.imputeCat).map(col): _*).queryExecution.analyzed
-    val exprs = BindReferences.bindReferences(list, child.output)
+      (cfg.imputeCont ++ cfg.imputeCat).map(col): _*)
+    val Project(list, child) = sel.queryExecution.analyzed
+    val exprs =
+      if (keep.isEmpty) BindReferences.bindReferences(list.map(_.toAttribute), list.map(_.toAttribute))
+      else BindReferences.bindReferences(list, child.output)
     val spark = joined.sparkSession
     val agg = Graft.rowAggregate(spark, 0 until num.size, num.size until k, nb = false)
     // each NB column's aggregate reads the same row: its label is its
@@ -349,7 +353,7 @@ object MiceJoin {
       (t, init, nb.map(_.result))
     }
     val (stored, parts) =
-      if (keep.isEmpty) (None, Graft.foldPartitions(joined)(fold))
+      if (keep.isEmpty) (None, Graft.foldPartitions(sel)(fold))
       else {
         val flags = keep.map(joined.schema.fieldIndex).toArray
         val (df, p) = Graft.checkpointRows(joined, (r: InternalRow) => flags.exists(r.getBoolean))(Some(fold))

@@ -551,6 +551,23 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(done.filter($"y".isNull).count() == 0)
   }
 
+  test("one round hands every feature back bit-exact: a long above 2^53, a decimal(38,18)") {
+    // training reads each feature as a double; a round trip of the
+    // column itself through a double would change both
+    val in = fact
+      .withColumn("big", lit((1L << 53) + 1) + $"id" * 2)
+      .withColumn("dec", ($"id" + lit(BigDecimal("0.123456789012345678"))).cast("decimal(38,18)"))
+    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+      factNum = Seq("x1", "big", "dec"), dimNum = Seq("x2"), lambda = 1e-6)
+    assert(done.schema == in.schema, s"${done.schema.treeString} vs ${in.schema.treeString}")
+    val both = done.as("o").join(in.as("i"), "id")
+    assert(both.count() == 400)
+    val changed = both.filter($"o.big" =!= $"i.big" || $"o.dec" =!= $"i.dec" ||
+      $"o.x1" =!= $"i.x1" || ($"i.y".isNotNull && $"o.y" =!= $"i.y")).count()
+    assert(changed == 0, s"$changed rows came back with a changed feature or observed target")
+    assert(done.filter($"y".isNull).count() == 0)
+  }
+
   test("warm one-round star call: the setup query and the caller's, nothing stored") {
     // the setup job folds the training triple and the mean init over
     // the fact left-joined with both dims; the update is a lazy

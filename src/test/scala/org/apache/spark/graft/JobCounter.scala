@@ -31,6 +31,18 @@ object JobCounter {
     props.asScala.toSeq
   }
 
+  /** The jobs the block starts and the shuffle bytes its tasks write. */
+  def shuffled(sc: SparkContext)(body: => Unit): (Long, Long) = {
+    val jobs = new AtomicLong
+    val bytes = new AtomicLong
+    listening(sc, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(body)
+    (jobs.get, bytes.get)
+  }
+
   private def listening(sc: SparkContext, listener: SparkListener)(body: => Unit): Unit = {
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
