@@ -553,9 +553,8 @@ object Graft {
   /** Route the last [[cofactorGrouped]] call on this thread took
     * ("columnar" = batch-kernel harvest, "row" = grouped row aggregate).
     * Set at the LIVE decision point; oracle rows and specs certify the
-    * routing through this (same discipline as
-    * [[graft.ml.Factorized.lastStarRouting]]). Thread-local: parallel
-    * suites and concurrent sessions don't race. */
+    * routing through this. Thread-local: parallel suites and concurrent
+    * sessions don't race. */
   private val lastGroupedRouteTL = new ThreadLocal[String] {
     override def initialValue(): String = ""
   }

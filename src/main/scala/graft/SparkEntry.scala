@@ -1169,9 +1169,9 @@ object SparkEntry {
       val dim = Tables.load(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"),
           col("o_totalprice").cast("double").as("o_totalprice"))
-      val done = graft.mice.MiceJoin.imputeContOverJoin(
-        fact, dim, key = "l_orderkey", target = "l_discount",
-        factNum = Seq("l_quantity"), dimNum = Seq("o_totalprice"))
+      val done = graft.mice.MiceJoin.imputeChainedOverJoin(fact, dim, "l_orderkey",
+        graft.mice.MiceJoin.ChainConfig(factNum = Seq("l_discount", "l_quantity"), factCat = Seq(),
+          dimNum = Seq("o_totalprice"), imputeCont = Seq("l_discount"), iterations = 1))
       done.agg(
         count(lit(1)).as("n_rows"),
         count(when(col("miss"), lit(1))).as("n_imputed"),
@@ -1261,9 +1261,9 @@ object SparkEntry {
     // Flight/Retailer star shape): l_discount imputed from features in
     // TWO dimension tables (orders.o_totalprice on l_orderkey,
     // part.p_retailprice on l_partkey), trained on the triple one job
-    // folds over lineitem left-joined with both dims (the one-round
-    // MICE-high loop; Factorized.cofactorOverStar's chain keeps its
-    // checks in q69, MlSpec, GraftSpec and VerifyDrive). q62 discipline
+    // folds over lineitem left-joined with both dims (one iteration of
+    // the chained star MICE loop with l_discount the one imputed
+    // column). q62 discipline
     // throughout: deterministic arithmetic mask, non-stochastic,
     // closed-form DuckDB Cramer comparator over the materialized 3-way
     // join, RMSE at 4dp.
@@ -1286,8 +1286,9 @@ object SparkEntry {
             col("p_partkey").as("l_partkey"),
             col("p_retailprice").cast("double").as("p_retailprice")),
           "l_partkey", num = Seq("p_retailprice")))
-      val done = graft.mice.MiceJoin.imputeContOverStar(
-        fact, dims, target = "l_discount", factNum = Seq())
+      val done = graft.mice.MiceJoin.imputeChainedOverStar(fact, dims,
+        graft.mice.MiceJoin.ChainConfig(factNum = Seq("l_discount"), factCat = Seq(),
+          dimNum = Seq(), imputeCont = Seq("l_discount"), iterations = 1))
       done.agg(
         count(lit(1)).as("n_rows"),
         count(when(col("miss"), lit(1))).as("n_imputed"),
@@ -1411,7 +1412,8 @@ object SparkEntry {
           "o_custkey", num = Seq("c_acctbal")))
       val t = graft.ml.Factorized.cofactorOverStar(fact,
         factNum = Seq("o_totalprice"), factCat = Seq(), dims, minRowsPerKey = 2.0)
-      val (aggKeys, foldKeys) = graft.ml.Factorized.lastStarRouting()
+      val (aggDims, foldDims) = graft.ml.Factorized.starRouting(dims, 2.0)
+      val (aggKeys, foldKeys) = (aggDims.map(_.key), foldDims.map(_.key))
       require(aggKeys == Seq("o_orderkey") && foldKeys == Seq("o_custkey"),
         s"mixed route expected (agg=o_orderkey, fold=o_custkey); got agg=$aggKeys fold=$foldKeys")
       // declared num layout [o_totalprice, l_quantity, c_acctbal];
@@ -1458,8 +1460,9 @@ object SparkEntry {
             col("p_partkey").as("l_partkey"),
             pmod(col("p_size"), lit(5)).cast("int").as("p_cat")),
           "l_partkey", cat = Seq("p_cat")))
-      val done = graft.mice.MiceJoin.imputeContOverStar(
-        fact, dims, target = "l_discount", factNum = Seq())
+      val done = graft.mice.MiceJoin.imputeChainedOverStar(fact, dims,
+        graft.mice.MiceJoin.ChainConfig(factNum = Seq("l_discount"), factCat = Seq(),
+          dimNum = Seq(), imputeCont = Seq("l_discount"), iterations = 1))
       done.agg(
         count(lit(1)).as("n_rows"),
         count(when(col("miss"), lit(1))).as("n_imputed"),

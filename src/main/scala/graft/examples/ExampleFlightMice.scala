@@ -46,9 +46,9 @@ object ExampleFlightMice {
 
     val tm = new graft.mice.Mice.Timings
     val t0 = System.nanoTime()
-    val done = graft.mice.MiceJoin.imputeContOverJoin(
-      fact, dim, key = "l_orderkey", target = "l_discount",
-      factNum = Seq("l_quantity"), dimNum = Seq("o_totalprice"), tm = tm)
+    val done = graft.mice.MiceJoin.imputeChainedOverJoin(fact, dim, "l_orderkey",
+      graft.mice.MiceJoin.ChainConfig(factNum = Seq("l_discount", "l_quantity"), factCat = Seq(),
+        dimNum = Seq("o_totalprice"), imputeCont = Seq("l_discount"), iterations = 1), tm)
     val stats = done.agg(
       count(lit(1)).as("n"),
       count(when(col("miss"), 1)).as("n_imputed"),

@@ -24,61 +24,14 @@ import org.apache.spark.sql.functions._
  *    step, because prediction needs per-row dimension features and the
  *    incomplete stratum is where predictions go.
  *
- * The one-round drivers ([[imputeContOverJoin]], [[imputeContOverStar]])
- * are one iteration of the chained ones ([[imputeChainedOverStar]]), and
- * [[Mice.partitioned]] is the loop with no dims. At 100 TB this is the
- * shape that matters: the model sees the whole join through KB-sized
- * triples, and only the incomplete stratum is ever stored.
+ * One round for one column is the chained driver
+ * ([[imputeChainedOverStar]]) with that column the one imputed and
+ * `iterations = 1`, and [[Mice.partitioned]] is the loop with no dims.
+ * At 100 TB this is the shape that matters: the model sees the whole
+ * join through KB-sized triples, and only the incomplete stratum is
+ * ever stored.
  */
 object MiceJoin {
-
-  /**
-   * [[imputeContOverStar]] with one dim. `dim` must carry the join key
-   * under the same name `key` as `fact` (rename before calling) and be
-   * UNIQUE per key — a duplicated key would both add phantom training
-   * rows and fan out the missing stratum (more output rows than `fact`).
-   * This is asserted up front with one dim-sized aggregate probe rather
-   * than silently `dropDuplicates`-ed, which would impute from an
-   * arbitrary surviving row.
-   */
-  def imputeContOverJoin(fact: DataFrame, dim: DataFrame, key: String,
-                         target: String, factNum: Seq[String], dimNum: Seq[String],
-                         lambda: Double = 0.0, stochastic: Boolean = false,
-                         seed: Long = 42L,
-                         tm: Mice.Timings = new Mice.Timings): DataFrame =
-    imputeContOverStar(fact, Seq(Factorized.StarDim(dim, key, dimNum, Seq())),
-      target, factNum, lambda, stochastic, seed, tm)
-
-  /**
-   * One MICE round for a continuous fact-side column over a
-   * MULTI-DIMENSION star join (the paper's Flight/Retailer shape,
-   * factorized_imputation_flight.h:6-8): [[imputeChainedOverStar]] with
-   * `target +: factNum` as the continuous features, `target` the one
-   * imputed column, one iteration and `normalize = true`. It trains
-   * `target ~ factNum ++ dims.num ++ dims.cat` on the rows where `target`
-   * is observed and every dim matches; a missing row with no match in
-   * SOME dim, or with a NULL feature, keeps the mean init — the mean over
-   * every observed `target` cell. With a single imputed column the
-   * observed stratum never changes, so one round IS the fixed point of
-   * non-stochastic MICE. Every dim must be unique per its key (asserted)
-   * and its feature names disjoint from fact's and the other dims'.
-   *
-   * Returns `fact`'s columns with `target` imputed (as a double), every
-   * other column with its input type.
-   */
-  def imputeContOverStar(fact: DataFrame, dims: Seq[Factorized.StarDim],
-                         target: String, factNum: Seq[String],
-                         lambda: Double = 0.0, stochastic: Boolean = false,
-                         seed: Long = 42L,
-                         tm: Mice.Timings = new Mice.Timings): DataFrame = {
-    require(!factNum.contains(target),
-      s"'$target' must not also appear in factNum — the model would fit " +
-        "target ~ target and every missing row would silently get the mean " +
-        "(the chained API's convention is the opposite: imputeCont ⊆ factNum)")
-    imputeChainedOverStar(fact, dims, ChainConfig(
-      factNum = target +: factNum, factCat = Seq(), dimNum = Seq(), imputeCont = Seq(target),
-      iterations = 1, lambda = lambda, stochastic = stochastic, seed = seed), tm)
-  }
 
   /** TRUE when any dim-contributed feature is NULL — with the dims'
     * match markers, the no-dim-match / NULL-feature detector the loop's
@@ -221,8 +174,7 @@ object MiceJoin {
    * With ONE imputed column every incomplete row is missing it, so the
    * static aggregates ARE the training set: the setup job stores
    * nothing, no column step runs a job, and the update is a lazy filter
-   * of `J` to the missing rows — the one-round drivers
-   * ([[imputeContOverStar]]) are this case.
+   * of `J` to the missing rows: one round of one column is this case.
    */
   private[mice] def imputeHigh(fact: DataFrame, dims: Seq[Factorized.StarDim],
                                cfg: Mice.Config, normalize: Boolean,

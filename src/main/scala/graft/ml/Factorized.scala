@@ -1,9 +1,11 @@
 package graft.ml
 
 import graft.Graft
+import graft.plans.CofactorDeclarativeRewrite
 import graft.ring.Triple
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /**
  * Factorized learning over joins (reference README.md:163-173, LMFAO /
@@ -46,14 +48,15 @@ object Factorized {
    * Pass `minRowsPerKey = 0` to pin the factorized path probe-free
    * (`Double.MaxValue` pins the fallback likewise).
    *
-   * With no categorical columns the factorized regime runs as
-   * [[cofactorOverJoinNumeric]] (same triple, plain codegen'd SUMs, no
-   * ring objects). Below the threshold the row-level join fallback is
-   * kept deliberately: on the fact ⋈ unique-dim shape the moments
-   * decomposition measured SLOWER at every scale (sf10 local[32] 5.9 s
-   * vs 3.4 s hinted-SHJ row join; sf100 local[32] 79 s vs 58.7 s row
-   * SMJ — two 150M-group hash aggregations cost more than the fact-side
-   * sort they avoid), so low-multiplicity inputs never route there.
+   * The factorized regime is [[cofactorOverJoin]], categorical columns
+   * or not; its numeric-only sides aggregate as plain codegen'd SUMs
+   * ([[chainFrame]]). Below the threshold the row-level
+   * join fallback is kept deliberately: on the fact ⋈ unique-dim shape
+   * the per-key decomposition measured SLOWER at every scale (sf10
+   * local[32] 5.9 s vs 3.4 s hinted-SHJ row join; sf100 local[32] 79 s
+   * vs 58.7 s row SMJ — two 150M-group hash aggregations cost more than
+   * the fact-side sort they avoid), so low-multiplicity inputs never
+   * route there.
    */
   def cofactorOverJoinAdaptive(left: DataFrame, right: DataFrame, key: String,
                                leftNum: Seq[String], leftCat: Seq[String],
@@ -66,13 +69,10 @@ object Factorized {
     // never probe-scanned at all (measured ~2.5 s of the 40 s sf100
     // adaptive wall-clock; the probe reads one column, so it was never
     // the dominant term)
-    val catsEmpty = leftCat.isEmpty && rightCat.isEmpty
-    adviseBucketizeOnRepeat(left, right, key)
     // the documented probe-free pin: no scans at all, straight to the
-    // factorized regime (numeric flavor when no categorical columns)
+    // factorized regime
     if (minRowsPerKey <= 0.0)
-      return if (catsEmpty) cofactorOverJoinNumeric(left, right, key, leftNum, rightNum)
-             else cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
+      return cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
     // the documented FALLBACK pin (Double.MaxValue / +Inf): no probe
     // scans either — symmetric with the star path's pin handling
     if (minRowsPerKey == Double.MaxValue || minRowsPerKey.isPosInfinity)
@@ -80,11 +80,7 @@ object Factorized {
         leftNum ++ rightNum, leftCat ++ rightCat)
     val (rightRows, rightRpk) = probe(right)
     if (rightRpk >= minRowsPerKey && probe(left)._2 >= minRowsPerKey) {
-      // the factorized regime; with no categorical columns the numeric
-      // moments decomposition computes the identical triple without ring
-      // objects (plain SUMs, map-side combine) — strictly the better plan
-      if (catsEmpty) cofactorOverJoinNumeric(left, right, key, leftNum, rightNum)
-      else cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
+      cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
     } else {
       // one cofactor fold over the join, shaped to the factorized
       // block layout [leftNum ++ rightNum, leftCat ++ rightCat].
@@ -107,73 +103,6 @@ object Factorized {
         leftRows = if (rightRpk >= minRowsPerKey) Some(probe(left)._1) else None,
         rightRows = Some(rightRows))
       Graft.cofactor(joined, leftNum ++ rightNum, leftCat ++ rightCat)
-    }
-  }
-
-  /**
-   * Numeric-only factorized cofactor over the equi-join, expressed as
-   * plain codegen'd SUM columns end to end — no ring objects anywhere.
-   * The degree-2 moments of `left ⋈ right` decompose per join key k
-   * (the continuous block of the ring product, mul.cpp:262-289):
-   * with per-key left moments (n_k, S_i = Σx_i, P_ij = Σx_i·x_j) and
-   * right moments (m_k, T_a, Q_ab), the join's contributions are
-   *   count      Σ_k n_k·m_k
-   *   Σ x_i      Σ_k m_k·S_i(k)        Σ y_a      Σ_k n_k·T_a(k)
-   *   Σ x_i·x_j  Σ_k m_k·P_ij(k)      Σ y_a·y_b  Σ_k n_k·Q_ab(k)
-   *   Σ x_i·y_a  Σ_k S_i(k)·T_a(k)
-   * so the plan is: two grouped partial aggregates (map-side combine
-   * collapses each side to ONE skinny row per key BEFORE its shuffle),
-   * an equi-join of the aggregated sides that REUSES both children's
-   * hash partitioning (no third exchange — VerifyDrive §18), and one
-   * global codegen'd SUM over the per-key products. Versus
-   * [[cofactorOverJoin]]'s object-triple path this stays inside
-   * whole-stage codegen and Tungsten rows throughout — the object path
-   * only earns its keep when categorical maps force it.
-   *
-   * Scope honestly measured: this wins in the MULTIPLICATIVE regime —
-   * both sides many rows per key, where each grouped partial collapses
-   * its side and the join is |keys|-sized. On the fact ⋈ unique-dim
-   * shape it LOSES to the row-level join at every measured scale
-   * (sf10 local[32]: 5.9 s vs 3.4 s hinted SHJ; sf100 local[32]: 79 s
-   * vs 58.7 s SMJ — the two near-|rows|-group hash aggregations cost
-   * more than the fact-side sort they avoid), which is why
-   * [[cofactorOverJoinAdaptive]] routes only the factorized regime
-   * here, never the low-multiplicity fallback.
-   * Null semantics match [[graft.Graft.cofactor]] (no categorical
-   * columns) over the materialized join: a joined row is dropped iff
-   * any numeric column on either side is NULL, which decomposes into
-   * per-side filters.
-   */
-  def cofactorOverJoinNumeric(left: DataFrame, right: DataFrame, key: String,
-                              leftNum: Seq[String], rightNum: Seq[String]): Triple = {
-    val kL = leftNum.length; val kR = rightNum.length; val k = kL + kR
-    def moments(df: DataFrame, num: Seq[String], p: String) = {
-      val cs = num.map(c => col(c).cast("double"))
-      val clean = if (num.isEmpty) df else df.where(cs.map(_.isNotNull).reduce(_ && _))
-      val aggs = count(lit(1)).as(s"${p}n") +:
-        (num.indices.map(i => sum(cs(i)).as(s"${p}s$i")) ++
-          (for { i <- num.indices; j <- num.indices if j >= i }
-            yield sum(cs(i) * cs(j)).as(s"${p}p${i}_$j")))
-      clean.groupBy(col(key).as("__k")).agg(aggs.head, aggs.tail: _*)
-    }
-    val joined = moments(left, leftNum, "a").join(moments(right, rightNum, "b"), "__k")
-    val an = col("an"); val bn = col("bn")
-    val sums: Seq[Column] =
-      leftNum.indices.map(i => sum(bn * col(s"as$i"))) ++
-        rightNum.indices.map(a => sum(an * col(s"bs$a")))
-    val prods: Seq[Column] = for { i <- 0 until k; j <- i until k } yield {
-      if (j < kL) sum(bn * col(s"ap${i}_$j"))
-      else if (i >= kL) sum(an * col(s"bp${i - kL}_${j - kL}"))
-      else sum(col(s"as$i") * col(s"bs${j - kL}"))
-    }
-    val all = sum(an * bn) +: (sums ++ prods)
-    val row = joined.agg(all.head, all.tail: _*).head()
-    if (row.isNullAt(0)) Triple.zero(k, 0)
-    else {
-      def d(idx: Int): Double = if (row.isNullAt(idx)) 0.0 else row.getDouble(idx)
-      Triple(row.getLong(0), Array.tabulate(k)(i => d(1 + i)),
-        Array.tabulate(k * (k + 1) / 2)(i => d(1 + k + i)),
-        Array.empty, Array.empty, Array.empty)
     }
   }
 
@@ -660,44 +589,6 @@ object Factorized {
     * bounds memory. */
   private val topKeys = new graft.sources.ProbeMemo[Array[Row]](256)
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Repeat-call counter behind [[adviseBucketizeOnRepeat]]; the
-    * 256-entry LRU is the usual leak bound. */
-  private val repeatJoinCounts = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Integer](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String), Integer]): Boolean =
-        size() > 256
-    })
-
-  /** One-line advisory for the 100 TB repeated-join pattern. The
-    * raw-parquet adaptive join sits AT the platform's bare-join floor
-    * (FactProfile sf100: bare hinted-SHJ/SMJ 23–25 s vs 22.8 s for the
-    * whole operator — the decision overhead is ~6%); that floor is the
-    * cost of shuffling both raw sides and cannot be coded away. The
-    * same operator over bucketed tables runs ~5× faster (sf100 4.4 s,
-    * zero exchanges), paying one bucketed write that amortizes over
-    * every subsequent run. So on the SECOND adaptive call over the
-    * same un-bucketed logical inputs and key — the retraining / MICE
-    * column-loop / scheduled-job pattern, exactly where bucketize-once
-    * amortizes — log the recommendation once. */
-  private def adviseBucketizeOnRepeat(left: DataFrame, right: DataFrame, key: String): Unit = {
-    if (bucketSpecOf(left).nonEmpty && bucketSpecOf(right).nonEmpty) return
-    val ck = (left.queryExecution.analyzed.canonicalized,
-      right.queryExecution.analyzed.canonicalized, key)
-    val n = Option(repeatJoinCounts.get(ck)).fold(1)(_.intValue + 1)
-    repeatJoinCounts.put(ck, n)
-    if (n == 2)
-      log.warn(s"cofactorOverJoinAdaptive: repeat run over the same UN-BUCKETED inputs on key '$key'" +
-        " — this plan re-shuffles both sides on every call and sits at the bare-join floor at scale." +
-        " Bucketize both tables once on the join key (graft.sources.Tables.writeBucketed /" +
-        " attachOrWriteBucketed) and subsequent runs take the zero-exchange co-located tier" +
-        " (~5x measured at sf100; see BENCH_CONTEXT 'raw adaptive floor').")
-  }
-
   /** Per-key shape from [[probeGroupedShape]]: `width` is the exact max
     * packable UTF-8 byte width for a string key (Int.MaxValue when the
     * key is all-NULL or a value embeds a NUL byte; -1 for numeric
@@ -795,18 +686,6 @@ object Factorized {
 
   private[graft] def probeCacheSize: Int = rowsPerKey.size
 
-  /** Routing the last multi-dim [[cofactorOverStar]] call on this
-    * thread chose — (aggregated dim keys, row-folded dim keys). The
-    * chain is driver-side, so there is no single query plan to assert
-    * a route on; oracle rows (q69) and specs certify the ADAPTIVE
-    * probe's decision through this instead. Thread-local: parallel
-    * suites and concurrent sessions don't race. */
-  private val lastStarRoutingTL =
-    new ThreadLocal[(Seq[String], Seq[String])] {
-      override def initialValue(): (Seq[String], Seq[String]) = (Seq(), Seq())
-    }
-  def lastStarRouting(): (Seq[String], Seq[String]) = lastStarRoutingTL.get()
-
   /** One dimension table of a star join: `df` must carry the join key
     * under the SAME name `key` as the fact table (rename before
     * constructing), projected to (key, num…, cat…). Feature names must
@@ -879,24 +758,7 @@ object Factorized {
     val keys = dims.map(_.key)
     require(keys.distinct.length == keys.length,
       s"star dims must join on distinct fact keys, got $keys")
-
-    def rowsPerKey(df: DataFrame, keyCols: Seq[String]): (Long, Double) =
-      probeRowsPerKey(df, keyCols)
-    // MIXED routing: each dim is judged separately. A multiplicative dim
-    // must be AGGREGATED (materializing it fans the join out by its
-    // multiplicity); a near-unique dim should be FOLDED into the fact
-    // row-level (aggregating it is the measured per-~1-row-buffer
-    // pessimization, and worse, its key would join the fact's grouping
-    // composite — pushing the fact grouping toward one group per row).
-    // The chain then groups the fact by ONLY the aggregated dims' keys.
-    // minRowsPerKey = 0 pins EVERY dim aggregated (the fully-factorized
-    // chain, deterministic for oracle rows); Double.MaxValue pins the
-    // fully-materialized fallback.
-    val (aggDims, rowDims) =
-      if (minRowsPerKey <= 0.0) (dims, Seq.empty[StarDim])
-      else if (minRowsPerKey == Double.MaxValue) (Seq.empty[StarDim], dims)
-      else dims.partition(d => rowsPerKey(d.df, Seq(d.key))._2 >= minRowsPerKey)
-    lastStarRoutingTL.set((aggDims.map(_.key), rowDims.map(_.key)))
+    val (aggDims, rowDims) = starRouting(dims, minRowsPerKey)
 
     if (aggDims.nonEmpty) {
       // fold near-unique dims into the fact first (their features become
@@ -927,20 +789,42 @@ object Factorized {
     }
   }
 
+  /** The multi-dim [[cofactorOverStar]] routing (its scaladoc gives the
+    * rule): (aggregated dims, row-folded dims), each in declared order,
+    * every dim judged by the memoized [[probeRowsPerKey]]; the 0 and
+    * `Double.MaxValue` pins run no probe. Oracle rows (q69) and specs
+    * assert the adaptive decision through this. */
+  private[graft] def starRouting(dims: Seq[StarDim],
+                                 minRowsPerKey: Double): (Seq[StarDim], Seq[StarDim]) =
+    if (minRowsPerKey <= 0.0) (dims, Seq.empty[StarDim])
+    else if (minRowsPerKey == Double.MaxValue) (Seq.empty[StarDim], dims)
+    else dims.partition(d => probeRowsPerKey(d.df, Seq(d.key))._2 >= minRowsPerKey)
+
   /** The factorized chain over aggregated dims: the fact collapses to one
     * triple per combination of the dims' keys, each dim to one triple per
     * key, and the joins chain over those pre-aggregates, ring-multiplying
     * as they go; one fold ([[Graft.sumTriples]]) adds the products.
     * Layout `[factNum ++ dims' num…, factCat ++ dims' cat…]`; the zero
-    * triple of that arity when the join is empty. With ONE dim both join
-    * sides are unique per key, so [[hashJoinIfSafe]] skips its hot-key
-    * probe (`buildKeysUnique`); with more, the fact side is grouped by
-    * every dim key, is not unique on any one of them, and may be chosen
-    * as the build side. Feature names are not checked across sides:
-    * only the key and triple columns reach the joins. */
+    * triple of that arity when the join is empty. */
   private def aggregatedChain(fact: DataFrame, factNum: Seq[String], factCat: Seq[String],
-                              dims: Seq[StarDim]): Triple = {
-    Graft.register(fact.sparkSession)
+                              dims: Seq[StarDim]): Triple =
+    Graft.sumTriples(chainFrame(fact, factNum, factCat, dims), col("__T")).getOrElse(Triple.zero(
+      factNum.length + dims.map(_.num.length).sum, factCat.length + dims.map(_.cat.length).sum))
+
+  /** [[aggregatedChain]]'s frame: one row per joined key combination,
+    * its ring product in column `__T`. With ONE dim both join sides are
+    * unique per key, so [[hashJoinIfSafe]] skips its hot-key probe
+    * (`buildKeysUnique`); with more, the fact side is grouped by every
+    * dim key, is not unique on any one of them, and may be chosen as the
+    * build side. Feature names are not checked across sides: only the
+    * key and triple columns reach the joins. The analyzed plan goes
+    * through [[graft.plans.CofactorDeclarativeRewrite]] in every
+    * session, so each numeric-only side aggregates as plain codegen'd
+    * SUMs; a side with a categorical column keeps `sum_to_triple`. */
+  private[graft] def chainFrame(fact: DataFrame, factNum: Seq[String], factCat: Seq[String],
+                                dims: Seq[StarDim]): DataFrame = {
+    val spark = fact.sparkSession
+    Graft.register(spark)
     def lifted(num: Seq[String], cat: Seq[String]) =
       Graft.sumTriple(num.map(c => col(c).cast("double")) ++ cat.map(c => col(c).cast("int")): _*)
     var cur = fact.groupBy(dims.map(d => col(d.key)): _*)
@@ -951,8 +835,7 @@ object Factorized {
         .withColumn("__T", Graft.multiplyTriple(col("__T"), col("__D")))
         .drop("__D")
     }
-    Graft.sumTriples(cur, col("__T")).getOrElse(Triple.zero(
-      factNum.length + dims.map(_.num.length).sum, factCat.length + dims.map(_.cat.length).sum))
+    ColumnBridge.ofRows(spark, CofactorDeclarativeRewrite(cur.queryExecution.analyzed))
   }
 
   /** Memoized (rows, rows-per-key) probe shared by the adaptive
@@ -973,24 +856,5 @@ object Factorized {
                      normalize: Boolean = false): LinReg.Model = {
     val t = cofactorOverStar(fact, factNum, factCat, dims)
     LinReg.train(t, label, lambda, normalize)
-  }
-
-  /** Train linear regression over the (never materialized) join. */
-  def linRegOverJoin(left: DataFrame, right: DataFrame, key: String,
-                     leftNum: Seq[String], leftCat: Seq[String],
-                     rightNum: Seq[String], rightCat: Seq[String],
-                     label: Int, lambda: Double = 0.0): LinReg.Model = {
-    val t = cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
-    LinReg.train(t, label, lambda)
-  }
-
-  /** Train LDA over the join; `label` indexes the combined categorical
-    * list `leftCat ++ rightCat`. */
-  def ldaOverJoin(left: DataFrame, right: DataFrame, key: String,
-                  leftNum: Seq[String], leftCat: Seq[String],
-                  rightNum: Seq[String], rightCat: Seq[String],
-                  label: Int, shrinkage: Double = 0.0): Lda.Model = {
-    val t = cofactorOverJoin(left, right, key, leftNum, leftCat, rightNum, rightCat)
-    Lda.train(t, label, shrinkage)
   }
 }

@@ -325,37 +325,25 @@ object VerifyDrive {
       println(s"wide coarse assignment OK: native pq_encode_s, $nCells populated cells")
     }
 
-    println("== [18] numeric factorized moments: two side shuffles, partitioning reused ==")
+    println("== [18] factorized chain: declarative side aggregates == materialized join ==")
     locally {
-      // the moments decomposition must plan as: grouped partial agg per
-      // side (map-side combine) → ONE exchange per side → join that
-      // REUSES the groupBys' hash partitioning (no third data exchange;
-      // the only other exchange allowed is the 1-row global-agg gather)
-      // and NO ring objects (plain codegen'd SUMs — no ObjectHashAggregate)
+      // the library chain over lineitem ⋈ orders: its numeric-only side
+      // aggregates plan as codegen'd SUMs (no ring objects), and its
+      // triple equals the fused cofactor over the materialized join
+      import graft.ml.Factorized
       val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
         .select(col("l_orderkey").as("k"), col("l_quantity"))
       val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
         .select(col("o_orderkey").as("k"), col("o_totalprice"))
-      def moments(df: org.apache.spark.sql.DataFrame, c: String, p: String) =
-        df.where(col(c).isNotNull).groupBy(col("k").as("__k"))
-          .agg(count(lit(1)).as(s"${p}n"), sum(col(c)).as(s"${p}s0"),
-            sum(col(c) * col(c)).as(s"${p}p0"))
-      val joined = moments(li, "l_quantity", "a").join(moments(ord, "o_totalprice", "b"), "__k")
-        .agg(sum(col("an") * col("bn")), sum(col("bn") * col("as0")),
-          sum(col("an") * col("bs0")), sum(col("as0") * col("bs0")))
-      val numPhys = joined.queryExecution.executedPlan.toString
-      val nEx = "Exchange hashpartitioning".r.findAllIn(numPhys).length +
-        "Exchange SinglePartition".r.findAllIn(numPhys).length
-      assert(nEx <= 3, s"numeric factorized must shuffle once per side + 1-row gather, found $nEx:\n$numPhys")
-      assert(!numPhys.contains("ObjectHashAggregate"),
-        s"numeric factorized must stay in codegen'd hash aggregation:\n$numPhys")
-      // and the library entry point computes the same triple as the ring path
-      val viaNumeric = graft.ml.Factorized.cofactorOverJoinNumeric(
-        li, ord, "k", Seq("l_quantity"), Seq("o_totalprice"))
-      val viaRing = graft.ml.Factorized.cofactorOverJoin(
+      val phys = Factorized.chainFrame(li, Seq("l_quantity"), Seq(),
+        Seq(Factorized.StarDim(ord, "k", Seq("o_totalprice")))).queryExecution.executedPlan.toString
+      assert(!phys.contains("ObjectHashAggregate"),
+        s"numeric-only chain must stay in codegen'd hash aggregation:\n$phys")
+      val viaChain = Factorized.cofactorOverJoin(
         li, ord, "k", Seq("l_quantity"), Seq(), Seq("o_totalprice"), Seq())
-      assert(viaNumeric.approxEquals(viaRing, 1e-9), "numeric moments != ring product")
-      println(s"numeric factorized OK: $nEx exchanges, codegen'd aggs, parity with ring path")
+      val tMat = Graft.cofactor(li.join(ord, "k"), Seq("l_quantity", "o_totalprice"), Seq())
+      assert(viaChain.approxEquals(tMat, 1e-9), s"chain $viaChain != materialized $tMat")
+      println(s"factorized chain OK: N=${viaChain.n}, codegen'd side aggregates, == materialized join")
     }
 
     println("== [19] star cofactor (2 dims): chained ring products == materialized 3-way join ==")

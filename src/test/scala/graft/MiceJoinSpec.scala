@@ -14,6 +14,21 @@ class MiceJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  // one MICE round for one continuous column: the chained loop with
+  // `target` the one imputed column and one iteration
+  def oneRoundStar(fact: org.apache.spark.sql.DataFrame, dims: Seq[StarDim], target: String,
+                   factNum: Seq[String], lambda: Double = 0.0,
+                   tm: Mice.Timings = new Mice.Timings): org.apache.spark.sql.DataFrame =
+    MiceJoin.imputeChainedOverStar(fact, dims, MiceJoin.ChainConfig(factNum = target +: factNum,
+      factCat = Seq(), dimNum = Seq(), imputeCont = Seq(target), iterations = 1, lambda = lambda), tm)
+
+  def oneRoundJoin(fact: org.apache.spark.sql.DataFrame, dim: org.apache.spark.sql.DataFrame,
+                   key: String, target: String, factNum: Seq[String], dimNum: Seq[String],
+                   lambda: Double = 0.0,
+                   tm: Mice.Timings = new Mice.Timings): org.apache.spark.sql.DataFrame =
+    MiceJoin.imputeChainedOverJoin(fact, dim, key, MiceJoin.ChainConfig(factNum = target +: factNum,
+      factCat = Seq(), dimNum = dimNum, imputeCont = Seq(target), iterations = 1, lambda = lambda), tm)
+
   // y = 2 + 3*x1 + 0.5*x2 EXACTLY — imputation must recover it exactly
   val dim = Seq.tabulate(40)(k => (k.toLong, k * 1.5 - 10.0)).toDF("k", "x2")
   def fact = Seq.tabulate(400) { i =>
@@ -28,7 +43,7 @@ class MiceJoinSpec extends AnyFunSuite {
 
   test("imputed values recover an exactly-linear fact~fact+dim relation") {
     val tm = new Mice.Timings
-    val done = MiceJoin.imputeContOverJoin(fact, dim, key = "k", target = "y",
+    val done = oneRoundJoin(fact, dim, key = "k", target = "y",
       factNum = Seq("x1"), dimNum = Seq("x2"), tm = tm)
     assert(done.count() == 400)
     assert(done.filter($"y".isNull).count() == 0)
@@ -53,7 +68,7 @@ class MiceJoinSpec extends AnyFunSuite {
 
   test("star impute (2 dims) recovers an exactly-linear relation and matches the materialized train") {
     val dims = Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dimB, "kb", Seq("d2")))
-    val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y", factNum = Seq("x1"))
+    val done = oneRoundStar(starFact, dims, target = "y", factNum = Seq("x1"))
     assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
     val maxErr = done.filter($"miss")
       .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
@@ -62,7 +77,7 @@ class MiceJoinSpec extends AnyFunSuite {
     // left-joins must not fan out fact rows)
     val dupB = dimB.union(Seq((3L, 99.0)).toDF("kb", "d2"))
     val ex = intercept[IllegalArgumentException] {
-      MiceJoin.imputeContOverStar(starFact,
+      oneRoundStar(starFact,
         Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dupB, "kb", Seq("d2"))),
         target = "y", factNum = Seq("x1"))
     }
@@ -70,7 +85,7 @@ class MiceJoinSpec extends AnyFunSuite {
     // the failing probe must NOT have been memoized: the same duplicated
     // dim fails again (only passing verdicts are cached, r21)
     val ex2 = intercept[IllegalArgumentException] {
-      MiceJoin.imputeContOverStar(starFact,
+      oneRoundStar(starFact,
         Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dupB, "kb", Seq("d2"))),
         target = "y", factNum = Seq("x1"))
     }
@@ -95,7 +110,7 @@ class MiceJoinSpec extends AnyFunSuite {
       .repartition(4)
     val dims = Seq(StarDim(dimA, "ka", num = Seq("d1")),
       StarDim(dimB, "kb", cat = Seq("c2")))
-    val done = MiceJoin.imputeContOverStar(starFact, dims, target = "y", factNum = Seq("x1"))
+    val done = oneRoundStar(starFact, dims, target = "y", factNum = Seq("x1"))
     assert(done.count() == 400 && done.filter($"y".isNull).count() == 0)
     val maxErr = done.filter($"miss")
       .select(max(abs($"y" - $"yTrue"))).head.getDouble(0)
@@ -123,10 +138,10 @@ class MiceJoinSpec extends AnyFunSuite {
       graft.sources.Tables.writeBucketed(fact, "mice_fact_bkt", "k", 8)
       graft.sources.Tables.writeBucketed(dim, "mice_dim_bkt", "k", 8)
       val tm = new Mice.Timings
-      val bucketed = MiceJoin.imputeContOverJoin(
+      val bucketed = oneRoundJoin(
         spark.table("mice_fact_bkt"), spark.table("mice_dim_bkt"),
         key = "k", target = "y", factNum = Seq("x1"), dimNum = Seq("x2"), tm = tm)
-      val raw = MiceJoin.imputeContOverJoin(fact, dim, key = "k", target = "y",
+      val raw = oneRoundJoin(fact, dim, key = "k", target = "y",
         factNum = Seq("x1"), dimNum = Seq("x2"), tm = new Mice.Timings)
       val joined = bucketed.select($"id", $"y".as("yB"))
         .join(raw.select($"id", $"y".as("yR")), "id")
@@ -517,7 +532,7 @@ class MiceJoinSpec extends AnyFunSuite {
       .toDF("id", "k", "x1", "yTrue", "miss")
       .withColumn("y", lit(null).cast("double"))
       .select("id", "k", "x1", "yTrue", "miss", "y")
-    val done = MiceJoin.imputeContOverJoin(
+    val done = oneRoundJoin(
       fact.select("id", "k", "x1", "yTrue", "miss", "y").unionByName(orphan),
       dim, key = "k", target = "y", factNum = Seq("x1"), dimNum = Seq("x2"))
     val mean = fact.filter(!$"miss").select(avg($"y")).head.getDouble(0)
@@ -531,7 +546,7 @@ class MiceJoinSpec extends AnyFunSuite {
     val orphans = Seq((998L, 998L, 1.0, 500.0, false, Some(500.0)), (999L, 999L, 1.0, 0.0, true, None))
       .toDF("id", "k", "x1", "yTrue", "miss", "y")
     val in = fact.select("id", "k", "x1", "yTrue", "miss", "y").unionByName(orphans)
-    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+    val done = oneRoundJoin(in, dim, key = "k", target = "y",
       factNum = Seq("x1"), dimNum = Seq("x2"))
     val mean = in.select(avg($"y")).head.getDouble(0)
     val got = done.filter($"id" === 999L).select($"y").head.getDouble(0)
@@ -545,7 +560,7 @@ class MiceJoinSpec extends AnyFunSuite {
 
   test("one round keeps the input's schema: an int feature stays an int") {
     val in = fact.withColumn("x1", $"x1".cast("int"))
-    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+    val done = oneRoundJoin(in, dim, key = "k", target = "y",
       factNum = Seq("x1"), dimNum = Seq("x2"))
     assert(done.schema == in.schema, s"${done.schema.treeString} vs ${in.schema.treeString}")
     assert(done.filter($"y".isNull).count() == 0)
@@ -557,7 +572,7 @@ class MiceJoinSpec extends AnyFunSuite {
     val in = fact
       .withColumn("big", lit((1L << 53) + 1) + $"id" * 2)
       .withColumn("dec", ($"id" + lit(BigDecimal("0.123456789012345678"))).cast("decimal(38,18)"))
-    val done = MiceJoin.imputeContOverJoin(in, dim, key = "k", target = "y",
+    val done = oneRoundJoin(in, dim, key = "k", target = "y",
       factNum = Seq("x1", "big", "dec"), dimNum = Seq("x2"), lambda = 1e-6)
     assert(done.schema == in.schema, s"${done.schema.treeString} vs ${in.schema.treeString}")
     val both = done.as("o").join(in.as("i"), "id")
@@ -575,7 +590,7 @@ class MiceJoinSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.LogicalRDD
     val (fact, dims) = (starFact, Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dimB, "kb", Seq("d2"))))
     def run() = org.apache.spark.graft.JobCounter.jobProperties(spark.sparkContext) {
-      val out = MiceJoin.imputeContOverStar(fact, dims, target = "y", factNum = Seq("x1"))
+      val out = oneRoundStar(fact, dims, target = "y", factNum = Seq("x1"))
       assert(out.queryExecution.analyzed.collect { case l: LogicalRDD => l }.isEmpty,
         "one round must store nothing")
       out.write.format("noop").mode("overwrite").save()
@@ -606,7 +621,7 @@ class MiceJoinSpec extends AnyFunSuite {
       .withColumn("y", when($"miss", lit(null)).otherwise($"yTrue"))
     val orphan = Seq((999L, 999L, 0.0, 0.0, true)).toDF("id", "k", "x1", "yTrue", "miss")
       .withColumn("y", lit(null).cast("double"))
-    val done = MiceJoin.imputeContOverStar(f.unionByName(orphan),
+    val done = oneRoundStar(f.unionByName(orphan),
       Seq(StarDim(catDim, "k", Seq(), Seq("c"))),
       target = "y", factNum = Seq("x1"))
     val mean = f.filter(!$"miss").select(avg($"y")).head.getDouble(0)
@@ -641,18 +656,13 @@ class MiceJoinSpec extends AnyFunSuite {
       s"chained orphan must keep its mean-initialized value: $got vs $mean")
   }
 
-  test("target in factNum is rejected loudly; NULL-keyed dim rows do not abort the probe") {
-    val ex = intercept[IllegalArgumentException] {
-      MiceJoin.imputeContOverJoin(fact, dim, "k", target = "y",
-        factNum = Seq("y", "x1"), dimNum = Seq("x2"))
-    }
-    assert(ex.getMessage.contains("must not also appear in factNum"))
+  test("NULL-keyed dim rows do not abort the unique-key probe") {
     // two NULL-keyed dim rows: an equi-join can never match them, so the
     // unique-key probe must not treat them as a duplicated key
     val dimWithNulls = dim.unionByName(Seq(
       (null.asInstanceOf[java.lang.Long], 1.0), (null.asInstanceOf[java.lang.Long], 2.0))
       .toDF("k", "x2"))
-    val done = MiceJoin.imputeContOverJoin(fact, dimWithNulls, "k",
+    val done = oneRoundJoin(fact, dimWithNulls, "k",
       target = "y", factNum = Seq("x1"), dimNum = Seq("x2"))
     assert(done.filter($"y".isNull).count() == 0)
   }

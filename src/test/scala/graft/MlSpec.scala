@@ -648,31 +648,50 @@ class MlSpec extends AnyFunSuite {
     assert(!t3.approxEquals(t1, 1e-12))
   }
 
-  test("numeric factorized moments == object factorized == cofactor over materialized join") {
+  test("numeric-only factorized join == cofactor over materialized join") {
     val dim = Seq.tabulate(20)(k => (k, k * 0.5 + 1.0)).toDF("k", "dprice")
     val fact = rows.zipWithIndex.map { case ((y, a, _, _), i) => (i % 20, y, a) }
       .toDF("k", "y", "a")
-    val viaNumeric = graft.ml.Factorized.cofactorOverJoinNumeric(
-      fact, dim, "k", Seq("y", "a"), Seq("dprice"))
-    val viaObject = graft.ml.Factorized.cofactorOverJoin(
-      fact, dim, "k", Seq("y", "a"), Seq(), Seq("dprice"), Seq())
-    assert(viaNumeric.approxEquals(viaObject, 1e-9),
-      s"moments decomposition diverged from the ring product: $viaNumeric vs $viaObject")
+    def chain(f: org.apache.spark.sql.DataFrame, d: org.apache.spark.sql.DataFrame) =
+      graft.ml.Factorized.cofactorOverJoin(f, d, "k", Seq("y", "a"), Seq(), Seq("dprice"), Seq())
+    val viaChain = chain(fact, dim)
     val plain = Graft.cofactor(fact.join(dim, "k"), Seq("y", "a", "dprice"), Nil)
-    assert(viaNumeric.approxEquals(plain, 1e-9))
+    assert(viaChain.approxEquals(plain, 1e-9), s"chain $viaChain != materialized $plain")
     // null semantics: a joined row drops iff any numeric column on either
     // side is null — per-side nulls must match the materialized filter
     val factN = fact.withColumn("y", when($"k" === 3, lit(null)).otherwise($"y"))
     val dimN = dim.withColumn("dprice", when($"k" === 7, lit(null)).otherwise($"dprice"))
-    val nNumeric = graft.ml.Factorized.cofactorOverJoinNumeric(
-      factN, dimN, "k", Seq("y", "a"), Seq("dprice"))
+    val nChain = chain(factN, dimN)
     val nPlain = Graft.cofactor(factN.join(dimN, "k"), Seq("y", "a", "dprice"), Nil)
-    assert(nNumeric.approxEquals(nPlain, 1e-9))
-    assert(nNumeric.n < viaNumeric.n, "null injection must have dropped rows")
+    assert(nChain.approxEquals(nPlain, 1e-9))
+    assert(nChain.n < viaChain.n, "null injection must have dropped rows")
     // empty join → zero triple of the combined arity
-    val empty = graft.ml.Factorized.cofactorOverJoinNumeric(
-      fact.filter($"k" > 100), dim, "k", Seq("y", "a"), Seq("dprice"))
-    assert(empty == graft.ring.Triple.zero(3, 0))
+    assert(chain(fact.filter($"k" > 100), dim) == graft.ring.Triple.zero(3, 0))
+  }
+
+  test("bare session: the chain's numeric-only sides plan no ObjectHashAggregate") {
+    // the chain applies the declarative rewrite itself, so a session
+    // with no graft optimizer rule or strategy installed still plans
+    // numeric-only side aggregates as codegen'd SUMs; a categorical
+    // column keeps its side on the ring-object aggregate
+    import graft.ml.Factorized.{chainFrame, StarDim}
+    val (savedO, savedS) = (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
+    spark.experimental.extraOptimizations = Nil
+    spark.experimental.extraStrategies = Nil
+    try {
+      val dim = Seq.tabulate(20)(k => (k, k * 0.5 + 1.0, k % 3)).toDF("k", "dprice", "dcat")
+      val fact = rows.zipWithIndex.map { case ((y, a, _, _), i) => (i % 20, y, a) }
+        .toDF("k", "y", "a")
+      def plan(dimCat: Seq[String]) = chainFrame(fact, Seq("y", "a"), Seq(),
+        Seq(StarDim(dim, "k", Seq("dprice"), dimCat))).queryExecution.executedPlan.toString
+      val numeric = plan(Seq())
+      assert(!numeric.contains("ObjectHashAggregate"), s"numeric-only chain:\n$numeric")
+      val mixed = plan(Seq("dcat"))
+      assert(mixed.contains("ObjectHashAggregate"), s"chain with a categorical side:\n$mixed")
+    } finally {
+      spark.experimental.extraOptimizations = savedO
+      spark.experimental.extraStrategies = savedS
+    }
   }
 
   test("shuffle-hash hint is size-guarded: SHJ under the cap, spillable SMJ over it") {

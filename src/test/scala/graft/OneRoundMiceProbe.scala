@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Wall time, jobs and shuffle bytes of a warm one-round star MICE call
-  * (`MiceJoin.imputeContOverStar`, q62/q66's shape: lineitem's
+  * (`MiceJoin.imputeChainedOverStar` with one imputed column and one
+  * iteration, q62/q66's shape: lineitem's
   * l_discount from l_quantity and orders.o_totalprice, plus
   * part.p_retailprice for `star`) and the caller's one consuming
   * aggregate. Without `broadcast` the dims are too large to broadcast
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Run: `sbt "Test/runMain graft.OneRoundMiceProbe <sfDir> join|star <reps> [broadcast]"`.
   * It uses only the public API, so the same file measures any commit
-  * that has `imputeContOverStar`. */
+  * whose `ChainConfig` has these fields. */
 object OneRoundMiceProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, shape, reps) = args.take(3)
@@ -41,7 +42,9 @@ object OneRoundMiceProbe {
       var wall = 0.0
       val (jobs, bytes) = JobCounter.shuffled(spark.sparkContext) {
         val t0 = System.nanoTime()
-        val done = mice.MiceJoin.imputeContOverStar(fact, dims, "l_discount", Seq("l_quantity"))
+        val done = mice.MiceJoin.imputeChainedOverStar(fact, dims, mice.MiceJoin.ChainConfig(
+          factNum = Seq("l_discount", "l_quantity"), factCat = Seq(), dimNum = Seq(),
+          imputeCont = Seq("l_discount"), iterations = 1))
         done.agg(count(lit(1)), avg(col("l_discount"))).head()
         wall = (System.nanoTime() - t0) / 1e9
         Graft.dropCheckpoint(done)
