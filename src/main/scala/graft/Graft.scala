@@ -37,6 +37,11 @@ object Graft {
 
   def register(spark: SparkSession): SparkSession = {
     if (!registered.containsKey(spark)) synchronized {
+      // broadcast build sides kept across queries, for the joins that
+      // opt in (the MICE setup's dims)
+      val strategies = spark.experimental.extraStrategies
+      if (!strategies.exists(_.isInstanceOf[graft.plans.KeptBroadcast.Strategy]))
+        spark.experimental.extraStrategies = strategies :+ graft.plans.KeptBroadcast.Strategy(spark)
       val reg = spark.sessionState.functionRegistry
       reg.createOrReplaceTempFunction("sum_to_triple", es => CofactorAggregate(es, nbMode = false), "scala_udf")
       reg.createOrReplaceTempFunction("sum_to_nb_agg", es => CofactorAggregate(es, nbMode = true), "scala_udf")
@@ -279,27 +284,35 @@ object Graft {
         spark.sessionState.conf)(CofactorAggregate.confMaxCategories()))
   }
 
+  /** One partition's fold, fed one row at a time; [[checkpointRows]]
+    * feeds it the rows it stores from, in the same pass. */
+  private[graft] trait RowFold[T] {
+    def update(r: org.apache.spark.sql.catalyst.InternalRow): Unit
+    def result: T
+  }
+
   /** One partition's slot buffers: slot `s` folds the rows whose field
     * `agg.children.size + s` is TRUE — a NULL predicate drops the row,
-    * as `filter` would. Returns the serialized buffers keyed by slot. */
-  private[graft] def foldSlots(agg: CofactorAggregate, slots: Int,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Array[(Int, Array[Byte])] = {
-    val k = agg.children.size
-    val bufs = Array.fill(slots)(agg.createAggregationBuffer())
-    rows.foreach { r =>
+    * as `filter` would. `result` serializes them keyed by slot. */
+  private[graft] final class SlotFold(agg: CofactorAggregate, slots: Int)
+      extends RowFold[Array[(Int, Array[Byte])]] {
+    private val k = agg.children.size
+    private val bufs = Array.fill(slots)(agg.createAggregationBuffer())
+    def update(r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
       var s = 0
       while (s < slots) {
         if (!r.isNullAt(k + s) && r.getBoolean(k + s)) agg.update(bufs(s), r)
         s += 1
       }
     }
-    bufs.indices.map(s => s -> agg.serialize(bufs(s))).toArray
+    def result: Array[(Int, Array[Byte])] = bufs.indices.map(s => s -> agg.serialize(bufs(s))).toArray
   }
 
   /** One partition's per-label buffers: `update` folds a row into the
     * buffer of its label (int field `label`; a NULL label drops the
     * row), `result` serializes them keyed by label. */
-  private[graft] final class LabelFold(agg: CofactorAggregate, label: Int) {
+  private[graft] final class LabelFold(agg: CofactorAggregate, label: Int)
+      extends RowFold[Array[(Int, Array[Byte])]] {
     private val bufs = scala.collection.mutable.LongMap.empty[graft.agg.CofactorBuffer]
     def update(r: org.apache.spark.sql.catalyst.InternalRow): Unit =
       if (!r.isNullAt(label))
@@ -335,7 +348,7 @@ object Graft {
     * cast inputs, each partition folding its rows with
     * [[CofactorAggregate]]`.update` — the null-skip, casts and
     * `maxCategories` guard of `sum_to_triple` — into one buffer per
-    * filter slot ([[foldSlots]]), or with a `label` into one buffer per
+    * filter slot ([[SlotFold]]), or with a `label` into one buffer per
     * non-NULL label value; the driver merges them with [[mergeBuffers]].
     * Returns (slot index or label, triple) pairs sorted by key; without
     * a label every slot is present. */
@@ -351,12 +364,9 @@ object Graft {
     val agg = rowAggregate(df.sparkSession, 0 until num.size, num.size until k, nb)
     val slots = filters.size
     val partials = foldPartitions(proj) { rows =>
-      if (label.isEmpty) foldSlots(agg, slots, rows)
-      else {
-        val f = new LabelFold(agg, k + slots)
-        rows.foreach(f.update)
-        f.result
-      }
+      val f = if (label.isEmpty) new SlotFold(agg, slots) else new LabelFold(agg, k + slots)
+      rows.foreach(f.update)
+      f.result
     }
     mergeBuffers(() => agg.createAggregationBuffer(), if (label.isEmpty) 0 until slots else Nil,
       partials)
@@ -486,33 +496,36 @@ object Graft {
     * low-entropy measures). The deser CPU on re-read is amortized
     * against the scan/join each iteration performs anyway.
     *
-    * The level is SIZE-ADAPTIVE: below ~1 GB estimated (Catalyst plan
-    * stats) the generation stores DESERIALIZED (`MEMORY_AND_DISK`) —
-    * at small working sets the ser+LZ4 round trip is pure overhead
-    * (measured +66% on the sf0.1 `mice_1round` bench row when every
-    * level was serialized), while the object-graph blowup it guards
-    * against is bounded by the same small size. Unknown stats (a
-    * LogicalRDD leaf without origin stats reports the session default,
-    * effectively ∞) err to SERIALIZED — the safe direction at scale. */
+    * The level is SIZE-ADAPTIVE: below 1 GB the
+    * generation stores DESERIALIZED (`MEMORY_AND_DISK`) — at small
+    * working sets the ser+LZ4 round trip is pure overhead (measured +66%
+    * on the sf0.1 `mice_1round` bench row when every level was
+    * serialized), while the object-graph blowup it guards against is
+    * bounded by the same small size. The size is the plan's Catalyst
+    * estimate. Every stored generation reports the bytes it actually
+    * stored as its statistics, so a checkpoint of a plan over earlier
+    * generations sizes from data; unknown stats (a leaf over another
+    * RDD reports the session default, effectively ∞) err to SERIALIZED
+    * — the safe direction at scale. */
   private[graft] def checkpoint(df: DataFrame): DataFrame =
-    checkpointRows[Unit](df, _ => true)(None)._1
+    checkpointRows[Unit](df, _ => true, df.queryExecution.optimizedPlan.stats.sizeInBytes)(None)._1
 
-  /** [[checkpoint]] of the rows of `df` that `keep` accepts, plus — when
-    * `fold` is given — `fold` over EVERY row of each partition, all in
-    * ONE job under one SQL execution id: the kept rows persist as the
-    * job's stored RDD and the folds zip beside it, both children of the
-    * one `toRdd` (a broadcast in `df`'s plan runs once; each partition
-    * is computed once per child). The folds come back in
-    * partition-index order; without a `fold` the job is the eager count
-    * (listeners attribute it like any action). */
+  /** [[checkpoint]] of the rows of `df` that `keep` accepts, stored at
+    * the level for about `bytes` (the caller's size of `df`), plus —
+    * when `fold` is given — a fresh `fold()` fed EVERY row of each
+    * partition, all in ONE job under one SQL execution id and ONE pass:
+    * the computation that stores a partition folds it too and hands the
+    * fold to its task ([[StoredFolds]]), so a broadcast in `df`'s plan
+    * runs once and each partition is computed once. The folds come back
+    * in partition-index order; without a `fold` the job reads each
+    * stored partition once (listeners attribute it like any action).
+    * The stored generation's statistics are the bytes of the rows it
+    * stored. */
   private[graft] def checkpointRows[T: scala.reflect.ClassTag](df: DataFrame,
-      keep: org.apache.spark.sql.catalyst.InternalRow => Boolean)(
-      fold: Option[Iterator[org.apache.spark.sql.catalyst.InternalRow] => T]): (DataFrame, Array[T]) = {
+      keep: org.apache.spark.sql.catalyst.InternalRow => Boolean, bytes: BigInt)(
+      fold: Option[() => RowFold[T]]): (DataFrame, Array[T]) = {
     import org.apache.spark.storage.StorageLevel
-    val lvl =
-      if (df.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 30))
-        StorageLevel.MEMORY_AND_DISK
-      else StorageLevel.MEMORY_AND_DISK_SER
+    val lvl = if (bytes < (1L << 30)) StorageLevel.MEMORY_AND_DISK else StorageLevel.MEMORY_AND_DISK_SER
     // LAYOUT-PRESERVING, unlike the public `localCheckpoint` API: the
     // stored generation is rebuilt through `LogicalRDD.fromDataset`,
     // which rewrites the executed plan's outputPartitioning/ordering
@@ -529,25 +542,61 @@ object Graft {
     // strictly safer than localCheckpoint's unrecoverable-block
     // failure mode.
     val qe = df.queryExecution
-    val (stored, folds) = SQLExecution.withNewExecutionId(qe, Some("checkpoint")) {
+    val (stored, parts) = SQLExecution.withNewExecutionId(qe, Some("checkpoint")) {
       val rows = qe.toRdd
       // toRdd's UnsafeRows are reused per partition iterator — copy
       // before storing, exactly as the public checkpoint path does
-      val stored = rows.mapPartitions(_.filter(keep).map(_.copy()))
-        .setName(GenerationName).persist(lvl)
+      val stored = rows.mapPartitions { it =>
+        val f = fold.map(_())
+        val kept = f.fold(it)(g => it.map { r => g.update(r); r }).filter(keep).map(_.copy())
+        f.fold(kept)(g => kept ++ {
+          foldHandoff.set((org.apache.spark.TaskContext.get().taskAttemptId(), g.result))
+          Iterator.empty
+        })
+      }.setName(GenerationName).persist(lvl)
       // eager: materialize before the caller drops the previous generation
-      val folds = fold match {
-        case None => stored.count(); Array.empty[T]
-        case Some(f) =>
-          val zipped = stored.zipPartitions(rows.mapPartitions(it => Iterator(f(it)))) { (kept, part) =>
-            kept.foreach(_ => ())
-            part
-          }
-          df.sparkSession.sparkContext.runJob(zipped, (it: Iterator[T]) => it.next())
-      }
-      (stored, folds)
+      (stored, df.sparkSession.sparkContext.runJob(new StoredFolds(stored, rows, fold),
+        (it: Iterator[(Long, Option[T])]) => it.next()))
     }
-    (org.apache.spark.sql.graft.ColumnBridge.datasetOverRdd(df, stored), folds)
+    (org.apache.spark.sql.graft.ColumnBridge.datasetOverRdd(df, stored, parts.map(_._1).sum),
+      parts.flatMap(_._2))
+  }
+
+  /** Where the computation that stores a partition leaves its fold for
+    * the task attempt that asked for the partition. */
+  private val foldHandoff = new ThreadLocal[(Long, Any)]
+
+  /** One task per partition of `stored`, run once `stored` is persisted:
+    * reading the partition computes and stores it, and the task returns
+    * the bytes of its stored rows with the fold that computation handed
+    * off — or, when an earlier attempt had already stored the block, the
+    * fold of a fresh pass over `rows`. `stored` is a per-partition map of
+    * `rows`, so both share each partition. */
+  private[graft] final class StoredFolds[T](stored: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      fold: Option[() => RowFold[T]])
+      extends org.apache.spark.rdd.RDD[(Long, Option[T])](stored.sparkContext,
+        Seq(new org.apache.spark.OneToOneDependency(stored), new org.apache.spark.OneToOneDependency(rows))) {
+    override protected def getPartitions: Array[org.apache.spark.Partition] = stored.partitions
+
+    override def compute(split: org.apache.spark.Partition,
+                         ctx: org.apache.spark.TaskContext): Iterator[(Long, Option[T])] = {
+      foldHandoff.remove()
+      var bytes = 0L
+      stored.iterator(split, ctx).foreach {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow => bytes += u.getSizeInBytes
+        case r => bytes += 8L * r.numFields
+      }
+      val handed = Option(foldHandoff.get()).collect { case (id, t) if id == ctx.taskAttemptId() => t }
+      foldHandoff.remove()
+      Iterator.single((bytes, fold.map { f =>
+        handed.getOrElse {
+          val g = f()
+          rows.iterator(split, ctx).foreach(g.update)
+          g.result
+        }.asInstanceOf[T]
+      }))
+    }
   }
 
   /** Route the last [[cofactorGrouped]] call on this thread took

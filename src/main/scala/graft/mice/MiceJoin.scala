@@ -2,8 +2,10 @@ package graft.mice
 
 import graft.Graft
 import graft.ml.Factorized
+import graft.plans.KeptBroadcast
 import graft.ring.Triple
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /**
@@ -145,8 +147,10 @@ object MiceJoin {
    *  - the query `J` left-joins the cast, flagged, not yet filled fact
    *    with every dim through [[Factorized.hashJoinIfSafe]]'s size guard
    *    (each dim carries a match marker; unique dims cannot fan out), so
-   *    `J` holds one row per fact row;
-   *  - one job over `J` ([[setup]], each dim broadcast once) folds the
+   *    `J` holds one row per fact row. The marker opts a broadcast dim
+   *    into [[graft.plans.KeptBroadcast]]: an unchanged file, local or
+   *    range dim is broadcast once per `SparkContext`, not once per call;
+   *  - one job over `J` ([[setup]], each partition computed once) folds the
    *    COMPLETE stratum's triple — rows with no imputed column missing
    *    and every dim matched, which never change — folds each imputed
    *    column's observed count and sum (or per-category counts) over
@@ -167,14 +171,16 @@ object MiceJoin {
    * dim feature keeps its value. Each non-final iteration checkpoints
    * the stratum once and drops the previous one; the final iteration is
    * returned lazily. A warm call therefore runs one job per broadcast
-   * dim, the setup job, C·I column steps, I − 1 checkpoints and the
-   * caller's one consuming job, whatever `cfg.catModel` is
-   * (`MiceJoinSpec` and `MiceSpec` pin it).
+   * dim not yet kept (none, for unchanged file, local or range dims),
+   * the setup job, C·I column steps, I − 1 checkpoints and the caller's
+   * one consuming job, whatever `cfg.catModel` is (`MiceJoinSpec` and
+   * `MiceSpec` pin it).
    *
    * With ONE imputed column every incomplete row is missing it, so the
    * static aggregates ARE the training set: the setup job stores
    * nothing, no column step runs a job, and the update is a lazy filter
-   * of `J` to the missing rows: one round of one column is this case.
+   * of `J` to the missing rows (the caller's query re-runs the join over
+   * the kept broadcasts): one round of one column is this case.
    */
   private[mice] def imputeHigh(fact: DataFrame, dims: Seq[Factorized.StarDim],
                                cfg: Mice.Config, normalize: Boolean,
@@ -211,15 +217,22 @@ object MiceJoin {
     // silently-biased prediction (LinReg's zero one-hot block / Lda's
     // first-class tiebreak over NULL scores)
     val guard = matched && !anyDimFeatureNull(dims.flatMap(d => d.num ++ d.cat))
+    // the marker's metadata keeps each broadcast dim's build side across
+    // calls (KeptBroadcast): a warm call broadcasts no unchanged dim
     val joined = dims.zip(marks).foldLeft(base) { case (acc, (d, m)) =>
       Factorized.hashJoinIfSafe(acc,
-        d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m): _*),
+        d.df.select((d.key +: (d.num ++ d.cat)).map(col) :+ lit(true).as(m, KeptBroadcast.mark): _*),
         Seq(d.key), joinType = "left")
     }
+    // a left join with unique-key dims keeps the fact's rows: size the
+    // stored stratum from the fact side, widened to the joined row —
+    // without CBO the join's own estimate multiplies its children's
+    val rowBytes = (df: DataFrame) => EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+    val joinedBytes = base.queryExecution.optimizedPlan.stats.sizeInBytes * rowBytes(joined) / rowBytes(base)
     val trainsOnIncomplete = order.length > 1
     val (static, nbStatic, init, stored) = tm.time("partition")(
       setup(joined, numAll, catAll, !anyFlag && matched, cfg,
-        keep = if (trainsOnIncomplete) order.map(Mice.flag) else Seq()))
+        keep = if (trainsOnIncomplete) order.map(Mice.flag) else Seq(), Some(joinedBytes)))
     var incomplete = Mice.fill(stored.getOrElse(joined.filter(anyFlag)), cfg, init)
     var lastCp = incomplete
 
@@ -262,11 +275,13 @@ object MiceJoin {
     *  - over every row the [[Mice.InitStats]] — one per fact row, since
     *    the dims are unique —
     * and, when `keep` names flag columns, stores the rows with any of
-    * them set ([[Graft.checkpointRows]]: the same tasks, the same
-    * broadcasts). Returns the triple, the per-class aggregates by NB
+    * them set ([[Graft.checkpointRows]]: the same pass over each
+    * partition), at the storage level for `bytes` (default: `joined`'s
+    * own estimate). Returns the triple, the per-class aggregates by NB
     * column, the init and the stored stratum. */
   private[graft] def setup(joined: DataFrame, num: Seq[String], cat: Seq[String],
-                           static: Column, cfg: Mice.Config, keep: Seq[String]):
+                           static: Column, cfg: Mice.Config, keep: Seq[String],
+                           bytes: Option[BigInt] = None):
       (Triple, Map[String, Seq[(Int, Triple)]], Mice.InitStats, Option[DataFrame]) = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BindReferences, UnsafeProjection}
@@ -292,23 +307,30 @@ object MiceJoin {
     val nbAggs = nbCols.map(c => (Graft.rowAggregate(spark, 0 until num.size,
       cat.indices.filterNot(cat(_) == c).map(num.size + _), nb = true), num.size + cat.indexOf(c)))
     val (nCont, nCat) = (cfg.imputeCont.size, cfg.imputeCat.size)
-    val fold = (rows: Iterator[InternalRow]) => {
-      val proj = UnsafeProjection.create(exprs)
-      val init = new Mice.InitStats(nCont, nCat)
-      val nb = nbAggs.map { case (a, label) => new Graft.LabelFold(a, label) }.toArray
-      val t = Graft.foldSlots(agg, 1, rows.map { r =>
+    type Folded = (Array[(Int, Array[Byte])], Mice.InitStats, Array[Array[(Int, Array[Byte])]])
+    val fold = () => new Graft.RowFold[Folded] {
+      private val proj = UnsafeProjection.create(exprs)
+      private val init = new Mice.InitStats(nCont, nCat)
+      private val nb = nbAggs.map { case (a, label) => new Graft.LabelFold(a, label) }.toArray
+      private val slots = new Graft.SlotFold(agg, 1)
+      def update(r: InternalRow): Unit = {
         val p = proj(r)
         init.add(p, k + 1)
         if (nb.nonEmpty && !p.isNullAt(k) && p.getBoolean(k)) nb.foreach(_.update(p))
-        p
-      })
-      (t, init, nb.map(_.result))
+        slots.update(p)
+      }
+      def result: Folded = (slots.result, init, nb.map(_.result))
     }
     val (stored, parts) =
-      if (keep.isEmpty) (None, Graft.foldPartitions(sel)(fold))
+      if (keep.isEmpty) (None, Graft.foldPartitions(sel) { rows =>
+        val f = fold()
+        rows.foreach(f.update)
+        f.result
+      })
       else {
         val flags = keep.map(joined.schema.fieldIndex).toArray
-        val (df, p) = Graft.checkpointRows(joined, (r: InternalRow) => flags.exists(r.getBoolean))(Some(fold))
+        val (df, p) = Graft.checkpointRows(joined, (r: InternalRow) => flags.exists(r.getBoolean),
+          bytes.getOrElse(joined.queryExecution.optimizedPlan.stats.sizeInBytes))(Some(fold))
         (Some(df), p)
       }
     val init = new Mice.InitStats(nCont, nCat)

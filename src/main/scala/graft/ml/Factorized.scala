@@ -677,12 +677,15 @@ object Factorized {
       (rows, cols.indices.map(i => rows - r.getLong(1 + i)).sum)
     }
 
-  /** Drop every memoized probe result ([[graft.sources.ProbeMemo]]).
-    * Appends and rewrites that change a file relation's file count,
-    * paths or total bytes invalidate on their own; call this after a
-    * same-size in-place rewrite, the one change the fingerprint can
-    * alias. */
-  def clearProbeCache(): Unit = graft.sources.ProbeMemo.clearAll()
+  /** Drop every memoized probe result ([[graft.sources.ProbeMemo]]) and
+    * every kept broadcast ([[graft.plans.KeptBroadcast]]). Appends and
+    * rewrites that change a file's name, length or modification time
+    * invalidate on their own; call this after an in-place rewrite that
+    * keeps all three, the one change the fingerprint can alias. */
+  def clearProbeCache(): Unit = {
+    graft.sources.ProbeMemo.clearAll()
+    graft.plans.KeptBroadcast.clear()
+  }
 
   private[graft] def probeCacheSize: Int = rowsPerKey.size
 

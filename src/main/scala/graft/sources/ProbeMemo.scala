@@ -17,13 +17,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * DataFrame identity.
  *
  * Validity rule: a result is stored only when every leaf of the analyzed
- * plan can be fingerprinted — a file `LogicalRelation` (its file count,
- * an order-insensitive hash of its paths and its total bytes), a
- * `LocalRelation` or a `Range` (their canonical plan carries the data).
- * Any other source (DSv2, JDBC, Hive, a checkpointed RDD) can change under
- * an identical plan, so it is re-probed on every call. A probe that
- * throws is never stored. A same-count, same-paths, same-size in-place
- * rewrite is the one change the fingerprint can alias: call
+ * plan can be fingerprinted — a file `LogicalRelation` (its file count
+ * and an order-insensitive hash of each file's path, length and
+ * modification time), a `LocalRelation` or a `Range` (their canonical
+ * plan carries the data). Any other source (DSv2, JDBC, Hive, a
+ * checkpointed RDD) can change under an identical plan, so it is
+ * re-probed on every call. A probe that throws is never stored. An
+ * in-place rewrite that keeps every name, length and modification time
+ * is the one change the fingerprint can alias: call
  * [[graft.ml.Factorized.clearProbeCache]] after one.
  *
  * Each instance is a synchronized access-order LRU of `maxEntries`
@@ -70,13 +71,14 @@ object ProbeMemo {
 
   /** The snapshot fingerprint of `plan`'s leaves, or None when some leaf
     * is a source that cannot be fingerprinted. Driver-side listing
-    * metadata only: nothing is scanned. */
-  private def fingerprint(plan: LogicalPlan): Option[Long] =
+    * metadata only (the file index's `FileStatus`es): nothing is
+    * scanned. */
+  private[graft] def fingerprint(plan: LogicalPlan): Option[Long] =
     plan.collectLeaves().foldLeft(Option(17L)) {
       case (Some(h), LogicalRelation(fs: HadoopFsRelation, _, _, _, _)) =>
-        val files = fs.location.inputFiles
-        Some(((h * 31 + files.length) * 31 +
-          scala.util.hashing.MurmurHash3.unorderedHash(files)) * 31 + fs.sizeInBytes)
+        val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+        Some((h * 31 + files.length) * 31 + scala.util.hashing.MurmurHash3.unorderedHash(
+          files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))))
       case (h, _: LocalRelation | _: Range) => h
       case _ => None
     }

@@ -36,15 +36,17 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
   /** Rebuild `origin` as a DataFrame over an already-materialized
-    * internal-row RDD, CARRYING the executed plan's
-    * `outputPartitioning`/ordering (via the `private[sql]`
+    * internal-row RDD of about `sizeInBytes`, CARRYING the executed
+    * plan's `outputPartitioning`/ordering (via the `private[sql]`
     * `LogicalRDD.fromDataset` rewrite) — the layout-preserving
     * checkpoint for `graft.Graft.checkpoint`. The public
     * `localCheckpoint` API discards both (its LogicalRDD reports
     * `UnknownPartitioning`; see
-    * `graft.tools.CheckpointPartitioningProbe`). */
+    * `graft.tools.CheckpointPartitioningProbe`). `sizeInBytes` replaces
+    * the origin plan's estimate as the leaf's statistics. */
   def datasetOverRdd(origin: org.apache.spark.sql.DataFrame,
-                     rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): org.apache.spark.sql.DataFrame = {
+                     rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     sizeInBytes: BigInt): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
     import org.apache.spark.sql.execution.LogicalRDD
     val cds = origin.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -63,11 +65,12 @@ object ColumnBridge {
       case c: PartitioningCollection => firstLeaf(c.partitionings.head)
       case other => other
     }
-    val (stats, constraints) =
+    val (_, constraints) =
       LogicalRDD.rewriteStatsAndConstraints(cds.logicalPlan, qe.optimizedPlan)
     org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession,
       LogicalRDD(cds.logicalPlan.output, rdd,
         firstLeaf(physical.outputPartitioning), physical.outputOrdering,
-        isStreaming = false)(cds.sparkSession, stats, constraints))
+        isStreaming = false)(cds.sparkSession,
+        Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes)), constraints))
   }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** Test-only DataSource V2 source over a mutable driver-side buffer of
   * (k: long, v: double) rows: a non-file leaf whose data can change
   * while its DataFrame (and so its analyzed plan) stays the same. Each
-  * query snapshots the buffer when it plans its scan. Load it with
+  * query snapshots the buffer when it plans its scan, and reports its
+  * size. Load it with
   * `spark.read.format(classOf[BufferSource].getName).load()`. */
 object BufferSource {
   val rows = new java.util.concurrent.CopyOnWriteArrayList[(Long, Double)]()
@@ -32,12 +33,17 @@ private class BufferTable extends Table with SupportsRead {
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = () =>
-    new Scan with Batch {
+    new Scan with Batch with SupportsReportStatistics {
       override def readSchema(): StructType = BufferSource.schema
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
         Array(BufferPartition(BufferSource.rows.asScala.toArray))
       override def createReaderFactory(): PartitionReaderFactory = BufferReaderFactory
+      // sized, so a join broadcasts it as it would a small file
+      override def estimateStatistics(): Statistics = new Statistics {
+        override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(16L * BufferSource.rows.size)
+        override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(BufferSource.rows.size)
+      }
     }
 }
 

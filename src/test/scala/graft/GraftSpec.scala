@@ -306,4 +306,24 @@ class GraftSpec extends AnyFunSuite {
     assert(cp.count() == 200 && cp.agg(sum($"v")).head.getDouble(0) == df.agg(sum($"v")).head.getDouble(0))
     Graft.dropCheckpoint(cp)
   }
+
+  test("checkpointRows folds a partition an earlier attempt stored from a fresh pass") {
+    // a retried or speculative task can find its partition already
+    // stored, so no computation hands it the fold: it folds the rows again
+    val rows = Seq.tabulate(200)(i => (i % 7, i * 0.5)).toDF("k", "v").repartition(3).queryExecution.toRdd
+    val stored = rows.mapPartitions(_.map(_.copy()))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    stored.count()
+    val parts = spark.sparkContext.runJob(new Graft.StoredFolds(stored, rows, Some(() => new CountRows)),
+      (it: Iterator[(Long, Option[Long])]) => it.next())
+    assert(parts.flatMap(_._2).sum == 200 && parts.map(_._1).sum > 0, parts.toSeq)
+    stored.unpersist()
+  }
+}
+
+/** A fold that counts its rows. */
+private class CountRows extends Graft.RowFold[Long] {
+  private var n = 0L
+  def update(r: org.apache.spark.sql.catalyst.InternalRow): Unit = n += 1
+  def result: Long = n
 }

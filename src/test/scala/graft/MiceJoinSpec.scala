@@ -5,6 +5,8 @@ import graft.ml.Factorized.StarDim
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Flight-style multi-table imputation ([[graft.mice.MiceJoin]]): the
   * model trains FACTORIZED over fact ⋈ dim; on exactly-linear data the
   * imputed values must reproduce the generating function, and they must
@@ -323,8 +325,8 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(iter3 == iter2, s"(jobs, tasks): iteration 2 ran $iter2, iteration 3 ran $iter3")
     // an extra iteration costs one masked triple per imputed column
     // (one job each) plus the iteration's checkpoint. Measured on
-    // local[4]: 7, 12, 17 jobs (32, 52, 72 tasks) — 5 jobs and 20
-    // tasks per iteration
+    // local[4]: 6, 11, 16 jobs (28, 48, 68 tasks), the dim's broadcast
+    // kept — 5 jobs and 20 tasks per iteration
     val imputed = 4
     assert(iter2._1 == imputed + 1,
       s"iteration 2 ran ${iter2._1} jobs, expected $imputed column steps + 1 checkpoint")
@@ -424,32 +426,139 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(maxD < 1e-9, s"shuffled setup join diverged from the broadcast one: $maxD")
   }
 
-  test("warm star chain runs D + 1 + C·I + (I − 1) + 1 jobs") {
-    // D dim broadcasts and the one setup job (static triple, mean init
-    // and incomplete stratum), C column steps per iteration, one
-    // checkpoint per non-final iteration, and the caller's write: over
-    // parquet fact and dims, as a caller reads them
-    val dir = java.nio.file.Files.createTempDirectory("graft-star-jobs").toString
+  /** [[starWithOrphans]] written to parquet and read back, as a caller
+    * reads its tables: (fact, dimA, dimB). */
+  def parquetStar(prefix: String) = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     val (fact, dimA, dimB) = starWithOrphans
     fact.write.parquet(s"$dir/fact")
     dimA.write.parquet(s"$dir/dimA")
     dimB.write.parquet(s"$dir/dimB")
-    val dims = Seq(StarDim(spark.read.parquet(s"$dir/dimA"), "ka", Seq("d1", "d3")),
-      StarDim(spark.read.parquet(s"$dir/dimB"), "kb", Seq("d2")))
-    val in = spark.read.parquet(s"$dir/fact")
+    (spark.read.parquet(s"$dir/fact"), spark.read.parquet(s"$dir/dimA"), spark.read.parquet(s"$dir/dimB"))
+  }
+
+  /** The two-column chain over a [[starWithOrphans]]-shaped star. */
+  def twoColumnStar(fact: org.apache.spark.sql.DataFrame, dimA: org.apache.spark.sql.DataFrame,
+                    dimB: org.apache.spark.sql.DataFrame, iterations: Int) =
+    MiceJoin.imputeChainedOverStar(fact,
+      Seq(StarDim(dimA, "ka", Seq("d1", "d3")), StarDim(dimB, "kb", Seq("d2"))),
+      MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq(),
+        imputeCont = Seq("y", "z"), iterations = iterations))
+
+  test("warm star chain runs D + 1 + C·I + (I − 1) + 1 jobs") {
+    // D broadcasts of the dims not kept yet, the one setup job (static
+    // triple, mean init and incomplete stratum), C column steps per
+    // iteration, one checkpoint per non-final iteration, and the
+    // caller's write. Parquet dims are kept across calls: D = 0 warm
+    val (in, dimA, dimB) = parquetStar("graft-star-jobs")
     def run(iterations: Int): Long = org.apache.spark.graft.JobCounter(spark.sparkContext) {
-      val out = MiceJoin.imputeChainedOverStar(in, dims,
-        MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq(),
-          imputeCont = Seq("y", "z"), iterations = iterations))
+      val out = twoColumnStar(in, dimA, dimB, iterations)
       out.write.format("noop").mode("overwrite").save()
       Graft.dropCheckpoint(out)
     }._1
-    run(1) // warm the memoized unique-key probes
-    val (d, c) = (dims.size, 2)
+    run(1) // warm the memoized unique-key probes and keep both broadcasts
+    val c = 2
     for (i <- 1 to 3) {
       val jobs = run(i)
-      assert(jobs == d + 1 + c * i + (i - 1) + 1, s"$i iterations ran $jobs jobs")
+      assert(jobs == 1 + c * i + (i - 1) + 1, s"$i iterations ran $jobs jobs")
     }
+
+    // a DSv2 dim is never kept (D = 1 on every call, beside its
+    // re-probed unique key), so a row added between calls shows: fact
+    // key 99 has no dim row in the first call and one in the second
+    BufferSource.rows.clear()
+    (0 until 20).foreach(k => BufferSource.rows.add((k.toLong, k * 0.5)))
+    val live = spark.read.format(classOf[BufferSource].getName).load()
+    val rng = new scala.util.Random(31)
+    val fact = Seq.tabulate(300) { i =>
+      val k = if (i % 50 == 3) 99 else i % 20
+      val x = (i % 13) - 6.0
+      val y = 1.0 + 2.0 * x + 3.0 * (if (k == 99) 7.0 else k * 0.5)
+      (i.toLong, k.toLong, x, y, -1.0 + 0.5 * y + x + rng.nextGaussian() * 0.3, i % 4 == 3, i % 7 == 1)
+    }.toDF("id", "k", "x", "yT", "zT", "missY", "missZ")
+      .withColumn("y", when($"missY", lit(null)).otherwise($"yT"))
+      .withColumn("z", when($"missZ", lit(null)).otherwise($"zT"))
+    def call() = MiceJoin.imputeChainedOverJoin(fact, live, "k",
+      MiceJoin.ChainConfig(factNum = Seq("y", "z", "x"), factCat = Seq(), dimNum = Seq("v"),
+        imputeCont = Seq("y", "z"), iterations = 1, normalize = false))
+    // |imputed − true y| over the missing-y rows of key 99
+    def err(out: org.apache.spark.sql.DataFrame) =
+      out.filter($"k" === 99 && $"missY").select(max(abs($"y" - $"yT"))).head.getDouble(0)
+    val probeJobs = org.apache.spark.graft.JobCounter(spark.sparkContext)(
+      MiceJoin.requireUniqueKey(live, "k"))._1
+    var first: org.apache.spark.sql.DataFrame = null
+    val jobs = org.apache.spark.graft.JobCounter(spark.sparkContext) {
+      first = call()
+      first.write.format("noop").mode("overwrite").save()
+    }._1
+    assert(jobs == probeJobs + 1 + 1 + c + 0 + 1, s"a call over the DSv2 dim ran $jobs jobs")
+    assert(err(first) > 1e-3, "key 99 has no dim row yet: its rows keep the mean")
+    Graft.dropCheckpoint(first)
+    BufferSource.rows.add((99L, 7.0))
+    val out = call()
+    assert(err(out) < 1e-6, s"the dim row added between calls was not seen: ${err(out)}")
+    Graft.dropCheckpoint(out)
+  }
+
+  test("the setup computes each fact partition once") {
+    // one pass stores the incomplete stratum and folds every row: the
+    // setup job reads each fact row once (the warm call's other jobs
+    // read the stored stratum)
+    val (in, dimA, dimB) = parquetStar("graft-star-pass")
+    def run() = org.apache.spark.graft.JobCounter.recordsRead(spark.sparkContext) {
+      Graft.dropCheckpoint(twoColumnStar(in, dimA, dimB, 1))
+    }
+    run() // keep the dim broadcasts
+    val perJob = run()
+    assert(perJob.max == in.count(), s"records read per job: $perJob")
+  }
+
+  test("a star stores its stratum and its iteration checkpoint deserialized") {
+    // the stored stratum is sized from the fact side, each generation
+    // reports the bytes it stored, and both are far below 1 GB
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    val (fact, dimA, dimB) = starWithOrphans
+    for (iterations <- Seq(1, 2)) { // the stratum, then the iteration-1 checkpoint
+      val out = twoColumnStar(fact, dimA, dimB, iterations)
+      val levels = out.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.getStorageLevel }
+      assert(levels.nonEmpty && levels.forall(_ == StorageLevel.MEMORY_AND_DISK),
+        s"$iterations iteration(s) stored at $levels")
+      Graft.dropCheckpoint(out)
+    }
+  }
+
+  test("a dim rewritten to new files gives the cold result") {
+    import org.apache.spark.sql.Row
+    val dir = java.nio.file.Files.createTempDirectory("graft-dim-rewrite").toString
+    val (fact, dimA, dimB) = starWithOrphans
+    dimB.write.parquet(s"$dir/dimB")
+    def result(b: org.apache.spark.sql.DataFrame): Seq[Row] = {
+      val out = twoColumnStar(fact, dimA, b, 1)
+      val rows = out.select("id", "y", "z").orderBy("id").collect().toSeq
+      Graft.dropCheckpoint(out)
+      rows
+    }
+    val first = result(spark.read.parquet(s"$dir/dimB"))
+    dimB.withColumn("d2", $"d2" * 2.0 - 1.0).write.mode("overwrite").parquet(s"$dir/dimB")
+    val rewritten = result(spark.read.parquet(s"$dir/dimB"))
+    graft.ml.Factorized.clearProbeCache()
+    val cold = result(spark.read.parquet(s"$dir/dimB"))
+    assert(rewritten == cold, "a rewritten dim was served the old broadcast")
+    assert(rewritten != first)
+  }
+
+  test("a stopped and restarted SparkContext is never served a dead broadcast") {
+    // one context per JVM: the check runs in its own JVM
+    val dir = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.KeptBroadcastRestartCheck", dir)
+    val log = new StringBuilder
+    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => log.append(l).append('\n'), l => if (!l.contains(" INFO ")) log.append(l).append('\n')))
+    assert(exit == 0, s"restart check failed:\n${log.toString.takeRight(4000)}")
   }
 
   test("incomplete-stratum training keeps inner-join semantics: orphans and NULL dim features") {
@@ -527,6 +636,38 @@ class MiceJoinSpec extends AnyFunSuite {
     assert(jobs == 0, s"the parquet dim was re-probed ($jobs jobs)")
   }
 
+  test("an in-place rewrite with the same names and sizes is a new snapshot") {
+    // the fingerprint reads each file's modification time: a dim
+    // rewritten in place with the same file names and lengths but a
+    // duplicated key is probed again, not served the memoized pass
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    val root = Files.createTempDirectory("graft-inplace")
+    def write(rows: Seq[(Long, Double)], name: String): Path = {
+      val dir = root.resolve(name)
+      // plain, uncompressed and without page checksums: the length
+      // depends on the row count alone
+      rows.toDF("k", "v").coalesce(1).write.option("parquet.enable.dictionary", "false")
+        .option("parquet.page.write-checksum.enabled", "false")
+        .option("compression", "none").parquet(dir.toString)
+      dir
+    }
+    def part(dir: Path): Path =
+      Files.list(dir).iterator.asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+    val dim = write(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)), "dim")
+    val dup = write(Seq((1L, 1.0), (1L, 2.0), (3L, 3.0)), "dup") // same min and max
+    val (target, source) = (part(dim), part(dup))
+    assert(Files.size(target) == Files.size(source), "the rewrite must keep the file's length")
+    MiceJoin.requireUniqueKey(spark.read.parquet(dim.toString), "k")
+    val mtime = Files.getLastModifiedTime(target).toMillis
+    def crc(p: Path) = p.resolveSibling(s".${p.getFileName}.crc")
+    Files.copy(source, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(crc(source), crc(target), StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime + 2000))
+    val ex = intercept[IllegalArgumentException](
+      MiceJoin.requireUniqueKey(spark.read.parquet(dim.toString), "k"))
+    assert(ex.getMessage.contains("unique"))
+  }
+
   test("missing row without a dim match falls back to the observed mean") {
     val orphan = Seq((999L, 999L, 1.0, null.asInstanceOf[java.lang.Double], true))
       .toDF("id", "k", "x1", "yTrue", "miss")
@@ -586,7 +727,8 @@ class MiceJoinSpec extends AnyFunSuite {
   test("warm one-round star call: the setup query and the caller's, nothing stored") {
     // the setup job folds the training triple and the mean init over
     // the fact left-joined with both dims; the update is a lazy
-    // projection of that join, which the caller's write runs
+    // projection of that join, which the caller's write runs with the
+    // kept broadcasts
     import org.apache.spark.sql.execution.LogicalRDD
     val (fact, dims) = (starFact, Seq(StarDim(dimA, "ka", Seq("d1")), StarDim(dimB, "kb", Seq("d2"))))
     def run() = org.apache.spark.graft.JobCounter.jobProperties(spark.sparkContext) {
@@ -595,12 +737,15 @@ class MiceJoinSpec extends AnyFunSuite {
         "one round must store nothing")
       out.write.format("noop").mode("overwrite").save()
     }
-    run() // warm the memoized unique-key probes
+    run() // warm the memoized unique-key probes and keep both broadcasts
     val jobs = run()
-    info(s"${jobs.size} jobs")
     val queries = jobs.map(p => Option(p.getProperty("spark.sql.execution.id"))).distinct
     assert(queries.size == 2 && queries.forall(_.isDefined),
       s"a warm one-round call ran ${jobs.size} jobs under executions $queries")
+    // measured on local[4]: 5 jobs, the fact's repartition and the fold
+    // or write in each query; neither query broadcasts a dim (9 jobs
+    // when each query broadcast both)
+    assert(jobs.size == 5, s"a warm one-round call ran ${jobs.size} jobs")
   }
 
   test("orphan row with a CATEGORICAL dim feature gets the mean, not a silent class-0 block") {

@@ -43,6 +43,22 @@ object JobCounter {
     (jobs.get, bytes.get)
   }
 
+  /** The input records each job the block starts reads, in start order. */
+  def recordsRead(sc: SparkContext)(body: => Unit): Seq[Long] = {
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val perJob = new java.util.concurrent.ConcurrentSkipListMap[Int, AtomicLong]
+    listening(sc, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        perJob.put(e.jobId, new AtomicLong)
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && jobOfStage.containsKey(e.stageId))
+          perJob.get(jobOfStage.get(e.stageId)).addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    })(body)
+    perJob.values.asScala.map(_.get).toSeq
+  }
+
   private def listening(sc: SparkContext, listener: SparkListener)(body: => Unit): Unit = {
     sc.listenerBus.waitUntilEmpty()
     sc.addSparkListener(listener)
