@@ -917,9 +917,10 @@ object Graft {
     * the memo keeps at most 64. Eviction only drops the memo's
     * reference: a lazy grouped result planned earlier may still read
     * the broadcast, and Spark's ContextCleaner releases it once no plan
-    * holds it. */
-  private val groupDicts =
-    new graft.sources.ProbeMemo[Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]](64)
+    * holds it. The memo is per `SparkContext`: a broadcast dies with its
+    * context. */
+  private val groupDicts = new graft.sources.ProbeMemo[
+    Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]]](64, perContext = true)
   private def groupDict(df: DataFrame, key: String, cap: Long):
       Option[org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]]] =
     groupDicts(df, key + ":" + cap) {

@@ -19,12 +19,15 @@ import org.apache.spark.unsafe.types.UTF8String
  * endpoint").
  *
  * The numeric block (Σx_i and the packed-upper-triangle Σx_i·x_j) runs
- * as tight loops over per-batch primitive `double[]` buffers — the
- * JIT-vectorizable shape — while the categorical block reuses
- * [[CofactorBuffer.updateCats]] per row, so the map layout, canonical
- * form, and the max-categories OOM guard are the single certified
- * implementation. One kernel [[pass]] serves every entry; per-partition
- * buffers merge on the driver as the row fold's do (KBs per partition —
+ * as tight loops over per-batch primitive `double[]` buffers, four
+ * independent sums per pass over the rows, and the categorical block
+ * counts into direct-indexed windows flushed into [[CofactorBuffer]]'s
+ * maps once per batch ([[CofactorBuffer.updateCats]] per row only past
+ * the window caps), so the map layout, canonical form, and the
+ * max-categories OOM guard are the single certified implementation.
+ * The per-class entries decode each batch in class order and run the
+ * same two routines on every class's rows. One kernel [[pass]] serves
+ * every entry; per-partition buffers merge on the driver as the row fold's do (KBs per partition —
  * the same content the row aggregate shuffles).
  *
  * Semantics match [[CofactorAggregate]] exactly: float/double columns
@@ -629,7 +632,10 @@ object ColumnarCofactor {
    * as any other NULL input (the row path filters `label IS NOT NULL`
    * for the same contract). Class count is bounded by the same
    * cardinality guard as categorical columns — an ID-like label is an
-   * executor OOM, not a training set.
+   * executor OOM, not a training set. Each batch is gathered by class
+   * and every class's rows run the flat path's vectorized moments and
+   * dense categorical tier; a batch averaging under 8 rows per class
+   * keeps the row-at-a-time feed instead.
    */
   def cofactorPerClass(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                        label: CatSpec, nbMode: Boolean = false,
@@ -694,7 +700,10 @@ object ColumnarCofactor {
     * row per scan partition, an empty partition's row carrying `n = 0`.
     * Nothing is merged here: callers feed the rows to a `sum_triple`
     * aggregate, so Spark's own exchange and final aggregate combine the
-    * groups. `None` when the plan is not harvestable. */
+    * groups. With a `label` each batch is gathered by group, as in
+    * [[cofactorPerClass]]; the high-cardinality case (under 8 rows per
+    * group in a batch) keeps the row-at-a-time feed. `None` when the plan
+    * is not harvestable. */
   def groupedPartials(src: DataFrame, nums: Seq[NumSpec], cats: Seq[CatSpec],
                       label: Option[CatSpec], keyTypes: Seq[DataType], nbMode: Boolean = false,
                       maxCategories: Int = CofactorAggregate.confMaxCategories()):
@@ -883,10 +892,17 @@ object ColumnarCofactor {
       "CatPackedKeys/CatDictString are label-only: use cofactorPerClassLong")
     val buf = new CofactorBuffer(p.numCols, if (labelMode) 0 else p.catCols, p.nbMode)
     buf.maxCategories = p.maxCategories
+    // the int categorical columns each buffer accumulates: every
+    // compiled cat spec, less the label in label mode
+    private val nCats = if (labelMode) p.catCols - 1 else p.catCols
 
     // label mode: the LAST compiled cat column is the class label; one
-    // full CofactorBuffer per class, fed row-at-a-time (updateRow —
-    // the ladder showed kernel arithmetic is free next to the scan)
+    // full CofactorBuffer per class. Each batch decodes in class order
+    // and every class's rows run the flat path's moments and dense tier
+    // (addByClass): a JFR profile of perfbench train_flat (4 cores)
+    // found a row-at-a-time feed (a LongMap probe plus updateRow and
+    // its map probes per row) in half the executor CPU samples, more
+    // than the parquet decode's 22%
     private val byClass = new scala.collection.mutable.LongMap[CofactorBuffer]
     private def classBuf(label: Long): CofactorBuffer = {
       val before = byClass.size
@@ -905,20 +921,91 @@ object ColumnarCofactor {
     def buffers: Iterator[(Long, CofactorBuffer)] =
       if (labelMode) byClass.iterator else Iterator.single(0L -> buf)
 
-    // ---- dense categorical fast path (flat mode) -------------------
+    // the moments as sums Σ a(r)·c(r) over the block's rows, sum q
+    // reading columns momA(q) and momC(q): first Σx_k (a = `ones`, momA
+    // = -1; 1.0·x is exactly x) into lin(q), then the Σx_k·x_kk upper
+    // triangle in packed order (the diagonal only in NB mode) into
+    // quad(q - d)
+    private val nLin = p.numCols
+    private val (momA, momC) = {
+      val d = p.numCols
+      val pairs =
+        if (p.nbMode) (0 until d).map(k => (k, k))
+        else for (k <- 0 until d; kk <- k until d) yield (k, kk)
+      val all = (0 until d).map(k => (-1, k)) ++ pairs
+      (all.map(_._1).toArray, all.map(_._2).toArray)
+    }
+    private var ones: Array[Double] = _
+
+    /** The row count, Σx and the Σx·x upper triangle (Σx² in NB mode) of
+      * rows [from, until) of `numBufs` into `b`. Each pass over the rows
+      * carries four sums in four accumulators: one sum per pass is a
+      * chain of dependent adds, latency-bound, while four independent
+      * chains keep the adder busy. Every sum still adds its rows in row
+      * order, so the bits equal one pass per sum. */
+    private def moments(b: CofactorBuffer, from: Int, until: Int): Unit = {
+      b.n += until - from
+      val nMom = momA.length
+      def colOf(q: Int): Array[Double] = { val i = momA(q); if (i < 0) ones else numBufs(i) }
+      var q = 0
+      while (q < nMom) {
+        // a short last group repeats its last sum and drops the copies
+        val w = math.min(4, nMom - q)
+        val q1 = q + math.min(1, w - 1); val q2 = q + math.min(2, w - 1); val q3 = q + w - 1
+        val a0 = colOf(q); val a1 = colOf(q1); val a2 = colOf(q2); val a3 = colOf(q3)
+        val c0 = numBufs(momC(q)); val c1 = numBufs(momC(q1)); val c2 = numBufs(momC(q2)); val c3 = numBufs(momC(q3))
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var r = from
+        while (r < until) {
+          s0 += a0(r) * c0(r); s1 += a1(r) * c1(r); s2 += a2(r) * c2(r); s3 += a3(r) * c3(r)
+          r += 1
+        }
+        addMoment(b, q, s0)
+        if (w > 1) addMoment(b, q1, s1)
+        if (w > 2) addMoment(b, q2, s2)
+        if (w > 3) addMoment(b, q3, s3)
+        q += 4
+      }
+    }
+
+    private def addMoment(b: CofactorBuffer, q: Int, v: Double): Unit =
+      if (q < nLin) b.lin(q) += v else b.quad(q - nLin) += v
+
+    /** Rows [from, until) of the decoded inputs into `b`: the moments,
+      * then the categorical block through the dense tier, or row by row
+      * through [[CofactorBuffer.updateCats]] when a window exceeds its caps. */
+    private def accumulate(b: CofactorBuffer, from: Int, until: Int): Unit = {
+      moments(b, from, until)
+      if (nCats > 0 && !denseCats(b, from, until)) {
+        // huge-span block (ID-like keys): per-row scratch + the shared
+        // certified update — semantics identical, just map probes per row
+        var r = from
+        while (r < until) {
+          var k = 0
+          while (k < p.numCols) { b.rowNum(k) = numBufs(k)(r); k += 1 }
+          var j = 0
+          while (j < nCats) { b.rowCat(j) = catBufs(j)(r); j += 1 }
+          b.updateCats()
+          r += 1
+        }
+      }
+    }
+
+    // ---- dense categorical tier ------------------------------------
     // A stage-truncated profile of this loop showed the per-row LongMap
     // probes of updateCats cost as much as the whole scan. Real categoricals are
-    // small-range ints, so each BATCH accumulates into direct-indexed
-    // arrays (window = the batch's own [min,max]) and flushes the few
-    // touched slots into the certified maps at batch end — ≤span probes
-    // per batch instead of catCols(+pairs) probes per ROW. Slots are
-    // zeroed lazily via epoch marks (no per-batch memset of the
-    // window); a batch whose span exceeds the caps falls back to
-    // updateCats row-by-row, so semantics never depend on the window.
+    // small-range ints, so each BLOCK (a flat batch, or one class's rows
+    // of a batch) accumulates into direct-indexed arrays (window = the
+    // block's own [min,max]) and flushes the few touched slots into the
+    // target buffer's certified maps — ≤span probes per block instead of
+    // catCols(+pairs) probes per ROW. Slots are zeroed lazily via epoch
+    // marks (no per-block memset of the window); a block whose span
+    // exceeds the caps falls back to updateCats row-by-row, so semantics
+    // never depend on the window.
     private val catStride = if (p.nbMode) 1 else p.numCols + 1
     private val DenseSpanCap = 1 << 16
     private val DensePairCap = 1 << 20
-    private val nPairs = if (p.nbMode) 0 else p.catCols * (p.catCols + 1) / 2
+    private val nPairs = if (p.nbMode) 0 else nCats * (nCats + 1) / 2
     private var epoch = 0
     private var mnB: Array[Int] = _
     private var spanB: Array[Int] = _
@@ -947,9 +1034,16 @@ object ColumnarCofactor {
     private var cMark: Array[Int] = _
     private var cTouch: Array[Int] = _
     private var cVals: Array[Int] = _ // scratch: decomposed cell coords
+    private var cCell: Array[Int] = _ // scratch: each row's cell
 
-    private def denseCatsCombined(n: Int): Boolean = {
-      val c = p.catCols
+    private def overCap(b: CofactorBuffer, j: Int): Unit =
+      if (b.catMaps(j).size > p.maxCategories)
+        throw new IllegalStateException(
+          s"cofactor: categorical column #$j exceeded ${p.maxCategories} distinct values — " +
+          "this looks like an ID, not a category (raise spark.graft.cofactor.maxCategories to override)")
+
+    private def denseCatsCombined(b: CofactorBuffer, from: Int, until: Int): Boolean = {
+      val c = nCats
       var comb = 1L
       var j = 0
       while (j < c) {
@@ -962,14 +1056,25 @@ object ColumnarCofactor {
       val stride = catStride
       cSlots = growD(cSlots, combI * stride)
       cMark = growI(cMark, combI)
-      cTouch = growI(cTouch, math.min(combI, n))
+      cTouch = growI(cTouch, math.min(combI, until - from))
       if (cVals == null || cVals.length < c) cVals = new Array[Int](c)
+      // column by column: each row's cell, then the counts, then one
+      // scatter-add pass per numeric column (each slot still adds its
+      // rows in row order)
+      val m = until - from
+      cCell = growI(cCell, m)
+      j = 0
+      while (j < c) {
+        val a = catBufs(j); val mn = mnB(j); val sp = spanB(j)
+        var r = 0
+        if (j == 0) while (r < m) { cCell(r) = a(from + r) - mn; r += 1 }
+        else while (r < m) { cCell(r) = cCell(r) * sp + (a(from + r) - mn); r += 1 }
+        j += 1
+      }
       var tc = 0
       var r = 0
-      while (r < n) {
-        var cidx = 0
-        j = 0
-        while (j < c) { cidx = cidx * spanB(j) + (catBufs(j)(r) - mnB(j)); j += 1 }
+      while (r < m) {
+        val cidx = cCell(r)
         val off = cidx * stride
         if (cMark(cidx) != epoch) {
           cMark(cidx) = epoch
@@ -978,11 +1083,16 @@ object ColumnarCofactor {
           while (z < stride) { cSlots(off + z) = 0.0; z += 1 }
         }
         cSlots(off) += 1.0
-        if (!p.nbMode) {
-          var i2 = 0
-          while (i2 < d) { cSlots(off + 1 + i2) += numBufs(i2)(r); i2 += 1 }
-        }
         r += 1
+      }
+      if (!p.nbMode) {
+        var i2 = 0
+        while (i2 < d) {
+          val a = numBufs(i2)
+          r = 0
+          while (r < m) { cSlots(cCell(r) * stride + 1 + i2) += a(from + r); r += 1 }
+          i2 += 1
+        }
       }
       // flush: marginalize each touched cell into the certified maps
       var t = 0
@@ -995,7 +1105,7 @@ object ColumnarCofactor {
         val cnt = cSlots(off)
         j = 0
         while (j < c) {
-          val slot = buf.catMaps(j).getOrElseUpdate(cVals(j).toLong, new Array[Double](stride))
+          val slot = b.catMaps(j).getOrElseUpdate(cVals(j).toLong, new Array[Double](stride))
           slot(0) += cnt
           if (!p.nbMode) {
             var i2 = 0
@@ -1008,7 +1118,7 @@ object ColumnarCofactor {
           while (j < c) {
             var k = j
             while (k < c) {
-              val pm = buf.quadCat(Triple.pairIdx(j, k, c))
+              val pm = b.quadCat(Triple.pairIdx(j, k, c))
               pm.getOrElseUpdate(Triple.catKey(cVals(j), cVals(k)), new Array[Double](1))(0) += cnt
               k += 1
             }
@@ -1018,20 +1128,15 @@ object ColumnarCofactor {
         t += 1
       }
       j = 0
-      while (j < c) {
-        if (buf.catMaps(j).size > p.maxCategories)
-          throw new IllegalStateException(
-            s"cofactor: categorical column #$j exceeded ${p.maxCategories} distinct values — " +
-            "this looks like an ID, not a category (raise spark.graft.cofactor.maxCategories to override)")
-        j += 1
-      }
+      while (j < c) { overCap(b, j); j += 1 }
       true
     }
 
-    /** Accumulate the batch's categorical block densely; false if any
-      * window exceeds the caps (caller falls back to updateCats). */
-    private def denseCats(n: Int): Boolean = {
-      val c = p.catCols
+    /** Accumulate the categorical block of rows [from, until) into `b`
+      * densely; false if any window exceeds the caps (the caller falls
+      * back to updateCats). */
+    private def denseCats(b: CofactorBuffer, from: Int, until: Int): Boolean = {
+      val c = nCats
       if (mnB == null) {
         mnB = new Array[Int](c); spanB = new Array[Int](c)
         dSlots = new Array[Array[Double]](c); dMark = new Array[Array[Int]](c)
@@ -1039,19 +1144,20 @@ object ColumnarCofactor {
         pSlots = new Array[Array[Double]](nPairs); pMark = new Array[Array[Int]](nPairs)
         pTouch = new Array[Array[Int]](nPairs); pTc = new Array[Int](nPairs)
       }
+      val m = until - from
       var j = 0
       while (j < c) {
         val a = catBufs(j)
-        var mn = a(0); var mx = a(0)
-        var r = 1
-        while (r < n) { val v = a(r); if (v < mn) mn = v; if (v > mx) mx = v; r += 1 }
+        var mn = a(from); var mx = a(from)
+        var r = from + 1
+        while (r < until) { val v = a(r); if (v < mn) mn = v; if (v > mx) mx = v; r += 1 }
         val span = mx - mn + 1
         if (span <= 0 || span > DenseSpanCap) return false // overflow-safe: huge range
         mnB(j) = mn; spanB(j) = span
         j += 1
       }
       epoch += 1
-      if (denseCatsCombined(n)) return true
+      if (denseCatsCombined(b, from, until)) return true
       if (!p.nbMode) {
         // a column's SELF-pair only ever holds diagonal (v,v) keys, so
         // its dense table is span-sized, never span² — only cross
@@ -1071,7 +1177,7 @@ object ColumnarCofactor {
       while (j < c) {
         dSlots(j) = growD(dSlots(j), spanB(j) * catStride)
         dMark(j) = growI(dMark(j), spanB(j))
-        dTouch(j) = growI(dTouch(j), math.min(spanB(j), n))
+        dTouch(j) = growI(dTouch(j), math.min(spanB(j), m))
         dTc(j) = 0
         // fresh/grown arrays are zero-filled and epoch starts at 1, so a
         // stale mark can never equal the current epoch — no memset needed
@@ -1088,15 +1194,15 @@ object ColumnarCofactor {
             val need = if (k == j) spanB(j) else spanB(j) * spanB(k)
             pSlots(pi) = growD(pSlots(pi), need)
             pMark(pi) = growI(pMark(pi), need)
-            pTouch(pi) = growI(pTouch(pi), math.min(need, n))
+            pTouch(pi) = growI(pTouch(pi), math.min(need, m))
             k += 1
           }
           j += 1
         }
       }
       // row loop: direct-indexed accumulation, no hash probes
-      var r = 0
-      while (r < n) {
+      var r = from
+      while (r < until) {
         j = 0
         while (j < c) {
           val idx = catBufs(j)(r) - mnB(j)
@@ -1137,24 +1243,21 @@ object ColumnarCofactor {
         }
         r += 1
       }
-      // flush touched slots into the certified maps (buf stays the one
-      // cross-batch source of truth; guard mirrors updateCats)
+      // flush touched slots into the certified maps (the target buffer
+      // stays the one cross-batch source of truth; guard mirrors updateCats)
       j = 0
       while (j < c) {
-        val m = buf.catMaps(j)
+        val cm = b.catMaps(j)
         val sl = dSlots(j)
         var t = 0
         while (t < dTc(j)) {
           val idx = dTouch(j)(t)
-          val slot = m.getOrElseUpdate((mnB(j) + idx).toLong, new Array[Double](catStride))
+          val slot = cm.getOrElseUpdate((mnB(j) + idx).toLong, new Array[Double](catStride))
           var z = 0
           while (z < catStride) { slot(z) += sl(idx * catStride + z); z += 1 }
           t += 1
         }
-        if (m.size > p.maxCategories)
-          throw new IllegalStateException(
-            s"cofactor: categorical column #$j exceeded ${p.maxCategories} distinct values — " +
-            "this looks like an ID, not a category (raise spark.graft.cofactor.maxCategories to override)")
+        overCap(b, j)
         j += 1
       }
       if (!p.nbMode) {
@@ -1163,7 +1266,7 @@ object ColumnarCofactor {
           var k = j
           while (k < c) {
             val pi = Triple.pairIdx(j, k, c)
-            val pm = buf.quadCat(pi)
+            val pm = b.quadCat(pi)
             var t = 0
             while (t < pTc(pi)) {
               val pidx = pTouch(pi)(t)
@@ -1178,6 +1281,118 @@ object ColumnarCofactor {
         }
       }
       true
+    }
+
+    // ---- per-batch class gather (label mode) -----------------------
+    // Each batch's labels map to dense class indices through one table:
+    // direct-indexed when the batch's labels span at most its size,
+    // open addressing otherwise (any label kind: ints, packed strings,
+    // dictionary ids); then a stable counting sort orders the batch's
+    // row ids class by class and the inputs decode in that order, so
+    // each class's rows are one contiguous block for accumulate. Below
+    // GatherMinRows rows per class in the batch (a high-cardinality
+    // GROUP BY, ~2 rows per group) the per-block loop setup and flush
+    // outweigh the per-row work they save, and the batch keeps the
+    // row-at-a-time updateRow feed; classify stops at the first class
+    // past that bound and the feed reuses the classes it found.
+    private val GatherMinRows = 8
+    private var lEpoch = 0
+    private var lMask = 0
+    private var lMark: Array[Int] = _ // epoch-stamped slots: no per-batch clear
+    private var lKey: Array[Long] = _
+    private var lIdx: Array[Int] = _
+    private var rowCls: Array[Int] = _ // each row's class index
+    private var clsBuf: Array[CofactorBuffer] = _ // each class's buffer
+    private var clsStart: Array[Int] = _ // class ci's rows: [clsStart(ci), clsStart(ci + 1))
+    private var clsNext: Array[Int] = _
+    private var order: Array[Int] = _ // the batch's row ids in class order
+    private var nClassified = 0 // rows [0, nClassified) hold their rowCls
+
+    /** Fill `rowCls` for rows [0, n) and `clsBuf` with each class's
+      * buffer in first-appearance order (so [[byClass]] grows in row
+      * order and its guard throws where the row loop's did); returns the
+      * batch's class count, or -1 as soon as the batch holds more classes
+      * than the gather takes (rows [0, nClassified) keep their classes).
+      * A batch whose labels span at most the table indexes it by
+      * `label - min`; any other hashes its labels. */
+    private def classify(n: Int): Int = {
+      lEpoch += 1
+      val maxCls = n / GatherMinRows
+      var mn = labelBuf(0); var mx = mn
+      var r = 1
+      while (r < n) { val l = labelBuf(r); if (l < mn) mn = l; if (l > mx) mx = l; r += 1 }
+      val span = mx - mn // negative on overflow: hash
+      var nc = 0
+      r = 0
+      if (span >= 0 && span <= lMask) while (r < n) {
+        val h = (labelBuf(r) - mn).toInt
+        if (lMark(h) != lEpoch) {
+          if (nc == maxCls) { nClassified = r; return -1 }
+          lMark(h) = lEpoch; lIdx(h) = nc
+          clsBuf(nc) = classBuf(labelBuf(r))
+          nc += 1
+        }
+        rowCls(r) = lIdx(h)
+        r += 1
+      } else {
+        var last = 0L
+        var lastCls = -1
+        while (r < n) {
+          val l = labelBuf(r)
+          if (lastCls < 0 || l != last) {
+            val x = l * -0x61c8864680b583ebL // KeyedSlots' full-width mixer
+            var h = (x ^ (x >>> 32)).toInt & lMask
+            while (lMark(h) == lEpoch && lKey(h) != l) h = (h + 1) & lMask
+            if (lMark(h) != lEpoch) {
+              if (nc == maxCls) { nClassified = r; return -1 }
+              lMark(h) = lEpoch; lKey(h) = l; lIdx(h) = nc
+              clsBuf(nc) = classBuf(l)
+              nc += 1
+            }
+            last = l; lastCls = lIdx(h)
+          }
+          rowCls(r) = lastCls
+          r += 1
+        }
+      }
+      nc
+    }
+
+    /** Label-mode accumulation of the batch's `n` selected rows (`s`, or
+      * the first `n` when null), whose labels `labelBuf` holds. */
+    private def addByClass(batch: ColumnarBatch, s: Array[Int], n: Int): Unit = {
+      val nc = classify(n)
+      val d = p.numCols
+      if (nc < 0) {
+        fillInputs(batch, s, n)
+        var r = 0
+        while (r < n) {
+          val b = if (r < nClassified) clsBuf(rowCls(r)) else classBuf(labelBuf(r))
+          var k = 0
+          while (k < d) { b.rowNum(k) = numBufs(k)(r); k += 1 }
+          var j = 0
+          while (j < nCats) { b.rowCat(j) = catBufs(j)(r); j += 1 }
+          b.updateRow()
+          r += 1
+        }
+        return
+      }
+      // stable counting sort of the batch's row ids by class
+      java.util.Arrays.fill(clsStart, 0, nc + 1, 0)
+      var r = 0
+      while (r < n) { clsStart(rowCls(r) + 1) += 1; r += 1 }
+      var ci = 0
+      while (ci < nc) { clsStart(ci + 1) += clsStart(ci); clsNext(ci) = clsStart(ci); ci += 1 }
+      r = 0
+      while (r < n) {
+        val c = rowCls(r)
+        order(clsNext(c)) = if (s == null) r else s(r)
+        clsNext(c) += 1
+        r += 1
+      }
+      fillInputs(batch, order, n)
+      ci = 0
+      while (ci < nc) { accumulate(clsBuf(ci), clsStart(ci), clsStart(ci + 1)); ci += 1 }
     }
 
     private val utcTz = p.sessionTz == "UTC" || p.sessionTz == "Etc/UTC" ||
@@ -1212,9 +1427,17 @@ object ColumnarCofactor {
       }
       // labelMode: the last cat spec decodes into labelBuf, so its int
       // slot is never read — don't allocate it
-      catBufs = Array.fill(if (labelMode) p.catCols - 1 else p.catCols)(new Array[Int](cap))
-      if (labelMode) labelBuf = new Array[Long](cap)
+      catBufs = Array.fill(nCats)(new Array[Int](cap))
       sel = new Array[Int](cap)
+      ones = Array.fill(cap)(1.0)
+      if (labelMode) {
+        labelBuf = new Array[Long](cap)
+        lMask = Integer.highestOneBit(cap) * 4 - 1 // ≥ 2·cap slots: load ≤ 1/2
+        lMark = new Array[Int](lMask + 1); lKey = new Array[Long](lMask + 1); lIdx = new Array[Int](lMask + 1)
+        lEpoch = 0
+        rowCls = new Array[Int](cap); clsBuf = new Array[CofactorBuffer](cap)
+        clsStart = new Array[Int](cap + 1); clsNext = new Array[Int](cap); order = new Array[Int](cap)
+      }
     }
 
     private def fillDouble(v: ColumnVector, t: Int, out: Array[Double], s: Array[Int], n: Int): Unit = {
@@ -1504,7 +1727,22 @@ object ColumnarCofactor {
         } // else: every row passed — keep the s == null direct-index path
       }
 
-      i = 0
+      if (labelMode) {
+        // the LAST compiled cat spec is the class key: it decodes first,
+        // into the LONG channel, so the other inputs can decode by class
+        fillLabelLong(p.catKind(p.catCols - 1), p.catOrds(p.catCols - 1),
+          p.catT(p.catCols - 1), batch, labelBuf, s, n)
+        addByClass(batch, s, n)
+      } else {
+        fillInputs(batch, s, n)
+        accumulate(buf, 0, n)
+      }
+    }
+
+    /** Decode rows `s(0 until n)` (the first `n` when `s` is null) of every
+      * numeric and int categorical input into `numBufs` / `catBufs`. */
+    private def fillInputs(batch: ColumnarBatch, s: Array[Int], n: Int): Unit = {
+      var i = 0
       while (i < nRaw) { fillDouble(batch.column(p.rawOrd(i)), p.rawT(i), rawBufs(i), s, n); i += 1 }
       var di = 0
       while (di < p.derived.length) {
@@ -1516,58 +1754,8 @@ object ColumnarCofactor {
         di += 1
       }
 
-      val d = p.numCols
-      var k = 0
-      if (!labelMode) {
-        // numeric block: vector loops over the materialized buffers
-        buf.n += n
-        k = 0
-        while (k < d) {
-          val a = numBufs(k)
-          var acc = 0.0
-          var r = 0
-          while (r < n) { acc += a(r); r += 1 }
-          buf.lin(k) += acc
-          k += 1
-        }
-        if (p.nbMode) {
-          k = 0
-          while (k < d) {
-            val a = numBufs(k)
-            var acc = 0.0
-            var r = 0
-            while (r < n) { val x = a(r); acc += x * x; r += 1 }
-            buf.quad(k) += acc
-            k += 1
-          }
-        } else {
-          var idx = 0
-          k = 0
-          while (k < d) {
-            val a = numBufs(k)
-            var kk = k
-            while (kk < d) {
-              val b = numBufs(kk)
-              var acc = 0.0
-              var r = 0
-              while (r < n) { acc += a(r) * b(r); r += 1 }
-              buf.quad(idx) += acc
-              idx += 1
-              kk += 1
-            }
-            k += 1
-          }
-        }
-      }
-
-      // labelMode: the LAST compiled cat spec is the class key and
-      // decodes into the LONG channel instead of the int cat buffers
-      val nIntCats = if (labelMode) p.catCols - 1 else p.catCols
-      if (labelMode)
-        fillLabelLong(p.catKind(p.catCols - 1), p.catOrds(p.catCols - 1),
-          p.catT(p.catCols - 1), batch, labelBuf, s, n)
-      j = 0
-      while (j < nIntCats) {
+      var j = 0
+      while (j < nCats) {
         if (p.catKind(j) == 2) {
           val os = p.catOrds(j)
           val out = catBufs(j)
@@ -1589,38 +1777,6 @@ object ColumnarCofactor {
           else while (r < n) { out(r) = packShort(batch.column(o), s(r), s"#$o"); r += 1 }
         } else fillCatInt(batch.column(p.catOrds(j)(0)), p.catT(j)(0), catBufs(j), s, n)
         j += 1
-      }
-
-      if (labelMode) {
-        // per-class route: the last cat column is the label; everything
-        // else (including the full quad) accumulates into that class's
-        // buffer row-at-a-time — kernel arithmetic is free next to the
-        // scan (stage-truncated profile), so the flat path's vectorized moments are
-        // not worth a per-class gather
-        val labels = labelBuf
-        val cEff = p.catCols - 1
-        var r = 0
-        while (r < n) {
-          val b = classBuf(labels(r))
-          k = 0
-          while (k < d) { b.rowNum(k) = numBufs(k)(r); k += 1 }
-          j = 0
-          while (j < cEff) { b.rowCat(j) = catBufs(j)(r); j += 1 }
-          b.updateRow()
-          r += 1
-        }
-      } else if (p.catCols > 0 && !denseCats(n)) {
-        // huge-span batch (ID-like keys): per-row scratch + the shared
-        // certified update — semantics identical, just map probes per row
-        var r = 0
-        while (r < n) {
-          k = 0
-          while (k < d) { buf.rowNum(k) = numBufs(k)(r); k += 1 }
-          j = 0
-          while (j < p.catCols) { buf.rowCat(j) = catBufs(j)(r); j += 1 }
-          buf.updateCats()
-          r += 1
-        }
       }
     }
   }

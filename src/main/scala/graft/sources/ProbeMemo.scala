@@ -29,9 +29,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  *
  * Each instance is a synchronized access-order LRU of `maxEntries`
  * entries — a leak bound for a long-lived service probing many distinct
- * inputs, not a working-set size.
+ * inputs, not a working-set size. A memo whose values hold a context's
+ * resources (broadcasts) is `perContext`: like
+ * [[graft.plans.KeptBroadcast]], it starts empty in each new
+ * `SparkContext`, so a restarted context is never served a dead
+ * broadcast. Plain values (counts, verdicts) outlive their context.
  */
-final class ProbeMemo[V](maxEntries: Int) {
+final class ProbeMemo[V](maxEntries: Int, perContext: Boolean = false) {
   private type Key = (LogicalPlan, String, Long)
 
   private val entries = java.util.Collections.synchronizedMap(
@@ -39,6 +43,9 @@ final class ProbeMemo[V](maxEntries: Int) {
       override def removeEldestEntry(e: java.util.Map.Entry[Key, V]): Boolean =
         this.size() > maxEntries
     })
+
+  // perContext: the context the entries belong to
+  private var owner: org.apache.spark.SparkContext = _
 
   ProbeMemo.instances.add(this)
 
@@ -49,6 +56,10 @@ final class ProbeMemo[V](maxEntries: Int) {
     ProbeMemo.fingerprint(analyzed) match {
       case None => probe
       case Some(fp) =>
+        if (perContext) synchronized {
+          val sc = df.sparkSession.sparkContext
+          if (owner ne sc) { entries.clear(); owner = sc }
+        }
         val key = (analyzed.canonicalized, tag, fp)
         Option(entries.get(key)).getOrElse {
           val v = probe

@@ -975,4 +975,129 @@ class ColumnarCofactorSpec extends AnyFunSuite {
         .head.getStruct(0))
     assert(t.get.approxEquals(ref, 1e-9))
   }
+
+  // ---- the per-class gather: each batch is laid out class by class and
+  // every class's rows run the flat path's moments and dense tier ----
+
+  /** `df`'s rows (ids in order, one file, so parquet batches of 4096
+    * consecutive ids) written and read back. */
+  private def oneFile(name: String, df: org.apache.spark.sql.DataFrame) = {
+    val tmp = java.nio.file.Files.createTempDirectory(name).toFile.getAbsolutePath
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp)
+  }
+
+  private def rowTriples(df: org.apache.spark.sql.DataFrame, keys: Seq[String], nums: Seq[String],
+                         cats: Seq[String], nb: Boolean): Map[Seq[Any], graft.ring.Triple] = {
+    val args = (nums ++ cats).map(col)
+    df.filter(keys.map(k => col(k).isNotNull).reduce(_ && _)).groupBy(keys.map(col): _*)
+      .agg((if (nb) Graft.sumNbAgg(args: _*) else Graft.sumTriple(args: _*)).as("t"))
+      .collect().map(r => keys.indices.map(r.get) -> Graft.tripleFromRow(r.getStruct(keys.size)))
+      .filter(_._2.n > 0).toMap // a class whose rows all hold a NULL input has no kernel row
+  }
+
+  private def assertParity(got: Map[Seq[Any], graft.ring.Triple],
+                           exp: Map[Seq[Any], graft.ring.Triple], what: String): Unit = {
+    assert(got.keySet == exp.keySet, s"$what: classes differ")
+    got.foreach { case (k, t) => assert(t.approxEquals(exp(k), 1e-9), s"$what: class $k differs") }
+  }
+
+  test("per-class gather == groupBy(label) row aggregate on adversarial labels, NB on and off") {
+    // ids 0-11999: labels -1, -2, -3 in runs of 5000 (whole batches of
+    // one class); 12000-23999: 7, -100000, 200000 cycling (a batch span
+    // far past DenseSpanCap) plus 999999 on ten rows of one batch only;
+    // 24000-29999: i % 5 with an in-class categorical spanning 240001
+    // (dense tier refused → updateCats); 30000-32999: a label per row
+    // (under 8 rows per class: the row-at-a-time feed). NULL labels, NULL
+    // x and a compiled filter exercise the NULL/filter compaction.
+    val i = col("id")
+    val df = oneFile("gather", spark.range(33000).select(
+      when(i % 13 === 5, lit(null).cast("long"))
+        .when(i < 12000, -(i / 5000).cast("long") - 1)
+        .when(i >= 20000 && i < 20010, lit(999999L))
+        .when(i < 24000, element_at(array(lit(7L), lit(-100000L), lit(200000L)), (i % 3 + 1).cast("int")))
+        .when(i < 30000, i % 5)
+        .otherwise(i + 1000000).as("lbl"),
+      when(i % 11 === 3, lit(null).cast("double")).otherwise((i % 97) * 0.5 - 20).as("x"),
+      ((i % 17) - 8).cast("double").as("y"),
+      when(i >= 24000 && i < 30000, (i % 7) * 40000 - 100000).otherwise(i % 4 - 2).cast("int").as("c"),
+      concat(lit("https://example.org/p"), (i % 6).cast("string")).as("url"),
+      element_at(array(lit("A"), lit("BC"), lit("D")), (i % 3 + 1).cast("int")).as("s"),
+      ((i / 1000) % 300).cast("int").as("k")))
+    val kept = df.filter(col("y") > -5)
+    val nums = Seq(NumCol("x"), NumCol("y"))
+    for (nb <- Seq(false, true)) {
+      for ((what, src) <- Seq("bare" -> df, "filtered" -> kept)) {
+        val got = ColumnarCofactor.cofactorPerClassLong(src, nums, Seq(CatCol("c")), CatCol("lbl"), nb).get
+          .map { case (l, t) => Seq[Any](l) -> t }.toMap
+        assertParity(got, rowTriples(src, Seq("lbl"), Seq("x", "y"), Seq("c"), nb), s"$what nb=$nb")
+      }
+      val urls = df.select("url").distinct().collect().map(_.getString(0)).sorted
+      val dict = spark.sparkContext.broadcast(urls.map(_.getBytes("UTF-8")))
+      val byDict = ColumnarCofactor.cofactorPerClassLong(kept, nums, Seq(CatCol("c")),
+        CatDictString("url", dict), nb).get.map { case (l, t) => Seq[Any](urls(l.toInt)) -> t }.toMap
+      assertParity(byDict, rowTriples(kept, Seq("url"), Seq("x", "y"), Seq("c"), nb), s"dictionary nb=$nb")
+      val byPacked = ColumnarCofactor.cofactorPerClassLong(kept, nums, Seq(CatCol("c")),
+        CatPackedKeys(Seq("s", "k"), Seq(2, 2)), nb).get.map { case (l, t) =>
+          val Seq(sk, kk) = unpackPackedKeys(l, Seq(2, 2))
+          Seq[Any](unpackShortString(sk), kk.toInt) -> t
+        }.toMap
+      assertParity(byPacked, rowTriples(kept, Seq("s", "k"), Seq("x", "y"), Seq("c"), nb), s"packed nb=$nb")
+    }
+  }
+
+  test("per-class gather keeps the label and in-class categorical guards and their messages") {
+    val i = col("id")
+    val df = oneFile("gatherguard", spark.range(9000).select(
+      (i % 5).cast("int").as("lbl"), (i % 2).cast("int").as("two"),
+      (i % 5).cast("int").as("c"), (i % 31).cast("double").as("x")))
+    def failure(f: => Any): String = {
+      val ex = intercept[Exception](f)
+      def causes(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ causes(t.getCause)
+      causes(ex).mkString("\n")
+    }
+    // ~800 rows per class per batch: the gathered path throws
+    assert(failure(ColumnarCofactor.cofactorPerClass(df, Seq(NumCol("x")), Nil, CatCol("lbl"),
+      maxCategories = 3)).contains("per-class cofactor: label exceeded 3 distinct classes — " +
+      "this looks like an ID, not a label (raise spark.graft.cofactor.maxCategories to override)"))
+    for (nb <- Seq(false, true))
+      assert(failure(ColumnarCofactor.cofactorPerClass(df, Seq(NumCol("x")), Seq(CatCol("c")),
+        CatCol("two"), nb, maxCategories = 3)).contains("cofactor: categorical column #0 exceeded 3 " +
+        "distinct values — this looks like an ID, not a category " +
+        "(raise spark.graft.cofactor.maxCategories to override)"))
+  }
+
+  test("per-class gather: singleton classes beside a large one equal the row loop exactly") {
+    // one batch: 4000 rows of class 0 and 96 one-row classes — gathered
+    // (over 8 rows per class on average), each singleton a one-row block
+    val i = col("id")
+    val df = oneFile("gathersingle", spark.range(4096).select(
+      when(i < 4000, lit(0L)).otherwise(i).as("lbl"),
+      (i % 29 - 14.5).as("x"), ((i * 7) % 13).cast("double").as("y"), (i % 3).cast("int").as("c")))
+    for (nb <- Seq(false, true)) {
+      val got = ColumnarCofactor.cofactorPerClassLong(df, Seq(NumCol("x"), NumCol("y")),
+        Seq(CatCol("c")), CatCol("lbl"), nb).get.map { case (l, t) => Seq[Any](l) -> t }.toMap
+      val exp = rowTriples(df, Seq("lbl"), Seq("x", "y"), Seq("c"), nb)
+      assert(got.size == 97)
+      assertParity(got, exp, s"nb=$nb")
+      got.foreach { case (k, t) =>
+        if (k != Seq(0L)) assert(t.approxEquals(exp(k), 0.0), s"nb=$nb: singleton $k is not exact")
+      }
+    }
+  }
+
+  test("a stopped and restarted SparkContext is never served a dead dictionary broadcast") {
+    // one context per JVM: the check runs in its own JVM
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-dict-restart").toString + "/t"
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvm ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.GroupDictRestartCheck", dir)
+    val log = new StringBuilder
+    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => log.append(l).append('\n'), l => if (!l.contains(" INFO ")) log.append(l).append('\n')))
+    assert(exit == 0, s"restart check failed:\n${log.toString.takeRight(4000)}")
+  }
 }
