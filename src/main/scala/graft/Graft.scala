@@ -280,9 +280,13 @@ object Graft {
       num.map(i => BoundReference(i, DoubleType, nullable = true)) ++
         cat.map(j => BoundReference(j, IntegerType, nullable = true)),
       nbMode = nb,
-      maxCategories = org.apache.spark.sql.internal.SQLConf.withExistingConf(
-        spark.sessionState.conf)(CofactorAggregate.confMaxCategories()))
+      maxCategories = maxCategories(spark))
   }
+
+  /** The session's `spark.graft.cofactor.maxCategories`. */
+  private def maxCategories(spark: SparkSession): Int =
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(
+      spark.sessionState.conf)(CofactorAggregate.confMaxCategories())
 
   /** One partition's fold, fed one row at a time; [[checkpointRows]]
     * feeds it the rows it stores from, in the same pass. */
@@ -373,19 +377,24 @@ object Graft {
   }
 
   /** `sum_triple(t)` over every row of `df`, eagerly, in ONE Spark job
-    * ([[foldPartitions]]): each partition ring-adds its triples
-    * (`Triple.add`, NULLs skipped), and the driver adds the partials in
-    * partition-index order. None when no row carries a triple — the
-    * aggregate's NULL. The final of the factorized join and star
-    * cofactors. */
-  private[graft] def sumTriples(df: DataFrame, t: Column): Option[Triple] = {
+    * ([[foldPartitions]]): each partition ring-adds its non-NULL triples
+    * into one buffer of `numCols` continuous and `catCols` categorical
+    * columns ([[graft.agg.TripleCodec.addInto]]; a triple of another
+    * shape throws), and [[mergeBuffers]] merges the serialized buffers in
+    * partition-index order, both under the session's `maxCategories`.
+    * The zero triple of that arity when no row carries a triple. The
+    * final of the factorized join and star cofactors. */
+  private[graft] def sumTriples(df: DataFrame, t: Column, numCols: Int, catCols: Int): Triple = {
     val proj = df.select(t.as("__t"))
     val nf = proj.schema.head.dataType.asInstanceOf[org.apache.spark.sql.types.StructType].length
-    foldPartitions(proj) { rows =>
-      rows.filterNot(_.isNullAt(0))
-        .map(r => graft.agg.TripleCodec.fromCatalyst(r.getStruct(0, nf), nf))
-        .reduceOption(Triple.add)
-    }.flatten.reduceOption(Triple.add)
+    val cap = maxCategories(df.sparkSession)
+    val empty = () => new graft.agg.CofactorBuffer(numCols, catCols, nf == 4, cap)
+    val partials = foldPartitions(proj) { rows =>
+      val b = empty()
+      rows.foreach(r => if (!r.isNullAt(0)) graft.agg.TripleCodec.addInto(b, r.getStruct(0, nf)))
+      Array(0 -> graft.agg.CofactorBuffer.toBytes(b))
+    }
+    mergeBuffers(empty, Seq(0), partials).head._2
   }
 
   /**

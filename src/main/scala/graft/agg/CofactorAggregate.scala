@@ -20,7 +20,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
  * 600k-row cofactor over a 20k-category column. The golden-ratio
  * multiply mixes all 64 key bits before folding, so correlated-halves
  * keys spread like any others. Supports exactly what [[CofactorBuffer]]
- * needs: getOrElseUpdate / put / foreach / iterator / size.
+ * needs: getOrElseUpdate / put / apply / sortedKeys / sizeHint / foreach / size.
  */
 final class KeyedSlots(initialCap: Int = 8) {
   private var mask = Integer.highestOneBit(math.max(4, initialCap)) * 4 - 1
@@ -34,6 +34,9 @@ final class KeyedSlots(initialCap: Int = 8) {
   }
 
   def size: Int = n
+
+  /** Room for `k` more keys, so adding them never rehashes. */
+  def sizeHint(k: Int): Unit = while ((n + k) * 2 > mask) grow()
 
   def getOrElseUpdate(k: Long, default: => Array[Double]): Array[Double] = {
     var i = idx(k)
@@ -56,13 +59,29 @@ final class KeyedSlots(initialCap: Int = 8) {
     if (n * 2 > mask) grow()
   }
 
+  /** The slot array of a present key `k`. */
+  def apply(k: Long): Array[Double] = {
+    var i = idx(k)
+    while (vals(i) != null) {
+      if (keys(i) == k) return vals(i)
+      i = (i + 1) & mask
+    }
+    throw new NoSuchElementException(s"key $k")
+  }
+
+  /** The keys in ascending order. */
+  def sortedKeys: Array[Long] = {
+    val out = new Array[Long](n)
+    var i = 0; var c = 0
+    while (i <= mask) { if (vals(i) != null) { out(c) = keys(i); c += 1 }; i += 1 }
+    java.util.Arrays.sort(out)
+    out
+  }
+
   def foreach(f: ((Long, Array[Double])) => Unit): Unit = {
     var i = 0
     while (i <= mask) { if (vals(i) != null) f((keys(i), vals(i))); i += 1 }
   }
-
-  def iterator: Iterator[(Long, Array[Double])] =
-    (0 to mask).iterator.collect { case i if vals(i) != null => (keys(i), vals(i)) }
 
   private def grow(): Unit = {
     val ok = keys; val ov = vals
@@ -87,8 +106,13 @@ final class KeyedSlots(initialCap: Int = 8) {
  * for the continuous part plus one hash map per categorical column whose
  * value is `[count, Σx_0 … Σx_{numCols-1}]` (count-only in NB mode), and
  * one map per categorical pair for co-occurrence counts.
+ *
+ * `maxCategories` guards against ID-like "categorical" columns:
+ * per-column distinct categories are buffer state on every executor, so
+ * an unbounded column is a silent OOM at scale. Checked on map growth.
  */
-final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boolean) {
+final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boolean,
+                           var maxCategories: Int = Int.MaxValue) {
   var n: Long = 0L
   val lin = new Array[Double](numCols)
   val quad = new Array[Double](if (nbMode) numCols else numCols * (numCols + 1) / 2)
@@ -104,11 +128,6 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
   val rowCat = new Array[Int](catCols)
 
   private val catSlots = if (nbMode) 1 else numCols + 1
-
-  /** Guard against ID-like "categorical" columns: per-column distinct
-    * categories are buffer state on every executor, so an unbounded
-    * column is a silent OOM at scale. Checked on map growth. */
-  var maxCategories: Int = Int.MaxValue
 
   /** Accumulate one row from the scratch arrays (sum_no_lift.cpp:53-216). */
   def updateRow(): Unit = {
@@ -170,6 +189,8 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
 
   /** Pairwise partial-state merge (sum_state.cpp:11-114). */
   def merge(o: CofactorBuffer): Unit = {
+    require(numCols == o.numCols && catCols == o.catCols && nbMode == o.nbMode,
+      s"shape mismatch: ($numCols,$catCols) vs (${o.numCols},${o.catCols})")
     n += o.n
     var i = 0
     while (i < lin.length) { lin(i) += o.lin(i); i += 1 }
@@ -182,12 +203,9 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
         var s = 0
         while (s < catSlots) { slot(s) += v(s); s += 1 }
       }
-      if (catMaps(j).size > maxCategories)
-        throw new IllegalStateException(
-          s"cofactor: categorical column #$j exceeded $maxCategories distinct values after merge " +
-          "(raise spark.graft.cofactor.maxCategories to override)")
       j += 1
     }
+    checkMerged()
     j = 0
     while (j < quadCat.length) {
       val pm = quadCat(j)
@@ -196,42 +214,72 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
     }
   }
 
-  def toTriple: Triple = Triple(
-    n,
-    lin.clone(),
-    quad.clone(),
-    Array.tabulate(catCols)(j =>
-      catMaps(j).iterator.map { case (k, v) => k.toInt -> v(0) }.toMap),
-    if (nbMode) Array.empty
-    else Array.tabulate(numCols * catCols) { idx =>
-      // canonical form (matches ring.Triple): exact-zero sums are dropped
-      val i = idx / catCols; val j = idx % catCols
-      catMaps(j).iterator.collect { case (k, v) if v(i + 1) != 0.0 => k.toInt -> v(i + 1) }.toMap
-    },
-    if (nbMode) Array.empty
-    // TreeMap, NOT HashMap: diagonal packed keys all share hashCode 0
-    // (see KeyedSlots), so even BUILDING a HashMap from them is O(m²)
-    else Array.tabulate(quadCat.length)(j =>
-      scala.collection.immutable.TreeMap.from(
-        quadCat(j).iterator.map { case (k, v) => k -> v(0) }))
-  )
+  /** The guard of a merge: every merged categorical map within
+    * `maxCategories`. */
+  private[agg] def checkMerged(): Unit = {
+    var j = 0
+    while (j < catCols) {
+      if (catMaps(j).size > maxCategories)
+        throw new IllegalStateException(
+          s"cofactor: categorical column #$j exceeded $maxCategories distinct values after merge " +
+          "(raise spark.graft.cofactor.maxCategories to override)")
+      j += 1
+    }
+  }
+
+  /** The canonical triple (matches ring.Triple): exact-zero sums are
+    * dropped from every map. */
+  def toTriple: Triple = TripleCodec.fromCatalyst(TripleCodec.toCatalyst(this), if (nbMode) 4 else 6)
 }
 
 object CofactorBuffer {
-  /** Buffer-direct binary form (NB flag + [[TripleCodec.writeBuffer]]),
-    * no Triple intermediate: the aggregate's and every eager partial's. */
+  /** The binary form of every buffer: the aggregates' partial states
+    * and every eager partial. The mutable state is written as-is (slot
+    * arrays), with no triple or immutable-map intermediate: this runs
+    * once per key per partial-aggregate flush, so grouped cofactors over
+    * high-cardinality keys live on this path. */
   def toBytes(b: CofactorBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeBoolean(b.nbMode)
-    TripleCodec.writeBuffer(b, out)
+    out.writeLong(b.n)
+    out.writeInt(b.numCols); out.writeInt(b.catCols)
+    b.lin.foreach(out.writeDouble)
+    b.quad.foreach(out.writeDouble)
+    b.catMaps.foreach { m =>
+      out.writeInt(m.size)
+      m.foreach { case (k, v) => out.writeLong(k); v.foreach(out.writeDouble) }
+    }
+    b.quadCat.foreach { m =>
+      out.writeInt(m.size)
+      m.foreach { case (k, v) => out.writeLong(k); out.writeDouble(v(0)) }
+    }
     out.flush()
     bos.toByteArray
   }
 
   def fromBytes(bytes: Array[Byte]): CofactorBuffer = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    TripleCodec.readBuffer(in, in.readBoolean())
+    val nbMode = in.readBoolean()
+    val n = in.readLong()
+    val b = new CofactorBuffer(in.readInt(), in.readInt(), nbMode)
+    b.n = n
+    b.lin.indices.foreach(b.lin(_) = in.readDouble())
+    b.quad.indices.foreach(b.quad(_) = in.readDouble())
+    val catSlots = if (nbMode) 1 else b.numCols + 1
+    def read(m: KeyedSlots, slots: Int): Unit = {
+      val sz = in.readInt()
+      m.sizeHint(sz)
+      var e = 0
+      while (e < sz) {
+        val k = in.readLong()
+        m.put(k, Array.fill(slots)(in.readDouble()))
+        e += 1
+      }
+    }
+    b.catMaps.foreach(read(_, catSlots))
+    b.quadCat.foreach(read(_, 1))
+    b
   }
 }
 
@@ -291,11 +339,8 @@ case class CofactorAggregate(
   override def dataType: DataType = TripleCodec.dataType(nbMode)
   override def nullable: Boolean = false
 
-  override def createAggregationBuffer(): CofactorBuffer = {
-    val b = new CofactorBuffer(numChildren.length, catChildren.length, nbMode)
-    b.maxCategories = maxCategories
-    b
-  }
+  override def createAggregationBuffer(): CofactorBuffer =
+    new CofactorBuffer(numChildren.length, catChildren.length, nbMode, maxCategories)
 
   private def toDouble(v: Any): Double = v match {
     case d: java.lang.Double => d
@@ -386,7 +431,7 @@ case class CofactorAggregate(
     buffer.merge(input); buffer
   }
 
-  override def eval(buffer: CofactorBuffer): Any = TripleCodec.toCatalyst(buffer.toTriple, nbMode)
+  override def eval(buffer: CofactorBuffer): Any = TripleCodec.toCatalyst(buffer)
 
   override def serialize(buffer: CofactorBuffer): Array[Byte] = CofactorBuffer.toBytes(buffer)
   override def deserialize(bytes: Array[Byte]): CofactorBuffer = CofactorBuffer.fromBytes(bytes)

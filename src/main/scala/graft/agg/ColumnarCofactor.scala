@@ -685,9 +685,7 @@ object ColumnarCofactor {
     pass(src, nums, cats, label, nbMode, maxCategories) { acc =>
       Iterator.single(acc.buffers.map { case (k, b) => k -> CofactorBuffer.toBytes(b) }.toArray)
     }.map { case (qe, partials) =>
-      val empty = () => {
-        val b = new CofactorBuffer(nums.size, cats.size, nbMode); b.maxCategories = maxCategories; b
-      }
+      val empty = () => new CofactorBuffer(nums.size, cats.size, nbMode, maxCategories)
       graft.Graft.mergeBuffers(empty, if (label.isEmpty) Seq(0L) else Nil,
         graft.Graft.foldPartitions(qe, partials)(_.next()))
     }
@@ -714,7 +712,7 @@ object ColumnarCofactor {
       val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(rowTypes)
       acc.buffers.map { case (kv, b) =>
         val keys = label.fold(Seq.empty[Any])(graft.plans.KernelKeys.unpack(_, keyTypes, kv))
-        proj(InternalRow.fromSeq(keys :+ TripleCodec.toCatalyst(b.toTriple, nbMode)))
+        proj(InternalRow.fromSeq(keys :+ TripleCodec.toCatalyst(b)))
       }
     }.map(_._2)
   }
@@ -890,8 +888,7 @@ object ColumnarCofactor {
     // use must fail loudly here rather than silently misread the column
     require(labelMode || !p.catKind.exists(k => k == 4 || k == 5),
       "CatPackedKeys/CatDictString are label-only: use cofactorPerClassLong")
-    val buf = new CofactorBuffer(p.numCols, if (labelMode) 0 else p.catCols, p.nbMode)
-    buf.maxCategories = p.maxCategories
+    val buf = new CofactorBuffer(p.numCols, if (labelMode) 0 else p.catCols, p.nbMode, p.maxCategories)
     // the int categorical columns each buffer accumulates: every
     // compiled cat spec, less the label in label mode
     private val nCats = if (labelMode) p.catCols - 1 else p.catCols
@@ -906,11 +903,8 @@ object ColumnarCofactor {
     private val byClass = new scala.collection.mutable.LongMap[CofactorBuffer]
     private def classBuf(label: Long): CofactorBuffer = {
       val before = byClass.size
-      val b = byClass.getOrElseUpdate(label, {
-        val nb = new CofactorBuffer(p.numCols, p.catCols - 1, p.nbMode)
-        nb.maxCategories = p.maxCategories
-        nb
-      })
+      val b = byClass.getOrElseUpdate(label,
+        new CofactorBuffer(p.numCols, p.catCols - 1, p.nbMode, p.maxCategories))
       if (byClass.size > before && byClass.size > p.maxCategories)
         throw new IllegalStateException(
           s"per-class cofactor: label exceeded ${p.maxCategories} distinct classes — " +

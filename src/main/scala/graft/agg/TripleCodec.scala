@@ -2,12 +2,13 @@ package graft.agg
 
 import graft.ring.Triple
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 
 /**
- * Catalyst <-> [[Triple]] conversion. The SQL-visible triple type is
+ * Catalyst <-> [[Triple]] and [[CofactorBuffer]] conversion. The
+ * SQL-visible triple type is
  *
  * {{{
  * STRUCT(n BIGINT,
@@ -64,6 +65,37 @@ object TripleCodec {
     new GenericInternalRow(fields)
   }
 
+  /** The triple struct of `b`, written from its slot arrays without
+    * building a [[Triple]]'s maps: keys ascending, exact-zero sums
+    * dropped from every map (ring.Triple's canonical form). Every
+    * aggregate's result and every kernel partial goes through here. */
+  def toCatalyst(b: CofactorBuffer): InternalRow = {
+    val catKeys = b.catMaps.map(_.sortedKeys)
+    val fields = new Array[Any](if (b.nbMode) 4 else 6)
+    fields(0) = b.n
+    fields(1) = ArrayData.toArrayData(b.lin.map(_ + 0.0))
+    fields(2) = ArrayData.toArrayData(b.quad.map(_ + 0.0))
+    fields(3) = new GenericArrayData(Array.tabulate[Any](b.catCols)(j =>
+      mapData(b.catMaps(j), catKeys(j), 0, intKeys = true)))
+    if (!b.nbMode) {
+      fields(4) = new GenericArrayData(Array.tabulate[Any](b.numCols * b.catCols) { idx =>
+        val j = idx % b.catCols
+        mapData(b.catMaps(j), catKeys(j), idx / b.catCols + 1, intKeys = true)
+      })
+      fields(5) = new GenericArrayData(
+        b.quadCat.map(m => mapData(m, m.sortedKeys, 0, intKeys = false)): Array[Any])
+    }
+    new GenericInternalRow(fields)
+  }
+
+  /** Slot `slot` of `m`'s entries in `keys` order, exact zeros dropped. */
+  private def mapData(m: KeyedSlots, keys: Array[Long], slot: Int, intKeys: Boolean): MapData = {
+    val kept = keys.filter(m(_)(slot) != 0.0)
+    new ArrayBasedMapData(
+      if (intKeys) ArrayData.toArrayData(kept.map(_.toInt)) else ArrayData.toArrayData(kept),
+      ArrayData.toArrayData(kept.map(m(_)(slot))))
+  }
+
   private def readIntMaps(a: ArrayData): Array[Map[Int, Double]] =
     Array.tabulate(a.numElements()) { i =>
       val m = a.getMap(i)
@@ -100,104 +132,54 @@ object TripleCodec {
     )
   }
 
-  // ---- compact binary form (aggregation-buffer spill / shuffle) ----
-
-  def write(t: Triple, out: java.io.DataOutputStream): Unit = {
-    out.writeLong(t.n)
-    out.writeInt(t.numCols); out.writeInt(t.catCols); out.writeInt(t.quad.length)
-    t.lin.foreach(out.writeDouble); t.quad.foreach(out.writeDouble)
-    out.writeInt(t.quadNumCat.length); out.writeInt(t.quadCat.length)
-    def wi(m: Map[Int, Double]): Unit = {
-      out.writeInt(m.size); m.foreach { case (k, v) => out.writeInt(k); out.writeDouble(v) }
-    }
-    def wl(m: Map[Long, Double]): Unit = {
-      out.writeInt(m.size); m.foreach { case (k, v) => out.writeLong(k); out.writeDouble(v) }
-    }
-    t.linCat.foreach(wi); t.quadNumCat.foreach(wi); t.quadCat.foreach(wl)
-  }
-
-  /** Buffer-direct binary form: serialize the mutable aggregation state
-    * as-is (LongMap slot arrays), skipping the per-flush `toTriple` /
-    * immutable-Map materialization — this runs once per key per
-    * partial-aggregate flush, so grouped cofactors over high-cardinality
-    * keys live on this path. Only ever read back by [[readBuffer]]. */
-  def writeBuffer(b: CofactorBuffer, out: java.io.DataOutputStream): Unit = {
-    out.writeLong(b.n)
-    out.writeInt(b.numCols); out.writeInt(b.catCols)
+  /** Ring-adds the triple struct `row` into `b` in place, each sum as
+    * `Triple.add(b, row)` adds it (an exact-zero sum stays in `b` until
+    * the encoder drops it), then holds `b`'s categorical maps to its
+    * `maxCategories` as a merge does. `row` has `b`'s form, full or NB;
+    * a triple of another shape throws. */
+  def addInto(b: CofactorBuffer, row: InternalRow): Unit = {
+    val lin = row.getArray(1); val quad = row.getArray(2); val linCat = row.getArray(3)
+    require(lin.numElements() == b.numCols && quad.numElements() == b.quad.length &&
+      linCat.numElements() == b.catCols,
+      s"shape mismatch: (${b.numCols},${b.catCols}) vs (${lin.numElements()},${linCat.numElements()})")
+    b.n += row.getLong(0)
     var i = 0
-    while (i < b.lin.length) { out.writeDouble(b.lin(i)); i += 1 }
+    while (i < b.lin.length) { b.lin(i) += lin.getDouble(i); i += 1 }
     i = 0
-    while (i < b.quad.length) { out.writeDouble(b.quad(i)); i += 1 }
-    val catSlots = if (b.nbMode) 1 else b.numCols + 1
+    while (i < b.quad.length) { b.quad(i) += quad.getDouble(i); i += 1 }
+    // catMaps(j) slots: [count, Σx_0 … Σx_{numCols-1}] (count only in NB)
+    val slots = if (b.nbMode) 1 else b.numCols + 1
     var j = 0
-    while (j < b.catMaps.length) {
-      val m = b.catMaps(j)
-      out.writeInt(m.size)
-      m.foreach { case (k, v) =>
-        out.writeLong(k)
-        var s = 0
-        while (s < catSlots) { out.writeDouble(v(s)); s += 1 }
+    while (j < b.catCols) { addMap(b.catMaps(j), linCat.getMap(j), 0, slots, longKeys = false); j += 1 }
+    if (!b.nbMode) {
+      val quadNumCat = row.getArray(4)
+      var idx = 0
+      while (idx < b.numCols * b.catCols) {
+        addMap(b.catMaps(idx % b.catCols), quadNumCat.getMap(idx), idx / b.catCols + 1, slots,
+          longKeys = false)
+        idx += 1
       }
-      j += 1
+      val quadCat = row.getArray(5)
+      j = 0
+      while (j < b.quadCat.length) { addMap(b.quadCat(j), quadCat.getMap(j), 0, 1, longKeys = true); j += 1 }
     }
-    j = 0
-    while (j < b.quadCat.length) {
-      val m = b.quadCat(j)
-      out.writeInt(m.size)
-      m.foreach { case (k, v) => out.writeLong(k); out.writeDouble(v(0)) }
-      j += 1
+    b.checkMerged()
+  }
+
+  private def addMap(m: KeyedSlots, d: MapData, slot: Int, slots: Int, longKeys: Boolean): Unit = {
+    val ks = d.keyArray(); val vs = d.valueArray()
+    // slot 0 (a count) is the map that carries each key first
+    if (slot == 0) m.sizeHint(d.numElements())
+    var e = 0
+    while (e < d.numElements()) {
+      val k = if (longKeys) ks.getLong(e) else ks.getInt(e).toLong
+      m.getOrElseUpdate(k, new Array[Double](slots))(slot) += vs.getDouble(e)
+      e += 1
     }
   }
 
-  def readBuffer(in: java.io.DataInputStream, nbMode: Boolean): CofactorBuffer = {
-    val n = in.readLong()
-    val numCols = in.readInt(); val catCols = in.readInt()
-    val b = new CofactorBuffer(numCols, catCols, nbMode)
-    b.n = n
-    var i = 0
-    while (i < b.lin.length) { b.lin(i) = in.readDouble(); i += 1 }
-    i = 0
-    while (i < b.quad.length) { b.quad(i) = in.readDouble(); i += 1 }
-    val catSlots = if (nbMode) 1 else numCols + 1
-    var j = 0
-    while (j < catCols) {
-      val sz = in.readInt()
-      val m = b.catMaps(j)
-      var e = 0
-      while (e < sz) {
-        val k = in.readLong()
-        val v = new Array[Double](catSlots)
-        var s = 0
-        while (s < catSlots) { v(s) = in.readDouble(); s += 1 }
-        m.put(k, v)
-        e += 1
-      }
-      j += 1
-    }
-    j = 0
-    while (j < b.quadCat.length) {
-      val sz = in.readInt()
-      val m = b.quadCat(j)
-      var e = 0
-      while (e < sz) { m.put(in.readLong(), Array(in.readDouble())); e += 1 }
-      j += 1
-    }
-    b
-  }
-
-  def read(in: java.io.DataInputStream): Triple = {
-    val n = in.readLong()
-    val nc = in.readInt(); val cc = in.readInt(); val ql = in.readInt()
-    val lin = Array.fill(nc)(in.readDouble()); val quad = Array.fill(ql)(in.readDouble())
-    val nqnc = in.readInt(); val nqc = in.readInt()
-    def ri(): Map[Int, Double] = {
-      val s = in.readInt(); val b = Map.newBuilder[Int, Double]
-      var i = 0; while (i < s) { b += in.readInt() -> in.readDouble(); i += 1 }; b.result()
-    }
-    def rl(): Map[Long, Double] = { // TreeMap: see readLongMaps
-      val s = in.readInt(); val b = scala.collection.immutable.TreeMap.newBuilder[Long, Double]
-      var i = 0; while (i < s) { b += in.readLong() -> in.readDouble(); i += 1 }; b.result()
-    }
-    Triple(n, lin, quad, Array.fill(cc)(ri()), Array.fill(nqnc)(ri()), Array.fill(nqc)(rl()))
-  }
+  /** The empty triple of `num` continuous and `cat` categorical columns
+    * as a literal: what the fused aggregate yields over no rows. */
+  def emptyLiteral(num: Int, cat: Int, nb: Boolean): Literal =
+    Literal(toCatalyst(new CofactorBuffer(num, cat, nb)), dataType(nb))
 }

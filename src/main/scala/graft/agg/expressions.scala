@@ -8,8 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 /**
  * Per-row lift: builds the degree-2 triple of a single row
  * (reference `to_cofactor` / `to_nb_agg`, triple/lift.cpp:15-243,
@@ -65,19 +63,25 @@ case class ToCofactor(children: Seq[Expression], nbMode: Boolean)
   override def prettyName: String = if (nbMode) "to_nb_agg" else "to_cofactor"
 }
 
-/** Holder so the triple shape can be adopted from the first input. */
-final class TripleHolder(var t: Triple)
-
 /**
  * Aggregate that sums already-lifted triples (reference `sum_triple` /
- * `sum_nb_agg`, triple/sum/sum.cpp:57-261, sum_state.cpp). Shape is
- * adopted from the first non-null input.
+ * `sum_nb_agg`, triple/sum/sum.cpp:57-261, sum_state.cpp). The state is
+ * one [[CofactorBuffer]] per group, the fused aggregate's: `update`
+ * ring-adds each input struct into it in place ([[TripleCodec.addInto]]),
+ * partial states merge with `CofactorBuffer.merge` and travel as
+ * `CofactorBuffer.toBytes`. The shape is adopted from the first non-NULL
+ * input; an input of another shape throws. NULL inputs are skipped, and a
+ * group with no non-NULL input has no buffer (a NULL state, serialized as
+ * zero bytes) and evaluates to NULL. The merged categorical maps are held
+ * to `maxCategories`, captured from `spark.graft.cofactor.maxCategories`
+ * as [[CofactorAggregate]] captures it.
  */
 case class SumTriple(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TripleHolder] {
+    inputAggBufferOffset: Int = 0,
+    maxCategories: Int = CofactorAggregate.confMaxCategories())
+  extends TypedImperativeAggregate[CofactorBuffer] {
 
   private lazy val numFields: Int = child.dataType.asInstanceOf[StructType].length
   private def nbMode: Boolean = numFields == 4
@@ -93,36 +97,36 @@ case class SumTriple(
     case dt => TypeCheckResult.TypeCheckFailure(s"sum_triple expects a triple struct, got $dt")
   }
 
-  override def createAggregationBuffer(): TripleHolder = new TripleHolder(null)
+  override def createAggregationBuffer(): CofactorBuffer = null
 
-  override def update(buffer: TripleHolder, input: InternalRow): TripleHolder = {
+  override def update(buffer: CofactorBuffer, input: InternalRow): CofactorBuffer = {
     val v = child.eval(input)
-    if (v != null) {
-      val t = TripleCodec.fromCatalyst(v.asInstanceOf[InternalRow], numFields)
-      buffer.t = if (buffer.t == null) t else Triple.add(buffer.t, t)
+    if (v == null) return buffer
+    val row = v.asInstanceOf[InternalRow]
+    val b = if (buffer != null) buffer
+      else new CofactorBuffer(row.getArray(1).numElements(), row.getArray(3).numElements(), nbMode,
+        maxCategories)
+    TripleCodec.addInto(b, row)
+    b
+  }
+
+  override def merge(buffer: CofactorBuffer, input: CofactorBuffer): CofactorBuffer =
+    if (input == null) buffer
+    else if (buffer == null) input
+    else { buffer.merge(input); buffer }
+
+  override def eval(buffer: CofactorBuffer): Any =
+    if (buffer == null) null else TripleCodec.toCatalyst(buffer)
+
+  override def serialize(buffer: CofactorBuffer): Array[Byte] =
+    if (buffer == null) Array.emptyByteArray else CofactorBuffer.toBytes(buffer)
+  override def deserialize(bytes: Array[Byte]): CofactorBuffer =
+    if (bytes.isEmpty) null
+    else {
+      val b = CofactorBuffer.fromBytes(bytes)
+      b.maxCategories = maxCategories
+      b
     }
-    buffer
-  }
-
-  override def merge(buffer: TripleHolder, input: TripleHolder): TripleHolder = {
-    if (input.t != null) buffer.t = if (buffer.t == null) input.t else Triple.add(buffer.t, input.t)
-    buffer
-  }
-
-  override def eval(buffer: TripleHolder): Any =
-    if (buffer.t == null) null else TripleCodec.toCatalyst(buffer.t, nbMode)
-
-  override def serialize(buffer: TripleHolder): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeBoolean(buffer.t != null)
-    if (buffer.t != null) TripleCodec.write(buffer.t, out)
-    out.flush(); bos.toByteArray
-  }
-  override def deserialize(bytes: Array[Byte]): TripleHolder = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    new TripleHolder(if (in.readBoolean()) TripleCodec.read(in) else null)
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SumTriple =
     copy(mutableAggBufferOffset = newOffset)

@@ -806,13 +806,14 @@ object Factorized {
   /** The factorized chain over aggregated dims: the fact collapses to one
     * triple per combination of the dims' keys, each dim to one triple per
     * key, and the joins chain over those pre-aggregates, ring-multiplying
-    * as they go; one fold ([[Graft.sumTriples]]) adds the products.
-    * Layout `[factNum ++ dims' num…, factCat ++ dims' cat…]`; the zero
-    * triple of that arity when the join is empty. */
+    * as they go; one fold ([[Graft.sumTriples]]) adds the products into
+    * one buffer per partition and merges those, under the session's
+    * `maxCategories`. Layout `[factNum ++ dims' num…, factCat ++ dims'
+    * cat…]`; the zero triple of that arity when the join is empty. */
   private def aggregatedChain(fact: DataFrame, factNum: Seq[String], factCat: Seq[String],
                               dims: Seq[StarDim]): Triple =
-    Graft.sumTriples(chainFrame(fact, factNum, factCat, dims), col("__T")).getOrElse(Triple.zero(
-      factNum.length + dims.map(_.num.length).sum, factCat.length + dims.map(_.cat.length).sum))
+    Graft.sumTriples(chainFrame(fact, factNum, factCat, dims), col("__T"),
+      factNum.length + dims.map(_.num.length).sum, factCat.length + dims.map(_.cat.length).sum)
 
   /** [[aggregatedChain]]'s frame: one row per joined key combination,
     * its ring product in column `__T`. With ONE dim both join sides are

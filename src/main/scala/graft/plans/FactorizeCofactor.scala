@@ -205,8 +205,8 @@ object FactorizeCofactorRule extends Rule[LogicalPlan] {
     val newJoin = Join(leftAgg, rightAgg, Inner, Some(cond), hint)
 
     val product = MultiplyTriple(aAttr, bAttr)
-    val outer: Expression = AggregateExpression(SumTriple(product), ae.mode, isDistinct = false,
-      None, NamedExpression.newExprId)
+    val outer: Expression = AggregateExpression(SumTriple(product, maxCategories = cof.maxCategories),
+      ae.mode, isDistinct = false, None, NamedExpression.newExprId)
     val shaped = if (identity) outer
       else graft.agg.PermuteTriple(outer, numPerm, catPerm)
     // empty-input parity: the original fused aggregate yields the zero
@@ -214,14 +214,8 @@ object FactorizeCofactorRule extends Rule[LogicalPlan] {
     // yields NULL — coalesce restores the original semantics (for
     // grouped aggregates a group only exists with ≥1 product row, so
     // the coalesce is inert but harmless)
-    val (nNum, nCat) = (cols.count(isNum), cols.count(a => !isNum(a)))
-    val zeroTriple =
-      if (cof.nbMode) graft.ring.Triple(0L, new Array[Double](nNum), new Array[Double](nNum),
-        Array.fill(nCat)(Map.empty[Int, Double]), Array.empty, Array.empty)
-      else graft.ring.Triple.zero(nNum, nCat)
-    val zero = Literal.create(
-      graft.agg.TripleCodec.toCatalyst(zeroTriple, nb = cof.nbMode),
-      graft.agg.TripleCodec.dataType(cof.nbMode))
+    val zero = graft.agg.TripleCodec.emptyLiteral(cols.count(isNum), cols.count(a => !isNum(a)),
+      cof.nbMode)
     val withZero = Coalesce(Seq(shaped, zero))
     // preserve the original output attribute (name + exprId) so parents resolve
     val outAlias = Alias(withZero, alias.name)(alias.exprId, alias.qualifier, alias.explicitMetadata)

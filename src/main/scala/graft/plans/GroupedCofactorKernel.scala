@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.agg.{CofactorAggregate, CofactorBuffer, ColumnarCofactor, SumTriple, ToCofactor, TripleCodec}
+import graft.agg.{CofactorAggregate, ColumnarCofactor, SumTriple, ToCofactor, TripleCodec}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
@@ -151,11 +151,11 @@ case class GroupedCofactorStrategy(session: SparkSession) extends SparkStrategy 
       // a group whose rows all carry a NULL input merges to NULL, and so
       // does an ungrouped aggregate over no rows; the default plan gives
       // both the empty triple of this arity
-      val empty = Literal(TripleCodec.toCatalyst(
-        new CofactorBuffer(num.size, cat.size, cof.nbMode).toTriple, cof.nbMode), cof.dataType)
+      val empty = TripleCodec.emptyLiteral(num.size, cat.size, cof.nbMode)
+      val merged = SumTriple(t, maxCategories = cof.maxCategories)
       val result = projList.map {
         case a @ Alias(_: AggregateExpression, name) =>
-          Alias(Coalesce(Seq(SumTriple(t).toAggregateExpression(), empty)), name)(
+          Alias(Coalesce(Seq(merged.toAggregateExpression(), empty)), name)(
             exprId = a.exprId, qualifier = a.qualifier, explicitMetadata = a.explicitMetadata,
             nonInheritableMetadataKeys = a.nonInheritableMetadataKeys)
         case keyRef => keyRef

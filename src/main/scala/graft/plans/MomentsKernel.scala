@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.agg.{CofactorAggregate, CofactorBuffer, SumTriple, TripleCodec}
+import graft.agg.{CofactorAggregate, SumTriple, TripleCodec}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, AggregateExpression, Count, Sum}
@@ -254,9 +254,8 @@ case class GroupedMomentsStrategy(session: SparkSession) extends SparkStrategy {
       withNulls = false)(child, session)
     // a zero-key aggregate over no rows merges to NULL: read it as the
     // empty triple, n = 0
-    val empty = Literal(TripleCodec.toCatalyst(
-      new CofactorBuffer(derived.size, 0, false).toTriple, false), TripleCodec.dataType(false))
-    val merged = Coalesce(Seq(SumTriple(t).toAggregateExpression(), empty))
+    val merged = Coalesce(Seq(SumTriple(t).toAggregateExpression(),
+      TripleCodec.emptyLiteral(derived.size, 0, nb = false)))
     val n = GetStructField(merged, 0, Some("n"))
     def lin(i: Int) = GetArrayItem(GetStructField(merged, 1, Some("lin")), Literal(i))
     // SQL's SUM/AVG over no rows is NULL; the guard also keeps AVG's

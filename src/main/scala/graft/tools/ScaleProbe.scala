@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
  */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    // "tree" runs ONLY the partial-merge ladder (fresh-JVM timings, no
-    // GC pressure from the preceding sections' cached corpora)
-    val treeOnly = args.contains("tree")
     val spark = Graft.register(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -30,7 +27,6 @@ object ScaleProbe {
       println(f"$name: ${(System.nanoTime() - t0) / 1e9}%.2f s  (n=$n)")
     }
 
-    if (!treeOnly) {
     // --- fused cofactor: 0.6M → 9.6M rows ---
     val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
       .select(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
@@ -209,34 +205,7 @@ object ScaleProbe {
       }
       rep.unpersist()
     }
-    } // !treeOnly
 
-    // --- columnar kernel partial merge: driver cost vs partition count ---
-    // A fat categorical (l_partkey, 20k distinct at sf0.1) makes each
-    // per-partition buffer a ~20k-entry map stack. The same rows are
-    // written once as 256 small files; maxPartitionBytes then controls
-    // how many scan partitions the ladder reads them as (file packing
-    // at 128m, ~one-per-file at 64k) — more partials from identical
-    // data. The driver merges the P serialized buffers in place
-    // (`Graft.mergeBuffers`), so the growth down the ladder is the
-    // merge's cost per fat partial.
-    val treeDir = "/tmp/graft_treeprobe/lineitem256"
-    if (!new java.io.File(s"$treeDir/_SUCCESS").exists())
-      spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
-        .select(col("l_quantity"), col("l_extendedprice"), col("l_partkey"))
-        .repartition(256).write.mode("overwrite").parquet(treeDir)
-    for (mpb <- Seq("128m", "4m", "64k"); pass <- 1 to 2) {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-      val df = spark.read.parquet(treeDir)
-      val parts = df.rdd.getNumPartitions
-      time(s"columnar cofactor fat-cat maxPartitionBytes=$mpb ($parts partitions) pass$pass") {
-        graft.agg.ColumnarCofactor.cofactor(df,
-          Seq(graft.agg.ColumnarCofactor.NumCol("l_quantity"),
-            graft.agg.ColumnarCofactor.NumCol("l_extendedprice")),
-          Seq(graft.agg.ColumnarCofactor.CatCol("l_partkey"))).get.n
-      }
-    }
-    spark.conf.unset("spark.sql.files.maxPartitionBytes")
     spark.stop()
   }
 }

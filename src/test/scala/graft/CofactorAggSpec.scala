@@ -244,6 +244,70 @@ class CofactorAggSpec extends AnyFunSuite {
     }
   }
 
+  /** (sum, lift) pairs of the full and the NB forms of `sum_triple`. */
+  private val sumForms = Seq(
+    ("sum_triple", "to_cofactor", (n: Array[Double], c: Array[Int]) => Triple.lift(n, c)),
+    ("sum_nb_agg", "to_nb_agg", (n: Array[Double], c: Array[Int]) => Triple.liftNb(n, c)))
+
+  test("sum_triple skips NULL inputs; an empty or all-NULL group is NULL (full and NB forms)") {
+    val df = Seq[(Int, Option[Double], Option[Int])](
+      (1, Some(1.0), Some(2)), (1, None, Some(3)), (1, Some(4.0), None), (1, Some(2.0), Some(2)),
+      (2, None, Some(1)), (2, Some(3.0), None)
+    ).toDF("g", "x", "c").repartition(3)
+    df.createOrReplaceTempView("sum_nulls")
+    for ((sum, lift, _) <- sumForms) {
+      val fused = if (sum == "sum_triple") "sum_to_triple" else "sum_to_nb_agg"
+      val byG = spark.sql(s"SELECT g, $sum($lift(x, c)) FROM sum_nulls GROUP BY g").collect()
+        .map(r => r.getInt(0) -> Option(r.getStruct(1)).map(Graft.tripleFromRow)).toMap
+      val want = Graft.tripleFromRow(
+        spark.sql(s"SELECT $fused(x, c) FROM sum_nulls WHERE g = 1").head.getStruct(0))
+      assert(want.n == 2 && byG(1).contains(want), s"$sum: ${byG(1)} vs $want")
+      assert(byG(2).isEmpty, s"$sum: an all-NULL group is NULL")
+      assert(spark.sql(s"SELECT $sum($lift(x, c)) FROM sum_nulls WHERE g > 2").head.isNullAt(0),
+        s"$sum: an empty group is NULL")
+    }
+  }
+
+  test("sum_triple throws on inputs of different shapes (full and NB forms)") {
+    val df = Seq.tabulate(20)(i => (i, i.toDouble, i % 3)).toDF("i", "x", "c").repartition(2)
+    for ((sum, lift, _) <- sumForms) {
+      val e = intercept[Exception] {
+        df.selectExpr(s"$sum(CASE WHEN i % 2 = 0 THEN $lift(x, c) ELSE $lift(x, x, c) END)").head()
+      }
+      assert(msgs(e).exists(_.contains("shape mismatch")), s"$sum: unexpected error: $e")
+    }
+  }
+
+  test("sum_triple under the sort-based fallback == the hash path == a Triple.add fold") {
+    val rng = new scala.util.Random(11)
+    // integer-valued, so every summation order is exact; group 6 only
+    // carries NULL triples, so its NULL state goes through serialize
+    val rows = Seq.tabulate(600) { i =>
+      val g = i % 7
+      (g, if (g == 6 || rng.nextInt(5) == 0) None else Some(rng.nextInt(9).toDouble),
+        rng.nextInt(5), rng.nextInt(3))
+    }
+    val df = rows.toDF("g", "x", "c", "d").repartition(5)
+    for ((sum, lift, liftRow) <- sumForms) {
+      def run() = df.groupBy($"g").agg(org.apache.spark.sql.functions.expr(s"$sum($lift(x, c, d))"))
+        .collect().map(r => r.getInt(0) -> Option(r.getStruct(1)).map(Graft.tripleFromRow)).toMap
+      val hash = run()
+      spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1")
+      val sorted = try run()
+        finally spark.conf.unset("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+      val folded = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.collect { case (_, Some(x), c, d) => liftRow(Array(x), Array(c, d)) }
+          .reduceOption(Triple.add)
+      }
+      assert(hash(6).isEmpty && hash.size == 7, s"$sum: $hash")
+      assert(sorted == hash, s"$sum: the sort-based fallback differs from the hash path")
+      assert(hash == folded, s"$sum: the hash path differs from a Triple.add fold")
+    }
+  }
+
+  private def msgs(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+
   test("categorical-cardinality guard rejects ID-like columns") {
     spark.conf.set("spark.graft.cofactor.maxCategories", "16")
     try {
@@ -251,9 +315,7 @@ class CofactorAggSpec extends AnyFunSuite {
       val e = intercept[Exception] {
         df.agg(Graft.sumTriple($"x", $"id")).head
       }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-      assert(msgs(e).exists(m => m != null && m.contains("distinct values")),
+      assert(msgs(e).exists(_.contains("distinct values")),
         s"unexpected error: $e")
     } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
   }

@@ -294,6 +294,24 @@ class GraftSpec extends AnyFunSuite {
     assert(empty.n == 0 && empty.numCols == 2 && empty.catCols == 2, s"disjoint keys: $empty")
   }
 
+  test("cofactorOverJoin holds maxCategories over the merged result") {
+    // one category per join key: every side aggregate stays under the
+    // cap, and only the final sum over the keys holds all 40
+    val fact = Seq.tabulate(400)(i => (i % 40, i * 0.5, i % 40)).toDF("k", "x", "c")
+    val dim = Seq.tabulate(40)(i => (i, i * 0.1)).toDF("k", "y")
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    spark.conf.set("spark.graft.cofactor.maxCategories", "16")
+    try {
+      val mat = intercept[Exception] { Graft.cofactor(fact.join(dim, "k"), Seq("x", "y"), Seq("c")) }
+      assert(msgs(mat).exists(_.contains("distinct values")), s"materialized join: $mat")
+      val fac = intercept[Exception] {
+        Factorized.cofactorOverJoin(fact, dim, "k", Seq("x"), Seq("c"), Seq("y"), Seq())
+      }
+      assert(msgs(fac).exists(_.contains("distinct values")), s"factorized join: $fac")
+    } finally spark.conf.unset("spark.graft.cofactor.maxCategories")
+  }
+
   test("checkpoint: its eager job runs under a SQL execution id") {
     // query listeners attribute jobs through spark.sql.execution.id; the
     // checkpoint's materializing jobs must carry it like any action's

@@ -1136,6 +1136,35 @@ class PlansSpec extends AnyFunSuite {
     } finally spark.experimental.extraStrategies = saved
   }
 
+  test("flat kernel route holds the captured cap over the merged partials") {
+    Graft.register(spark)
+    import org.apache.spark.sql.graft.ColumnBridge
+    val tmp = java.nio.file.Files.createTempDirectory("mcatmerge").toFile.getAbsolutePath
+    // two files with disjoint categories {0,1} and {2,3}: each partial
+    // holds 2 categories, under the cap of 3, and only the merge holds 4
+    for (base <- Seq(0, 2))
+      spark.range(0, 100, 1, 1).select((col("id") % 7).cast("double").as("x"),
+        (col("id") % 2 + base).cast("int").as("c")).write.mode("append").parquet(tmp)
+    def src = spark.read.parquet(tmp)
+    assert(src.rdd.getNumPartitions == 2)
+    def cappedAgg = ColumnBridge.column(
+      graft.agg.CofactorAggregate(
+        Seq(ColumnBridge.expression(col("x")), ColumnBridge.expression(col("c"))),
+        nbMode = false, maxCategories = 3).toAggregateExpression()).as("t")
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    val rowEx = intercept[Exception] { src.agg(cappedAgg).collect() }
+    assert(msgs(rowEx).exists(_.contains("after merge")), s"default plan: $rowEx")
+    val saved = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = saved :+ graft.plans.GroupedCofactorStrategy(spark)
+    try {
+      val q = src.agg(cappedAgg)
+      assert(q.queryExecution.executedPlan.toString.contains("GroupedKernelPartial"))
+      val ex = intercept[Exception] { q.collect() }
+      assert(msgs(ex).exists(_.contains("after merge")), s"kernel route: $ex")
+    } finally spark.experimental.extraStrategies = saved
+  }
+
   test("declarative cofactor rewrite: factorized identity plans as plain hash aggregates, results unchanged") {
     Graft.register(spark)
     val t1 = java.nio.file.Files.createTempDirectory("dc_l").toFile.getAbsolutePath
