@@ -377,13 +377,11 @@ object Graft {
   }
 
   /** `sum_triple(t)` over every row of `df`, eagerly, in ONE Spark job
-    * ([[foldPartitions]]): each partition ring-adds its non-NULL triples
-    * into one buffer of `numCols` continuous and `catCols` categorical
-    * columns ([[graft.agg.TripleCodec.addInto]]; a triple of another
-    * shape throws), and [[mergeBuffers]] merges the serialized buffers in
-    * partition-index order, both under the session's `maxCategories`.
-    * The zero triple of that arity when no row carries a triple. The
-    * final of the factorized join and star cofactors. */
+    * ([[foldPartitions]]): each partition adds its non-NULL triples into
+    * one buffer of `numCols` × `catCols` columns, and [[mergeBuffers]]
+    * merges those in partition order under the session's `maxCategories`.
+    * The zero triple when no row carries one. The final of the factorized
+    * join and star cofactors. */
   private[graft] def sumTriples(df: DataFrame, t: Column, numCols: Int, catCols: Int): Triple = {
     val proj = df.select(t.as("__t"))
     val nf = proj.schema.head.dataType.asInstanceOf[org.apache.spark.sql.types.StructType].length

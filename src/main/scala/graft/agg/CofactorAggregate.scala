@@ -60,14 +60,7 @@ final class KeyedSlots(initialCap: Int = 8) {
   }
 
   /** The slot array of a present key `k`. */
-  def apply(k: Long): Array[Double] = {
-    var i = idx(k)
-    while (vals(i) != null) {
-      if (keys(i) == k) return vals(i)
-      i = (i + 1) & mask
-    }
-    throw new NoSuchElementException(s"key $k")
-  }
+  def apply(k: Long): Array[Double] = getOrElseUpdate(k, throw new NoSuchElementException(s"key $k"))
 
   /** The keys in ascending order. */
   def sortedKeys: Array[Long] = {
@@ -112,7 +105,7 @@ final class KeyedSlots(initialCap: Int = 8) {
  * an unbounded column is a silent OOM at scale. Checked on map growth.
  */
 final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boolean,
-                           var maxCategories: Int = Int.MaxValue) {
+                           val maxCategories: Int = Int.MaxValue) {
   var n: Long = 0L
   val lin = new Array[Double](numCols)
   val quad = new Array[Double](if (nbMode) numCols else numCols * (numCols + 1) / 2)
@@ -233,11 +226,8 @@ final class CofactorBuffer(val numCols: Int, val catCols: Int, val nbMode: Boole
 }
 
 object CofactorBuffer {
-  /** The binary form of every buffer: the aggregates' partial states
-    * and every eager partial. The mutable state is written as-is (slot
-    * arrays), with no triple or immutable-map intermediate: this runs
-    * once per key per partial-aggregate flush, so grouped cofactors over
-    * high-cardinality keys live on this path. */
+  /** The binary form of every buffer (aggregate partial states, eager
+    * partials): its slot arrays as-is, with no triple intermediate. */
   def toBytes(b: CofactorBuffer): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
@@ -258,11 +248,12 @@ object CofactorBuffer {
     bos.toByteArray
   }
 
-  def fromBytes(bytes: Array[Byte]): CofactorBuffer = {
+  /** The buffer `toBytes` wrote, held to `maxCategories` in its merges. */
+  def fromBytes(bytes: Array[Byte], maxCategories: Int = Int.MaxValue): CofactorBuffer = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val nbMode = in.readBoolean()
     val n = in.readLong()
-    val b = new CofactorBuffer(in.readInt(), in.readInt(), nbMode)
+    val b = new CofactorBuffer(in.readInt(), in.readInt(), nbMode, maxCategories)
     b.n = n
     b.lin.indices.foreach(b.lin(_) = in.readDouble())
     b.quad.indices.foreach(b.quad(_) = in.readDouble())
@@ -270,12 +261,7 @@ object CofactorBuffer {
     def read(m: KeyedSlots, slots: Int): Unit = {
       val sz = in.readInt()
       m.sizeHint(sz)
-      var e = 0
-      while (e < sz) {
-        val k = in.readLong()
-        m.put(k, Array.fill(slots)(in.readDouble()))
-        e += 1
-      }
+      for (_ <- 0 until sz) m.put(in.readLong(), Array.fill(slots)(in.readDouble()))
     }
     b.catMaps.foreach(read(_, catSlots))
     b.quadCat.foreach(read(_, 1))
@@ -434,7 +420,8 @@ case class CofactorAggregate(
   override def eval(buffer: CofactorBuffer): Any = TripleCodec.toCatalyst(buffer)
 
   override def serialize(buffer: CofactorBuffer): Array[Byte] = CofactorBuffer.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): CofactorBuffer = CofactorBuffer.fromBytes(bytes)
+  override def deserialize(bytes: Array[Byte]): CofactorBuffer =
+    CofactorBuffer.fromBytes(bytes, maxCategories)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CofactorAggregate =
     copy(mutableAggBufferOffset = newOffset)

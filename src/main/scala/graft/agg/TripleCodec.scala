@@ -42,79 +42,70 @@ object TripleCodec {
 
   def dataType(nb: Boolean): StructType = if (nb) nbType else fullType
 
-  private def intMapData(m: Map[Int, Double]): MapData = {
-    val ks = m.keys.toArray.sorted
-    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(ks.map(m)))
-  }
-  private def longMapData(m: Map[Long, Double]): MapData = {
-    val ks = m.keys.toArray.sorted
-    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(ks.map(m)))
-  }
-
   def toCatalyst(t: Triple, nb: Boolean): InternalRow = {
-    val fields = new Array[Any](if (nb) 4 else 6)
-    fields(0) = t.n
-    // + 0.0 normalizes -0.0 so output hashes deterministically
-    fields(1) = new GenericArrayData(t.lin.map(d => java.lang.Double.valueOf(d + 0.0)): Array[Any])
-    fields(2) = new GenericArrayData(t.quad.map(d => java.lang.Double.valueOf(d + 0.0)): Array[Any])
-    fields(3) = new GenericArrayData(t.linCat.map(intMapData): Array[Any])
-    if (!nb) {
-      fields(4) = new GenericArrayData(t.quadNumCat.map(intMapData): Array[Any])
-      fields(5) = new GenericArrayData(t.quadCat.map(longMapData): Array[Any])
+    def ints(m: Map[Int, Double]): Any = {
+      val es = m.toArray.sortBy(_._1)
+      mapData(es.map(_._1.toLong), es.map(_._2), intKeys = true)
     }
-    new GenericInternalRow(fields)
+    def longs(m: Map[Long, Double]): Any = {
+      val es = m.toArray.sortBy(_._1)
+      mapData(es.map(_._1), es.map(_._2), intKeys = false)
+    }
+    struct(nb, t.n, t.lin, t.quad, t.linCat.map(ints), t.quadNumCat.map(ints), t.quadCat.map(longs))
   }
 
   /** The triple struct of `b`, written from its slot arrays without
-    * building a [[Triple]]'s maps: keys ascending, exact-zero sums
-    * dropped from every map (ring.Triple's canonical form). Every
-    * aggregate's result and every kernel partial goes through here. */
+    * building a [[Triple]]'s maps. Every aggregate's result and every
+    * kernel partial goes through here. */
   def toCatalyst(b: CofactorBuffer): InternalRow = {
     val catKeys = b.catMaps.map(_.sortedKeys)
-    val fields = new Array[Any](if (b.nbMode) 4 else 6)
-    fields(0) = b.n
-    fields(1) = ArrayData.toArrayData(b.lin.map(_ + 0.0))
-    fields(2) = ArrayData.toArrayData(b.quad.map(_ + 0.0))
-    fields(3) = new GenericArrayData(Array.tabulate[Any](b.catCols)(j =>
-      mapData(b.catMaps(j), catKeys(j), 0, intKeys = true)))
-    if (!b.nbMode) {
-      fields(4) = new GenericArrayData(Array.tabulate[Any](b.numCols * b.catCols) { idx =>
-        val j = idx % b.catCols
-        mapData(b.catMaps(j), catKeys(j), idx / b.catCols + 1, intKeys = true)
+    // each key's slot array [count, Σx_0 …], in key order
+    val catRows = Array.tabulate(b.catCols)(j => catKeys(j).map(b.catMaps(j)(_)))
+    def cat(j: Int, slot: Int): Any = mapData(catKeys(j), catRows(j).map(_(slot)), intKeys = true)
+    struct(b.nbMode, b.n, b.lin, b.quad,
+      Array.tabulate(b.catCols)(cat(_, 0)),
+      Array.tabulate(b.numCols * b.catCols)(idx => cat(idx % b.catCols, idx / b.catCols + 1)),
+      b.quadCat.map { m =>
+        val ks = m.sortedKeys
+        mapData(ks, ks.map(m(_)(0)), intKeys = false)
       })
-      fields(5) = new GenericArrayData(
-        b.quadCat.map(m => mapData(m, m.sortedKeys, 0, intKeys = false)): Array[Any])
+  }
+
+  /** The one writer of the struct: dense sums with -0.0 normalized to 0.0
+    * so output hashes deterministically; the maps as built by [[mapData]].
+    * The NB form has no `quadNumCat`/`quadCat`. */
+  private def struct(nb: Boolean, n: Long, lin: Array[Double], quad: Array[Double],
+      linCat: Array[Any], quadNumCat: => Array[Any], quadCat: => Array[Any]): InternalRow = {
+    val fields = new Array[Any](if (nb) 4 else 6)
+    fields(0) = n
+    fields(1) = ArrayData.toArrayData(lin.map(_ + 0.0))
+    fields(2) = ArrayData.toArrayData(quad.map(_ + 0.0))
+    fields(3) = new GenericArrayData(linCat)
+    if (!nb) {
+      fields(4) = new GenericArrayData(quadNumCat)
+      fields(5) = new GenericArrayData(quadCat)
     }
     new GenericInternalRow(fields)
   }
 
-  /** Slot `slot` of `m`'s entries in `keys` order, exact zeros dropped. */
-  private def mapData(m: KeyedSlots, keys: Array[Long], slot: Int, intKeys: Boolean): MapData = {
-    val kept = keys.filter(m(_)(slot) != 0.0)
+  /** The map of ascending `keys` to `vals`, exact zeros of either sign
+    * dropped (ring.Triple's canonical form, whose maps hold none). */
+  private def mapData(keys: Array[Long], vals: Array[Double], intKeys: Boolean): MapData = {
+    val kept = Array.range(0, keys.length).filter(vals(_) != 0.0)
     new ArrayBasedMapData(
-      if (intKeys) ArrayData.toArrayData(kept.map(_.toInt)) else ArrayData.toArrayData(kept),
-      ArrayData.toArrayData(kept.map(m(_)(slot))))
+      if (intKeys) ArrayData.toArrayData(kept.map(keys(_).toInt)) else ArrayData.toArrayData(kept.map(keys)),
+      ArrayData.toArrayData(kept.map(vals)))
   }
 
-  private def readIntMaps(a: ArrayData): Array[Map[Int, Double]] =
+  /** Each map of `a`, its keys read by `key` into `builder()`'s map. */
+  private def readMaps[K](a: ArrayData, key: (ArrayData, Int) => K,
+      builder: () => scala.collection.mutable.Builder[(K, Double), Map[K, Double]]): Array[Map[K, Double]] =
     Array.tabulate(a.numElements()) { i =>
       val m = a.getMap(i)
       val ks = m.keyArray(); val vs = m.valueArray()
-      val b = Map.newBuilder[Int, Double]
+      val b = builder()
       var j = 0
-      while (j < m.numElements()) { b += ks.getInt(j) -> vs.getDouble(j); j += 1 }
-      b.result()
-    }
-
-  private def readLongMaps(a: ArrayData): Array[Map[Long, Double]] =
-    Array.tabulate(a.numElements()) { i =>
-      val m = a.getMap(i)
-      val ks = m.keyArray(); val vs = m.valueArray()
-      // TreeMap: diagonal packed keys all share Long.hashCode 0, so even
-      // BUILDING a HashMap from a big quad_cat map is O(m²)
-      val b = scala.collection.immutable.TreeMap.newBuilder[Long, Double]
-      var j = 0
-      while (j < m.numElements()) { b += ks.getLong(j) -> vs.getDouble(j); j += 1 }
+      while (j < m.numElements()) { b += key(ks, j) -> vs.getDouble(j); j += 1 }
       b.result()
     }
 
@@ -126,9 +117,12 @@ object TripleCodec {
       row.getLong(0),
       row.getArray(1).toDoubleArray(),
       row.getArray(2).toDoubleArray(),
-      readIntMaps(row.getArray(3)),
-      if (nb) Array.empty else readIntMaps(row.getArray(4)),
-      if (nb) Array.empty else readLongMaps(row.getArray(5))
+      readMaps(row.getArray(3), _.getInt(_), () => Map.newBuilder[Int, Double]),
+      if (nb) Array.empty else readMaps(row.getArray(4), _.getInt(_), () => Map.newBuilder[Int, Double]),
+      // TreeMap: diagonal packed keys all share Long.hashCode 0, so even
+      // BUILDING a HashMap from a big quad_cat map is O(m²)
+      if (nb) Array.empty
+      else readMaps(row.getArray(5), _.getLong(_), () => scala.collection.immutable.TreeMap.newBuilder[Long, Double])
     )
   }
 

@@ -66,15 +66,12 @@ case class ToCofactor(children: Seq[Expression], nbMode: Boolean)
 /**
  * Aggregate that sums already-lifted triples (reference `sum_triple` /
  * `sum_nb_agg`, triple/sum/sum.cpp:57-261, sum_state.cpp). The state is
- * one [[CofactorBuffer]] per group, the fused aggregate's: `update`
- * ring-adds each input struct into it in place ([[TripleCodec.addInto]]),
- * partial states merge with `CofactorBuffer.merge` and travel as
- * `CofactorBuffer.toBytes`. The shape is adopted from the first non-NULL
- * input; an input of another shape throws. NULL inputs are skipped, and a
- * group with no non-NULL input has no buffer (a NULL state, serialized as
- * zero bytes) and evaluates to NULL. The merged categorical maps are held
- * to `maxCategories`, captured from `spark.graft.cofactor.maxCategories`
- * as [[CofactorAggregate]] captures it.
+ * one [[CofactorBuffer]] per group: each input struct is added into it in
+ * place ([[TripleCodec.addInto]]), and partial states merge with
+ * `CofactorBuffer.merge`. The shape is adopted from the first non-NULL
+ * input; another shape throws. NULL inputs are skipped; a group without a
+ * non-NULL input keeps a NULL state and evaluates to NULL. The maps are
+ * held to `maxCategories`, captured as [[CofactorAggregate]] captures it.
  */
 case class SumTriple(
     child: Expression,
@@ -121,12 +118,7 @@ case class SumTriple(
   override def serialize(buffer: CofactorBuffer): Array[Byte] =
     if (buffer == null) Array.emptyByteArray else CofactorBuffer.toBytes(buffer)
   override def deserialize(bytes: Array[Byte]): CofactorBuffer =
-    if (bytes.isEmpty) null
-    else {
-      val b = CofactorBuffer.fromBytes(bytes)
-      b.maxCategories = maxCategories
-      b
-    }
+    if (bytes.isEmpty) null else CofactorBuffer.fromBytes(bytes, maxCategories)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): SumTriple =
     copy(mutableAggBufferOffset = newOffset)
